@@ -20,23 +20,16 @@ Scale posture (SURVEY.md §7.5-7.6):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import SCHEMAS, TMP_DIR, load
+from classification_problem_with_pyspark_spark.sources.catalog import SCHEMAS, load
 
-_TMP = TMP_DIR
 _D = "decimal(18,2)"
 TS_US = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-
-
-def _roundtrip_dir(kind: str, sf_dir: str) -> str:
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(_TMP, f"{kind}_{sf_name}")
 
 
 @register(

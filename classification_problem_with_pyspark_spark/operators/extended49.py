@@ -37,7 +37,7 @@ from classification_problem_with_pyspark_spark.sources.catalog import load
 NGRAM_N = 5  # word-shingle width for the overlap matrix
 
 
-def _overlap_counts(toks: DataFrame, n: int) -> DataFrame:
+def _overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(sa, sb, cnt) rows for the source-overlap matrix: sb NULL rows
     are per-source distinct-digest sizes, sb non-NULL rows are per-pair
     shared-digest counts — both emitted from ONE digest-grouped pass.
@@ -51,11 +51,19 @@ def _overlap_counts(toks: DataFrame, n: int) -> DataFrame:
     (collect_set dedups exactly as the old per-source distinct did; a
     digest containing sources {x, y} contributes 1 to the pair (x, y)
     just as the self-join counted it). The caller checkpoints the
-    resulting ≤|sources|²-row relation (bounded; lazy). Kept as a
-    module-level helper so the fan-out regression tripwire can assert
-    the pre-checkpoint plan (the LogicalRDD boundary hides it from the
-    registered key's own explain output).
+    resulting ≤|sources|²-row relation (bounded; lazy). This is the
+    whole pre-checkpoint pipeline, scan included, so the fan-out
+    regression tripwire asserts the plan the key really runs (the
+    LogicalRDD boundary hides it from the registered key's own explain
+    output).
     """
+    n = NGRAM_N
+    # single-file trap (BASELINE.md): spread before the shingle explode
+    toks = (
+        load(spark, sf_dir, "documents")
+        .repartition(32, "doc_id")
+        .select("source", "doc_id", F.split("text", " ").alias("ws"))
+    )
     srcs_per_digest = (
         toks.where(F.size("ws") >= n)
         .select(
@@ -160,13 +168,7 @@ def llm_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|² closing join is over a tiny size table. This is the
     digest-set reuse pattern the whole dedup family shares.
     """
-    d = load(spark, sf_dir, "documents")
-    # single-file trap (BASELINE.md): spread before the shingle explode
-    toks = d.repartition(32, "doc_id").select(
-        "source", "doc_id", F.split("text", " ").alias("ws")
-    )
-    n = NGRAM_N
-    counts = _overlap_counts(toks, n).localCheckpoint(eager=False)
+    counts = _overlap_counts(spark, sf_dir).localCheckpoint(eager=False)
     sizes = counts.where(F.col("sb").isNull()).select(
         F.col("sa").alias("source"), F.col("cnt").alias("n_digests")
     )

@@ -37,6 +37,7 @@ from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
 IVF_BITS = 4  # 2^4 = 16 coarse cells from sign-bit projections
+EMB_DIM = 64  # embedding width the sign planes (and the oracle) span
 
 
 def _bit_sql(b: int) -> str:
@@ -50,8 +51,50 @@ def _bit_sql(b: int) -> str:
         " AS BIGINT) % 2 = 0"
         " THEN CAST(round(CAST(e.embedding[i + 1] AS DOUBLE) * 1000000) AS BIGINT)"
         " ELSE -CAST(round(CAST(e.embedding[i + 1] AS DOUBLE) * 1000000) AS BIGINT)"
-        " END) FROM range(64) t(i)) > 0 THEN 1 ELSE 0 END)"
+        f" END) FROM range({EMB_DIM}) t(i)) > 0 THEN 1 ELSE 0 END)"
     )
+
+
+def _ivf_cell_batches(batches):
+    """mapInPandas worker for `emb_ivf_cell_balance`: each embedding's
+    coarse cell. Raises ValueError on any vector that is not EMB_DIM
+    wide, since the sign planes are only defined on that domain."""
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+
+    w = np.array(
+        [
+            [
+                1
+                - 2
+                * (
+                    int(
+                        hashlib.md5(f"ivf_{b}_{d}".encode()).hexdigest()[:15],
+                        16,
+                    )
+                    % 2
+                )
+                for d in range(EMB_DIM)
+            ]
+            for b in range(IVF_BITS)
+        ],
+        dtype=np.int64,
+    )
+    for pdf in batches:
+        vecs = pdf["embedding"].to_numpy()
+        widths = {len(v) for v in vecs}
+        if widths - {EMB_DIM}:
+            raise ValueError(
+                f"emb_ivf_cell_balance expects {EMB_DIM}-dim embeddings, "
+                f"got width(s) {sorted(widths)}"
+            )
+        x = np.stack(vecs).astype(np.float64) * 1_000_000.0
+        q = np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype(np.int64)
+        s = q @ w.T  # exact int64
+        cells = ((s > 0).astype(np.int64) << np.arange(IVF_BITS)).sum(axis=1)
+        yield pd.DataFrame({"cell": cells.astype(np.int32)})
 
 
 @register(
@@ -118,42 +161,9 @@ def emb_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected: the 256-literal plan analysis + interpreted lambdas read
     0.79× of the explode form; the batch matmul is the §4.2 shape.)
     """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    n_bits = IVF_BITS
-
-    def cell_batches(batches):
-        w = np.array(
-            [
-                [
-                    1
-                    - 2
-                    * (
-                        int(
-                            hashlib.md5(f"ivf_{b}_{d}".encode()).hexdigest()[:15],
-                            16,
-                        )
-                        % 2
-                    )
-                    for d in range(64)
-                ]
-                for b in range(n_bits)
-            ],
-            dtype=np.int64,
-        )
-        for pdf in batches:
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * 1_000_000.0
-            q = np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype(np.int64)
-            s = q @ w.T  # exact int64
-            cells = ((s > 0).astype(np.int64) << np.arange(n_bits)).sum(axis=1)
-            yield pd.DataFrame({"cell": cells.astype(np.int32)})
-
     e = load(spark, sf_dir, "embeddings").select("embedding").repartition(32)
     cells = (
-        e.mapInPandas(cell_batches, schema="cell int")
+        e.mapInPandas(_ivf_cell_batches, schema="cell int")
         .groupBy("cell")
         .agg(F.count("*").alias("n_vecs"))
     )

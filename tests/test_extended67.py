@@ -5,7 +5,15 @@ from __future__ import annotations
 import hashlib
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended67 import IVF_BITS
+import numpy as np
+import pandas as pd
+import pytest
+
+from classification_problem_with_pyspark_spark.operators.extended67 import (
+    EMB_DIM,
+    IVF_BITS,
+    _ivf_cell_batches,
+)
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR
@@ -43,6 +51,17 @@ def test_ivf_cell_balance_matches_python_quantizer(spark):
     # random projections give a populated, imperfectly balanced census
     assert len(counts) > (1 << IVF_BITS) // 2
     assert rows[next(iter(counts))].imbalance_micro > 1_000_000
+
+
+def test_ivf_cell_worker_rejects_other_widths():
+    narrow = pd.DataFrame({"embedding": [np.ones(32)] * 3})
+    with pytest.raises(ValueError, match=r"expects 64-dim embeddings, got width\(s\) \[32\]"):
+        list(_ivf_cell_batches(iter([narrow])))
+    ragged = pd.DataFrame({"embedding": [np.ones(EMB_DIM), np.ones(EMB_DIM - 1)]})
+    with pytest.raises(ValueError, match=r"got width\(s\) \[63, 64\]"):
+        list(_ivf_cell_batches(iter([ragged])))
+    (ok,) = _ivf_cell_batches(iter([pd.DataFrame({"embedding": [np.ones(EMB_DIM)] * 2})]))
+    assert len(ok) == 2
 
 
 def test_time_in_state_matches_python_replay(spark):

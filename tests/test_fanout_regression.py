@@ -44,21 +44,12 @@ def test_fanout_operator_spreads_scan_before_explode(spark, key, part):
     if key == "llm_source_overlap_matrix":
         # r13: the key's own explain stops at the bounded counts
         # checkpoint (LogicalRDD boundary), so assert the repartition on
-        # the pre-checkpoint pipeline the key executes.
-        from pyspark.sql import functions as F
-
+        # the pre-checkpoint helper the key calls.
         from classification_problem_with_pyspark_spark.operators.extended49 import (
-            NGRAM_N,
             _overlap_counts,
         )
-        from classification_problem_with_pyspark_spark.sources.catalog import load
 
-        toks = (
-            load(spark, SF_DIR, "documents")
-            .repartition(32, "doc_id")
-            .select("source", "doc_id", F.split("text", " ").alias("ws"))
-        )
-        plan = formatted_plan(_overlap_counts(toks, NGRAM_N))
+        plan = formatted_plan(_overlap_counts(spark, SF_DIR))
     else:
         plan = formatted_plan(QUERIES[key].fn(spark, SF_DIR))
     assert f"Exchange {part}" in plan or part in plan, (

@@ -18,6 +18,9 @@ this sweep is the cheap lazy-plan dragnet over everything else.
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from classification_problem_with_pyspark_spark.plans.explain import formatted_plan
@@ -25,6 +28,10 @@ from classification_problem_with_pyspark_spark.registry import QUERIES, load_all
 from tests.conftest import SF_DIR
 
 load_all_modules()
+
+WORKLOADS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench", "workloads.json"
+)
 
 # build step is eager (fits/writes/actions) — not lazily explainable
 _SKIP_PREFIXES = ("ml_", "source_", "sink_", "graph_", "stream_foreach")
@@ -45,18 +52,16 @@ _SKIP_KEYS = {
 _ROW_UDF_OK = {"udf_row_legacy", "udtf_python_lateral"}
 
 
-def _auditable():
-    for name in sorted(QUERIES):
+def _auditable(names):
+    for name in sorted(names):
         if name.startswith(_SKIP_PREFIXES) or name in _SKIP_KEYS:
             continue
         yield name
 
 
-@pytest.mark.slow
-def test_no_scale_antipatterns_anywhere(spark):
-    # one sweep, both checks — building ~180 plans dominates the cost
+def _assert_no_scale_antipatterns(spark, names):
     cartesian, row_udf = [], []
-    for name in _auditable():
+    for name in _auditable(names):
         plan = formatted_plan(QUERIES[name].fn(spark, SF_DIR))
         if "CartesianProduct" in plan:
             cartesian.append(name)
@@ -64,3 +69,18 @@ def test_no_scale_antipatterns_anywhere(spark):
             row_udf.append(name)
     assert not cartesian, f"unbroadcast cross products in: {cartesian}"
     assert not row_udf, f"row-at-a-time Python UDFs in: {row_udf}"
+
+
+@pytest.mark.slow
+def test_no_scale_antipatterns_anywhere(spark):
+    # one sweep, both checks — building ~180 plans dominates the cost
+    _assert_no_scale_antipatterns(spark, QUERIES)
+
+
+def test_no_scale_antipatterns_in_benchmark_ops(spark):
+    # always-on slice of the sweep: the benchmark's timed ops
+    with open(WORKLOADS) as f:
+        workloads = json.load(f)["workloads"]
+    ops = {op for w in workloads.values() for op in w["ops"]}
+    assert list(_auditable(ops)), "no lazily auditable op in workloads.json"
+    _assert_no_scale_antipatterns(spark, ops)
