@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
 
 
 @register(
@@ -99,7 +99,7 @@ def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    emb_path = f"{sf_dir}/embeddings.parquet"
+    emb_path = path_for(sf_dir, "embeddings")
     k = 5
 
     def matryoshka_batches(batches):
@@ -112,7 +112,9 @@ def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             P = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             qids = pdf["vec_id"].to_numpy()
             # three BLAS products, round(·,6) BEFORE ranking (the
-            # driver-verified similarity discipline)
+            # driver-verified similarity discipline; fixture-verified, not
+            # identical: np.round is half-to-even in binary, Spark's ROUND
+            # HALF_UP in decimal)
             sims = {}
             for d in (16, 32, 64):
                 pn = np.sqrt((P[:, :d] * P[:, :d]).sum(axis=1))

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
 
 SEED_MOD = 400  # ~|parts|/400 hash-chosen centrality seeds (5 at sf0.01)
 KNN_K = 5  # directed neighbor list size for the mutual graph
@@ -255,7 +255,7 @@ def emb_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact-cosine discipline hash-verified on llm_similarity_topk:
     double accumulation, ROUND(·,6), (sim DESC, nid) rank tie-break —
-    membership on both engines is identical by construction.
+    membership on both engines is fixture-verified to match.
 
     Scale: the directed top-k is the expensive stage (here the exact
     Arrow/numpy mapInPandas — the BLAS side-data pattern the driver
@@ -269,15 +269,17 @@ def emb_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the pure-JVM broadcast nested-loop + interpreted HOF dot + a
     V²-row window rank, AND was re-derived on BOTH sides of the mutual
     self-join (no subtree reuse) — two full V² passes. Now the top-k is
-    the proven one-BLAS-product-per-batch worker (identical rounding /
-    tie-break contract: ROUND(·,6), (sim DESC, nid), self excluded by
-    id) and the O(V·k) result is localCheckpoint'd (bounded: V·k rows)
+    the proven one-BLAS-product-per-batch worker (same tie-break
+    contract: ROUND(·,6), (sim DESC, nid), self excluded by id; the
+    rounding is fixture-verified, not identical — np.round rounds half
+    to even in binary, Spark's ROUND HALF_UP in decimal) and the O(V·k)
+    result is localCheckpoint'd (bounded: V·k rows)
     so the self-join reads it instead of recomputing V².
     """
     import numpy as np
     import pandas as pd
 
-    emb_path = f"{sf_dir}/embeddings.parquet"
+    emb_path = path_for(sf_dir, "embeddings")
     k = KNN_K
 
     def topk_batches(batches):

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
 
 PQ_M = 8  # subspaces
 PQ_SUBDIM = 8  # dims per subspace (8 × 8 = the 64-dim fixture)
@@ -89,7 +89,9 @@ def emb_pq_codebook_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained codebook drops in as the same broadcast relation).
     Distance folds the exact discipline the driver hash-verified on
     the cosine keys: double accumulation, ROUND(·,6), (dist,
-    centroid_id) tie-break, so the argmin is identical by construction.
+    centroid_id) tie-break. The argmin is fixture-verified, not identical
+    by construction: np.round rounds half to even in binary, Spark's
+    ROUND HALF_UP in decimal, so an edge double could break a tie apart.
 
     Scale: vectors × (M·K) comparisons with the codebook held as
     side data per worker — one embarrassingly-parallel scan, zero
@@ -113,7 +115,7 @@ def emb_pq_codebook_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    emb_path = f"{sf_dir}/embeddings.parquet"
+    emb_path = path_for(sf_dir, "embeddings")
     m, subdim, mod = PQ_M, PQ_SUBDIM, PQ_ANCHOR_MOD
 
     def assign_batches(batches):

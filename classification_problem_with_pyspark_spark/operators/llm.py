@@ -22,7 +22,7 @@ from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
 
 STOPWORDS = ("data", "row", "query", "the", "of")
 
@@ -250,7 +250,9 @@ def llm_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same oracle) — one fused BLAS product beats N² codegen'd
     aggregate(zip_with) expressions. Rounding to 6 decimals absorbs the
     summation-order difference between BLAS and the engines' sequential
-    dot loops (verified hash-identical at the gate SF).
+    dot loops (fixture-verified: hash-equal at the gate SF, not identical
+    by construction — np.round rounds half to even on the binary double,
+    Spark's ROUND rounds HALF_UP in decimal, so an edge value can differ).
 
     O(N²) by design: this is the correctness oracle for the LSH/IVF
     variants. At 100 TB the candidate side becomes a bounded shard per
@@ -262,7 +264,7 @@ def llm_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    emb_path = f"{sf_dir}/embeddings.parquet"
+    emb_path = path_for(sf_dir, "embeddings")
     k = 5
 
     def topk_batches(batches):
@@ -837,6 +839,8 @@ def llm_similarity_topk_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
         P = np.stack(probe_pdf["emb_a"].to_numpy()).astype(np.float64)
         pnorm = np.sqrt((P * P).sum(axis=1))
         qids = probe_pdf["qid"].to_numpy()
+        # fixture-verified against Spark's ROUND(·,6), not identical:
+        # numpy rounds half to even in binary, Spark HALF_UP in decimal
         sims = np.round((P @ C.T) / np.outer(pnorm, cnorm), 6)
         out_q, out_n, out_s = [], [], []
         for i, qid in enumerate(qids):

@@ -65,7 +65,9 @@ def udaf_grouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantity-weighted mean price per flag/status group.
 
     NOTE: numpy's pairwise summation agrees with both engines' sequential
-    sums at this magnitude after round(·,6) — the parity test guards it.
+    sums at this magnitude after round(·,6) — fixture-verified by the
+    parity test, not identical by construction: np.round rounds half to
+    even in binary, the oracle's ROUND rounds HALF_UP in decimal.
     """
 
     @pandas_udf("double")

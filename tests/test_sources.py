@@ -6,17 +6,26 @@ partition pruning.
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import shutil
+import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from classification_problem_with_pyspark_spark.plans.explain import formatted_plan
+from classification_problem_with_pyspark_spark.sources import catalog
 from classification_problem_with_pyspark_spark.sources.catalog import (
     SCHEMAS,
+    TABLES,
+    assert_catalog_schemas,
     load,
+    path_for,
     read_csv,
     write_parquet,
 )
@@ -272,10 +281,6 @@ def test_catalog_schema_drift_tripwire(spark):
     silently strand half the registry. load() at every SF must yield exactly
     the catalog's declared SCHEMAS — any parquet re-encoding load() can't
     absorb fails here with a per-column diff."""
-    from classification_problem_with_pyspark_spark.sources.catalog import (
-        assert_catalog_schemas,
-    )
-
     for sf_dir in (SF_DIR_SMOKE, os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")):
         assert_catalog_schemas(spark, sf_dir)
 
@@ -283,8 +288,6 @@ def test_catalog_schema_drift_tripwire(spark):
 def test_compaction_reduces_file_count(spark):
     """sink_compaction_roundtrip's data parity is oracle-checked; THIS
     asserts the layout effect: 64 fragment files collapse to 4."""
-    import glob
-
     from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 
     from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
@@ -299,3 +302,185 @@ def test_compaction_reduces_file_count(spark):
     compact = glob.glob(os.path.join(_roundtrip_dir("compact_events", SF_DIR_SMOKE), "part-*.parquet"))
     assert len(frag) > len(compact), (len(frag), len(compact))
     assert 1 <= len(compact) <= 4, len(compact)
+
+
+# -- catalog.load's per-file inferred-schema cache ---------------------------
+
+
+def _copy_tables(dst: str) -> str:
+    for t in TABLES:
+        shutil.copy(path_for(SF_DIR_SMOKE, t), path_for(dst, t))
+    return dst
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through its own job group."""
+    sc = spark.sparkContext
+    group = f"catalog-cache-{uuid.uuid4().hex[:8]}"
+    marker = f"{group}-marker"
+    for g, run in ((group, fn), (marker, lambda: spark.range(1).count())):
+        sc.setJobGroup(g, "catalog cache test")
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    # Job events reach the status tracker through the asynchronous listener
+    # bus, in order: once the marker job shows, every job of fn has too.
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reached the status tracker"
+        time.sleep(0.05)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_infers_schema_once_per_file(spark, tmp_path):
+    """The first load of a file runs Spark's footer-schema job; a repeat
+    load of the unchanged file reads with the cached schema and runs none."""
+    sf = _copy_tables(str(tmp_path))
+    assert _jobs_launched(spark, lambda: load(spark, sf, "lineitem")) >= 1
+    assert _jobs_launched(spark, lambda: load(spark, sf, "lineitem")) == 0
+    assert load(spark, sf, "lineitem").schema == SCHEMAS["lineitem"]
+
+
+def test_load_picks_up_rewritten_ts_encoding(spark, tmp_path):
+    """A file rewritten in place with another timestamp encoding is inferred
+    again (its size/mtime stamp changed) and coerced to the same values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = _copy_tables(str(tmp_path))
+    path = path_for(sf, "events")
+    original = pq.read_table(path)
+    ts_at = original.schema.get_field_index("ts")
+
+    def ts_rows():
+        return load(spark, sf, "events").orderBy("event_id").select("event_id", "ts").collect()
+
+    want = ts_rows()
+    for arrow_type, inferred_type in (
+        (pa.timestamp("ns"), T.LongType()),  # int64 nanos, read via nanosAsLong
+        (pa.timestamp("us", tz="UTC"), T.TimestampType()),
+        (pa.timestamp("us"), T.TimestampNTZType()),
+    ):
+        ts = original.column("ts").cast(arrow_type)
+        pq.write_table(original.set_column(ts_at, "ts", ts), path, version="2.6")
+        assert ts_rows() == want, arrow_type
+        assert catalog._INFERRED[os.path.abspath(path)][1]["ts"].dataType == inferred_type
+        assert_catalog_schemas(spark, sf)
+
+
+def test_load_reads_directory_table_uncached(spark, tmp_path):
+    """A ``<table>.parquet`` directory (the cluster layout) still loads,
+    through the uncached read."""
+    sf = str(tmp_path)
+    table_dir = path_for(sf, "events")
+    os.makedirs(table_dir)
+    shutil.copy(path_for(SF_DIR_SMOKE, "events"), os.path.join(table_dir, "part-00000.parquet"))
+    df = load(spark, sf, "events")
+    assert df.schema == SCHEMAS["events"]
+    assert df.count() == load(spark, SF_DIR_SMOKE, "events").count()
+    assert os.path.abspath(table_dir) not in catalog._INFERRED
+
+
+def test_threaded_loads_match_serial(spark, tmp_path):
+    """4 threads sharing one session each load all ten tables 3 times, the
+    first of them racing on a cold cache: every result has the catalog
+    schema and the serial row count."""
+    sf = _copy_tables(str(tmp_path))
+    serial = {t: load(spark, SF_DIR_SMOKE, t).count() for t in TABLES}
+
+    def client(_):
+        out = []
+        for _ in range(3):
+            for t in TABLES:
+                df = load(spark, sf, t)
+                out.append((t, df.schema, df.count()))
+        return out
+
+    with ThreadPoolExecutor(4) as pool:
+        results = [r for rs in pool.map(client, range(4)) for r in rs]
+    assert len(results) == 4 * 3 * len(TABLES)
+    for t, schema, n in results:
+        assert schema == SCHEMAS[t], t
+        assert n == serial[t], t
+
+
+def _sf_dir_parquet_scans(source: str) -> set[int]:
+    """Lines of ``<x>.read.parquet(...)`` calls whose path is built from
+    ``sf_dir``: the name itself, an f-string or ``+`` starting with it,
+    ``os.path.join(sf_dir, ...)``, ``path_for(...)``, or a local variable
+    assigned one of these. Staging paths named after the scale factor
+    (``os.path.basename(sf_dir)``) are not under ``sf_dir`` and pass."""
+
+    def rooted(e, local) -> bool:
+        if isinstance(e, ast.Name):
+            return e.id == "sf_dir" or e.id in local
+        if isinstance(e, ast.Starred):
+            return rooted(e.value, local)
+        if isinstance(e, ast.JoinedStr):
+            return bool(e.values) and isinstance(e.values[0], ast.FormattedValue) and rooted(e.values[0].value, local)
+        if isinstance(e, ast.BinOp) and isinstance(e.op, ast.Add):
+            return rooted(e.left, local)
+        if isinstance(e, ast.Call):
+            name = getattr(e.func, "attr", getattr(e.func, "id", None))
+            return name == "path_for" or (name == "join" and bool(e.args) and rooted(e.args[0], local))
+        return False
+
+    hits = set()
+    for fn in ast.walk(ast.parse(source)):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        assigns = [
+            (t.id, n.value)
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Assign)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        ]
+        local: set[str] = set()
+        while True:
+            grown = local | {name for name, value in assigns if rooted(value, local)}
+            if grown == local:
+                break
+            local = grown
+        for n in ast.walk(fn):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "parquet"
+                and isinstance(n.func.value, ast.Attribute)
+                and n.func.value.attr == "read"
+                and any(rooted(a, local) for a in n.args)
+            ):
+                hits.add(n.lineno)
+    return hits
+
+
+def test_sf_dir_scan_detector_flags_catalog_paths():
+    source = """
+def op(spark, sf_dir):
+    p = catalog.path_for(sf_dir, "orders")
+    q = os.path.join(sf_dir, "events.parquet")
+    a = spark.read.parquet(f"{sf_dir}/events.parquet")
+    b = spark.read.parquet(p)
+    c = spark.read.parquet(q)
+    d = spark.read.parquet(sf_dir + "/part.parquet")
+    stage = os.path.join(TMP_DIR, f"x_{os.path.basename(sf_dir)}")
+    e = spark.read.parquet(stage)
+    f = spark.read.parquet(_roundtrip_dir("k", sf_dir))
+"""
+    assert _sf_dir_parquet_scans(source) == {5, 6, 7, 8}
+
+
+def test_catalog_tables_scanned_only_through_load():
+    """Every Spark scan of a catalog table goes through catalog.load (and so
+    its schema cache and timestamp coercions); operators never call
+    ``spark.read.parquet`` on a path under ``sf_dir``."""
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(catalog.__file__)))
+    offenders = []
+    for sub in ("operators", "functions"):
+        for py in sorted(glob.glob(os.path.join(pkg, sub, "**", "*.py"), recursive=True)):
+            with open(py) as f:
+                lines = _sf_dir_parquet_scans(f.read())
+            offenders += [f"{os.path.relpath(py, pkg)}:{n}" for n in sorted(lines)]
+    assert not offenders, f"read.parquet on a catalog path, use catalog.load: {offenders}"
