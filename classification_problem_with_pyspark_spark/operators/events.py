@@ -20,7 +20,7 @@ from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_shift
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import TMP_DIR, load
+from classification_problem_with_pyspark_spark.sources.catalog import load, stage_dir
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -462,8 +462,6 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-mode aggregation. availableNow ⇒ a single batch here; on a live
     stream each trigger lands its own batch_id partition.
     """
-    import os
-
     from classification_problem_with_pyspark_spark.streaming.wrappers import (
         run_foreach_batch_parquet,
     )
@@ -474,9 +472,8 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
         )
 
-    out_dir = os.path.join(TMP_DIR, f"fb_{os.path.basename(sf_dir.rstrip('/'))}")
     result = run_foreach_batch_parquet(
-        spark, sf_dir, agg, out_dir, "stream_foreach_batch_sink"
+        spark, sf_dir, agg, stage_dir("fb"), "stream_foreach_batch_sink"
     )
     last = result.agg(F.max("batch_id").alias("b"))
     return result.join(F.broadcast(last), result.batch_id == last.b).select(

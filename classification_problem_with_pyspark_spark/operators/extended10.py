@@ -42,12 +42,7 @@ from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.operators.extended8 import bpe_learn
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import TMP_DIR, load
-
-
-def _mor_dir(kind: str, sf_dir: str) -> str:
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(TMP_DIR, f"{kind}_{sf_name}")
+from classification_problem_with_pyspark_spark.sources.catalog import load, stage_dir
 
 
 @register(
@@ -95,7 +90,7 @@ def sink_merge_on_read_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    root = _mor_dir("mor_orders", sf_dir)
+    root = stage_dir("mor_orders")
     base_path, log_path = os.path.join(root, "base"), os.path.join(root, "log")
     o.write.mode("overwrite").parquet(base_path)
     upserts = o.where(F.col("o_orderkey") % 7 == 0).select(
@@ -246,7 +241,7 @@ def source_csv_multiline_quoted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    path = _mor_dir("csv_multiline", sf_dir)
+    path = stage_dir("csv_multiline")
     (
         gnarly.write.mode("overwrite")
         .option("header", True)

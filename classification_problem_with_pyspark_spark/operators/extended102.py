@@ -28,14 +28,12 @@ one trim expression.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 META_GATE = 50  # outcome: value > 50; exposure: weekend
 
@@ -194,10 +192,7 @@ def source_csv_crlf_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one trim expression — the cheapest bug you will ever not
     have.
     """
-    stage = _roundtrip_dir("csv_crlf", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("csv_crlf")
     rows = sorted(
         (r.n_nationkey, r.n_name)
         for r in bounded_collect(

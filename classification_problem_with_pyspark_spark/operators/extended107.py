@@ -27,14 +27,12 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 # literal trig table: hour -> (sin, cos) in micro units, Python-computed
 HOUR_TRIG = tuple(
@@ -154,10 +152,7 @@ def source_degenerate_files_handling(spark: SparkSession, sf_dir: str) -> DataFr
     Scale: zero marginal cost; pipelines that crash on empty shards
     page someone at 3am for a file with nothing in it.
     """
-    stage = _roundtrip_dir("degenerate_files", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("degenerate_files")
     rows = sorted(
         (r.n_nationkey, r.n_name)
         for r in bounded_collect(

@@ -26,15 +26,13 @@ window per block (k rows each), one bounded reduce.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 ASOF_COMMIT = 2  # read the table as of this commit (before the swap)
 
@@ -72,9 +70,7 @@ def sink_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     live AT the requested version — time travel costs planning, not a
     second copy of the data.
     """
-    stage = _roundtrip_dir("timetravel", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
+    stage = stage_dir("timetravel")
     e = load(spark, sf_dir, "events")
     actions = []
     for commit, (adds, removes) in enumerate(

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import TMP_DIR, bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 
 @register(
@@ -79,8 +79,7 @@ def sink_manifest_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         F.floor(F.col("o_totalprice") / 50000).cast("long").alias("band"),
     )
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join(TMP_DIR, f"manifest_bands_{sf_name}")
+    root = stage_dir("manifest_bands")
     o.write.mode("overwrite").partitionBy("band").parquet(root)
 
     # manifest: per-band stats (in a real table format this is maintained

@@ -26,7 +26,6 @@ exists for) and the log itself is a tiny JSON read.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,9 +34,8 @@ from classification_problem_with_pyspark_spark.operators.extended27 import (
     _SCORED_SQL,
     _scored,
 )
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 
 def _md5_bit(salt: str, col: str) -> F.Column:
@@ -286,9 +284,7 @@ def source_txn_log_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     its file manifest on the driver; it is bounded by the action log,
     never by the data.
     """
-    stage = _roundtrip_dir("txnlog", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
+    stage = stage_dir("txnlog")
     e = load(spark, sf_dir, "events")
     actions = []
     for commit, (seg, adds, removes) in enumerate(

@@ -8,9 +8,8 @@ knowledge (Spark source APIs, the SCD Type 2 idiom, incremental view
 maintenance) over the driver's testdata schema.
 
 Scale posture (SURVEY.md §7.5-7.6):
-- roundtrip writes are eager, deterministic-path, mode=overwrite
-  (idempotent re-runs), read-back plans lazy — same discipline as
-  operators/sinks.py;
+- roundtrip writes are eager, into a fresh ``stage_dir`` per call,
+  read-back plans lazy — same discipline as operators/sinks.py;
 - JSONL/CSV are edge-interchange formats only: row-oriented, no pushdown
   — the engine converts to parquet/ORC before fact-scale work;
 - SCD2 windows partition per user (bounded state); the incremental-merge
@@ -24,9 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import SCHEMAS, load
+from classification_problem_with_pyspark_spark.sources.catalog import SCHEMAS, load, stage_dir
 
 _D = "decimal(18,2)"
 TS_US = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -55,7 +53,7 @@ def source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads it once with a pinned schema and lands parquet for real work.
     """
     d = load(spark, sf_dir, "documents")
-    path = _roundtrip_dir("jsonl_documents", sf_dir)
+    path = stage_dir("jsonl_documents")
     d.write.mode("overwrite").json(path)
     back = spark.read.schema(SCHEMAS["documents"]).json(path)
     return back.groupBy("lang", "source").agg(
@@ -90,7 +88,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     safe.
     """
     o = load(spark, sf_dir, "orders")
-    path = _roundtrip_dir("orc_orders", sf_dir)
+    path = stage_dir("orc_orders")
     o.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("o_orderstatus").agg(

@@ -26,14 +26,12 @@ runs.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 TAIL_PCT_DIV = 100  # top n DIV 100 rows = the "p99 tail"
 
@@ -209,10 +207,7 @@ def source_jsonl_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     only mode that neither aborts the job (FAILFAST) nor silently
     drops data (DROPMALFORMED loses the quarantine evidence).
     """
-    stage = _roundtrip_dir("jsonl_malformed", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("jsonl_malformed")
     n = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )

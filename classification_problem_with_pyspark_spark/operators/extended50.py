@@ -29,14 +29,12 @@ computed in the same pass — no second scan of either side.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 # fixed-width layout: key 4 | name 25 | regionkey 4 (copybook-style)
 FW_KEY_W = 4
@@ -76,10 +74,7 @@ def source_fixed_width_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cheapest possible parse at 100 TB because field offsets are
     compile-time constants — the layout IS the schema.
     """
-    stage = _roundtrip_dir("fixed_width", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("fixed_width")
     rows = sorted(
         (r.n_nationkey, r.n_name, r.n_regionkey)
         for r in bounded_collect(

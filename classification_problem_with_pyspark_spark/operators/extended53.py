@@ -30,15 +30,13 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 
 @register(
@@ -72,10 +70,7 @@ def source_json_multiline_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape) or conversion to JSONL at the edge; this key pins that the
     engine handles the format correctly when it arrives anyway.
     """
-    stage = _roundtrip_dir("json_multiline", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("json_multiline")
     rows = sorted(
         (r.s_suppkey, r.s_name, r.s_nationkey, round(r.s_acctbal, 2))
         for r in bounded_collect(

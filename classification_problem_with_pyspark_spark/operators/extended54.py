@@ -30,15 +30,13 @@ independent of fact volume.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, stage_dir
 
 
 @register(
@@ -82,12 +80,9 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
         F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("cents"),
     )
-    root = _roundtrip_dir("wap", sf_dir)
+    root = stage_dir("wap")
     stage = os.path.join(root, "stage")
     published = os.path.join(root, "published")
-    for p in (stage, published):
-        if os.path.exists(p):
-            shutil.rmtree(p)
     base.write.mode("overwrite").parquet(stage)
 
     staged = spark.read.parquet(stage)

@@ -26,7 +26,6 @@ window over the distinct-score grid. Both scan-shaped.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,10 +34,9 @@ from classification_problem_with_pyspark_spark.operators.extended27 import (
     _SCORED_SQL,
     _scored,
 )
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 COST_FP = 1  # cost units per false positive (needless outreach)
 COST_FN = 8  # cost units per false negative (missed conversion)
@@ -75,10 +73,7 @@ def source_csv_locale_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     anyway (or worse, mis-parses them), which is why explicit locale
     normalization is the only correct ingestion at any scale.
     """
-    stage = _roundtrip_dir("csv_locale", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("csv_locale")
     rows = sorted(
         (r.s_suppkey, r.s_name, round(r.s_acctbal * 100))
         for r in bounded_collect(

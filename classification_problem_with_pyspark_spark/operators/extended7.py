@@ -695,13 +695,10 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet for real work. Avro remains undeclared: its data source module
     is external to the Spark distribution and absent in this container.
     """
-    import os
-
-    from classification_problem_with_pyspark_spark.sources.catalog import SCHEMAS, TMP_DIR
+    from classification_problem_with_pyspark_spark.sources.catalog import SCHEMAS, stage_dir
 
     d = load(spark, sf_dir, "documents")
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(TMP_DIR, f"xml_documents_{sf_name}")
+    path = stage_dir("xml_documents")
     d.write.mode("overwrite").option("rootTag", "docs").option("rowTag", "doc").xml(path)
     back = spark.read.schema(SCHEMAS["documents"]).option("rowTag", "doc").xml(path)
     return back.groupBy("lang").agg(

@@ -27,14 +27,12 @@ map-side-combinable moment pass.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, stage_dir
 
 GZ_SHARDS = 4  # gzip is per-file parallel only — stage several shards
 
@@ -80,9 +78,8 @@ def source_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     only fact-sized collect. Distributed write keeps the staging
     memory bounded by one shard per task.
     """
-    stage = _roundtrip_dir("csv_gzip", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
+    # a subpath: the default errorifexists write needs a path that does not exist
+    stage = os.path.join(stage_dir("csv_gzip"), "orders")
     (
         load(spark, sf_dir, "orders")
         .select(

@@ -29,15 +29,13 @@ per-shard, embarrassingly parallel.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 TRAILER_SHARDS = 3  # nation split into 3 bank-file shards
 CORRUPT_SHARD = 1  # this shard loses its last body record (injected)
@@ -166,10 +164,7 @@ def source_trailer_record_validation(spark: SparkSession, sf_dir: str) -> DataFr
     files, which is why the convention survives from mainframe EDI
     to modern settlement drops.
     """
-    stage = _roundtrip_dir("trailer_files", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("trailer_files")
     rows = sorted(
         (r.n_nationkey, r.n_name, r.n_regionkey)
         for r in bounded_collect(

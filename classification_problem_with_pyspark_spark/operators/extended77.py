@@ -29,15 +29,13 @@ the delimiter parse is one pass of JVM codegen.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 HI_CENTS = 10_000  # enter alert above this (~p88 of the fixture)
 LO_CENTS = 2_000  # exit alert below this (the hysteresis band)
@@ -190,10 +188,7 @@ def source_csv_multichar_delim(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one-pass JVM parse; the multi-char split costs the same
     scan as any CSV.
     """
-    stage = _roundtrip_dir("csv_multichar", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("csv_multichar")
     rows = sorted(
         (r.n_nationkey, r.n_name, r.n_regionkey)
         for r in bounded_collect(

@@ -28,15 +28,13 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank, grid_shift
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 PAGE_SIZE = 4  # nations per export page
 VOTE_N = 9  # samples per task (odd — no tie rule needed)
@@ -82,10 +80,7 @@ def source_cursor_chain_reassembly(spark: SparkSession, sf_dir: str) -> DataFram
     validation never touches payloads; connectors validate thousands
     of pages this way before a single record is trusted.
     """
-    stage = _roundtrip_dir("cursor_pages", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("cursor_pages")
     rows = sorted(
         (r.n_nationkey, r.n_name)
         for r in bounded_collect(

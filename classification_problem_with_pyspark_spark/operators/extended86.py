@@ -27,15 +27,13 @@ from __future__ import annotations
 
 import codecs
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 LIFT_MIN_SUPPORT = 5  # bigram must occur at least this often
 LIFT_TOP = 25
@@ -182,10 +180,7 @@ def source_csv_bom_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     infinite debugging saved; completes the CSV dialect surface's
     sixth hostile variant.
     """
-    stage = _roundtrip_dir("csv_bom", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("csv_bom")
     rows = sorted(
         (r.n_nationkey, r.n_name)
         for r in bounded_collect(

@@ -26,15 +26,13 @@ by the class count.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 TOPK_CLASSES = 10
 TOPK_BOOST = 400  # truth's score boost (scores are md5 % 1000)
@@ -71,10 +69,7 @@ def source_idempotent_reload_dedup(spark: SparkSession, sf_dir: str) -> DataFram
     relational form; at 100 TB the digest is per-FILE (cheaper) with
     this per-row form as the audit when file digests disagree.
     """
-    stage = _roundtrip_dir("idempotent_reload", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("idempotent_reload")
     rows = sorted(
         (r.n_nationkey, r.n_name)
         for r in bounded_collect(

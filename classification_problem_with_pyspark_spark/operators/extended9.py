@@ -34,7 +34,6 @@ Scale posture (SURVEY.md §7.6):
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import TMP_DIR, load
+from classification_problem_with_pyspark_spark.sources.catalog import load, stage_dir
 
 
 @register(
@@ -356,7 +355,7 @@ def stream_rate_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("timestamp").alias("batch_ts"),
     )
     sink_name = f"rate_agg_{uuid.uuid4().hex[:6]}"
-    checkpoint = os.path.join(TMP_DIR, f"ckpt_{sink_name}")
+    checkpoint = stage_dir("ckpt_rate_agg")
     q = (
         out.writeStream.format("memory")
         .queryName(sink_name)

@@ -26,15 +26,13 @@ unionByName); pacing is one daily aggregate + a running window.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum, grid_rank
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load
+from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 PACE_TARGET_CENTS = 700_000_000  # the monthly revenue target
 
@@ -68,10 +66,7 @@ def source_csv_column_order_drift(spark: SparkSession, sf_dir: str) -> DataFrame
     header group → unionByName: O(#header-variants) reads, not
     O(#files), and no shard can silently transpose.
     """
-    stage = _roundtrip_dir("csv_col_drift", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = stage_dir("csv_col_drift")
     rows = sorted(
         (r.n_nationkey, r.n_name)
         for r in bounded_collect(

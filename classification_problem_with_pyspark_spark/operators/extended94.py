@@ -27,15 +27,12 @@ one write + one read of a bounded projection.
 
 from __future__ import annotations
 
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, stage_dir
 
 BIAS_GAP = 40  # first position wins any contest with |len gap| below this
 PAIR_STRIDE = 7
@@ -171,17 +168,16 @@ def source_parquet_int96_timestamps(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: one bounded write + read; compat keys buy interop, not
     throughput.
     """
-    stage = _roundtrip_dir("int96_ts", sf_dir)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
+    stage = stage_dir("int96_ts")
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderdate") < "1996-01-01"
     ).select("o_orderkey", "o_orderdate")
+    saved = spark.conf.get("spark.sql.parquet.outputTimestampType")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     try:
         o.write.mode("overwrite").parquet(stage)
     finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        spark.conf.set("spark.sql.parquet.outputTimestampType", saved)
     back = spark.read.parquet(stage)
     return (
         back.groupBy(

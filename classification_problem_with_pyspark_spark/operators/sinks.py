@@ -12,9 +12,10 @@ scanning and filtering — asserted as PartitionFilters in
 tests/test_plans.py.
 
 Both keys perform the write eagerly when the query function is invoked
-(deterministic path under /root/repo/.tmp, mode=overwrite, so re-runs are
-idempotent) and return the LAZY read-back plan; the oracle runs the same
-aggregation against the original table, proving the roundtrip is lossless.
+(into a fresh ``catalog.stage_dir`` per call, so re-runs and concurrent
+calls never share files) and return the LAZY read-back plan; the oracle
+runs the same aggregation against the original table, proving the
+roundtrip is lossless.
 """
 
 from __future__ import annotations
@@ -25,14 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import SCHEMAS, TMP_DIR, load
-
-_TMP = TMP_DIR
-
-
-def _roundtrip_dir(kind: str, sf_dir: str) -> str:
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(_TMP, f"{kind}_{sf_name}")
+from classification_problem_with_pyspark_spark.sources.catalog import SCHEMAS, load, stage_dir
 
 
 @register(
@@ -58,7 +52,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     before fact-scale work.
     """
     nation = load(spark, sf_dir, "nation")
-    path = _roundtrip_dir("csv_nation", sf_dir)
+    path = stage_dir("csv_nation")
     nation.write.mode("overwrite").option("header", True).csv(path)
     back = spark.read.schema(SCHEMAS["nation"]).option("header", True).csv(path)
     region = load(spark, sf_dir, "region")
@@ -97,7 +91,7 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-file explosion.
     """
     e = load(spark, sf_dir, "events")
-    path = _roundtrip_dir("events_by_type", sf_dir)
+    path = stage_dir("events_by_type")
     e.write.mode("overwrite").partitionBy("event_type").parquet(path)
     back = spark.read.parquet(path)
     return (
@@ -127,16 +121,12 @@ def source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarantine beats failing the job on row 40-billion, and the corrupt
     count is the data-quality metric to alert on.
     """
-    import os
-
     from pyspark.sql import types as T
 
     n_good = 500
     n_bad_arity = 7
     n_bad_type = 5
-    stage = os.path.join(_TMP, f"csv_malformed_{os.path.basename(sf_dir.rstrip('/'))}")
-    os.makedirs(stage, exist_ok=True)
-    path = os.path.join(stage, "orders_dirty.csv")
+    path = os.path.join(stage_dir("csv_malformed"), "orders_dirty.csv")
     o = (
         load(spark, sf_dir, "orders")
         .orderBy("o_orderkey")
@@ -206,9 +196,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog/metastore (or Delta-style transaction log) instead and pin
     mergeSchema off for the steady-state read path.
     """
-    import os
-
-    gen_dir = os.path.join(_TMP, f"schema_evo_{os.path.basename(sf_dir.rstrip('/'))}")
+    gen_dir = stage_dir("schema_evo")
     o = load(spark, sf_dir, "orders")
     base = o.where(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", F.lit("v1").alias("generation")
@@ -246,23 +234,22 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     Rows-only (synthesized two-step write); tests/test_sources.py pins
     that the rewritten partition changed and all others are bit-stable.
     """
-    import os
-
-    tbl = os.path.join(_TMP, f"dyn_overwrite_{os.path.basename(sf_dir.rstrip('/'))}")
+    tbl = stage_dir("dyn_overwrite")
     e = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     e.write.mode("overwrite").partitionBy("event_type").parquet(tbl)
 
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # refresh ONLY the 'click' partition, with values doubled
-        refreshed = (
-            e.where(F.col("event_type") == "click")
-            .withColumn("value", F.round(F.col("value") * 2, 2))
-        )
-        refreshed.write.mode("overwrite").partitionBy("event_type").parquet(tbl)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    # refresh ONLY the 'click' partition, with values doubled; the per-write
+    # option leaves the session's partitionOverwriteMode alone
+    refreshed = (
+        e.where(F.col("event_type") == "click")
+        .withColumn("value", F.round(F.col("value") * 2, 2))
+    )
+    (
+        refreshed.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type")
+        .parquet(tbl)
+    )
 
     back = spark.read.parquet(tbl)
     return back.groupBy("event_type").agg(
@@ -320,7 +307,7 @@ def source_binaryfile_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     ("binaryFile")`` turns the directory into a DataFrame of (path,
     modificationTime, length, content) with bytes as an opaque binary
     column, no codec needed. Here a bounded fixture (docs 0-39, staged
-    once per sf_dir — same bounded-collect posture as
+    per call — same bounded-collect posture as
     source_csv_malformed) round-trips text bytes through real files;
     doc_id is recovered from the file NAME, and the oracle's md5 over the
     original table proves byte-lossless ingestion.
@@ -331,9 +318,8 @@ def source_binaryfile_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern this key pins is path→id parsing + checksum validation at
     ingest, before payloads enter parquet.
     """
-    stage = _roundtrip_dir("binmedia", sf_dir)
+    stage = stage_dir("binmedia")
     d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 40)
-    os.makedirs(stage, exist_ok=True)
     # bounded fixture staging (40 rows) — not a hot path
     for r in d.select("doc_id", "text").collect():
         with open(os.path.join(stage, f"doc_{r.doc_id:05d}.bin"), "wb") as fh:
@@ -369,7 +355,7 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     like CSV it has no pushdown/pruning, so the engine treats it as an
     ingestion edge format and converts to parquet before fact-scale work.
     """
-    stage = _roundtrip_dir("textlines", sf_dir)
+    stage = stage_dir("textlines")
     d = load(spark, sf_dir, "documents")
     d.select(
         F.concat_ws("\t", F.col("lang"), F.col("doc_id").cast("string"), F.col("text")).alias(
@@ -413,8 +399,8 @@ def sink_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     128 MB-1 GB files serve at full throughput.
     """
     e = load(spark, sf_dir, "events")
-    frag = _roundtrip_dir("frag_events", sf_dir)
-    compact = _roundtrip_dir("compact_events", sf_dir)
+    root = stage_dir("compaction")
+    frag, compact = os.path.join(root, "frag"), os.path.join(root, "compact")
     e.repartition(64).write.mode("overwrite").parquet(frag)
     spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compact)
     back = spark.read.parquet(compact)

@@ -13,23 +13,44 @@ directory instead of a single file — path in, plan out.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import stat
+import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-# Scratch dir for sink/source roundtrip keys — repo-relative (ADVICE r2:
-# hardcoded /root/repo/.tmp broke on any other checkout path). Staging
-# paths are deterministic per (kind, sf), so two PROCESSES running the
-# same staging key at the same sf race on rmtree-vs-read; the env
-# override lets concurrent validation runs (pytest alongside a
-# driver_sim sweep) isolate their scratch roots. Unset — the default the
-# grading driver sees — behavior is unchanged.
+# Where staged files go: SPARK_GRAFT_TMP, else `.tmp` at the checkout root.
+# Only stage_dir writes here.
 TMP_DIR = os.environ.get("SPARK_GRAFT_TMP") or os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     ".tmp",
 )
+
+_STAGE_LOCK = threading.Lock()
+_stage_root: str | None = None
+
+
+def stage_dir(kind: str) -> str:
+    """A new, empty directory for one call's staged files.
+
+    Every call gets its own directory, so the same op can run again, or
+    in several threads or processes at once, without touching another
+    call's files. The directories live under one root per process in
+    ``TMP_DIR``, removed when the process exits: the DataFrame an op
+    returns reads its staged files lazily, so they must outlive the call.
+    """
+    global _stage_root
+    with _STAGE_LOCK:
+        if _stage_root is None:
+            os.makedirs(TMP_DIR, exist_ok=True)
+            _stage_root = tempfile.mkdtemp(prefix="stage_", dir=TMP_DIR)
+            atexit.register(shutil.rmtree, _stage_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{kind}_", dir=_stage_root)
+
 
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
@@ -354,7 +375,6 @@ def write_bucketed(
     # doesn't know the table, but the managed location from a previous
     # session still exists on disk and saveAsTable then fails with
     # LOCATION_ALREADY_EXISTS — drop the catalog entry AND the orphan dir.
-    import shutil
     from urllib.parse import urlparse
 
     spark = df.sparkSession

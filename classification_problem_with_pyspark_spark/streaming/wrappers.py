@@ -9,7 +9,7 @@ stream-executable with bounded state.
 
 The parquet streaming source needs a directory it can list; the testdata
 is single read-only files, so ``_stage_stream_input`` copies the events
-file into a repo-local staging dir (never touching /root/testdata) and
+file into a fresh ``catalog.stage_dir`` (never touching the testdata) and
 rewrites ts to µs (the ns schema is as illegal for readStream as for
 batch — SURVEY.md §7.5).
 """
@@ -17,30 +17,22 @@ batch — SURVEY.md §7.5).
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.sources.catalog import load
-
-_STAGE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp")
+from classification_problem_with_pyspark_spark.sources.catalog import load, stage_dir
 
 
 def _stage_stream_input(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize events as a µs-timestamp parquet DIRECTORY for the file
     stream source. Returns (input_dir, checkpoint_dir)."""
-    run_id = uuid.uuid4().hex[:8]
-    base = os.path.join(_STAGE_ROOT, f"stream_{run_id}")
+    base = stage_dir("stream")
     input_dir = os.path.join(base, "input")
     checkpoint = os.path.join(base, "checkpoint")
     load(spark, sf_dir, "events").write.mode("overwrite").parquet(input_dir)
     return input_dir, checkpoint
-
-
-def cleanup_stage(input_dir: str) -> None:
-    shutil.rmtree(os.path.dirname(input_dir), ignore_errors=True)
 
 
 def tumbling_hourly_stream(events: DataFrame) -> DataFrame:
@@ -139,24 +131,21 @@ def run_available_now_df(
     new files only, tracked by the checkpoint).
     """
     input_dir, checkpoint = _stage_stream_input(spark, sf_dir)
-    try:
-        schema = spark.read.parquet(input_dir).schema
-        stream = spark.readStream.schema(schema).parquet(input_dir)
-        out = transform(stream)
-        sink_name = f"{query_name}_{uuid.uuid4().hex[:6]}"
-        mode = output_mode or ("append" if "dedup" in query_name else "complete")
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode(mode)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return spark.table(sink_name)
-    finally:
-        cleanup_stage(input_dir)
+    schema = spark.read.parquet(input_dir).schema
+    stream = spark.readStream.schema(schema).parquet(input_dir)
+    out = transform(stream)
+    sink_name = f"{query_name}_{uuid.uuid4().hex[:6]}"
+    mode = output_mode or ("append" if "dedup" in query_name else "complete")
+    q = (
+        out.writeStream.format("memory")
+        .queryName(sink_name)
+        .outputMode(mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    return spark.table(sink_name)
 
 
 def run_available_now(
@@ -234,29 +223,23 @@ def run_foreach_batch_parquet(
     doesn't speak natively (JDBC upserts, MERGE into lakehouse tables):
     the batch DataFrame inside the callback supports every batch API.
     """
-    import shutil
-
-    shutil.rmtree(out_dir, ignore_errors=True)
     input_dir, checkpoint = _stage_stream_input(spark, sf_dir)
-    try:
-        schema = spark.read.parquet(input_dir).schema
-        stream = spark.readStream.schema(schema).parquet(input_dir)
-        out = transform(stream)
+    schema = spark.read.parquet(input_dir).schema
+    stream = spark.readStream.schema(schema).parquet(input_dir)
+    out = transform(stream)
 
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-        q = (
-            out.writeStream.foreachBatch(write_batch)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return spark.read.parquet(out_dir)
-    finally:
-        cleanup_stage(input_dir)
+    q = (
+        out.writeStream.foreachBatch(write_batch)
+        .outputMode("complete")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    return spark.read.parquet(out_dir)
 
 
 def user_peak_tracker_tws(events: DataFrame) -> DataFrame:

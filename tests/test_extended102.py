@@ -10,7 +10,7 @@ from classification_problem_with_pyspark_spark.operators.extended102 import (
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
@@ -46,7 +46,8 @@ def test_meta_analysis_matches_python_pooling(spark):
 
 
 def test_crlf_file_parses_without_phantom_carriage_returns(spark):
-    rows = QUERIES["source_csv_crlf_handling"].fn(spark, SF_DIR).collect()
+    df = QUERIES["source_csv_crlf_handling"].fn(spark, SF_DIR)
+    rows = df.collect()
     nat = sorted(
         (r.n_nationkey, r.n_name) for r in load(spark, SF_DIR, "nation").collect()
     )
@@ -57,12 +58,6 @@ def test_crlf_file_parses_without_phantom_carriage_returns(spark):
     # the staged file genuinely uses CRLF endings
     import os
 
-    from classification_problem_with_pyspark_spark.operators.sinks import (
-        _roundtrip_dir,
-    )
-
-    raw = open(
-        os.path.join(_roundtrip_dir("csv_crlf", SF_DIR), "part-0.csv"), "rb"
-    ).read()
+    raw = open(os.path.join(staged_dir(df, "csv_crlf"), "part-0.csv"), "rb").read()
     assert b"\r\n" in raw
     assert raw.count(b"\r\n") == len(nat) + 1  # every line, incl. header

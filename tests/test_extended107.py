@@ -9,10 +9,9 @@ from collections import defaultdict
 from classification_problem_with_pyspark_spark.operators.extended107 import (
     HOUR_TRIG,
 )
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
@@ -45,13 +44,14 @@ def test_circular_hour_stats_match_python_vectors(spark):
 
 
 def test_degenerate_files_yield_exactly_the_real_rows(spark):
-    rows = QUERIES["source_degenerate_files_handling"].fn(spark, SF_DIR).collect()
+    df = QUERIES["source_degenerate_files_handling"].fn(spark, SF_DIR)
+    rows = df.collect()
     nat = sorted(
         (r.n_nationkey, r.n_name) for r in load(spark, SF_DIR, "nation").collect()
     )
     assert [(r.nation_key, r.name) for r in rows] == nat
     # the fixture genuinely contains all three degenerate shapes
-    stage = _roundtrip_dir("degenerate_files", SF_DIR)
+    stage = staged_dir(df, "degenerate_files")
     sizes = {
         f: os.path.getsize(os.path.join(stage, f))
         for f in sorted(os.listdir(stage))

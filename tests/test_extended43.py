@@ -9,7 +9,7 @@ from classification_problem_with_pyspark_spark.operators.extended43 import (
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
@@ -45,7 +45,8 @@ def test_tail_attribution_replays(spark):
 
 
 def test_jsonl_malformed_quarantines_exactly_the_bad_lines(spark):
-    rows = QUERIES["source_jsonl_malformed"].fn(spark, SF_DIR).collect()
+    df = QUERIES["source_jsonl_malformed"].fn(spark, SF_DIR)
+    rows = df.collect()
     nat = load(spark, SF_DIR, "nation").collect()
     valid = {x.n_name for x in nat if x.n_nationkey % 5 != 2}
     corrupt = {x.n_name for x in nat if x.n_nationkey % 5 == 2}
@@ -56,10 +57,9 @@ def test_jsonl_malformed_quarantines_exactly_the_bad_lines(spark):
         assert r.region == regions[r.name]
         assert r.status == "valid"
     # and the PERMISSIVE read captured the corrupt lines, row for row
-    from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
     import os
 
-    path = os.path.join(_roundtrip_dir("jsonl_malformed", SF_DIR), "part-0.jsonl")
+    path = os.path.join(staged_dir(df, "jsonl_malformed"), "part-0.jsonl")
     back = (
         spark.read.schema("name string, region bigint, _corrupt_record string")
         .option("mode", "PERMISSIVE")

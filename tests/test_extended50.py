@@ -11,14 +11,14 @@ from classification_problem_with_pyspark_spark.operators.extended50 import (
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
 
 def test_fixed_width_roundtrip_is_lossless(spark):
-    rows = QUERIES["source_fixed_width_parse"].fn(spark, SF_DIR).collect()
+    df = QUERIES["source_fixed_width_parse"].fn(spark, SF_DIR)
+    rows = df.collect()
     nat = sorted(
         (r.n_nationkey, r.n_name, r.n_regionkey)
         for r in load(spark, SF_DIR, "nation").collect()
@@ -27,7 +27,7 @@ def test_fixed_width_roundtrip_is_lossless(spark):
     # the staged file genuinely is fixed-width: every line same length
     import os
 
-    path = os.path.join(_roundtrip_dir("fixed_width", SF_DIR), "part-0.dat")
+    path = os.path.join(staged_dir(df, "fixed_width"), "part-0.dat")
     with open(path) as f:
         lines = [ln.rstrip("\n") for ln in f]
     assert len({len(ln) for ln in lines}) == 1

@@ -7,23 +7,23 @@ import math
 import os
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
 
 def test_json_multiline_array_roundtrip_is_lossless(spark):
-    rows = QUERIES["source_json_multiline_array"].fn(spark, SF_DIR).collect()
+    df = QUERIES["source_json_multiline_array"].fn(spark, SF_DIR)
+    rows = df.collect()
     sup = sorted(
         (r.s_suppkey, r.s_name, r.s_nationkey, round(r.s_acctbal, 2))
         for r in load(spark, SF_DIR, "supplier").collect()
     )
     assert [(r.supp_key, r.name, r.nation_key, r.acctbal) for r in rows] == sup
     # the staged file genuinely is ONE multi-line JSON array document
-    path = os.path.join(_roundtrip_dir("json_multiline", SF_DIR), "suppliers.json")
+    path = os.path.join(staged_dir(df, "json_multiline"), "suppliers.json")
     text = open(path).read()
     doc = json.loads(text)
     assert isinstance(doc, list) and len(doc) == len(sup)

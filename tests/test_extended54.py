@@ -7,16 +7,16 @@ import math
 import os
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
 
 def test_wap_publishes_exactly_the_source_and_removes_stage(spark):
-    rows = {r.status: r for r in QUERIES["sink_write_audit_publish"].fn(spark, SF_DIR).collect()}
+    df = QUERIES["sink_write_audit_publish"].fn(spark, SF_DIR)
+    rows = {r.status: r for r in df.collect()}
     orders = load(spark, SF_DIR, "orders").collect()
     agg = defaultdict(lambda: [0, 0])
     for o in orders:
@@ -28,7 +28,7 @@ def test_wap_publishes_exactly_the_source_and_removes_stage(spark):
         assert (r.n_orders, r.cents) == (n, cents)
         assert r.audit_rowcount_ok and r.audit_nullkey_ok and r.audit_conservation_ok
     # publish is a MOVE: stage dir is gone, published dir holds the data
-    root = _roundtrip_dir("wap", SF_DIR)
+    root = staged_dir(df, "wap")
     assert not os.path.exists(os.path.join(root, "stage"))
     assert os.path.exists(os.path.join(root, "published"))
     back = spark.read.parquet(os.path.join(root, "published"))

@@ -10,23 +10,23 @@ from classification_problem_with_pyspark_spark.operators.extended62 import (
     COST_FN,
     COST_FP,
 )
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
 
 def test_csv_locale_roundtrip_preserves_cents_exactly(spark):
-    rows = QUERIES["source_csv_locale_decimal"].fn(spark, SF_DIR).collect()
+    df = QUERIES["source_csv_locale_decimal"].fn(spark, SF_DIR)
+    rows = df.collect()
     sup = sorted(
         (r.s_suppkey, r.s_name, round(r.s_acctbal * 100))
         for r in load(spark, SF_DIR, "supplier").collect()
     )
     assert [(r.supp_key, r.name, r.acctbal_cents) for r in rows] == sup
     # the staged file genuinely uses the hostile locale format
-    path = os.path.join(_roundtrip_dir("csv_locale", SF_DIR), "part-0.csv")
+    path = os.path.join(staged_dir(df, "csv_locale"), "part-0.csv")
     body = open(path).read().splitlines()[1:]
     assert all(";" in ln for ln in body)
     assert any("," in ln.rsplit(";", 1)[1] for ln in body)  # decimal commas

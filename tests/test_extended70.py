@@ -9,16 +9,16 @@ import os
 from collections import defaultdict
 
 from classification_problem_with_pyspark_spark.operators.extended70 import GZ_SHARDS
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
 
 def test_gzip_roundtrip_is_lossless_and_sharded(spark):
-    rows = {r.status: r for r in QUERIES["source_csv_gzip_roundtrip"].fn(spark, SF_DIR).collect()}
+    df = QUERIES["source_csv_gzip_roundtrip"].fn(spark, SF_DIR)
+    rows = {r.status: r for r in df.collect()}
     orders = load(spark, SF_DIR, "orders").collect()
     agg = defaultdict(lambda: [0, 0])
     for o in orders:
@@ -28,7 +28,7 @@ def test_gzip_roundtrip_is_lossless_and_sharded(spark):
     for st, (n, cents) in agg.items():
         assert (rows[st].n_orders, rows[st].cents) == (n, cents)
     # the stage really holds GZ_SHARDS genuinely-compressed shards
-    stage = _roundtrip_dir("csv_gzip", SF_DIR)
+    stage = os.path.join(staged_dir(df, "csv_gzip"), "orders")
     shards = sorted(glob.glob(os.path.join(stage, "*.csv.gz")))
     assert len(shards) == GZ_SHARDS
     total_lines = 0

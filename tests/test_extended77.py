@@ -11,7 +11,7 @@ from classification_problem_with_pyspark_spark.operators.extended77 import (
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
@@ -60,7 +60,8 @@ def test_hysteresis_matches_python_state_machine(spark):
 
 
 def test_multichar_delim_roundtrip_is_lossless(spark):
-    rows = QUERIES["source_csv_multichar_delim"].fn(spark, SF_DIR).collect()
+    df = QUERIES["source_csv_multichar_delim"].fn(spark, SF_DIR)
+    rows = df.collect()
     nat = sorted(
         (r.n_nationkey, r.n_name, r.n_regionkey)
         for r in load(spark, SF_DIR, "nation").collect()
@@ -69,10 +70,6 @@ def test_multichar_delim_roundtrip_is_lossless(spark):
     # the staged file genuinely uses the two-character delimiter
     import os
 
-    from classification_problem_with_pyspark_spark.operators.sinks import (
-        _roundtrip_dir,
-    )
-
-    path = os.path.join(_roundtrip_dir("csv_multichar", SF_DIR), "part-0.csv")
+    path = os.path.join(staged_dir(df, "csv_multichar"), "part-0.csv")
     body = open(path).read().splitlines()
     assert all(ln.count("||") == 2 for ln in body)

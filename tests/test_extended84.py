@@ -13,10 +13,9 @@ from classification_problem_with_pyspark_spark.operators.extended84 import (
     VOTE_MAJ,
     VOTE_N,
 )
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
@@ -26,10 +25,8 @@ def _h(s: str) -> int:
 
 
 def test_cursor_chain_reassembles_cleanly(spark):
-    rows = sorted(
-        QUERIES["source_cursor_chain_reassembly"].fn(spark, SF_DIR).collect(),
-        key=lambda r: r.page_no,
-    )
+    df = QUERIES["source_cursor_chain_reassembly"].fn(spark, SF_DIR)
+    rows = sorted(df.collect(), key=lambda r: r.page_no)
     nat = sorted(
         (r.n_nationkey, r.n_name) for r in load(spark, SF_DIR, "nation").collect()
     )
@@ -42,7 +39,7 @@ def test_cursor_chain_reassembles_cleanly(spark):
         assert r.is_head == (r.page_no == 0)
         assert r.is_tail == (r.page_no == len(pages) - 1)
     # the staged export is genuinely cursor-linked JSON (not name-ordered)
-    stage = _roundtrip_dir("cursor_pages", SF_DIR)
+    stage = staged_dir(df, "cursor_pages")
     docs = [json.load(open(p)) for p in glob.glob(os.path.join(stage, "*.json"))]
     cursors = {d["cursor"] for d in docs}
     nexts = [d["next_cursor"] for d in docs]

@@ -9,10 +9,9 @@ from classification_problem_with_pyspark_spark.operators.extended86 import (
     LIFT_MIN_SUPPORT,
     LIFT_TOP,
 )
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
@@ -59,13 +58,14 @@ def test_collocation_lift_matches_python_counts(spark):
 
 
 def test_bom_csv_parses_first_column_cleanly(spark):
-    rows = QUERIES["source_csv_bom_handling"].fn(spark, SF_DIR).collect()
+    df = QUERIES["source_csv_bom_handling"].fn(spark, SF_DIR)
+    rows = df.collect()
     nat = sorted(
         (r.n_nationkey, r.n_name) for r in load(spark, SF_DIR, "nation").collect()
     )
     assert [(r.nation_key, r.name) for r in rows] == nat
     # the staged file genuinely starts with the UTF-8 BOM bytes
-    path = os.path.join(_roundtrip_dir("csv_bom", SF_DIR), "part-0.csv")
+    path = os.path.join(staged_dir(df, "csv_bom"), "part-0.csv")
     raw = open(path, "rb").read()
     assert raw[:3] == b"\xef\xbb\xbf"
     # and the first record did not get swallowed with the header

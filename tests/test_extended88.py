@@ -11,10 +11,9 @@ from classification_problem_with_pyspark_spark.operators.extended88 import (
     TOPK_CLASSES,
     TOPK_K,
 )
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
@@ -24,7 +23,8 @@ def _h(s: str) -> int:
 
 
 def test_idempotent_reload_counts_twice_loads_once(spark):
-    rows = QUERIES["source_idempotent_reload_dedup"].fn(spark, SF_DIR).collect()
+    df = QUERIES["source_idempotent_reload_dedup"].fn(spark, SF_DIR)
+    rows = df.collect()
     nat = sorted(
         (r.n_nationkey, r.n_name) for r in load(spark, SF_DIR, "nation").collect()
     )
@@ -32,7 +32,7 @@ def test_idempotent_reload_counts_twice_loads_once(spark):
     assert all(r.times_seen == 2 for r in rows)  # the retry was real
     assert all(r.times_counted == 1 for r in rows)  # and deduped away
     # the stage genuinely holds two byte-identical files with distinct names
-    stage = _roundtrip_dir("idempotent_reload", SF_DIR)
+    stage = staged_dir(df, "idempotent_reload")
     files = sorted(glob.glob(os.path.join(stage, "*.csv")))
     assert len(files) == 2
     assert os.path.basename(files[0]) != os.path.basename(files[1])

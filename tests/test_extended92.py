@@ -9,16 +9,16 @@ from collections import defaultdict
 from classification_problem_with_pyspark_spark.operators.extended92 import (
     PACE_TARGET_CENTS,
 )
-from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, staged_dir
 
 load_all_modules()
 
 
 def test_column_order_drift_unions_by_name_not_position(spark):
-    rows = QUERIES["source_csv_column_order_drift"].fn(spark, SF_DIR).collect()
+    df = QUERIES["source_csv_column_order_drift"].fn(spark, SF_DIR)
+    rows = df.collect()
     nat = sorted(
         (r.n_nationkey, r.n_name) for r in load(spark, SF_DIR, "nation").collect()
     )
@@ -26,7 +26,7 @@ def test_column_order_drift_unions_by_name_not_position(spark):
     assert all(r.n_copies == 2 for r in rows)
     # the trap is real: a single positional read of the directory
     # transposes shard B's columns (names land in the key column)
-    stage = _roundtrip_dir("csv_col_drift", SF_DIR)
+    stage = staged_dir(df, "csv_col_drift")
     naive = (
         spark.read.option("header", "true")
         .schema("nation_key string, name string")

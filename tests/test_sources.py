@@ -29,7 +29,7 @@ from classification_problem_with_pyspark_spark.sources.catalog import (
     read_csv,
     write_parquet,
 )
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, staged_dir
 
 _TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
 
@@ -290,16 +290,16 @@ def test_compaction_reduces_file_count(spark):
     asserts the layout effect: 64 fragment files collapse to 4."""
     from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 
-    from classification_problem_with_pyspark_spark.operators.sinks import _roundtrip_dir
-
     load_all_modules()
-    QUERIES["sink_compaction_roundtrip"].fn(spark, SF_DIR_SMOKE).count()
-    # Derive the stage dirs from the operator's own path helper (ADVICE r2:
+    df = QUERIES["sink_compaction_roundtrip"].fn(spark, SF_DIR_SMOKE)
+    df.count()
+    # Find the stage dir from the files the op's result reads (ADVICE r2:
     # hardcoded absolute paths + an exact 64 broke on any other checkout or
     # a fixture smaller than 64 rows — Spark writes no part file for empty
     # partitions).
-    frag = glob.glob(os.path.join(_roundtrip_dir("frag_events", SF_DIR_SMOKE), "part-*.parquet"))
-    compact = glob.glob(os.path.join(_roundtrip_dir("compact_events", SF_DIR_SMOKE), "part-*.parquet"))
+    root = staged_dir(df, "compaction")
+    frag = glob.glob(os.path.join(root, "frag", "part-*.parquet"))
+    compact = glob.glob(os.path.join(root, "compact", "part-*.parquet"))
     assert len(frag) > len(compact), (len(frag), len(compact))
     assert 1 <= len(compact) <= 4, len(compact)
 
@@ -409,8 +409,8 @@ def _sf_dir_parquet_scans(source: str) -> set[int]:
     """Lines of ``<x>.read.parquet(...)`` calls whose path is built from
     ``sf_dir``: the name itself, an f-string or ``+`` starting with it,
     ``os.path.join(sf_dir, ...)``, ``path_for(...)``, or a local variable
-    assigned one of these. Staging paths named after the scale factor
-    (``os.path.basename(sf_dir)``) are not under ``sf_dir`` and pass."""
+    assigned one of these. Staging paths from ``stage_dir`` are not under
+    ``sf_dir`` and pass."""
 
     def rooted(e, local) -> bool:
         if isinstance(e, ast.Name):
@@ -465,9 +465,9 @@ def op(spark, sf_dir):
     b = spark.read.parquet(p)
     c = spark.read.parquet(q)
     d = spark.read.parquet(sf_dir + "/part.parquet")
-    stage = os.path.join(TMP_DIR, f"x_{os.path.basename(sf_dir)}")
+    stage = os.path.join(stage_dir("x"), "part")
     e = spark.read.parquet(stage)
-    f = spark.read.parquet(_roundtrip_dir("k", sf_dir))
+    f = spark.read.parquet(stage_dir("k"))
 """
     assert _sf_dir_parquet_scans(source) == {5, 6, 7, 8}
 
