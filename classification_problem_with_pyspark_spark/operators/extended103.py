@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -111,13 +112,7 @@ def llm_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     already exist.
     """
     e = load(spark, sf_dir, "embeddings")
-    qhash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("rrfq_"), F.col("vec_id").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    qhash = md5_long(F.concat(F.lit("rrfq_"), F.col("vec_id").cast("string")))
     # single-file trap (BASELINE.md): spread the query side before the
     # broadcast cross-score and documents before the shingle explode
     queries = (

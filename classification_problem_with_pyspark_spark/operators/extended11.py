@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -44,14 +45,7 @@ from classification_problem_with_pyspark_spark.sources.catalog import load
 def _hash_coord(key_col, salt: str):
     """32-bit uniform from md5(key:salt), reduced mod 1e6 → integer
     micro-degree coordinate, identical on both engines."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(key_col.cast("string"), F.lit(salt))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 1000000
-    )
+    return md5_long(F.concat(key_col.cast("string"), F.lit(salt)), 8) % 1000000
 
 
 @register(

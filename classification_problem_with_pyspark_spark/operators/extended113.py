@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -150,13 +151,7 @@ def llm_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax, no driver loop over data.
     """
     e = load(spark, sf_dir, "embeddings")
-    qhash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("mmrq_"), F.col("vec_id").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    qhash = md5_long(F.concat(F.lit("mmrq_"), F.col("vec_id").cast("string")))
     queries = (
         e.where(qhash % MMR_QUERY_MOD == 0)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb"))

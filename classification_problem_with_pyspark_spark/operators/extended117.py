@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -83,15 +84,7 @@ def window_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, no shrinking frames.
     """
     li = load(spark, sf_dir, "lineitem")
-    phash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("vwap_"), F.col("l_partkey").cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    phash = md5_long(F.concat(F.lit("vwap_"), F.col("l_partkey").cast("string")))
     fills = li.where(phash % VWAP_PARTS_MOD == 0).select(
         F.col("l_partkey").alias("part"),
         F.col("l_shipdate").alias("ts"),
@@ -188,15 +181,7 @@ def ml_conformal_interval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison pass — no pairwise work anywhere.
     """
     o = load(spark, sf_dir, "orders")
-    chash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("conf_"), F.col("o_orderkey").cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    chash = md5_long(F.concat(F.lit("conf_"), F.col("o_orderkey").cast("string")))
     base = o.select(
         "o_orderkey",
         F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("y"),

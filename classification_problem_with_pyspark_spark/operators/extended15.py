@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -102,13 +103,7 @@ def llm_fingerprint_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sequence(
                     F.lit(1), F.greatest(F.lit(1), F.size(words) - 3)
                 ),
-                lambda i: F.conv(
-                    F.substring(
-                        F.md5(F.array_join(F.slice(words, i, 4), " ")), 1, 15
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
+                lambda i: md5_long(F.array_join(F.slice(words, i, 4), " ")),
             )
         ).alias("i", "h"),
     )

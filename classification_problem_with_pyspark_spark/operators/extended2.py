@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -689,19 +690,10 @@ def scalar_hof_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _minhash_term_hash(seed: int):
-    """Portable 60-bit token hash: first 15 hex chars of md5(seed_term).
-
-    md5 is identical everywhere; 15 hex chars keep the value inside a
-    signed 64-bit integer on both engines (never engine-private murmur3 —
-    SURVEY.md §2.8 hash-suite rule)."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws("_", F.lit(str(seed)), F.col("term"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+def _minhash_term_hash(seed: int, start: int = 1):
+    """Portable 60-bit token hash of "<seed>_<term>" (``md5_long``), read
+    from hex digit ``start``; both MinHash ops key on it."""
+    return md5_long(F.concat_ws("_", F.lit(str(seed)), F.col("term")), start=start)
 
 
 @register(
@@ -961,20 +953,11 @@ def llm_dedup_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sh = docs.select("doc_id", F.explode(shingles).alias("term"))
 
-    def md5_slice(seed: int, start: int):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat_ws("_", F.lit(str(seed)), F.col("term"))), start, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-
     sig = sh.groupBy("doc_id").agg(
-        F.min(md5_slice(0, 1)).alias("s0"),
-        F.min(md5_slice(0, 16)).alias("s1"),
-        F.min(md5_slice(1, 1)).alias("s2"),
-        F.min(md5_slice(1, 16)).alias("s3"),
+        F.min(_minhash_term_hash(0)).alias("s0"),
+        F.min(_minhash_term_hash(0, 16)).alias("s1"),
+        F.min(_minhash_term_hash(1)).alias("s2"),
+        F.min(_minhash_term_hash(1, 16)).alias("s3"),
     )
     banded = sig.select(
         "doc_id",

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -470,18 +471,7 @@ def llm_domain_affinity_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("affinity_micro"),
         )
     )
-    draw = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("resample_"), F.col("doc_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000000
-    )
+    draw = md5_long(F.concat(F.lit("resample_"), F.col("doc_id").cast("string"))) % 1000000
     return scored.where(draw < F.col("affinity_micro")).select(
         "doc_id", "lang", "n_feats_distinct", "n_domain_hits", "affinity_micro"
     )

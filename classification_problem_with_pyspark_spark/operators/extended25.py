@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -164,19 +165,7 @@ def cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total_chars",
         "i",
         (
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.expr(f"substr(text, i - {CDC_W - 1}, {CDC_W})")),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % CDC_MASK
-                == 0
-            )
+            (md5_long(F.expr(f"substr(text, i - {CDC_W - 1}, {CDC_W})")) % CDC_MASK == 0)
             | (F.col("i") == F.col("total_chars"))
         ).alias("is_boundary"),
     )

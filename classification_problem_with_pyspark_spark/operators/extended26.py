@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -118,22 +119,14 @@ def agg_bootstrap_ci_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b",
         "u100",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("boot_"),
-                            F.col("b").cast("string"),
-                            F.lit("_"),
-                            F.col("o_orderkey").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_long(
+                F.concat(
+                    F.lit("boot_"),
+                    F.col("b").cast("string"),
+                    F.lit("_"),
+                    F.col("o_orderkey").cast("string"),
+                )
+            )
             % 1000000
         ).alias("u"),
     )
@@ -305,14 +298,7 @@ def agg_capture_recapture_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     def _res(salt: str):
-        return (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(salt), F.col("s"))), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % 1000000
-        )
+        return md5_long(F.concat(F.lit(salt), F.col("s"))) % 1000000
 
     hashed = sh.select(_res("crA_").alias("ha"), _res("crB_").alias("hb"))
     counts = hashed.agg(

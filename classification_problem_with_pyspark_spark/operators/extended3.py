@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -622,14 +623,7 @@ def llm_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     outputs are integer counts.
     """
     d = load(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 10
-    )
+    bucket = md5_long(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))) % 10
     split = (
         F.when(bucket < 8, "train").when(bucket == 8, "val").otherwise("test")
     )

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -223,19 +224,7 @@ def llm_watermark_greenlist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("pr.prev").alias("prev"), F.col("pr.cur").alias("cur"))
     )
     green = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("wm_"), F.col("prev"), F.lit("_"), F.col("cur")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_long(F.concat(F.lit("wm_"), F.col("prev"), F.lit("_"), F.col("cur")))
         % 2
         == 0
     ).cast("long")

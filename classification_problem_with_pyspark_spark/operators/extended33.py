@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.operators.extended25 import (
     CDC_CHUNKS_SQL,
     cdc_chunks,
@@ -211,19 +212,7 @@ def llm_shard_dedup_loss_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharded = chunks.select(
         "chunk_hash",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("shard_"), F.col("doc_id").cast("string")
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_long(F.concat(F.lit("shard_"), F.col("doc_id").cast("string")))
             % N_SHARDS
         ).alias("shard"),
     )

@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.operators.extended27 import (
     _SCORED_SQL,
     _scored,
@@ -39,16 +40,7 @@ from classification_problem_with_pyspark_spark.sources.catalog import bounded_co
 
 
 def _md5_bit(salt: str, col: str) -> F.Column:
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col(col).cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    return md5_long(F.concat(F.lit(salt), F.col(col).cast("string"))) % 2
 
 
 @register(

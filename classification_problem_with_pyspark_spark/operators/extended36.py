@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -186,26 +187,15 @@ def audit_replication_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load(spark, sf_dir, "orders")
     row_h = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("o_orderkey").cast("string"),
-                        F.col("o_custkey").cast("string"),
-                        F.expr(
-                            "CAST(CAST(round(o_totalprice * 100) AS BIGINT)"
-                            " AS STRING)"
-                        ),
-                        F.col("o_orderstatus"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_long(
+            F.concat_ws(
+                "|",
+                F.col("o_orderkey").cast("string"),
+                F.col("o_custkey").cast("string"),
+                F.expr("CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS STRING)"),
+                F.col("o_orderstatus"),
+            )
+        )
         % 1000000000000
     )
     return (

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.operators.extended27 import (
     _SCORED_SQL,
     _scored,
@@ -155,22 +156,7 @@ def ml_feature_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = _scored(spark, sf_dir)
     cohorts = scored.select(
         "score",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("drift_"), F.col("user_id").cast("string")
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("cohort"),
+        (md5_long(F.concat(F.lit("drift_"), F.col("user_id").cast("string"))) % 2).alias("cohort"),
     )
     cells = cohorts.groupBy("score", "cohort").agg(F.count("*").alias("n"))
     rowm = cells.groupBy("score").agg(F.sum("n").alias("row_n"))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import SCHEMAS, load, stage_dir
 
@@ -343,21 +344,12 @@ def agg_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
     in_sample = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col("l_orderkey").cast("string"),
-                        F.col("l_linenumber").cast("string"),
-                    )
-                ),
-                1,
-                8,
+        md5_long(
+            F.concat_ws(
+                ":", F.col("l_orderkey").cast("string"), F.col("l_linenumber").cast("string")
             ),
-            16,
-            10,
-        ).cast("long")
+            8,
+        )
         % 10
         == 0
     )

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.operators.extended26 import (
     _POISSON_CDF_MICRO,
 )
@@ -222,22 +223,14 @@ def ml_auc_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score",
         "label",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("aucboot_"),
-                            F.col("b").cast("string"),
-                            F.lit("_"),
-                            F.col("user_id").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_long(
+                F.concat(
+                    F.lit("aucboot_"),
+                    F.col("b").cast("string"),
+                    F.lit("_"),
+                    F.col("user_id").cast("string"),
+                )
+            )
             % 1000000
         ).alias("u"),
     )

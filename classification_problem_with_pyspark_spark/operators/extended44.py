@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -44,7 +45,7 @@ LIFT_BOOST = 400_000  # score boost for the positive class (stand-in model)
 
 
 def _pred_hash_sql(prefix: str) -> str:
-    """Portable md5→BIGINT idiom (same as llm_split_hash), SQL form."""
+    """SQL twin of ``md5_long(concat(prefix, vec_id))`` (``_pred_hash_spark``)."""
     return (
         f"CAST(('0x' || substr(md5('{prefix}' || CAST(vec_id AS VARCHAR)), 1, 15)) "
         "AS BIGINT)"
@@ -52,13 +53,7 @@ def _pred_hash_sql(prefix: str) -> str:
 
 
 def _pred_hash_spark(prefix: str):
-    return F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(prefix), F.col("vec_id").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    return md5_long(F.concat(F.lit(prefix), F.col("vec_id").cast("string")))
 
 
 @register(

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
 
@@ -129,13 +130,7 @@ def graph_harmonic_centrality_sampled(spark: SparkSession, sf_dir: str) -> DataF
     equality proves the frontier expansion computes the same sets.
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    seed_hash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("hc_"), F.col("l_partkey").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    seed_hash = md5_long(F.concat(F.lit("hc_"), F.col("l_partkey").cast("string")))
     # (seed, order) incidence for hash-chosen parts: the hop-1 frontier
     # seeds. Parts with no distinct co-part yield no h1 rows and drop
     # out — matching the oracle's "seeds are edge srcs" rule.

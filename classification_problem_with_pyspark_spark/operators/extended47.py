@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
 
@@ -234,18 +235,7 @@ def multimodal_patch_grid_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
 
     def _dim(prefix: str, span: int):
-        return 256 + (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(prefix), F.col("doc_id").cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % span
-        )
+        return 256 + md5_long(F.concat(F.lit(prefix), F.col("doc_id").cast("string"))) % span
 
     dims = d.select(
         F.col("doc_id").alias("media_id"),

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -200,18 +201,7 @@ def agg_moments_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combinable, shuffle O(|types|·N_SHARDS). Variance at
     100 TB IS this plan; Welford is for streams, not shuffles.
     """
-    shard = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("shard_"), F.col("event_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % N_SHARDS
-    )
+    shard = md5_long(F.concat(F.lit("shard_"), F.col("event_id").cast("string"))) % N_SHARDS
     base = load(spark, sf_dir, "events").select(
         "event_type",
         shard.alias("shard"),

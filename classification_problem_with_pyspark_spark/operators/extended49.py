@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -256,11 +257,7 @@ def ml_feature_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFra
         .where(F.col("tok") != "")
         .distinct()
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("fh_"), F.col("tok"))), 1, 15), 16, 10)
-        .cast("long")
-        % (1 << HASH_BITS)
-    )
+    bucket = md5_long(F.concat(F.lit("fh_"), F.col("tok"))) % (1 << HASH_BITS)
     per_bucket = (
         toks.select(bucket.alias("bucket"))
         .groupBy("bucket")

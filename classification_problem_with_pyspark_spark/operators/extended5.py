@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum, grid_rank
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -591,14 +592,7 @@ def llm_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependent — kept as `llm_sample_stratified` for the Bernoulli form).
     """
     d = load(spark, sf_dir, "documents")
-    h = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mix_"), F.col("doc_id").cast("string"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    h = md5_long(F.concat(F.lit("mix_"), F.col("doc_id").cast("string"))) % 1000
     keep_below = F.lit(100)
     for lang, rate in _MIX_RATES.items():
         keep_below = F.when(F.col("lang") == lang, int(rate * 1000)).otherwise(keep_below)
@@ -653,11 +647,7 @@ def llm_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, but one task sorts the world.
     """
     d = load(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("shuf_"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = md5_long(F.concat(F.lit("shuf_"), F.col("doc_id").cast("string")))
     w = Window.partitionBy("shard").orderBy("h", "doc_id")
     return (
         d.select("doc_id", "lang", h.alias("h"))
@@ -674,8 +664,6 @@ def llm_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Training-pipeline: benchmark decontamination (train/test shingle overlap)
 # ---------------------------------------------------------------------------
-
-_DECON_N = 5  # shingle width in tokens
 
 
 @register(
@@ -727,14 +715,7 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle byte-identical here.
     """
     d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
-    b = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 10
-    )
+    b = md5_long(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))) % 10
     toks = F.split("text", " ")
     sh = (
         d.select("doc_id", "lang", b.alias("b"), toks.alias("toks"))

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -122,20 +123,9 @@ def join_fx_rate_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     days = oc.select("d").distinct()
     ccys = oc.select("ccy").distinct()
-    rate_hash = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("fx_"), F.col("ccy"), F.lit("_"),
-                    F.date_format("d", "yyyy-MM-dd"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    rate_hash = md5_long(
+        F.concat(F.lit("fx_"), F.col("ccy"), F.lit("_"), F.date_format("d", "yyyy-MM-dd"))
+    )
     rates = (
         ccys.crossJoin(days)
         # Spark dayofweek: 1=Sun..7=Sat; weekday = 2..6

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -217,13 +218,7 @@ def multimodal_av_sync_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
 
     def _h(prefix: str, col: str):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(prefix), F.col(col).cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
+        return md5_long(F.concat(F.lit(prefix), F.col(col).cast("string")))
 
     tracks = d.select(
         F.col("doc_id").alias("media_id"),

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.global_rank import (
     bucketed_global_cumsum,
 )
@@ -200,18 +201,7 @@ def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a pure count by (day, arm) — map-side combinable, shuffle
     O(days). Guardrails must be this cheap or they don't run.
     """
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("arm_"), F.col("event_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = md5_long(F.concat(F.lit("arm_"), F.col("event_id").cast("string"))) % 2
     daily = (
         load(spark, sf_dir, "events")
         .select(F.to_date(F.date_trunc("day", "ts")).alias("d"), arm.alias("arm"))

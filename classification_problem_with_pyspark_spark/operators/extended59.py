@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -105,21 +106,15 @@ def llm_eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select("doc_id", "source")
     idx = spark.range(N_SAMPLES).select(F.col("id").cast("long").alias("i"))
 
-    def _h(prefix: str, expr):
-        return F.conv(F.substring(F.md5(expr), 1, 15), 16, 10).cast("long")
-
-    difficulty = 20 + _h(
-        "diff_", F.concat(F.lit("diff_"), F.col("doc_id").cast("string"))
-    ) % 60
+    difficulty = 20 + md5_long(F.concat(F.lit("diff_"), F.col("doc_id").cast("string"))) % 60
     ok = (
-        _h(
-            "pass_",
+        md5_long(
             F.concat(
                 F.lit("pass_"),
                 F.col("doc_id").cast("string"),
                 F.lit("_"),
                 F.col("i").cast("string"),
-            ),
+            )
         )
         % 100
         < difficulty
@@ -225,13 +220,7 @@ def ml_fairness_group_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = F.when(F.col("label") < 5, 1).otherwise(0)
 
     def _h(prefix: str):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(prefix), F.col("vec_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
+        return md5_long(F.concat(F.lit(prefix), F.col("vec_id").cast("string")))
 
     yhat = F.when(_h("fclf_") % FAIR_FLIP_MOD == 0, 1 - y).otherwise(y)
     scored = load(spark, sf_dir, "embeddings").select(

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum, grid_rank
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -514,14 +515,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select("l_suppkey")
 
     def pos(col: F.Column, salt: str) -> F.Column:
-        return (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(salt), col.cast("string"))), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % 1024
-        )
+        return md5_long(F.concat(F.lit(salt), col.cast("string"))) % 1024
 
     dimkeys = s.join(
         F.broadcast(n.where(F.col("n_name") == "GERMANY")),
@@ -608,18 +602,7 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select("o_custkey")
 
     def pos(salt: str) -> F.Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(salt), F.col("o_custkey").cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 256
-        )
+        return md5_long(F.concat(F.lit(salt), F.col("o_custkey").cast("string"))) % 256
 
     hashed = o.select("o_custkey", pos("cms0_").alias("p0"), pos("cms1_").alias("p1"))
     row0 = hashed.groupBy(F.col("p0").alias("pos")).agg(F.count("*").alias("cnt0"))
@@ -769,17 +752,7 @@ def agg_kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     error; md5 keeps both engines bit-identical.
     """
     o = load(spark, sf_dir, "orders").select("o_custkey")
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("kmv_"), F.col("o_custkey").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h")
-    )
+    h = md5_long(F.concat(F.lit("kmv_"), F.col("o_custkey").cast("string"))).alias("h")
     hashed = o.select(h).distinct()
     bottomk = hashed.orderBy("h").limit(64)
     agg = bottomk.agg(F.count("*").alias("k"), F.max("h").alias("hk"))
@@ -1022,16 +995,7 @@ def llm_shard_checksum_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     never globally.
     """
     d = load(spark, sf_dir, "documents")
-    shard = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("shuf_"), F.col("doc_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 8
-    )
+    shard = md5_long(F.concat(F.lit("shuf_"), F.col("doc_id").cast("string"))) % 8
     hashed = d.select(
         shard.alias("shard"),
         F.md5("text").alias("content_hash"),
@@ -1491,17 +1455,7 @@ def llm_cross_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts.
     """
     d = load(spark, sf_dir, "documents")
-    in_corpus = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("incr_"), F.col("doc_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 10
-        < 8
-    )
+    in_corpus = md5_long(F.concat(F.lit("incr_"), F.col("doc_id").cast("string"))) % 10 < 8
     tagged = d.select(F.md5("text").alias("h"), in_corpus.alias("in_corpus"))
     corpus = tagged.where("in_corpus").select("h").distinct()
     c = corpus.withColumn("known", F.lit(True))

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
-N_RATERS = 3
 N_CATS = 3
 RATER_NOISE_MOD = 4  # each rater deviates from truth on every 4th unit
 EARLY_MAX_DAY = 10  # drift windows: days 1-10 vs days 21+

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -175,19 +176,7 @@ def ml_mcc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     reporting it.
     """
     y = F.when(F.col("label") < 5, 1).otherwise(0)
-    flip = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("mcc_"), F.col("vec_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % MCC_FLIP_MOD
-        == 0
-    )
+    flip = md5_long(F.concat(F.lit("mcc_"), F.col("vec_id").cast("string"))) % MCC_FLIP_MOD == 0
     yhat = F.when(flip, 1 - y).otherwise(y)
     scored = load(spark, sf_dir, "embeddings").select(
         y.alias("y"), yhat.alias("yhat")

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import cosine_similarity
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank
 from classification_problem_with_pyspark_spark.registry import register
@@ -535,16 +536,7 @@ def llm_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     49 cross-split pairs ≈ 15 contaminated test docs at sf0.01.
     """
     e = load(spark, sf_dir, "embeddings")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("split_"), F.col("vec_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 10
-    )
+    bucket = md5_long(F.concat(F.lit("split_"), F.col("vec_id").cast("string"))) % 10
     b = e.select("vec_id", "embedding", bucket.alias("bucket"))
     test = b.where(F.col("bucket") == 9).select(
         F.col("vec_id").alias("test_id"), F.col("embedding").alias("emb_t")

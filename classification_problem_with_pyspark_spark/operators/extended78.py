@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -177,15 +178,7 @@ def ml_brier_skill_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = F.when(F.col("label") < 5, 1).otherwise(0)
 
     def _h(prefix: str):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(prefix), F.col("vec_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        return md5_long(F.concat(F.lit(prefix), F.col("vec_id").cast("string")))
 
     f_micro = (
         F.when(_h("brier_") % BRIER_FLIP_MOD == 0, 500_000)

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -344,9 +345,7 @@ def llm_sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k) so the exact window sees only ~k·P candidates per lang.
     """
     d = load(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
+    h = md5_long(F.col("doc_id").cast("string"), 8)
     keyed = d.select(
         "doc_id", "lang", "n_chars", (h.cast("double") / F.col("n_chars")).alias("pr")
     )

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
@@ -131,13 +132,7 @@ def llm_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index services and ONLY this fuse runs here.
     """
     e = load(spark, sf_dir, "embeddings")
-    qhash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("rrfq_"), F.col("vec_id").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    qhash = md5_long(F.concat(F.lit("rrfq_"), F.col("vec_id").cast("string")))
     # embeddings is one parquet file → one input partition; spread the
     # query side so the broadcast cross-score runs on all cores
     # (single-file trap, BASELINE.md).

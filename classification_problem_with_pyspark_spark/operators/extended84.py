@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank, grid_shift
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
@@ -226,14 +227,9 @@ def llm_self_consistency_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select("doc_id", "source")
     idx = spark.range(VOTE_N).select(F.col("id").cast("long").alias("i"))
 
-    def _h(expr):
-        return F.conv(F.substring(F.md5(expr), 1, 15), 16, 10).cast("long")
-
-    difficulty = 20 + _h(
-        F.concat(F.lit("diff_"), F.col("doc_id").cast("string"))
-    ) % 60
+    difficulty = 20 + md5_long(F.concat(F.lit("diff_"), F.col("doc_id").cast("string"))) % 60
     ok = (
-        _h(
+        md5_long(
             F.concat(
                 F.lit("pass_"),
                 F.col("doc_id").cast("string"),

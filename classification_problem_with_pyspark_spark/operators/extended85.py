@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -137,11 +138,7 @@ def ml_bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("source").alias("sb"),
         F.col("len").alias("lb"),
     )
-    mhash = F.conv(
-        F.substring(F.md5(F.concat(F.lit("bt_"), F.col("ida").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    mhash = md5_long(F.concat(F.lit("bt_"), F.col("ida").cast("string")))
     matches = (
         a.join(b, F.col("idb") == F.col("ida") + 7)
         .where(

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -108,13 +109,7 @@ def ml_quadratic_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = (F.col("label").cast("long") / 2).cast("long")
 
     def _h(prefix: str):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(prefix), F.col("vec_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
+        return md5_long(F.concat(F.lit(prefix), F.col("vec_id").cast("string")))
 
     drift = F.when(_h("qd_") % 2 == 0, 1).otherwise(-1)
     yhat = F.when(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
@@ -159,22 +160,11 @@ def ml_topk_accuracy_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cls = spark.range(TOPK_CLASSES).select(F.col("id").cast("long").alias("cls"))
     score = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("tk_"),
-                        F.col("vec_id").cast("string"),
-                        F.lit("_"),
-                        F.col("cls").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_long(
+            F.concat(
+                F.lit("tk_"), F.col("vec_id").cast("string"), F.lit("_"), F.col("cls").cast("string")
+            )
+        )
         % 1000
         + F.when(F.col("cls") == F.col("y"), TOPK_BOOST).otherwise(0)
     )

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.global_rank import (
     bucketed_global_topk,
 )
@@ -109,22 +110,11 @@ def ml_uncertainty_margin_sampling(spark: SparkSession, sf_dir: str) -> DataFram
     )
     cls = spark.range(MARGIN_CLASSES).select(F.col("id").cast("long").alias("cls"))
     score = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("tk_"),
-                        F.col("vec_id").cast("string"),
-                        F.lit("_"),
-                        F.col("cls").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_long(
+            F.concat(
+                F.lit("tk_"), F.col("vec_id").cast("string"), F.lit("_"), F.col("cls").cast("string")
+            )
+        )
         % 1000
         + F.when(F.col("cls") == F.col("y"), MARGIN_BOOST).otherwise(0)
     )

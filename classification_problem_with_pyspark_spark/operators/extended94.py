@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, stage_dir
 
@@ -97,11 +98,7 @@ def llm_judge_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = d1.select(F.col("doc_id").alias("ida"), F.col("len").alias("la"))
     b = d1.select(F.col("doc_id").alias("idb"), F.col("len").alias("lb"))
-    phash = F.conv(
-        F.substring(F.md5(F.concat(F.lit("bt_"), F.col("ida").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    phash = md5_long(F.concat(F.lit("bt_"), F.col("ida").cast("string")))
     pairs = (
         a.join(b, F.col("idb") == F.col("ida") + PAIR_STRIDE)
         .where((phash % PAIR_MOD == 0) & (F.col("la") != F.col("lb")))

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -106,18 +107,7 @@ def events_group_sequential_looks(spark: SparkSession, sf_dir: str) -> DataFrame
     monitoring is a ledger, and ledgers must be cheap.
     """
     day = F.dayofmonth("ts")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("arm_"), F.col("event_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = md5_long(F.concat(F.lit("arm_"), F.col("event_id").cast("string"))) % 2
     assigned = (
         load(spark, sf_dir, "events")
         .select(

@@ -22,7 +22,6 @@ from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-DUCK_TS_FMT = "%Y-%m-%d %H:%M:%S.%f"
 
 
 @register(

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
@@ -144,9 +145,7 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
     tok = d.select("doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("term"))
-    th = tok.select(
-        "doc_id", F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long").alias("h")
-    )
+    th = tok.select("doc_id", md5_long("term", 8).alias("h"))
     votes = th.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -654,7 +653,7 @@ def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "term"))
-    h = F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long") % 1000003
+    h = md5_long("term", 8) % 1000003
     contrib = h * ((F.col("pos") % 31) + 1)
     return tok.groupBy("doc_id").agg(
         (F.sum(contrib) % 1000000007).alias("fingerprint"),
@@ -1297,14 +1296,7 @@ def llm_sample_hash_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang string, pct int",
         )
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.col("doc_id").cast("string"), F.col("lang"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    bucket = md5_long(F.concat_ws(":", F.col("doc_id").cast("string"), F.col("lang")), 8) % 100
     return (
         d.join(rates, "lang")
         .where(bucket < F.col("pct"))
@@ -1819,22 +1811,15 @@ def llm_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tokens",
         "n_spans",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("span_"),
-                            F.col("doc_id").cast("string"),
-                            F.lit("_"),
-                            F.col("k").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
+            md5_long(
+                F.concat(
+                    F.lit("span_"),
+                    F.col("doc_id").cast("string"),
+                    F.lit("_"),
+                    F.col("k").cast("string"),
                 ),
-                16,
-                10,
-            ).cast("long")
+                8,
+            )
             # greatest(1, ·): docs with <= 2 tokens would modulo by zero or
             # a negative — an ANSI-mode abort of the whole key (ADVICE r2).
             % F.greatest(F.lit(1), F.col("n_tokens") - 2)
@@ -1908,13 +1893,7 @@ def llm_prompt_render(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "text",
         (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("tpl_"), F.col("doc_id").cast("string"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_long(F.concat(F.lit("tpl_"), F.col("doc_id").cast("string")), 8)
             % 3
         ).alias("template_id"),
     )
@@ -1990,14 +1969,7 @@ def llm_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized; split assignment is a pure key function, no extra scan.
     """
     d = load(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 10
-    )
+    bucket = md5_long(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))) % 10
     assigned = d.select(
         "doc_id",
         F.md5(F.lower(F.trim("text"))).alias("h"),

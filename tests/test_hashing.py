@@ -1,0 +1,116 @@
+"""``md5_long``, the engine's portable hash, against its two references:
+Python's ``hashlib`` and the DuckDB spelling the oracles use. A tripwire
+keeps the hand-written idiom out of the package."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import hashlib
+import os
+
+import duckdb
+import pytest
+from pyspark.sql import functions as F
+
+from classification_problem_with_pyspark_spark.functions import hashing
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.sources.catalog import load
+from tests.conftest import SF_DIR_SMOKE
+
+PKG = os.path.dirname(os.path.dirname(os.path.abspath(hashing.__file__)))
+EXTRA_INPUTS = ["", "Ünïcødé — 日本語 ✓", None]
+
+
+def _hex_long(s: str | None, lo: int, hi: int) -> int | None:
+    return None if s is None else int(hashlib.md5(s.encode()).hexdigest()[lo:hi], 16)
+
+
+def test_md5_long_matches_hashlib_and_duckdb(spark):
+    docs = load(spark, SF_DIR_SMOKE, "documents").select(
+        F.concat(F.lit("split_"), F.col("doc_id").cast("string")).alias("s")
+    )
+    extra = spark.createDataFrame([(s,) for s in EXTRA_INPUTS], "s string")
+    rows = (
+        docs.unionByName(extra)
+        .select(
+            "s",
+            md5_long("s", 8).alias("h8"),
+            md5_long("s").alias("h15"),
+            md5_long("s", start=16).alias("h15_16"),
+        )
+        .collect()
+    )
+    inputs = [r.s for r in rows]
+    assert len(inputs) > len(EXTRA_INPUTS) and set(EXTRA_INPUTS) <= set(inputs)
+    assert len(set(inputs)) == len(inputs)
+    spark_out = {r.s: (r.h8, r.h15, r.h15_16) for r in rows}
+    assert spark_out == {
+        s: (_hex_long(s, 0, 8), _hex_long(s, 0, 15), _hex_long(s, 15, 30)) for s in inputs
+    }
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(s,) for s in inputs])
+    duck_out = {
+        s: (h8, h15)
+        for s, h8, h15 in con.execute(
+            "SELECT s, CAST(('0x' || substr(md5(s), 1, 8)) AS BIGINT),"
+            " CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) FROM t"
+        ).fetchall()
+    }
+    con.close()
+    assert duck_out == {s: v[:2] for s, v in spark_out.items()}
+    assert spark_out[None] == (None, None, None)
+
+
+@pytest.mark.parametrize("digits", [0, 16])
+def test_md5_long_rejects_digits_outside_1_to_15(digits):
+    with pytest.raises(ValueError, match=rf"\b{digits}\b"):
+        md5_long("s", digits)
+
+
+def _hand_written_md5_slices(source: str) -> set[int]:
+    """Lines of ``conv(...)`` calls with an ``md5(...)`` inside a
+    ``substring(...)`` inside their arguments: the idiom ``md5_long``
+    replaces."""
+
+    def calls(node, name):
+        return [
+            n
+            for n in ast.walk(node)
+            if isinstance(n, ast.Call) and getattr(n.func, "attr", getattr(n.func, "id", None)) == name
+        ]
+
+    return {
+        conv.lineno
+        for conv in calls(ast.parse(source), "conv")
+        if any(calls(sub, "md5") for arg in conv.args for sub in calls(arg, "substring"))
+    }
+
+
+def test_md5_slice_detector_flags_the_idiom():
+    source = """
+h = F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")
+g = conv(substring(md5("t"), 1, 8), 16, 10)
+k = F.conv(
+    F.substring(F.md5(F.concat(F.lit("a_"), y)), start, 15), 16, 10
+)
+ok1 = F.conv(F.substring(F.sha2(x, 256), 1, 15), 16, 10)
+ok2 = F.substring(F.md5(x), 1, 8)
+ok3 = md5_long(x, 8)
+"""
+    assert _hand_written_md5_slices(source) == {2, 3, 4}
+
+
+def test_md5_slice_is_written_only_in_hashing():
+    with open(hashing.__file__) as f:
+        assert _hand_written_md5_slices(f.read()), "the scan must see the helper's own body"
+    offenders = []
+    for py in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
+        if py == hashing.__file__:
+            continue
+        with open(py) as f:
+            lines = _hand_written_md5_slices(f.read())
+        offenders += [f"{os.path.relpath(py, PKG)}:{n}" for n in sorted(lines)]
+    assert not offenders, f"hand-written md5 slice, use functions.hashing.md5_long: {offenders}"
