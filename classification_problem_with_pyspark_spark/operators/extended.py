@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.plans.components import min_label_components
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -739,133 +740,27 @@ def llm_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets cluster_id = min doc_id in its component (the canonical keeper),
     plus the cluster size; singletons are their own cluster.
 
-    Algorithm: iterative min-label propagation (the GraphX/GraphFrames CC
-    formulation) as pure DataFrame joins — each round every node takes
-    min(own label, neighbors' labels); converges in O(component diameter)
-    rounds. Convergence is detected via the strictly-decreasing label sum
-    (one lightweight agg per round, no self-join diff). localCheckpoint
-    truncates lineage per round — without it the plan doubles each
-    iteration; on a real cluster swap for reliable checkpointing. At
-    100 TB the round count is bounded because near-dup components are
-    tiny-diameter by construction; for adversarial long-chain graphs the
-    alternating large-star/small-star variant (Kiveris et al., "Connected
-    Components in MapReduce") halves diameter per round — same join
-    primitives. The driver-side loop is control flow only: per-round data
-    movement is one shuffle join on doc_id.
+    Algorithm: min-label propagation (plans/components.py), which needs
+    as many rounds as the widest component's diameter. At 100 TB the
+    round count stays bounded because near-dup components are
+    tiny-diameter by construction; past the cap the key raises.
 
     Oracle: DuckDB recursive CTE propagating roots over the symmetrized
     edge set; MIN(root) per node is exactly the component minimum.
     """
     pairs = llm_dedup_cluster_pairs(spark, sf_dir)
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    edges = edges.localCheckpoint(eager=True)  # pair gen runs once, not per round
+    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    ids = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
+    # 25 rounds: far above the diameter of a near-dup component
+    labels = min_label_components(edges, ids, 25, "llm_dedup_cluster_cc")
 
-    labels = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.col("doc_id").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    for _ in range(25):  # safety cap >> near-dup component diameter
-        nbr_min = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        labels = (
-            labels.join(nbr_min, labels.doc_id == nbr_min.dst, "left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:  # labels only decrease; equal sum = fixpoint
-            break
-        prev_sum = cur_sum
-
-    clusters = labels.select("doc_id", F.col("label").alias("cluster_id"))
+    clusters = labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
     sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return clusters.join(sizes, "cluster_id").select(
         "doc_id",
         "cluster_id",
         "cluster_size",
         (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-    )
-
-
-def connected_components_star(spark: SparkSession, edges: DataFrame, max_rounds: int = 30) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond") — the
-    adversarial-diameter upgrade over min-label propagation: O(log² n)
-    rounds on ANY graph shape (long chains included), vs O(diameter) for
-    propagation. Input: edges(src, dst) undirected (any orientation, dups
-    fine). Output: (node, component) with component = min node id.
-
-    Each round is two groupBy+join passes over the edge list:
-    - large-star: every node points its LARGER neighbors at its minimum
-      neighbor (incl. itself) — m = min(Γ(u) ∪ {u}).
-    - small-star: every node points its smaller-or-equal neighbors at m.
-    Edges shrink toward stars centered at component minima; convergence =
-    edge multiset stable (checked via a cheap sum-of-hashes signature, the
-    same trick as the propagation loop's label sum). localCheckpoint per
-    round bounds lineage exactly as in llm_dedup_cluster_cc.
-    """
-
-    def dedup(e: DataFrame) -> DataFrame:
-        return e.where(F.col("u") != F.col("v")).dropDuplicates(["u", "v"])
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        # neighborhoods are UNDIRECTED: re-symmetrize before grouping —
-        # star passes emit directed edges, and computing Γ(u) over
-        # out-edges only silently freezes chains after one round
-        sym = dedup(
-            e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        )
-        # neighborhood minimum per u, u itself included
-        m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        j = sym.join(m, "u")
-        cond = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
-        out = j.where(cond).select(F.col("v").alias("u"), F.col("m").alias("v"))
-        keep_center = j.select("u", F.col("m").alias("v"))
-        return dedup(out.unionByName(keep_center))
-
-    # symmetrize once; nodes remembered so singletons survive the loop
-    nodes = (
-        edges.select(F.col("src").alias("n"))
-        .unionByName(edges.select(F.col("dst").alias("n")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e = dedup(
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionByName(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
-        )
-    ).localCheckpoint(eager=True)
-
-    prev_sig = None
-    for _ in range(max_rounds):
-        e = star(e, large=True)
-        e = star(e, large=False).localCheckpoint(eager=True)
-        sig = e.agg(
-            F.count("*").alias("c"), F.sum(F.hash("u", "v")).alias("h")
-        ).first()
-        sig = (sig.c, sig.h)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-
-    # after convergence every non-minimum node has exactly the edge (u, min)
-    labels = e.groupBy("u").agg(F.min("v").alias("component"))
-    return (
-        nodes.join(labels, nodes.n == labels.u, "left")
-        .select(
-            F.col("n").alias("node"),
-            F.least(F.coalesce("component", "n"), F.col("n")).alias("component"),
-        )
     )
 
 

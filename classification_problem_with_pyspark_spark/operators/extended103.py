@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -118,12 +119,12 @@ def llm_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = (
         e.where(qhash % MRR_QUERY_MOD == 0)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb"))
-        .repartition(32, "qid")
     )
+    queries = spread(queries, "qid")
     d = load(spark, sf_dir, "documents")
     n = MRR_NGRAM
     shingles = (
-        d.repartition(32, "doc_id")
+        spread(d, "doc_id")
         .select("doc_id", F.split("text", " ").alias("ws"))
         .where(F.size("ws") >= n)
         .select(

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -104,7 +105,7 @@ def llm_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all-pairs; orientation is a projection over that bounded
     relation.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     n = CONT_NGRAM
     shingles = (
         d.select("doc_id", F.split("text", " ").alias("ws"))
@@ -221,7 +222,7 @@ def llm_group_advantage_normalize(spark: SparkSession, sf_dir: str) -> DataFrame
     at any size; int64 headroom: r ≤ 1e6 → n·Q ≤ n·corpus·1e12, inside
     int64 through sf10.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     rewards = d.select(
         "doc_id",
         "source",

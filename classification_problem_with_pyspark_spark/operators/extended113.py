@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -155,8 +156,8 @@ def llm_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = (
         e.where(qhash % MMR_QUERY_MOD == 0)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb"))
-        .repartition(32, "qid")
     )
+    queries = spread(queries, "qid")
     cands = e.select(F.col("vec_id").alias("cand"), F.col("embedding").alias("c_emb"))
     simq = F.expr(
         "CAST(round(1000000 * (sim_raw)) AS BIGINT)"
@@ -312,7 +313,7 @@ def emb_cov_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out is dims²·rows with map-side integer partials collapsing
     to the dims² moment table; rows never pair with rows.
     """
-    e = load(spark, sf_dir, "embeddings").repartition(32, "vec_id")
+    e = spread(load(spark, sf_dir, "embeddings"), "vec_id")
     dims = e.select(
         "vec_id", F.posexplode("embedding").alias("d", "x")
     ).select(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -163,8 +164,7 @@ def llm_length_powerlaw_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps sum_ln_micro > 0 so the guard stays dormant on real data.
     """
     lens = (
-        load(spark, sf_dir, "documents")
-        .repartition(32, "doc_id")
+        spread(load(spark, sf_dir, "documents"), "doc_id")
         .select(
             "doc_id",
             F.size(F.split("text", " ")).cast("long").alias("n_words"),

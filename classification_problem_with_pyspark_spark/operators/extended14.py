@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
 
@@ -136,7 +137,7 @@ def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["top1_match32"].append(int(tops[64][0] == tops[32][0]))
             yield pd.DataFrame(out)
 
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding").repartition(32)
+    e = spread(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     return e.mapInPandas(
         matryoshka_batches,
         schema="qid long, overlap16_at5 long, overlap32_at5 long, top1_match32 long",

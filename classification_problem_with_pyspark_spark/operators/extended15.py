@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -94,7 +95,7 @@ def llm_fingerprint_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all-pairs); hot boilerplate fingerprints get a frequency cap
     before pairing, the mega-bucket rule every LSH key here follows.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     words = F.split(F.col("text"), " ")
     shingles = d.select(
         "doc_id",

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -943,7 +944,7 @@ def llm_dedup_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     many-partition, so the repartition is a no-op there by count).
     Assumes every doc has >= 3 tokens (FIXTURES.md: min is 10).
     """
-    docs = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = spread(load(spark, sf_dir, "documents"), "doc_id")
     toks = F.split("text", " ")
     shingles = F.transform(
         F.sequence(F.lit(0), F.size(toks) - 3),

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -310,11 +311,7 @@ def srp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    emb = (
-        load(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", "embedding")
-        .repartition(32, "vec_id")
-    )
+    emb = spread(load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding"), "vec_id")
     return emb.mapInPandas(
         sign_batches, schema="vec_id long, label int, signature long"
     )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -150,11 +151,7 @@ def cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # documents is one parquet file → one input partition; spread it
     # before the per-position explode + md5 (the heaviest per-row work in
     # the pack) so the scan parallelizes (single-file trap, BASELINE.md).
-    d = (
-        load(spark, sf_dir, "documents")
-        .where(F.length("text") >= CDC_W)
-        .repartition(32, "doc_id")
-    )
+    d = spread(load(spark, sf_dir, "documents").where(F.length("text") >= CDC_W), "doc_id")
     pos = d.select(
         "doc_id",
         F.length("text").alias("total_chars"),

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -111,7 +112,7 @@ def agg_bootstrap_ci_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 64× fan-out and 9.6M md5s run in a single task (single-file
     # trap, BASELINE.md). Repartition BEFORE the explode so the hash work
     # parallelizes; the groupBy(b) below still combines map-side.
-    fan = folded.repartition(32, "o_orderkey").select(
+    fan = spread(folded, "o_orderkey").select(
         "o_orderkey",
         "u100",
         F.explode(F.expr(f"sequence(0, {B_REPLICATES - 1})")).alias("b"),

@@ -230,8 +230,11 @@ def source_jsonl_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).json(
         path
     )
+    # A valid line names its nation. The name test also keeps a column
+    # beside _corrupt_record in the scan: `.count()` prunes the select, and
+    # Spark refuses a JSON scan that reads only the corrupt-record column.
     return (
-        back.where(F.col("_corrupt_record").isNull())
+        back.where(F.col("_corrupt_record").isNull() & F.col("name").isNotNull())
         .select("name", "region", F.lit("valid").alias("status"))
         .orderBy("name")
     )

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
 
@@ -300,7 +301,7 @@ def emb_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"qid": out_q, "nid": out_n, "cosine_sim": out_s, "rnk": out_r}
             )
 
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding").repartition(32)
+    e = spread(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     topk = e.mapInPandas(
         topk_batches, schema="qid long, nid long, cosine_sim double, rnk integer"
     ).localCheckpoint(eager=False)

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
 
@@ -155,11 +156,7 @@ def emb_pq_codebook_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.concat(out, ignore_index=True)
 
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .repartition(32)
-    )
+    e = spread(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     return e.mapInPandas(
         assign_batches,
         schema="vec_id long, subspace long, code long, code_dist double",

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -61,8 +62,7 @@ def _overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = NGRAM_N
     # single-file trap (BASELINE.md): spread before the shingle explode
     toks = (
-        load(spark, sf_dir, "documents")
-        .repartition(32, "doc_id")
+        spread(load(spark, sf_dir, "documents"), "doc_id")
         .select("source", "doc_id", F.split("text", " ").alias("ws"))
     )
     srcs_per_digest = (

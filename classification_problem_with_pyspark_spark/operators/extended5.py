@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum, grid_rank
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -52,11 +53,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition: the single-file local scan would otherwise run the
     # self-join build on ONE task (SURVEY §7.9); no-op by count on a
     # many-partition 100-TB scan, and the join reuses this partitioning.
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .repartition(32, "l_orderkey")
-    )
+    li = spread(load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"), "l_orderkey")
     a = li.alias("a")
     b = li.alias("b")
     return (
@@ -521,7 +518,7 @@ def llm_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); all ratios derive from exact integer counts, rounded (,6)
     on both engines.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     tok = (
         d.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("doc_id", "lang", "tok")
@@ -714,7 +711,7 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     string (same plan, ~10× less shuffle traffic); the string form keeps
     the oracle byte-identical here.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     b = md5_long(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))) % 10
     toks = F.split("text", " ")
     sh = (
@@ -968,7 +965,7 @@ def llm_compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd
 
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
 
     def score(batches):
         import zlib
@@ -1043,7 +1040,7 @@ def llm_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cnt DESC, token) is a total order so ranks and cumulative integer
     sums are deterministic on both engines.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     vocab = (
         d.select(F.explode(F.split("text", " ")).alias("token"))
         .groupBy("token")
@@ -1135,11 +1132,7 @@ def _copurchase_edges_min2(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph for community detection (the full distinct-pair graph is so
     dense that LPA collapses it into one community; repeated
     co-occurrence is the meaningful tie)."""
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .repartition(32, "l_orderkey")
-    )
+    li = spread(load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"), "l_orderkey")
     a = li.alias("a")
     b = li.alias("b")
     return (
@@ -2007,7 +2000,7 @@ def llm_word_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the (bigram → count) aggregation, and ranking runs over
     the aggregated pair vocabulary with a total (cnt DESC, bigram) order.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     # filter first: Spark's sequence(1, 0) DESCENDS, so guard-by-
     # greatest would fabricate a null bigram for 1-token docs
     bigrams = (

@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum, grid_rank
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -83,7 +84,7 @@ def emb_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero order-sensitive float aggregation anywhere. The row map runs in
     whole-stage codegen; the only shuffle is the 10-key label groupBy.
     """
-    e = load(spark, sf_dir, "embeddings").repartition(32, "vec_id")
+    e = spread(load(spark, sf_dir, "embeddings"), "vec_id")
     per_vec = e.select(
         "label",
         F.sqrt(_sumsq_micro(F.col("embedding")).cast("double") / 1000000.0).alias(
@@ -132,7 +133,7 @@ def emb_centroid_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     µ-unit integer sums make the centroid a ratio of exact integers —
     deterministic on both engines regardless of row order.
     """
-    e = load(spark, sf_dir, "embeddings").repartition(32, "vec_id")
+    e = spread(load(spark, sf_dir, "embeddings"), "vec_id")
     exploded = e.select(
         "label",
         F.posexplode("embedding").alias("dim", "x"),
@@ -188,7 +189,7 @@ def emb_dim_variance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded BEFORE ranking so the order itself is reproducible across
     engines, with dim as the tiebreaker.
     """
-    e = load(spark, sf_dir, "embeddings").repartition(32, "vec_id")
+    e = spread(load(spark, sf_dir, "embeddings"), "vec_id")
     xd = F.col("x").cast("double")
     exploded = e.select(F.posexplode("embedding").alias("dim", "x")).select(
         "dim",
@@ -252,7 +253,7 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     float aggregation, so the hash can never flake. Pure row map: no
     shuffle, no Python, whole-stage codegen end to end.
     """
-    e0 = load(spark, sf_dir, "embeddings").repartition(32, "vec_id")
+    e0 = spread(load(spark, sf_dir, "embeddings"), "vec_id")
     ed = F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
     prepped = e0.select(
         "vec_id",
@@ -321,7 +322,7 @@ def llm_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the cheapest possible shape: scan + map-side partial agg on
     the low-cardinality source key.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     words = F.split("text", " ")
     g_len = F.col("n_chars").between(100, 20000)
     g_words = F.size(words) >= 20
@@ -1141,7 +1142,7 @@ def emb_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical on both engines. Output: the µ-scaled component per
     dim + the Rayleigh-quotient eigenvalue estimate (scaled units).
     """
-    e0 = load(spark, sf_dir, "embeddings").repartition(32, "vec_id")
+    e0 = spread(load(spark, sf_dir, "embeddings"), "vec_id")
     triples = e0.select(
         F.explode(
             F.expr(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -110,7 +111,7 @@ def llm_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     n = CURVE_NGRAM
     # single-file trap (BASELINE.md): spread before the shingle explode
-    toks = d.repartition(32, "doc_id").select(
+    toks = spread(d, "doc_id").select(
         "doc_id", F.split("text", " ").alias("ws")
     )
     shingles = (

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -161,7 +162,7 @@ def emb_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected: the 256-literal plan analysis + interpreted lambdas read
     0.79× of the explode form; the batch matmul is the §4.2 shape.)
     """
-    e = load(spark, sf_dir, "embeddings").select("embedding").repartition(32)
+    e = spread(load(spark, sf_dir, "embeddings").select("embedding"))
     cells = (
         e.mapInPandas(_ivf_cell_batches, schema="cell int")
         .groupBy("cell")

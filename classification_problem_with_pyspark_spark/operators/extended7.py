@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import cosine_similarity
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -91,7 +92,7 @@ def llm_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic end-to-end (exact string equality, integer positions),
     so the full rebuilt text hash-checks against the oracle.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     words = F.split(F.col("text"), " ")
     base = d.select(
         "doc_id",
@@ -185,7 +186,7 @@ def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.when(F.element_at("embedding", 3) >= 0, 2).otherwise(0)
         + F.when(F.element_at("embedding", 4) >= 0, 1).otherwise(0)
     )
-    cells = e.select("vec_id", "embedding", cell.alias("cell")).repartition(32, "cell")
+    cells = spread(e.select("vec_id", "embedding", cell.alias("cell")), "cell")
     a = cells.select(
         F.col("vec_id").alias("vid_a"),
         F.col("embedding").alias("emb_a"),
@@ -546,7 +547,7 @@ def llm_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cos = cosine_similarity(F.col("emb_t"), F.col("emb_r"))
     return (
-        test.repartition(32)
+        spread(test)
         .crossJoin(F.broadcast(train))
         .where(cos >= 0.35)
         .groupBy("test_id")

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -425,7 +426,7 @@ def bpe_learn(
     """
     d = load(spark, sf_dir, "documents")
     lead = ["word"] if keep_word else []
-    words = (
+    words = spread(
         d.select(F.explode(F.split("text", " ")).alias("word"))
         .where(F.length("word") > 0)
         .groupBy("word")
@@ -435,9 +436,7 @@ def bpe_learn(
             F.col("wcnt"),
             F.split(F.col("word"), "(?!^)").alias("syms"),
         )
-        .repartition(32)
-        .localCheckpoint()
-    )
+    ).localCheckpoint()
     merges: list[tuple[int, str, str, int]] = []
     for step in range(1, n_rounds + 1):
         pairs = (

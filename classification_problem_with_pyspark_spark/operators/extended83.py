@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -139,8 +140,8 @@ def llm_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = (
         e.where(qhash % RRF_QUERY_MOD == 0)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb"))
-        .repartition(32, "qid")
     )
+    queries = spread(queries, "qid")
     cands = e.select(F.col("vec_id").alias("cand"), F.col("embedding").alias("c_emb"))
     sim = F.round(
         dot(F.col("q_emb"), F.col("c_emb"))
@@ -157,7 +158,7 @@ def llm_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     n = RRF_NGRAM
     shingles = (
-        d.repartition(32, "doc_id")
+        spread(d, "doc_id")
         .select("doc_id", F.split("text", " ").alias("ws"))
         .where(F.size("ws") >= n)
         .select(

@@ -22,6 +22,8 @@ from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
+from classification_problem_with_pyspark_spark.plans.components import min_label_components
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
 
@@ -143,7 +145,7 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     file; at 100 TB the scan is already many-partition and the
     bit-vote shuffle carries 16 ints per doc either way.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     tok = d.select("doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("term"))
     th = tok.select("doc_id", md5_long("term", 8).alias("h"))
     votes = th.groupBy("doc_id").agg(
@@ -296,7 +298,7 @@ def llm_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # explicit projection: without it the scan feeds every column
     # (incl. label) through the Arrow boundary
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding").repartition(32)
+    e = spread(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     return e.mapInPandas(
         topk_batches,
         schema="qid long, nid long, cosine_sim double, neighbor_rank integer",
@@ -335,9 +337,11 @@ def llm_similarity_topk_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the probe side is repartitioned so the nested loop parallelizes
     # across cores/executors (the single-file scan would otherwise run the
     # whole N² loop in one task).
-    a = e.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("emb_a")).withColumn(
-        "norm_a", norm(F.col("emb_a"))
-    ).repartition(64)
+    a = spread(
+        e.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("emb_a")).withColumn(
+            "norm_a", norm(F.col("emb_a"))
+        )
+    )
     b = e.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("emb_b")).withColumn(
         "norm_b", norm(F.col("emb_b"))
     )
@@ -687,10 +691,9 @@ def llm_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_similarity_ivf candidate buckets and keeps this same filter.
     """
     e = load(spark, sf_dir, "embeddings")
-    a = (
+    a = spread(
         e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
         .withColumn("norm_a", norm(F.col("emb_a")))
-        .repartition(64)
     )
     b = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b")).withColumn(
         "norm_b", norm(F.col("emb_b"))
@@ -1018,7 +1021,7 @@ def llm_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     position-explode across cores when the input is one small file (a
     100-TB scan is already many-partition).
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     grams = (
         d.select(
             "lang",
@@ -1232,7 +1235,7 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise run the whole split+transform+explode on ONE task (the r1
     # single-file trap, BASELINE.md continuation-2; measured 1.4→0.87 s
     # warm at sf0.1). No-op by count on a many-partition 100-TB scan.
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     w = d.select("doc_id", F.split("text", " ").alias("w"))
     grams = (
         w.where(F.size("w") >= 3)
@@ -1342,7 +1345,7 @@ def llm_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition: spread the split+explode map work across cores on the
     # single-file local input (no-op by count at 100 TB) — same trap as
     # llm_ngram_novelty.
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     tf = tok.groupBy("term").agg(F.count("*").alias("cnt"))
     total = tf.agg(F.sum("cnt").alias("n"))
@@ -1458,42 +1461,15 @@ def llm_dedup_pipeline_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(inter.cast("double") / union >= 0.5)
         .select("doc_a", "doc_b")
     )
-    edges = verified.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionAll(
-        verified.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).localCheckpoint(eager=True)  # candidate gen + verify run once, not per round
-
-    labels = d.select(F.col("doc_id").alias("id"), F.col("doc_id").alias("root"))
-    labels = labels.localCheckpoint(eager=True)
-    prev_sum = None
-    for _ in range(15):  # component diameter bound; near-dup clusters are tiny
-        prop = (
-            edges.join(labels, edges.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("root").alias("nroot"))
-        )
-        labels = (
-            labels.join(prop, "id", "left")
-            .select("id", F.least(F.col("root"), F.col("nroot")).alias("root"))
-            .localCheckpoint(eager=True)
-        )
-        cur = labels.agg(F.sum("root")).first()[0]
-        if cur == prev_sum:
-            break
-        prev_sum = cur
-    else:
-        # Silent partial labels would diverge from the oracle's transitive
-        # closure with no error at the source (ADVICE r2) — fail loudly.
-        raise RuntimeError(
-            "llm_dedup_pipeline_exact: connected-components did not converge "
-            "within 15 rounds (duplicate-chain diameter > 15); raise the bound"
-        )
-    sizes = labels.groupBy(F.col("root").alias("cluster_id")).agg(
+    edges = verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    ids = d.select(F.col("doc_id").alias("id"))
+    # 15 rounds: the component diameter bound; near-dup clusters are tiny
+    labels = min_label_components(edges, ids, 15, "llm_dedup_pipeline_exact")
+    sizes = labels.groupBy(F.col("label").alias("cluster_id")).agg(
         F.count("*").alias("cluster_size")
     )
     return (
-        labels.join(sizes, labels.root == sizes.cluster_id)
+        labels.join(sizes, labels.label == sizes.cluster_id)
         .where(F.col("cluster_size") >= 2)
         .select(
             F.col("id").alias("doc_id"),
@@ -1629,11 +1605,13 @@ def llm_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows share the qid partitioning so Spark reuses the exchange.
     """
     e = load(spark, sf_dir, "embeddings")
-    a = e.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("emb_a"),
-        F.col("label").alias("label_a"),
-    ).withColumn("norm_a", norm(F.col("emb_a"))).repartition(32)
+    a = spread(
+        e.select(
+            F.col("vec_id").alias("qid"),
+            F.col("embedding").alias("emb_a"),
+            F.col("label").alias("label_a"),
+        ).withColumn("norm_a", norm(F.col("emb_a")))
+    )
     b = e.select(
         F.col("vec_id").alias("nid"),
         F.col("embedding").alias("emb_b"),
@@ -1712,7 +1690,7 @@ def llm_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the gate SF and flipped the 6th decimal between engines; integer
     sums make the division operands bit-identical on both sides.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     toks = F.split("text", " ")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     len_score = F.least(F.length("text") / F.lit(500.0), F.lit(1.0))
@@ -1791,7 +1769,7 @@ def llm_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct shuffle and a per-doc rollup — linear in masked tokens,
     which are 15% of the corpus.
     """
-    d = load(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id")
     docs = d.select("doc_id", F.size(F.split("text", " ")).alias("n_tokens"))
     spans = docs.select(
         "doc_id",

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -233,8 +234,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     m = _media_table(spark, sf_dir)
     return (
-        m.select("media_id", "payload")
-        .repartition(32)
+        spread(m.select("media_id", "payload"))
         .mapInPandas(
             _frame_sample_batches,
             schema="media_id long, frame_idx long, frame_off long, frame_md5 string",

@@ -32,7 +32,7 @@ cells, so no top-level arrays).
 Scale posture (SURVEY.md §7.6): payload bytes are created, written and
 decoded INSIDE each Arrow batch (mapInPandas) and never leave the
 worker un-aggregated — the op is embarrassingly parallel with zero
-shuffle after an explicit repartition(32, id) that defeats the
+shuffle after an explicit spread(df, id) that defeats the
 single-file fan-out trap (the r4 8-operator lesson). At 100 TB the same
 kernel reads a real `binary` column instead of synthesizing one; the
 decode cost is per-batch Python amortized over Arrow batches.
@@ -49,6 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -608,11 +609,8 @@ def _wav_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def _ids(spark: SparkSession, sf_dir: str, mod: int) -> DataFrame:
     # doc_id-only projection + pushed filter: the scan reads ONE column
     d = load(spark, sf_dir, "documents")
-    return (
-        d.filter(F.col("doc_id") % mod == 0)
-        .select(F.col("doc_id").alias("media_id"))
-        .repartition(32, "media_id")  # defeat the single-file fan-out trap
-    )
+    ids = d.filter(F.col("doc_id") % mod == 0).select(F.col("doc_id").alias("media_id"))
+    return spread(ids, "media_id")  # defeat the single-file fan-out trap
 
 
 @register(

@@ -26,7 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import SCHEMAS, load, stage_dir
+from classification_problem_with_pyspark_spark.sources.catalog import (
+    SCHEMAS,
+    compact_parquet,
+    load,
+    stage_dir,
+)
 
 
 @register(
@@ -274,10 +279,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         SyntheticEventsSource,
     )
 
-    try:
-        spark.dataSource.register(SyntheticEventsSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(SyntheticEventsSource)
     df = (
         spark.read.format("synthetic_events")
         .option("n_rows", 4000)
@@ -402,7 +404,7 @@ def sink_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = stage_dir("compaction")
     frag, compact = os.path.join(root, "frag"), os.path.join(root, "compact")
     e.repartition(64).write.mode("overwrite").parquet(frag)
-    spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compact)
+    compact_parquet(spark, frag, compact, 4)
     back = spark.read.parquet(compact)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),

@@ -3,8 +3,16 @@
 SURVEY.md §4 (physical-execution posture) and §7.5 (pitfalls):
 - session timezone UTC on both engines or timestamp hashes diverge;
 - AQE on (runtime join re-planning, skew splitting) — the 100-TB posture;
-- modest shuffle partitions for local test scale (overridable via env for
-  cluster deployment, where this would be ~2-4x total executor cores).
+- one core count sizes the session: ``SPARK_GRAFT_CPUS``, or the cores
+  this process may run on. It gives ``local[N]`` and, unless the caller
+  passes ``shuffle_partitions``, the shuffle partition count. Operators
+  size their pre-fan-out spread from the session's default parallelism
+  (``plans/fanout.py``), which ``local[N]`` sets to N.
+  ``SPARK_GRAFT_MASTER`` and ``SPARK_GRAFT_DRIVER_MEM`` override the
+  master and the driver heap;
+- Python workers import the engine from this checkout whatever the
+  caller's working directory, so UDFs, UDTFs and data sources defined in
+  the package resolve on every worker.
 """
 
 from __future__ import annotations
@@ -13,7 +21,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -27,7 +36,7 @@ def get_spark(
     not here.
     """
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{DEFAULT_CPUS}]")
-    parts = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", DEFAULT_CPUS))
+    parts = shuffle_partitions or DEFAULT_CPUS
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -41,6 +50,10 @@ def get_spark(
         # Arrow for any pandas_udf / applyInPandas boundary (SURVEY.md §3 EP3).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Workers unpickle package code (mapInPandas kernels, UDTFs, the
+        # Python data source); without this they find it only when the
+        # caller happens to start in the checkout.
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
         # 16g on the 128 GiB test box: 8g showed multi-second full-GC
         # stalls on random queries during 145-query bench sweeps (one
         # long-lived JVM accumulates codegen classes + block-manager

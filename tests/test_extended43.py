@@ -51,6 +51,7 @@ def test_jsonl_malformed_quarantines_exactly_the_bad_lines(spark):
     valid = {x.n_name for x in nat if x.n_nationkey % 5 != 2}
     corrupt = {x.n_name for x in nat if x.n_nationkey % 5 == 2}
     assert {r.name for r in rows} == valid
+    assert df.count() == len(rows)
     assert corrupt  # the fixture genuinely injects corruption
     regions = {x.n_name: x.n_regionkey for x in nat}
     for r in rows:

@@ -123,15 +123,13 @@ def test_approx_percentile_within_sketch_bound(spark):
             assert abs(av - ev) / max(abs(ev), 1e-9) < 0.05, (flag, acol, av, ev)
 
 
-def test_star_connected_components_matches_union_find(spark):
-    """Property test: large-star/small-star CC equals a Python union-find
-    on seeded random graphs, including a long chain (the propagation
-    algorithm's worst case, which star handles in O(log^2 n) rounds)."""
+def test_min_label_components_matches_union_find(spark):
+    """Property test: min-label propagation CC equals a Python union-find
+    on seeded random graphs, singletons included; a chain longer than the
+    round cap raises instead of returning partial labels."""
     import random
 
-    from classification_problem_with_pyspark_spark.operators.extended import (
-        connected_components_star,
-    )
+    from classification_problem_with_pyspark_spark.plans.components import min_label_components
 
     def union_find(n_nodes, edge_list):
         parent = list(range(n_nodes))
@@ -153,24 +151,25 @@ def test_star_connected_components_matches_union_find(spark):
             comp_min[r] = min(comp_min.get(r, v), v)
         return {v: comp_min[find(v)] for v in range(n_nodes)}
 
+    def components(n_nodes, edge_list, max_rounds):
+        edges = spark.createDataFrame(edge_list, "src long, dst long")
+        ids = spark.range(n_nodes)
+        labels = min_label_components(edges, ids, max_rounds, "probe")
+        return {r.id: r.label for r in labels.collect()}
+
     rng = random.Random(42)
     cases = [
-        [(i, i + 1) for i in range(0, 120)],                       # one long chain
+        [(i + 1, i) for i in range(0, 12)],                        # a chain, either orientation
         [(rng.randrange(200), rng.randrange(200)) for _ in range(150)],
         [(rng.randrange(300), rng.randrange(300)) for _ in range(80)],  # many singletons
     ]
     for edge_list in cases:
         edge_list = [(a, b) for a, b in edge_list if a != b]
         n_nodes = max(max(a, b) for a, b in edge_list) + 1
-        expected = union_find(n_nodes, edge_list)
-        edges = spark.createDataFrame(edge_list, "src long, dst long")
-        got = {
-            r.node: r.component
-            for r in connected_components_star(spark, edges).collect()
-        }
-        # star CC only sees nodes that appear in edges
-        touched = {a for e in edge_list for a in e}
-        assert got == {v: c for v, c in expected.items() if v in touched}
+        assert components(n_nodes, edge_list, 40) == union_find(n_nodes, edge_list)
+
+    with pytest.raises(RuntimeError, match="probe: connected components did not converge within 5"):
+        components(13, cases[0], 5)
 
 
 def test_incremental_merge_equals_full_recompute(spark):

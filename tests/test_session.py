@@ -1,0 +1,59 @@
+"""``get_spark`` outside the checkout: the core count comes from the
+process's CPU affinity, and Python workers import the engine whatever
+the caller's working directory."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+from classification_problem_with_pyspark_spark import session
+from tests.conftest import SF_DIR_SMOKE
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+# keys whose plan build or run unpickles package code in a Python worker
+WORKER_KEYS = [
+    "emb_ivf_cell_balance",
+    "multimodal_bmp_decode",
+    "multimodal_png_decode",
+    "multimodal_wav_decode",
+    "multimodal_decode_stub",
+    "multimodal_frame_sample",
+    "source_python_datasource",
+    "udtf_group_normalize",
+]
+
+
+def _env(**extra: str) -> dict[str, str]:
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "SPARK_GRAFT_CPUS")}
+    return {**env, **extra}
+
+
+def test_default_cpus_is_the_affinity_count(tmp_path):
+    code = (
+        f"import sys; sys.path.insert(0, {ROOT!r})\n"
+        "from classification_problem_with_pyspark_spark.session import DEFAULT_CPUS\n"
+        "print(DEFAULT_CPUS)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=_env(), capture_output=True,
+        text=True, check=True, timeout=120,
+    )
+    assert int(out.stdout) == len(os.sched_getaffinity(0))
+
+
+def test_worker_keys_run_from_another_directory(tmp_path):
+    # the checkout is on the driver's sys.path only, never the workers'
+    code = (
+        f"import sys; sys.path.insert(0, {ROOT!r})\n"
+        "from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules\n"
+        "from classification_problem_with_pyspark_spark.session import get_spark\n"
+        "load_all_modules()\n"
+        "spark = get_spark(shuffle_partitions=4)\n"
+        f"for key in {WORKER_KEYS!r}:\n"
+        f"    assert QUERIES[key].fn(spark, {SF_DIR_SMOKE!r}).collect(), key\n"
+        "spark.stop()\n"
+    )
+    env = _env(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    subprocess.run([sys.executable, "-c", code], cwd=tmp_path, env=env, check=True, timeout=600)
