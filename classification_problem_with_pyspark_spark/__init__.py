@@ -19,15 +19,28 @@ Architecture (SURVEY.md §7.7, adapted to the mandated layout):
 - ``sources/``           explicit schemas + parquet/CSV/memory/stream readers.
 - ``operators/``         relational, joins, aggregates, windows, set ops,
                          ML, LLM-pipeline operators.
-- ``functions/``         scalar/vector expression helpers (JVM-side only).
+- ``functions/``         scalar/vector expression helpers, the portable md5
+                         hash (``hashing``) and the numpy kernels the
+                         embedding keys run in Python workers
+                         (``embedding_kernels``).
 - ``streaming/``         Structured Streaming wrappers over the batch twins.
-- ``plans/``             plan-inspection helpers (pushdown/broadcast asserts).
+- ``plans/``             shared plan shapes: the pre-fan-out ``spread``,
+                         bounded-grid and global-rank windows, connected
+                         components; plan-inspection asserts (``explain``).
 
 Every operator is a pure function of ``(spark, sf_dir)`` returning a lazy
 DataFrame; nothing collects on the driver (SURVEY.md §7.6 100-TB rules).
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from classification_problem_with_pyspark_spark.registry import QUERIES, get_queries, get_oracles
+
+# Package code a job ships (UDFs, UDTFs, data sources, worker kernels)
+# travels by value, so Python workers need not be able to import it.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def list_queries() -> list[str]:

@@ -9,6 +9,8 @@ a DuckDB oracle computes the same value with
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -25,3 +27,15 @@ def md5_long(expr: Column | str, digits: int = 15, start: int = 1) -> Column:
     if not 1 <= digits <= MAX_DIGITS:
         raise ValueError(f"md5_long digits must be in 1..{MAX_DIGITS}, got {digits}")
     return F.conv(F.substring(F.md5(expr), start, digits), 16, 10).cast("long")
+
+
+def md5_long_py(text: str) -> int:
+    """``md5_long(text)`` of a Python string (UTF-8, like Spark's
+    ``md5``), for code that runs in a Python worker."""
+    return int(md5_hex(text)[:MAX_DIGITS], 16)
+
+
+def md5_hex(data: bytes | str) -> str:
+    """The 32 hex digits of md5 as Spark's and DuckDB's ``md5`` print
+    them; a string is hashed as UTF-8."""
+    return hashlib.md5(data.encode() if isinstance(data, str) else data).hexdigest()

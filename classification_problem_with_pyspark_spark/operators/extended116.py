@@ -33,9 +33,10 @@ Murphy's bin table is ≤ 10 rows, Simpson's segment table is
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -56,14 +57,18 @@ _FQ_ORACLE = f"""
          END // 100000) * 100000 + 50000
 """
 
-_FQ_SPARK = f"""
-        (CASE WHEN CAST(conv(substring(md5(concat('brier_', CAST(vec_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % {BRIER_FLIP_MOD} = 0
-              THEN 500000
-              WHEN label < 5
-              THEN 700000 + CAST(conv(substring(md5(concat('bf_', CAST(vec_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % 300000
-              ELSE CAST(conv(substring(md5(concat('bf_', CAST(vec_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % 300000
-         END DIV 100000) * 100000 + 50000
-"""
+
+def _fq_spark() -> Column:
+    """``_FQ_ORACLE`` on Spark: the forecast is non-negative, so
+    ``fq - fq % 100000`` is ``(fq DIV 100000) * 100000``."""
+    vec_id = F.col("vec_id").cast("string")
+    bf = md5_long(F.concat(F.lit("bf_"), vec_id)) % 300000
+    fq = (
+        F.when(md5_long(F.concat(F.lit("brier_"), vec_id)) % BRIER_FLIP_MOD == 0, 500000)
+        .when(F.col("label") < 5, 700000 + bf)
+        .otherwise(bf)
+    )
+    return fq - fq % 100000 + 50000
 
 
 @register(
@@ -136,7 +141,7 @@ def ml_brier_decomposition_murphy(spark: SparkSession, sf_dir: str) -> DataFrame
     e = load(spark, sf_dir, "embeddings")
     scored = e.select(
         F.expr("CASE WHEN label < 5 THEN 1 ELSE 0 END").alias("o"),
-        F.expr(f"CAST({_FQ_SPARK} AS BIGINT)").alias("fq"),
+        _fq_spark().cast("long").alias("fq"),
     )
     # Loud overflow guard (ADVICE r4): rel/res square a value bounded by
     # 1e6·nk, so int64 holds only while nk ≤ ~3e3 (3034 = ⌊√(2⁶³−1)⌋/1e6).

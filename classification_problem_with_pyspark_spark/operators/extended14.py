@@ -28,6 +28,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from classification_problem_with_pyspark_spark.functions.embedding_kernels import (
+    as_matrix,
+    cosine_sims,
+    read_embeddings,
+    row_norms,
+    top_k,
+)
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
@@ -97,45 +104,31 @@ def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity discipline (the oracle keeps the declarative
     two-window SQL form).
     """
-    import numpy as np
     import pandas as pd
 
     emb_path = path_for(sf_dir, "embeddings")
     k = 5
 
     def matryoshka_batches(batches):
-        cand = pd.read_parquet(emb_path)
-        C = np.stack(cand["embedding"].to_numpy()).astype(np.float64)
-        cid = cand["vec_id"].to_numpy()
+        cid, C = read_embeddings(emb_path)
         # candidate norms per truncation, once per worker
-        norms = {d: np.sqrt((C[:, :d] * C[:, :d]).sum(axis=1)) for d in (16, 32, 64)}
+        norms = {d: row_norms(C[:, :d]) for d in (16, 32, 64)}
         for pdf in batches:
-            P = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            P = as_matrix(pdf["embedding"])
             qids = pdf["vec_id"].to_numpy()
-            # three BLAS products, round(·,6) BEFORE ranking (the
-            # driver-verified similarity discipline; fixture-verified, not
-            # identical: np.round is half-to-even in binary, Spark's ROUND
-            # HALF_UP in decimal)
-            sims = {}
-            for d in (16, 32, 64):
-                pn = np.sqrt((P[:, :d] * P[:, :d]).sum(axis=1))
-                sims[d] = np.round(
-                    (P[:, :d] @ C[:, :d].T) / np.outer(pn, norms[d]), 6
-                )
-            out = {"qid": [], "overlap16_at5": [], "overlap32_at5": [], "top1_match32": []}
-            for i, qid in enumerate(qids):
-                mask = cid != qid
-                nid_m = cid[mask]
-                tops = {}
-                for d in (16, 32, 64):
-                    s_m = sims[d][i][mask]
-                    tops[d] = nid_m[np.lexsort((nid_m, -s_m))[:k]]
-                full = set(tops[64].tolist())
-                out["qid"].append(qid)
-                out["overlap16_at5"].append(len(full & set(tops[16].tolist())))
-                out["overlap32_at5"].append(len(full & set(tops[32].tolist())))
-                out["top1_match32"].append(int(tops[64][0] == tops[32][0]))
-            yield pd.DataFrame(out)
+            # three BLAS products, each ranked on its rounded sims
+            full, p16, p32 = (
+                [cid[t].tolist() for t in top_k(qids, sims, cid, k)]
+                for sims in (cosine_sims(P[:, :d], C[:, :d], norms[d]) for d in (64, 16, 32))
+            )
+            yield pd.DataFrame(
+                {
+                    "qid": qids,
+                    "overlap16_at5": [len(set(f) & set(t)) for f, t in zip(full, p16)],
+                    "overlap32_at5": [len(set(f) & set(t)) for f, t in zip(full, p32)],
+                    "top1_match32": [int(f[0] == t[0]) for f, t in zip(full, p32)],
+                }
+            )
 
     e = spread(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     return e.mapInPandas(

@@ -30,6 +30,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.embedding_kernels import (
+    as_matrix,
+    bit_code,
+    sign_planes,
+    sign_projections,
+)
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
@@ -236,24 +242,12 @@ SRP_SIG_SQL = f"""
 def srp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, label, signature) for every embedding — the shared SRP
     pipeline behind emb_srp_signature and emb_bucket_label_purity."""
-    # Round-4 md5 hoist, r13 vectorization (guide §4.2): the plane
-    # weight md5("srp_<p>_<d>") depends only on (plane, dim), so the
-    # ±1 matrix is built ONCE per task with hashlib (replaying the exact
-    # conv(substr(md5(…),1,15),16,10) % 2 rule) and the projection is
-    # one INTEGER matrix product per Arrow batch — exact int64
-    # arithmetic, order-insensitive, so signatures are bit-identical to
-    # the explode → broadcast-join → double-groupBy pipeline this
-    # replaces (N·planes·dims rows through two keyed shuffles → zero
-    # pre-signature shuffles). Quantization replays Spark/DuckDB
-    # ROUND's half-away-from-zero ties exactly (floor(x+.5)/ceil(x-.5)),
-    # the weight matrix is sized to each batch's own row width (the dim
-    # domain still derives from the data), and zero-width rows are
-    # dropped exactly as posexplode/unnest drop them. An interpreted
-    # per-row zip_with/aggregate fold was measured FIRST and rejected:
-    # 1.4 s → 5.9 s (16×64 interpreted lambdas per row + 1,024-literal
-    # plan analysis) — the batch matmul is the right §4.2 form.
-    import hashlib
-
+    # The ±1 plane weights depend only on (plane, dim), so each task
+    # builds them once per row width (the dim domain derives from the
+    # data), and each Arrow batch projects in one exact int64 matrix
+    # product, so signatures equal the oracle's integer sums bit for bit.
+    # Zero-width rows are dropped, as posexplode/unnest drop them. A
+    # per-row zip_with/aggregate fold measured 4× slower (5.9 s vs 1.4 s).
     import numpy as np
     import pandas as pd
 
@@ -261,33 +255,6 @@ def srp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def sign_batches(batches):
         w_cache: dict[int, np.ndarray] = {}
-
-        def weights(width: int) -> np.ndarray:
-            w = w_cache.get(width)
-            if w is None:
-                w = np.array(
-                    [
-                        [
-                            1
-                            - 2
-                            * (
-                                int(
-                                    hashlib.md5(
-                                        f"srp_{p}_{d}".encode()
-                                    ).hexdigest()[:15],
-                                    16,
-                                )
-                                % 2
-                            )
-                            for d in range(width)
-                        ]
-                        for p in range(n_planes)
-                    ],
-                    dtype=np.int64,
-                )
-                w_cache[width] = w
-            return w
-
         for pdf in batches:
             embs = pdf["embedding"].to_numpy()
             widths = np.array([len(e) for e in embs])
@@ -295,14 +262,10 @@ def srp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_sig = np.zeros(len(embs), dtype=np.int64)
             for width in np.unique(widths[keep]):
                 idx = np.nonzero(widths == width)[0]
-                x = np.stack(embs[idx]).astype(np.float64) * 1_000_000.0
-                q = np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype(
-                    np.int64
-                )
-                s = q @ weights(int(width)).T  # exact int64
-                out_sig[idx] = ((s >= 0).astype(np.int64) << np.arange(n_planes)).sum(
-                    axis=1
-                )
+                if width not in w_cache:
+                    w_cache[width] = sign_planes("srp", n_planes, int(width))
+                s = sign_projections(as_matrix(embs[idx]), w_cache[width])
+                out_sig[idx] = bit_code(s >= 0)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy()[keep],

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.embedding_kernels import exact_topk
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
@@ -266,44 +267,14 @@ def emb_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     V²-row window rank, AND was re-derived on BOTH sides of the mutual
     self-join (no subtree reuse) — two full V² passes. Now the top-k is
     the proven one-BLAS-product-per-batch worker (same tie-break
-    contract: ROUND(·,6), (sim DESC, nid), self excluded by id; the
-    rounding is fixture-verified, not identical — np.round rounds half
-    to even in binary, Spark's ROUND HALF_UP in decimal) and the O(V·k)
+    contract, functions/embedding_kernels.py) and the O(V·k)
     result is localCheckpoint'd (bounded: V·k rows)
     so the self-join reads it instead of recomputing V².
     """
-    import numpy as np
-    import pandas as pd
-
-    emb_path = path_for(sf_dir, "embeddings")
-    k = KNN_K
-
-    def topk_batches(batches):
-        cand = pd.read_parquet(emb_path)
-        C = np.stack(cand["embedding"].to_numpy()).astype(np.float64)
-        cnorm = np.sqrt((C * C).sum(axis=1))
-        cid = cand["vec_id"].to_numpy()
-        for pdf in batches:
-            P = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            pnorm = np.sqrt((P * P).sum(axis=1))
-            qids = pdf["vec_id"].to_numpy()
-            sims = np.round((P @ C.T) / np.outer(pnorm, cnorm), 6)
-            out_q, out_n, out_s, out_r = [], [], [], []
-            for i, qid in enumerate(qids):
-                mask = cid != qid  # exclude self-match by id, not position
-                nid_m, s_m = cid[mask], sims[i][mask]
-                idx = np.lexsort((nid_m, -s_m))[:k]
-                out_q.extend([qid] * len(idx))
-                out_n.extend(nid_m[idx])
-                out_s.extend(s_m[idx])
-                out_r.extend(range(1, len(idx) + 1))
-            yield pd.DataFrame(
-                {"qid": out_q, "nid": out_n, "cosine_sim": out_s, "rnk": out_r}
-            )
-
     e = spread(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     topk = e.mapInPandas(
-        topk_batches, schema="qid long, nid long, cosine_sim double, rnk integer"
+        exact_topk(path_for(sf_dir, "embeddings"), KNN_K, "rnk"),
+        schema="qid long, nid long, cosine_sim double, rnk integer",
     ).localCheckpoint(eager=False)
     fwd = topk.select(
         F.col("qid").alias("src"),

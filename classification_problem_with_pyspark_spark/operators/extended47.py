@@ -32,7 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.functions.embedding_kernels import (
+    as_matrix,
+    read_embeddings,
+    round6,
+)
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long, md5_long_py
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
@@ -92,8 +97,7 @@ def emb_pq_codebook_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Distance folds the exact discipline the driver hash-verified on
     the cosine keys: double accumulation, ROUND(·,6), (dist,
     centroid_id) tie-break. The argmin is fixture-verified, not identical
-    by construction: np.round rounds half to even in binary, Spark's
-    ROUND HALF_UP in decimal, so an edge double could break a tie apart.
+    by construction (the rounding caveat of functions/embedding_kernels.py).
 
     Scale: vectors × (M·K) comparisons with the codebook held as
     side data per worker — one embarrassingly-parallel scan, zero
@@ -112,8 +116,6 @@ def emb_pq_codebook_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid_id) argmin tie-break. Only N·M assignment rows leave
     Python; the window sort and both fan-out joins are gone.
     """
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
@@ -121,26 +123,20 @@ def emb_pq_codebook_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     m, subdim, mod = PQ_M, PQ_SUBDIM, PQ_ANCHOR_MOD
 
     def assign_batches(batches):
-        cand = pd.read_parquet(emb_path)
-        keep = cand["vec_id"].map(
-            lambda v: int(hashlib.md5(f"pq_{v}".encode()).hexdigest()[:15], 16)
-            % mod
-            == 0
-        )
-        anchors = cand[keep]
-        cid = anchors["vec_id"].to_numpy()
-        C = np.stack(anchors["embedding"].to_numpy()).astype(np.float64)
+        cid, C = read_embeddings(emb_path)
+        keep = np.array([md5_long_py(f"pq_{v}") % mod == 0 for v in cid], dtype=bool)
+        cid, C = cid[keep], C[keep]
         order = np.argsort(cid)  # pre-sort so argmin ties pick the min id
         cid, C = cid[order], C[order]
         for pdf in batches:
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            V = as_matrix(pdf["embedding"])
             vids = pdf["vec_id"].to_numpy()
             out = []
             for s in range(m):
                 Vs = V[:, s * subdim : (s + 1) * subdim]
                 Cs = C[:, s * subdim : (s + 1) * subdim]
                 d2 = ((Vs[:, None, :] - Cs[None, :, :]) ** 2).sum(axis=-1)
-                dist = np.round(np.sqrt(d2), 6)
+                dist = round6(np.sqrt(d2))
                 # ties on rounded dist resolve to the smallest centroid_id:
                 # cid is ascending, and argmin returns the first minimum
                 best = dist.argmin(axis=1)

@@ -29,9 +29,10 @@ per-(type, hour) count table + one 24-element fold per type.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -116,27 +117,15 @@ def ml_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions), one 3-row marginal aggregate, one scalar fold.
     Agreement auditing at corpus scale is a counting job.
     """
-    def _spark_rating(r: int) -> str:
-        # same expression; Spark's parser wants STRING, DuckDB VARCHAR,
-        # and Spark's conv() for the hex→int step
-        truth = (
-            "CAST(conv(substr(md5('truth_' || CAST(doc_id AS STRING)), 1, 15), "
-            f"16, 10) AS BIGINT) % {N_CATS}"
-        )
-        noise = (
-            f"CAST(conv(substr(md5('rate{r}_' || CAST(doc_id AS STRING)), 1, 15), "
-            f"16, 10) AS BIGINT) % {RATER_NOISE_MOD}"
-        )
-        return (
-            f"CASE WHEN {noise} = 0 THEN (({truth}) + 1 + {r}) % {N_CATS} "
-            f"ELSE {truth} END"
-        )
+    doc_id = F.col("doc_id").cast("string")
+    truth = md5_long(F.concat(F.lit("truth_"), doc_id)) % N_CATS
 
-    rated = load(spark, sf_dir, "documents").selectExpr(
-        "doc_id",
-        f"{_spark_rating(0)} AS r0",
-        f"{_spark_rating(1)} AS r1",
-        f"{_spark_rating(2)} AS r2",
+    def _spark_rating(r: int) -> Column:
+        noise = md5_long(F.concat(F.lit(f"rate{r}_"), doc_id)) % RATER_NOISE_MOD
+        return F.when(noise == 0, (truth + 1 + r) % N_CATS).otherwise(truth)
+
+    rated = load(spark, sf_dir, "documents").select(
+        "doc_id", *(_spark_rating(r).alias(f"r{r}") for r in range(3))
     )
     per_unit = rated.select(
         "doc_id",

@@ -29,10 +29,18 @@ state-level rollup.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.embedding_kernels import (
+    as_matrix,
+    bit_code,
+    sign_planes,
+    sign_projections,
+)
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -60,29 +68,7 @@ def _ivf_cell_batches(batches):
     """mapInPandas worker for `emb_ivf_cell_balance`: each embedding's
     coarse cell. Raises ValueError on any vector that is not EMB_DIM
     wide, since the sign planes are only defined on that domain."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    w = np.array(
-        [
-            [
-                1
-                - 2
-                * (
-                    int(
-                        hashlib.md5(f"ivf_{b}_{d}".encode()).hexdigest()[:15],
-                        16,
-                    )
-                    % 2
-                )
-                for d in range(EMB_DIM)
-            ]
-            for b in range(IVF_BITS)
-        ],
-        dtype=np.int64,
-    )
+    w = sign_planes("ivf", IVF_BITS, EMB_DIM)
     for pdf in batches:
         vecs = pdf["embedding"].to_numpy()
         widths = {len(v) for v in vecs}
@@ -91,10 +77,7 @@ def _ivf_cell_batches(batches):
                 f"emb_ivf_cell_balance expects {EMB_DIM}-dim embeddings, "
                 f"got width(s) {sorted(widths)}"
             )
-        x = np.stack(vecs).astype(np.float64) * 1_000_000.0
-        q = np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype(np.int64)
-        s = q @ w.T  # exact int64
-        cells = ((s > 0).astype(np.int64) << np.arange(IVF_BITS)).sum(axis=1)
+        cells = bit_code(sign_projections(as_matrix(vecs), w) > 0)
         yield pd.DataFrame({"cell": cells.astype(np.int32)})
 
 
@@ -148,8 +131,7 @@ def emb_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r13 optimization (guide §4.2): the ±1 sign matrix is md5 of
     CONSTANTS — (bit, dim) only, never data — so each task builds it
-    ONCE with hashlib (replaying the exact
-    conv(substr(md5(…),1,15),16,10) %2 rule; the oracle itself iterates
+    ONCE (replaying the oracle's md5 % 2 rule; the oracle itself iterates
     i over range(64), so the 64-dim domain is the key's stated
     contract) and the projection is one exact INT64 matrix product per
     Arrow batch. The former explode(64×) → crossJoin({IVF_BITS}×) → two

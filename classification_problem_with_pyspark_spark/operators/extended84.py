@@ -32,7 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.functions.hashing import md5_hex, md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank, grid_shift
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
@@ -89,11 +89,7 @@ def source_cursor_chain_reassembly(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     pages = [rows[i : i + PAGE_SIZE] for i in range(0, len(rows), PAGE_SIZE)]
-    import hashlib
-
-    cursors = [
-        hashlib.md5(f"cursor_{p[0][0]}".encode()).hexdigest() for p in pages
-    ]
+    cursors = [md5_hex(f"cursor_{p[0][0]}") for p in pages]
     for i, page in enumerate(pages):
         doc = {
             "cursor": cursors[i],

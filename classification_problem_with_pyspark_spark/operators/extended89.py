@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -88,15 +89,12 @@ def ml_learning_curve_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE scan with a broadcast fraction spine (10 conditional
     sums), not ten scans — the curve costs what one evaluation costs.
     """
+    vec_id = F.col("vec_id").cast("string")
     scored = load(spark, sf_dir, "embeddings").select(
-        F.expr(
-            "CAST(conv(substr(md5('lc_' || CAST(vec_id AS STRING)), 1, 15), 16, 10) "
-            "AS BIGINT) % 100"
-        ).alias("pct"),
-        F.expr(
-            "CASE WHEN CAST(conv(substr(md5('clf_' || CAST(vec_id AS STRING)), 1, 15), "
-            f"16, 10) AS BIGINT) % {CURVE_FLIP_MOD} = 0 THEN 0 ELSE 1 END"
-        ).alias("correct"),
+        (md5_long(F.concat(F.lit("lc_"), vec_id)) % 100).alias("pct"),
+        F.when(md5_long(F.concat(F.lit("clf_"), vec_id)) % CURVE_FLIP_MOD == 0, 0)
+        .otherwise(1)
+        .alias("correct"),
     )
     fractions = spark.createDataFrame(
         [(f,) for f in CURVE_FRACTIONS], "pct_cap long"

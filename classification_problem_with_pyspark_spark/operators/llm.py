@@ -20,6 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.embedding_kernels import (
+    as_matrix,
+    cosine_topk,
+    exact_topk,
+)
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
 from classification_problem_with_pyspark_spark.plans.components import min_label_components
@@ -251,9 +256,8 @@ def llm_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same oracle) — one fused BLAS product beats N² codegen'd
     aggregate(zip_with) expressions. Rounding to 6 decimals absorbs the
     summation-order difference between BLAS and the engines' sequential
-    dot loops (fixture-verified: hash-equal at the gate SF, not identical
-    by construction — np.round rounds half to even on the binary double,
-    Spark's ROUND rounds HALF_UP in decimal, so an edge value can differ).
+    dot loops (the kernel and its rounding caveat:
+    functions/embedding_kernels.py).
 
     O(N²) by design: this is the correctness oracle for the LSH/IVF
     variants. At 100 TB the candidate side becomes a bounded shard per
@@ -262,45 +266,11 @@ def llm_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``llm_similarity_topk_sharded`` (cogrouped applyInPandas per KMeans
     cell, recall-gated in tests/test_ann_quality.py).
     """
-    import numpy as np
-    import pandas as pd
-
-    emb_path = path_for(sf_dir, "embeddings")
-    k = 5
-
-    def topk_batches(batches):
-        cand = pd.read_parquet(emb_path)
-        C = np.stack(cand["embedding"].to_numpy()).astype(np.float64)
-        cnorm = np.sqrt((C * C).sum(axis=1))
-        cid = cand["vec_id"].to_numpy()
-        for pdf in batches:
-            P = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            pnorm = np.sqrt((P * P).sum(axis=1))
-            qids = pdf["vec_id"].to_numpy()
-            sims = np.round((P @ C.T) / np.outer(pnorm, cnorm), 6)
-            out_q, out_n, out_s, out_r = [], [], [], []
-            for i, qid in enumerate(qids):
-                mask = cid != qid  # exclude self-match by id, not position
-                nid_m, s_m = cid[mask], sims[i][mask]
-                idx = np.lexsort((nid_m, -s_m))[:k]
-                out_q.extend([qid] * len(idx))
-                out_n.extend(nid_m[idx])
-                out_s.extend(s_m[idx])
-                out_r.extend(range(1, len(idx) + 1))
-            yield pd.DataFrame(
-                {
-                    "qid": out_q,
-                    "nid": out_n,
-                    "cosine_sim": out_s,
-                    "neighbor_rank": out_r,
-                }
-            )
-
     # explicit projection: without it the scan feeds every column
     # (incl. label) through the Arrow boundary
     e = spread(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     return e.mapInPandas(
-        topk_batches,
+        exact_topk(path_for(sf_dir, "embeddings"), 5, "neighbor_rank"),
         schema="qid long, nid long, cosine_sim double, neighbor_rank integer",
     )
 
@@ -795,7 +765,6 @@ def llm_similarity_topk_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     BLAS-per-cell kernel replaces the per-pair HOF dot product. KMeans →
     not SQL-expressible → rows-only driver check.
     """
-    import numpy as np
     import pandas as pd
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -835,24 +804,14 @@ def llm_similarity_topk_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if probe_pdf.empty or cand_pdf.empty:
             return empty
-        C = np.stack(cand_pdf["embedding"].to_numpy()).astype(np.float64)
-        cnorm = np.sqrt((C * C).sum(axis=1))
-        cid = cand_pdf["vec_id"].to_numpy()
-        P = np.stack(probe_pdf["emb_a"].to_numpy()).astype(np.float64)
-        pnorm = np.sqrt((P * P).sum(axis=1))
-        qids = probe_pdf["qid"].to_numpy()
-        # fixture-verified against Spark's ROUND(·,6), not identical:
-        # numpy rounds half to even in binary, Spark HALF_UP in decimal
-        sims = np.round((P @ C.T) / np.outer(pnorm, cnorm), 6)
-        out_q, out_n, out_s = [], [], []
-        for i, qid in enumerate(qids):
-            mask = cid != qid  # exclude self-match by id
-            nid_m, s_m = cid[mask], sims[i][mask]
-            idx = np.lexsort((nid_m, -s_m))[:3]  # per-cell top-3; merged below
-            out_q.extend([qid] * len(idx))
-            out_n.extend(nid_m[idx])
-            out_s.extend(s_m[idx])
-        return pd.DataFrame({"qid": out_q, "nid": out_n, "cosine_sim": out_s})
+        # per-cell top-3; merged below
+        return cosine_topk(
+            probe_pdf["qid"].to_numpy(),
+            as_matrix(probe_pdf["emb_a"]),
+            cand_pdf["vec_id"].to_numpy(),
+            as_matrix(cand_pdf["embedding"]),
+            3,
+        ).drop(columns="rank")
 
     cell_hits = (
         probes.groupBy("cell")

@@ -23,6 +23,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.hashing import md5_hex
+from classification_problem_with_pyspark_spark.operators.multimodal_codec import (
+    decode_bmp,
+    decode_png_rgb8,
+    decode_wav_pcm16,
+)
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -47,12 +53,6 @@ def decode_media(payload: bytes, media_type: str) -> "np.ndarray":
     (JPEG/MP3/FLAC/...) still need a codec library absent from this
     container; that seam is kept explicit below for a production build
     to fill in."""
-    from classification_problem_with_pyspark_spark.operators.multimodal_codec import (
-        decode_bmp,
-        decode_png_rgb8,
-        decode_wav_pcm16,
-    )
-
     if media_type == "image/bmp":
         return decode_bmp(payload)
     if media_type == "image/png":
@@ -179,8 +179,6 @@ def _frame_sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     128-byte stride (every other frame), md5 per frame. The kernel a real
     video pipeline would run per keyframe, with byte windows standing in
     for decoded frames (codec-free container)."""
-    import hashlib
-
     FRAME, STRIDE = 64, 128
     for pdf in batches:
         out_id, out_idx, out_off, out_md5 = [], [], [], []
@@ -194,7 +192,7 @@ def _frame_sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
                 out_id.append(mid)
                 out_idx.append(k)
                 out_off.append(off)
-                out_md5.append(hashlib.md5(data[off : off + FRAME]).hexdigest())
+                out_md5.append(md5_hex(data[off : off + FRAME]))
                 k += 1
         yield pd.DataFrame(
             {

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from classification_problem_with_pyspark_spark.functions.embedding_kernels import round6
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -66,13 +67,13 @@ def udaf_grouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NOTE: numpy's pairwise summation agrees with both engines' sequential
     sums at this magnitude after round(·,6) — fixture-verified by the
-    parity test, not identical by construction: np.round rounds half to
-    even in binary, the oracle's ROUND rounds HALF_UP in decimal.
+    parity test, not identical by construction (the rounding caveat of
+    functions/embedding_kernels.py).
     """
 
     @pandas_udf("double")
     def weighted_avg_price(price: pd.Series, qty: pd.Series) -> float:
-        return float(np.round(np.sum(price * qty) / np.sum(qty), 6))
+        return float(round6(np.sum(price * qty) / np.sum(qty)))
 
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag", "l_linestatus").agg(
@@ -89,7 +90,7 @@ def _normalize_chars(pdf: pd.DataFrame) -> pd.DataFrame:
             "doc_id": pdf["doc_id"],
             "lang": pdf["lang"],
             "n_chars": pdf["n_chars"],
-            "z_chars": ((pdf["n_chars"] - mu) / sd).round(6),
+            "z_chars": round6((pdf["n_chars"] - mu) / sd),
         }
     )
 

@@ -10,9 +10,8 @@ SURVEY.md §4 (physical-execution posture) and §7.5 (pitfalls):
   (``plans/fanout.py``), which ``local[N]`` sets to N.
   ``SPARK_GRAFT_MASTER`` and ``SPARK_GRAFT_DRIVER_MEM`` override the
   master and the driver heap;
-- Python workers import the engine from this checkout whatever the
-  caller's working directory, so UDFs, UDTFs and data sources defined in
-  the package resolve on every worker.
+- Python workers need no path to the engine on this session or any
+  other: the package pickles its own code by value (``__init__.py``).
 """
 
 from __future__ import annotations
@@ -22,7 +21,6 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -50,10 +48,6 @@ def get_spark(
         # Arrow for any pandas_udf / applyInPandas boundary (SURVEY.md §3 EP3).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # Workers unpickle package code (mapInPandas kernels, UDTFs, the
-        # Python data source); without this they find it only when the
-        # caller happens to start in the checkout.
-        .config("spark.executorEnv.PYTHONPATH", ROOT)
         # 16g on the 128 GiB test box: 8g showed multi-second full-GC
         # stalls on random queries during 145-query bench sweeps (one
         # long-lived JVM accumulates codegen classes + block-manager

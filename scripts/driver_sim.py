@@ -1,6 +1,6 @@
 """Simulate the grading driver at its real surface.
 
-Loads /root/repo/__spark_entry__.py the way the driver does (import by
+Loads this checkout's __spark_entry__.py the way the driver does (import by
 file path, NOT via the engine's own session factory or test suite), builds
 a plain vanilla SparkSession like the task description shows, then:
   1. smoke: entry(spark) at sf0.001 → collect, expect rows >= 0, stable schema
@@ -22,8 +22,9 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 from parity import compare  # noqa: E402
 
@@ -34,7 +35,7 @@ TABLES = (
 
 def main() -> int:
     only = set(sys.argv[1:])
-    spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("__spark_entry__", os.path.join(ROOT, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
@@ -96,7 +97,7 @@ def main() -> int:
     if not only and sf_dir.endswith("sf0.01"):
         import json
 
-        with open("/root/repo/DRIVER_SIM_TIMINGS.json", "w") as f:
+        with open(os.path.join(ROOT, "DRIVER_SIM_TIMINGS.json"), "w") as f:
             json.dump(timings, f, indent=1, sort_keys=True)
         slow = {k: v for k, v in timings.items() if v > 3.0}
         if slow:

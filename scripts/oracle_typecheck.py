@@ -18,11 +18,12 @@ Spark-schema cross-check; without it only the HUGEINT scan runs, no JVM).
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 

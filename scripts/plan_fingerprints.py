@@ -80,7 +80,8 @@ def main() -> int:
         ap.error("OUT.json or --diff A B is required")
     repo = os.path.abspath(args.repo)
     sys.path.insert(0, repo)
-    # Python workers (UDFs, data sources) must import the same checkout.
+    # Python workers (UDFs, data sources) must import the same checkout:
+    # older checkouts do not ship their package to workers by value.
     os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
     result = fingerprints({m for m in args.modules.split(",") if m})
     with open(args.out, "w") as f:

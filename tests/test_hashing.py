@@ -1,6 +1,8 @@
 """``md5_long``, the engine's portable hash, against its two references:
-Python's ``hashlib`` and the DuckDB spelling the oracles use. A tripwire
-keeps the hand-written idiom out of the package."""
+Python's ``hashlib`` and the DuckDB spelling the oracles use, and its
+Python twin ``md5_long_py`` against it. A tripwire keeps the
+hand-written idiom, in Python calls or in Spark SQL strings, out of the
+package."""
 
 from __future__ import annotations
 
@@ -8,13 +10,14 @@ import ast
 import glob
 import hashlib
 import os
+import re
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.functions import hashing
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.functions.hashing import md5_hex, md5_long, md5_long_py
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR_SMOKE
 
@@ -38,6 +41,7 @@ def test_md5_long_matches_hashlib_and_duckdb(spark):
             md5_long("s", 8).alias("h8"),
             md5_long("s").alias("h15"),
             md5_long("s", start=16).alias("h15_16"),
+            F.md5("s").alias("hex"),
         )
         .collect()
     )
@@ -45,6 +49,10 @@ def test_md5_long_matches_hashlib_and_duckdb(spark):
     assert len(inputs) > len(EXTRA_INPUTS) and set(EXTRA_INPUTS) <= set(inputs)
     assert len(set(inputs)) == len(inputs)
     spark_out = {r.s: (r.h8, r.h15, r.h15_16) for r in rows}
+    # the Python twin, on every non-NULL input
+    assert {r.s: (r.hex, r.h15) for r in rows if r.s is not None} == {
+        s: (md5_hex(s), md5_long_py(s)) for s in inputs if s is not None
+    }
     assert spark_out == {
         s: (_hex_long(s, 0, 8), _hex_long(s, 0, 15), _hex_long(s, 15, 30)) for s in inputs
     }
@@ -89,6 +97,46 @@ def _hand_written_md5_slices(source: str) -> set[int]:
     }
 
 
+# Spark SQL's spelling of the idiom; DuckDB's ('0x' || substr(md5(…)…))
+# oracle spelling is a different string and stays.
+_SQL_MD5_SLICE = re.compile(r"conv\s*\(\s*substr(ing)?\s*\(\s*md5\s*\(", re.IGNORECASE)
+
+
+def _sql_md5_slices(source: str) -> set[int]:
+    """Lines of string constants, docstrings aside, that spell the idiom
+    in Spark SQL: ``conv(substr(md5(...), ...), 16, 10)``."""
+    tree = ast.parse(source)
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    return {
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and id(node) not in docstrings
+        and _SQL_MD5_SLICE.search(node.value)
+    }
+
+
+def test_sql_md5_slice_detector_flags_the_idiom():
+    source = '''
+"""conv(substr(md5(x), 1, 15), 16, 10) in a docstring is prose."""
+a = "CAST(conv(substr(md5('a_' || x), 1, 15), 16, 10) AS BIGINT)"
+b = f"""CASE WHEN CONV( substring(md5(concat('b_', {c})), 1, 15), 16, 10)"""
+ok1 = "CAST(('0x' || substr(md5('a_' || x), 1, 15)) AS BIGINT)"
+ok2 = "conv(substr(sha2(x, 256), 1, 15), 16, 10)"
+def f():
+    """conv(substr(md5(y), 1, 8), 16, 10) is prose here too."""
+'''
+    assert _sql_md5_slices(source) == {3, 4}
+
+
 def test_md5_slice_detector_flags_the_idiom():
     source = """
 h = F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")
@@ -111,6 +159,7 @@ def test_md5_slice_is_written_only_in_hashing():
         if py == hashing.__file__:
             continue
         with open(py) as f:
-            lines = _hand_written_md5_slices(f.read())
+            source = f.read()
+        lines = _hand_written_md5_slices(source) | _sql_md5_slices(source)
         offenders += [f"{os.path.relpath(py, PKG)}:{n}" for n in sorted(lines)]
     assert not offenders, f"hand-written md5 slice, use functions.hashing.md5_long: {offenders}"
