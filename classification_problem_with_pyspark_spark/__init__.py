@@ -20,9 +20,9 @@ Architecture (SURVEY.md §7.7, adapted to the mandated layout):
 - ``operators/``         relational, joins, aggregates, windows, set ops,
                          ML, LLM-pipeline operators.
 - ``functions/``         scalar/vector expression helpers, the portable md5
-                         hash (``hashing``) and the numpy kernels the
-                         embedding keys run in Python workers
-                         (``embedding_kernels``).
+                         hash (``hashing``), the word n-gram builder
+                         (``text``) and the numpy kernels the embedding
+                         keys run in Python workers (``embedding_kernels``).
 - ``streaming/``         Structured Streaming wrappers over the batch twins.
 - ``plans/``             shared plan shapes: the pre-fan-out ``spread``,
                          bounded-grid and global-rank windows, connected

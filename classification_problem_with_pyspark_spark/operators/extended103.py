@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
@@ -122,21 +123,9 @@ def llm_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = spread(queries, "qid")
     d = load(spark, sf_dir, "documents")
-    n = MRR_NGRAM
     shingles = (
-        spread(d, "doc_id")
-        .select("doc_id", F.split("text", " ").alias("ws"))
-        .where(F.size("ws") >= n)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ws") - (n - 1)),
-                    lambda i: F.array_join(F.slice("ws", i, n), " "),
-                )
-            ).alias("sh"),
-        )
-        .select("doc_id", F.md5("sh").alias("digest"))
+        word_ngrams(spread(d, "doc_id"), MRR_NGRAM, "doc_id")
+        .select("doc_id", F.md5("ngram").alias("digest"))
         .distinct()
     )
     q_sh = queries.select("qid").join(

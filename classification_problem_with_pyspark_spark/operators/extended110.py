@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -106,20 +107,9 @@ def llm_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation.
     """
     d = spread(load(spark, sf_dir, "documents"), "doc_id")
-    n = CONT_NGRAM
     shingles = (
-        d.select("doc_id", F.split("text", " ").alias("ws"))
-        .where(F.size("ws") >= n)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ws") - (n - 1)),
-                    lambda i: F.array_join(F.slice("ws", i, n), " "),
-                )
-            ).alias("sh"),
-        )
-        .select("doc_id", F.md5("sh").alias("digest"))
+        word_ngrams(d, CONT_NGRAM, "doc_id")
+        .select("doc_id", F.md5("ngram").alias("digest"))
         .distinct()
     )
     sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_digests"))

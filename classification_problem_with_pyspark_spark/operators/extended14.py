@@ -10,11 +10,13 @@ deployment of it runs exactly this audit (prefix-kNN overlap vs full-kNN)
 before committing to a truncation — expressed on the public PySpark
 DataFrame API over the driver's testdata.
 
-Hash-parity discipline (round-3 standard): cosines are double math in the
-engine-portable left-to-right fold (functions/vector.py), rounded to the
-6-decimal grid BEFORE ranking (the llm_similarity_topk precedent, where
-this exact discipline is driver-verified); ranks are integer row_numbers
-with nid tie-breaks; overlaps are exact counts.
+Hash-parity discipline (round-3 standard): cosines are double BLAS
+products in a Python worker (functions/embedding_kernels.cosine_sims),
+whose blocked summation order differs from the oracle's
+list_cosine_similarity; rounding to the 6-decimal grid BEFORE ranking
+has to absorb that last-ulp difference (the llm_similarity_topk precedent,
+where this exact discipline matches its oracle's hash); ranks are integer
+row_numbers with nid tie-breaks; overlaps are exact counts.
 
 Scale posture (SURVEY.md §7.6): the audit is an O(N²) EVALUATION over a
 bounded sample by design (the recall-oracle posture of

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -942,17 +943,11 @@ def llm_dedup_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition spreads the shingle+md5 map work across all cores even
     when the input is one small file (a 100-TB input is already
     many-partition, so the repartition is a no-op there by count).
-    Assumes every doc has >= 3 tokens (FIXTURES.md: min is 10).
+    A document of fewer than 3 tokens has no shingle and no signature,
+    as in the oracle's token self-join.
     """
     docs = spread(load(spark, sf_dir, "documents"), "doc_id")
-    toks = F.split("text", " ")
-    shingles = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - 3),
-        lambda i: F.concat_ws(
-            " ", F.get(toks, i), F.get(toks, i + 1), F.get(toks, i + 2)
-        ),
-    )
-    sh = docs.select("doc_id", F.explode(shingles).alias("term"))
+    sh = word_ngrams(docs, 3, "doc_id").withColumnRenamed("ngram", "term")
 
     sig = sh.groupBy("doc_id").agg(
         F.min(_minhash_term_hash(0)).alias("s0"),

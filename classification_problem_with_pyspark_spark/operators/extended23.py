@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -42,20 +43,7 @@ def _span_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     than K_SPAN tokens carry no spans and drop out, same WHERE on both
     engines)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    return (
-        d.select("doc_id", toks.alias("toks"))
-        .where(F.size("toks") >= K_SPAN)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(toks) - {K_SPAN - 1}), "
-                    f"i -> array_join(slice(toks, i, {K_SPAN}), ' '))"
-                )
-            ).alias("shingle"),
-        )
-    )
+    return word_ngrams(d, K_SPAN, "doc_id").withColumnRenamed("ngram", "shingle")
 
 
 _SPAN_SH_SQL = f"""
@@ -104,8 +92,8 @@ def llm_span_dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplication unit. Docs crossing 20% shared-span coverage are flagged
     with the exact integer form 5·shared >= total (no float threshold).
 
-    Spark shape: spans built JVM-side (sequence → slice → array_join
-    lambdas, no Python boundary); ONE map-side-combinable groupBy over
+    Spark shape: spans built JVM-side by `word_ngrams` (no Python
+    boundary); ONE map-side-combinable groupBy over
     distinct (doc, span) pairs computes span document-frequency; the
     join back is span-keyed. At 100 TB the join/groupBy key would be
     xxhash64(span) instead of the span string (same plan, ~10× less

@@ -37,6 +37,7 @@ from classification_problem_with_pyspark_spark.functions.embedding_kernels impor
     sign_projections,
 )
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -397,18 +398,8 @@ def llm_domain_affinity_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load(spark, sf_dir, "documents")
     feats = (
-        d.select("doc_id", "lang", F.split("text", " ").alias("toks"))
-        .where(F.size("toks") >= 3)
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 2), "
-                    "i -> array_join(slice(toks, i, 3), ' '))"
-                )
-            ).alias("feat"),
-        )
+        word_ngrams(d, 3, "doc_id", "lang")
+        .withColumnRenamed("ngram", "feat")
         .distinct()
     )
     profile = (

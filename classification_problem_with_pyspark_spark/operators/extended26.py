@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -285,21 +286,10 @@ def agg_capture_recapture_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates, so the marginal cost over one sample is zero.
     """
     d = load(spark, sf_dir, "documents")
-    sh = (
-        d.select(F.split("text", " ").alias("toks"))
-        .where(F.size("toks") >= 3)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 2), "
-                    "i -> array_join(slice(toks, i, 3), ' '))"
-                )
-            ).alias("s")
-        )
-        .distinct()
-    )
+    sh = word_ngrams(d, 3).select("ngram").distinct()
+
     def _res(salt: str):
-        return md5_long(F.concat(F.lit(salt), F.col("s"))) % 1000000
+        return md5_long(F.concat(F.lit(salt), F.col("ngram"))) % 1000000
 
     hashed = sh.select(_res("crA_").alias("ha"), _res("crB_").alias("hb"))
     counts = hashed.agg(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -249,19 +250,7 @@ def llm_keyness_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source vocabulary.
     """
     d = load(spark, sf_dir, "documents")
-    grams = (
-        d.select("source", F.split("text", " ").alias("toks"))
-        .where(F.size("toks") >= 2)
-        .select(
-            "source",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1), "
-                    "i -> array_join(slice(toks, i, 2), ' '))"
-                )
-            ).alias("g"),
-        )
-    )
+    grams = word_ngrams(d, 2, "source").withColumnRenamed("ngram", "g")
     pair = grams.groupBy("source", "g").agg(F.count("*").alias("a"))
     gm = grams.groupBy("g").agg(F.count("*").alias("g_tot"))
     sm = grams.groupBy("source").agg(F.count("*").alias("s_tot"))

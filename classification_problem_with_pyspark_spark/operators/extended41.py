@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -147,23 +148,8 @@ def llm_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep the only single-task window ≤1k rows at any corpus size.
     """
     d = load(spark, sf_dir, "documents")
-    sh = (
-        d.select(
-            F.expr(f"doc_id DIV {VOCAB_BATCH}").alias("batch"),
-            F.split("text", " ").alias("toks"),
-        )
-        .where(F.size("toks") >= 3)
-        .select(
-            "batch",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 2), "
-                    "i -> array_join(slice(toks, i, 3), ' '))"
-                )
-            ).alias("s"),
-        )
-    )
-    first_seen = sh.groupBy("s").agg(F.min("batch").alias("first_batch"))
+    sh = word_ngrams(d.withColumn("batch", F.expr(f"doc_id DIV {VOCAB_BATCH}")), 3, "batch")
+    first_seen = sh.groupBy("ngram").agg(F.min("batch").alias("first_batch"))
     per_batch = first_seen.groupBy(
         F.col("first_batch").alias("batch")
     ).agg(F.count("*").alias("n_new"))

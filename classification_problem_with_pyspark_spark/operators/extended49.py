@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -59,24 +60,10 @@ def _overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     LogicalRDD boundary hides it from the registered key's own explain
     output).
     """
-    n = NGRAM_N
     # single-file trap (BASELINE.md): spread before the shingle explode
-    toks = (
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-        .select("source", "doc_id", F.split("text", " ").alias("ws"))
-    )
     srcs_per_digest = (
-        toks.where(F.size("ws") >= n)
-        .select(
-            "source",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ws") - (n - 1)),
-                    lambda i: F.array_join(F.slice("ws", i, n), " "),
-                )
-            ).alias("shingle"),
-        )
-        .select("source", F.md5("shingle").alias("digest"))
+        word_ngrams(spread(load(spark, sf_dir, "documents"), "doc_id"), NGRAM_N, "source")
+        .select("source", F.md5("ngram").alias("digest"))
         .groupBy("digest")
         .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
     )

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum, grid_rank
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
@@ -702,10 +703,11 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(doc_id) mod 10 assignment as `llm_split_hash` — the check is a
     pure function of the corpus, reproducible on any engine.
 
-    Spark shape: shingles are built JVM-side (sequence → slice →
-    array_join lambdas — no Python boundary, no self-join); the only
-    fact-sized shuffle is the shingle equi-join, with the train side
-    pre-deduplicated. The contamination flag uses the exact integer form
+    Spark shape: shingles are built JVM-side by `word_ngrams` (no Python
+    boundary, no self-join); a document of fewer than 5 tokens has none
+    and drops out, as in the oracle. The only fact-sized shuffle is the
+    shingle equi-join, with the train side pre-deduplicated. The
+    contamination flag uses the exact integer form
     (10·hits >= total, i.e. ratio >= 0.1) — no float threshold. At 100 TB
     the join key would be a 64-bit hash of the shingle rather than the
     string (same plan, ~10× less shuffle traffic); the string form keeps
@@ -713,27 +715,13 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = spread(load(spark, sf_dir, "documents"), "doc_id")
     b = md5_long(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))) % 10
-    toks = F.split("text", " ")
-    sh = (
-        d.select("doc_id", "lang", b.alias("b"), toks.alias("toks"))
-        .select(
-            "doc_id",
-            "lang",
-            "b",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, greatest(size(toks) - 3, 1) - 1), "
-                    "i -> array_join(slice(toks, i, 5), ' '))"
-                )
-            ).alias("shingle"),
-        )
-    )
-    train_sh = sh.where(F.col("b") < 8).select("shingle").distinct()
+    sh = word_ngrams(d.withColumn("b", b), 5, "doc_id", "lang", "b")
+    train_sh = sh.where(F.col("b") < 8).select("ngram").distinct()
     test_sh = sh.where(F.col("b") == 9)
     hit = F.col("tr_shingle").isNotNull()
     joined = test_sh.join(
-        train_sh.select(F.col("shingle").alias("tr_shingle")),
-        test_sh.shingle == F.col("tr_shingle"),
+        train_sh.select(F.col("ngram").alias("tr_shingle")),
+        test_sh.ngram == F.col("tr_shingle"),
         "left",
     )
     return joined.groupBy("doc_id", "lang").agg(
@@ -1995,27 +1983,15 @@ def llm_word_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic that drives one BPE merge step (most frequent adjacent pair
     becomes the next merge) and collocation mining.
 
-    Bigrams are built JVM-side with the same sequence→slice lambda shape
-    as `llm_decontaminate` (no position self-join); the only fact-sized
-    shuffle is the (bigram → count) aggregation, and ranking runs over
+    Bigrams are built JVM-side by `word_ngrams` (no position self-join);
+    the only fact-sized shuffle is the (bigram → count) aggregation, and
+    ranking runs over
     the aggregated pair vocabulary with a total (cnt DESC, bigram) order.
     """
     d = spread(load(spark, sf_dir, "documents"), "doc_id")
-    # filter first: Spark's sequence(1, 0) DESCENDS, so guard-by-
-    # greatest would fabricate a null bigram for 1-token docs
-    bigrams = (
-        d.select(F.split("text", " ").alias("t"))
-        .where(F.size("t") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1), "
-                    "i -> concat(t[i - 1], ' ', t[i]))"
-                )
-            ).alias("bigram")
-        )
+    counted = (
+        word_ngrams(d, 2).groupBy(F.col("ngram").alias("bigram")).agg(F.count("*").alias("cnt"))
     )
-    counted = bigrams.groupBy("bigram").agg(F.count("*").alias("cnt"))
     return (
         grid_rank(counted, [F.desc("cnt"), F.asc("bigram")], "rank")
         .where(F.col("rank") <= 15)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -109,23 +110,10 @@ def llm_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep — costs 5× the pair build for identical output.
     """
     d = load(spark, sf_dir, "documents")
-    n = CURVE_NGRAM
     # single-file trap (BASELINE.md): spread before the shingle explode
-    toks = spread(d, "doc_id").select(
-        "doc_id", F.split("text", " ").alias("ws")
-    )
     shingles = (
-        toks.where(F.size("ws") >= n)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ws") - (n - 1)),
-                    lambda i: F.array_join(F.slice("ws", i, n), " "),
-                )
-            ).alias("shingle"),
-        )
-        .select("doc_id", F.md5("shingle").alias("digest"))
+        word_ngrams(spread(d, "doc_id"), CURVE_NGRAM, "doc_id")
+        .select("doc_id", F.md5("ngram").alias("digest"))
         .distinct()
     )
     sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_digests"))

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.plans.fanout import spread
@@ -156,21 +157,9 @@ def llm_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "cand", F.row_number().over(w_d).alias("rnk"))
     )
     d = load(spark, sf_dir, "documents")
-    n = RRF_NGRAM
     shingles = (
-        spread(d, "doc_id")
-        .select("doc_id", F.split("text", " ").alias("ws"))
-        .where(F.size("ws") >= n)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ws") - (n - 1)),
-                    lambda i: F.array_join(F.slice("ws", i, n), " "),
-                )
-            ).alias("sh"),
-        )
-        .select("doc_id", F.md5("sh").alias("digest"))
+        word_ngrams(spread(d, "doc_id"), RRF_NGRAM, "doc_id")
+        .select("doc_id", F.md5("ngram").alias("digest"))
         .distinct()
     )
     q_sh = queries.select("qid").join(

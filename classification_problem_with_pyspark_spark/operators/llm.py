@@ -26,6 +26,7 @@ from classification_problem_with_pyspark_spark.functions.embedding_kernels impor
     exact_topk,
 )
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
+from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.functions.vector import dot, norm
 from classification_problem_with_pyspark_spark.plans.components import min_label_components
 from classification_problem_with_pyspark_spark.plans.fanout import spread
@@ -1195,23 +1196,10 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file trap, BASELINE.md continuation-2; measured 1.4→0.87 s
     # warm at sf0.1). No-op by count on a many-partition 100-TB scan.
     d = spread(load(spark, sf_dir, "documents"), "doc_id")
-    w = d.select("doc_id", F.split("text", " ").alias("w"))
-    grams = (
-        w.where(F.size("w") >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(w) - 2), "
-                    "i -> concat_ws(' ', w[i-1], w[i], w[i+1]))"
-                )
-            ).alias("gram"),
-        )
-        .distinct()
-    )
-    dfreq = grams.groupBy("gram").agg(F.count("*").alias("df"))
+    grams = word_ngrams(d, 3, "doc_id").distinct()
+    dfreq = grams.groupBy("ngram").agg(F.count("*").alias("df"))
     return (
-        grams.join(dfreq, "gram")
+        grams.join(dfreq, "ngram")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_distinct_grams"),

@@ -201,7 +201,10 @@ def ml_tune_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns the grid with mean CV metric per point and a best flag."""
     feats = _embedding_features(spark, sf_dir)
     # maxIter=10: the 3-fold × 4-point grid pays 12 sequential fits; the
-    # CV ranking is stable well before 10 L-BFGS steps at this SF.
+    # CV ranking is stable well before 10 L-BFGS steps at this SF. The fits
+    # run on one thread: parallel fits share the session's job properties
+    # across threads, and one failed with "Cannot parse null string" in
+    # SQLExecution under load.
     lr = LogisticRegression(featuresCol="features", labelCol="label_bin", maxIter=10)
     grid = (
         ParamGridBuilder()
@@ -215,7 +218,6 @@ def ml_tune_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         evaluator=BinaryClassificationEvaluator(labelCol="label_bin"),
         numFolds=3,
         seed=SEED,
-        parallelism=4,
     )
     model = cv.fit(feats)
     best_reg = model.bestModel.getRegParam()

@@ -26,10 +26,19 @@ import re
 import sys
 
 OPS = "classification_problem_with_pyspark_spark.operators."
-# Parts of a plan that differ between two runs of the same code: expression
-# IDs, MLlib stage uids (``VectorAssembler_cc54bab60066``) and JVM lambda
-# identities (``ALSModel$$Lambda$5127/0x00007f92d14b97e0@14692e6b``).
-MASKS = [(r"#\d+", "#"), (r"(?<=_)[0-9a-f]{12}\b", "<uid>"), (r"\$\$Lambda\S*@[0-9a-f]+", "$$Lambda")]
+# Parts of a plan that carry no behaviour and change between runs or with
+# unrelated code: expression IDs, MLlib stage uids
+# (``VectorAssembler_cc54bab60066``), JVM lambda identities
+# (``ALSModel$$Lambda$5127/0x00007f92d14b97e0@14692e6b``) and the variables
+# of Python lambdas in higher-order functions (``lambda x_20``), which a
+# JVM-wide counter numbers, so they shift whenever an earlier key builds
+# one more or one fewer.
+MASKS = [
+    (r"#\d+", "#"),
+    (r"(?<=_)[0-9a-f]{12}\b", "<uid>"),
+    (r"\$\$Lambda\S*@[0-9a-f]+", "$$Lambda"),
+    (r"(?<=lambda [xyz]_)\d+", "<n>"),
+]
 
 
 def fingerprints(modules: set[str]) -> dict[str, dict[str, str]]:
