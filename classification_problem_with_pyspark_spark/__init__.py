@@ -16,7 +16,9 @@ Architecture (SURVEY.md §7.7, adapted to the mandated layout):
 - ``registry``           the query registry: every operator registers a
                          ``(spark, sf_dir) -> DataFrame`` callable plus an
                          optional DuckDB-oracle SQL string.
-- ``sources/``           explicit schemas + parquet/CSV/memory/stream readers.
+- ``sources/``           explicit schemas + parquet/CSV/memory/stream readers;
+                         ``catalog.local_rows`` builds every relation made
+                         from Python rows, as a LocalRelation.
 - ``operators/``         relational, joins, aggregates, windows, set ops,
                          ML, LLM-pipeline operators.
 - ``functions/``         scalar/vector expression helpers, the portable md5

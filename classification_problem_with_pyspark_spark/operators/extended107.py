@@ -32,7 +32,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
+from classification_problem_with_pyspark_spark.sources.catalog import (
+    bounded_collect,
+    load,
+    local_rows,
+    stage_dir,
+)
 
 # literal trig table: hour -> (sin, cos) in micro units, Python-computed
 HOUR_TRIG = tuple(
@@ -92,9 +97,7 @@ def events_circular_hour_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one broadcast 24-row join + integer sums per type.
     """
-    spark_trig = load(spark, sf_dir, "events").sparkSession.createDataFrame(
-        list(HOUR_TRIG), "h int, s_micro long, c_micro long"
-    )
+    spark_trig = local_rows(spark, HOUR_TRIG, "h int, s_micro long, c_micro long")
     hours = load(spark, sf_dir, "events").select(
         "event_type", F.hour("ts").alias("h")
     )

@@ -32,7 +32,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
+from classification_problem_with_pyspark_spark.sources.catalog import (
+    bounded_collect,
+    load,
+    local_rows,
+    stage_dir,
+)
 
 ASOF_COMMIT = 2  # read the table as of this commit (before the swap)
 
@@ -90,8 +95,8 @@ def sink_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         for rm in removes:
             actions.append((commit, "remove", os.path.join(stage, f"seg_{rm}")))
     log_path = os.path.join(stage, "txn_log_json")
-    spark.createDataFrame(
-        actions, "commit int, action string, path string"
+    local_rows(
+        spark, actions, "commit int, action string, path string"
     ).coalesce(1).write.mode("overwrite").json(log_path)
 
     log = spark.read.json(log_path).where(F.col("commit") <= ASOF_COMMIT)

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, local_rows
 
 # the declared process model: transitions the business considers legal
 ALLOWED = [
@@ -52,7 +52,7 @@ def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _allowed_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ALLOWED, "cur string, nxt string").withColumn(
+    return local_rows(spark, ALLOWED, "cur string, nxt string").withColumn(
         "ok", F.lit(1)
     )
 

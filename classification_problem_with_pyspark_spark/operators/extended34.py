@@ -36,7 +36,12 @@ from classification_problem_with_pyspark_spark.operators.extended27 import (
     _scored,
 )
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
+from classification_problem_with_pyspark_spark.sources.catalog import (
+    bounded_collect,
+    load,
+    local_rows,
+    stage_dir,
+)
 
 
 def _md5_bit(salt: str, col: str) -> F.Column:
@@ -302,7 +307,8 @@ def source_txn_log_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
     log_path = os.path.join(stage, "txn_log_json")
-    spark.createDataFrame(
+    local_rows(
+        spark,
         [(a["commit"], a["action"], a["path"]) for a in actions],
         "commit int, action string, path string",
     ).coalesce(1).write.mode("overwrite").json(log_path)

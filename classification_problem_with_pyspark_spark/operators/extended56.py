@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, local_rows
 
 N_SEEDS = 4  # greedy rounds after the deterministic start
 SYNC_OK_MS = 45  # lip-sync tolerance (the broadcast-industry ±45 ms)
@@ -157,7 +157,8 @@ def emb_farthest_first_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
         row = cand.collect()[0]
         picked.append((r, row.vec_id, float(row.d_near), list(row.embedding)))
 
-    out = spark.createDataFrame(
+    out = local_rows(
+        spark,
         [(r, vid, d) for r, vid, d, _ in picked],
         "pick_order long, vec_id long, d_to_nearest_prior double",
     )

@@ -39,7 +39,7 @@ from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum, grid_rank
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, local_rows
 
 
 def _sumsq_micro(col: F.Column) -> F.Column:
@@ -439,7 +439,7 @@ def agg_histogram_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
         [("cum_cnt", "cnt")],
         keep=["bucket", "cnt", "n_total"],
     )
-    qs = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "q double")
+    qs = local_rows(spark, [(0.5,), (0.9,), (0.99,)], "q double")
     hit = (
         qs.join(cum, F.col("cum_cnt") >= F.col("q") * F.col("n_total"))
         .withColumn(

@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, local_rows
 
 CURVE_NGRAM = 5
 THRESHOLDS_MICRO = (500_000, 600_000, 700_000, 800_000, 900_000)
@@ -134,9 +134,7 @@ def llm_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(1000000 * shared) DIV (na + nb - shared)").alias("jac_micro"),
         )
     )
-    thresholds = spark.createDataFrame(
-        [(t,) for t in THRESHOLDS_MICRO], "thr_micro long"
-    )
+    thresholds = local_rows(spark, [(t,) for t in THRESHOLDS_MICRO], "thr_micro long")
     n_docs = d.agg(F.count("*").alias("n"))
     return (
         F.broadcast(thresholds)

@@ -49,7 +49,7 @@ from pyspark.sql.window import Window
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, local_rows
 
 
 @register(
@@ -511,6 +511,4 @@ def llm_bpe_merge_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     to keep lineage flat (the llm_dedup_cluster_cc precedent).
     """
     _, merges = bpe_learn(spark, sf_dir, 6)
-    return spark.createDataFrame(
-        merges, "step long, left string, right string, pair_count long"
-    )
+    return local_rows(spark, merges, "step long, left string, right string, pair_count long")

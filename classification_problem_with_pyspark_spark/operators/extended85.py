@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, local_rows
 
 BT_MATCH_MOD = 3  # doc pairs (i, i + stride) with md5 % 3 == 0 are matches
 BT_ITERS = 6
@@ -274,7 +274,7 @@ def relational_inline_values_lookup(spark: SparkSession, sf_dir: str) -> DataFra
     join optimizer should eat for free), joined to open orders to
     count SLA breaches by priority at the data-edge as-of. The
     mapping is a shared constant on both engines, so the key also
-    pins that literal-relation construction (Spark createDataFrame /
+    pins that literal-relation construction (a Spark LocalRelation /
     DuckDB VALUES) produces identical join behavior.
 
     Exactness: integer day arithmetic and counts.
@@ -284,9 +284,7 @@ def relational_inline_values_lookup(spark: SparkSession, sf_dir: str) -> DataFra
     there is.
     """
     o = load(spark, sf_dir, "orders")
-    sla = o.sparkSession.createDataFrame(
-        list(SLA_DAYS.items()), "priority string, sla_days int"
-    )
+    sla = local_rows(spark, list(SLA_DAYS.items()), "priority string, sla_days int")
     asof = o.agg(F.max(F.to_date("o_orderdate")).alias("t"))
     joined = (
         o.where(F.col("o_orderstatus") == "O")

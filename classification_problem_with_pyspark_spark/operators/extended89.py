@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, local_rows
 
 CURVE_FRACTIONS = (10, 20, 30, 40, 50, 60, 70, 80, 90, 100)
 CURVE_FLIP_MOD = 4  # the pack-44 stand-in predictor
@@ -96,9 +96,7 @@ def ml_learning_curve_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(1)
         .alias("correct"),
     )
-    fractions = spark.createDataFrame(
-        [(f,) for f in CURVE_FRACTIONS], "pct_cap long"
-    )
+    fractions = local_rows(spark, [(f,) for f in CURVE_FRACTIONS], "pct_cap long")
     return (
         scored.crossJoin(F.broadcast(fractions))
         .groupBy("pct_cap")

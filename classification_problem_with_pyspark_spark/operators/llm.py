@@ -31,7 +31,7 @@ from classification_problem_with_pyspark_spark.functions.vector import dot, norm
 from classification_problem_with_pyspark_spark.plans.components import min_label_components
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load, path_for
+from classification_problem_with_pyspark_spark.sources.catalog import load, local_rows, path_for
 
 STOPWORDS = ("data", "row", "query", "the", "of")
 
@@ -704,7 +704,7 @@ def llm_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = KMeans(k=8, seed=42, featuresCol="features", predictionCol="cell").fit(e)
     assigned = model.transform(e).select("vec_id", "embedding", "cell")
     centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cdf = F.broadcast(spark.createDataFrame(centers, "cell_c int, centroid array<double>"))
+    cdf = F.broadcast(local_rows(spark, centers, "cell_c int, centroid array<double>"))
     # nprobe=2: distance of every query to every centroid (8-row broadcast
     # cross join — free), keep the 2 nearest cells per query
     d2 = F.aggregate(
@@ -778,7 +778,7 @@ def llm_similarity_topk_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = KMeans(k=8, seed=42, featuresCol="features", predictionCol="cell").fit(e)
     assigned = model.transform(e).select("vec_id", "embedding", "cell")
     centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cdf = F.broadcast(spark.createDataFrame(centers, "cell_c int, centroid array<double>"))
+    cdf = F.broadcast(local_rows(spark, centers, "cell_c int, centroid array<double>"))
     d2 = F.aggregate(
         F.zip_with(
             F.col("embedding").cast("array<double>"), "centroid", lambda x, y: (x - y) * (x - y)
@@ -1241,7 +1241,8 @@ def llm_sample_hash_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load(spark, sf_dir, "documents")
     rates = F.broadcast(
-        spark.createDataFrame(
+        local_rows(
+            spark,
             [("en", 30), ("de", 80), ("fr", 80), ("es", 80), ("zh", 80)],
             "lang string, pct int",
         )
@@ -1986,7 +1987,8 @@ def llm_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_truth = truth.count()
     recovered = truth.join(cand, ["doc_a", "doc_b"]).count()
     n_cand = cand.count()
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             (
                 n_truth,

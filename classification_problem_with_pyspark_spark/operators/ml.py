@@ -48,7 +48,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import (
+    bounded_collect,
+    load,
+    local_rows,
+)
 
 SEED = 42
 
@@ -139,7 +143,7 @@ def ml_train_trees(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         acc = ev.evaluate(clf.fit(train).transform(test))
         rows.append((name, float(round(acc, 6))))
-    return spark.createDataFrame(rows, "model string, accuracy double")
+    return local_rows(spark, rows, "model string, accuracy double")
 
 
 @register("ml_train_others", oracle=None)
@@ -171,13 +175,54 @@ def ml_train_others(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("naive_bayes", float(round(ev.evaluate(nb.fit(train).transform(test)), 6))),
         ("linear_svc", float(round(ev.evaluate(svc.fit(train).transform(test)), 6))),
     ]
-    return spark.createDataFrame(rows, "model string, accuracy double")
+    return local_rows(spark, rows, "model string, accuracy double")
+
+
+def multiclass_metrics(pred: DataFrame, label_col: str) -> dict[str, float]:
+    """accuracy, f1 and weightedPrecision of `pred` (`label_col` against
+    ``prediction``) from one confusion aggregate, by the rules of MLlib's
+    MulticlassMetrics with unit weights: precision is 0 for a label that
+    nothing is predicted as, F1 is 0 where precision + recall is 0, and
+    the per-label terms are weighted by the true-label counts, so a class
+    that is predicted but never labelled weighs nothing. The aggregate
+    holds at most classes² cells, whatever the size of `pred`, and is one
+    job where ``MulticlassClassificationEvaluator`` runs one per metric."""
+    cells = bounded_collect(
+        pred.groupBy(label_col, "prediction").count(),
+        max_rows=10_000,
+        what="confusion matrix (classes²)",
+    )
+    n = float(sum(r["count"] for r in cells))
+    by_label: dict[float, float] = {}
+    by_pred: dict[float, float] = {}
+    tp: dict[float, float] = {}
+    for r in cells:
+        label, p, c = r[label_col], r["prediction"], float(r["count"])
+        by_label[label] = by_label.get(label, 0.0) + c
+        by_pred[p] = by_pred.get(p, 0.0) + c
+        if label == p:
+            tp[label] = c
+    precision = f1 = 0.0
+    for label, count in by_label.items():
+        t = tp.get(label, 0.0)
+        p = t / by_pred[label] if label in by_pred else 0.0
+        r = t / count
+        precision += p * count / n
+        f1 += (0.0 if p + r == 0 else 2.0 * p * r / (p + r)) * count / n
+    return {"accuracy": sum(tp.values()) / n, "f1": f1, "weightedPrecision": precision}
 
 
 @register("ml_evaluate", oracle=None)
 def ml_evaluate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both evaluator families on one fitted model: Binary (areaUnderROC /
-    areaUnderPR) + Multiclass (accuracy / f1 / weightedPrecision)."""
+    areaUnderPR, one ``BinaryClassificationEvaluator`` job each) and
+    Multiclass (accuracy / f1 / weightedPrecision, all three from one
+    confusion aggregate, `multiclass_metrics`). The five rounded values
+    come back as a local relation, so reading them runs no job.
+
+    The binary metrics keep MLlib's evaluator: a one-pass AUC would need a
+    test-set-sized collect or a single-task window over a score grid that
+    no value domain bounds."""
     feats = _embedding_features(spark, sf_dir)
     train, test = split_train_test(feats)
     lr = LogisticRegression(featuresCol="features", labelCol="label_bin", maxIter=20, regParam=0.01)
@@ -186,12 +231,9 @@ def ml_evaluate(spark: SparkSession, sf_dir: str) -> DataFrame:
     for metric in ("areaUnderROC", "areaUnderPR"):
         v = BinaryClassificationEvaluator(labelCol="label_bin", metricName=metric).evaluate(pred)
         rows.append((f"binary:{metric}", float(round(v, 6))))
-    for metric in ("accuracy", "f1", "weightedPrecision"):
-        v = MulticlassClassificationEvaluator(
-            labelCol="label_bin", predictionCol="prediction", metricName=metric
-        ).evaluate(pred)
+    for metric, v in multiclass_metrics(pred, "label_bin").items():
         rows.append((f"multiclass:{metric}", float(round(v, 6))))
-    return spark.createDataFrame(rows, "metric string, value double")
+    return local_rows(spark, rows, "metric string, value double")
 
 
 @register("ml_tune_cv", oracle=None)
@@ -231,8 +273,8 @@ def ml_tune_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for pm, m in zip(grid, model.avgMetrics)
     ]
-    return spark.createDataFrame(
-        rows, "reg_param double, elastic_net double, mean_auc double, is_best boolean"
+    return local_rows(
+        spark, rows, "reg_param double, elastic_net double, mean_auc double, is_best boolean"
     )
 
 
@@ -291,7 +333,7 @@ def ml_train_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
         acc = ev.evaluate(clf.fit(train).transform(test))
         rows.append((name, float(round(acc, 6))))
     train.unpersist()
-    return spark.createDataFrame(rows, "model string, accuracy double")
+    return local_rows(spark, rows, "model string, accuracy double")
 
 
 @register("ml_cluster_kmeans", oracle=None)

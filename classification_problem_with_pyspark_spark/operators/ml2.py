@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load
+from classification_problem_with_pyspark_spark.sources.catalog import load, local_rows
 
 SEED = 42
 
@@ -110,9 +110,7 @@ def ml_topics_lda(spark: SparkSession, sf_dir: str) -> DataFrame:
     topics = model.describeTopics(5).select(
         "topic", F.posexplode("termIndices").alias("rank", "term_idx")
     )
-    vocab_df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(vocab)], "term_idx int, term string"
-    )
+    vocab_df = local_rows(spark, enumerate(vocab), "term_idx int, term string")
     return topics.join(F.broadcast(vocab_df), "term_idx").select(
         "topic", "rank", "term"
     )
@@ -232,9 +230,7 @@ def ml_train_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             (name, round(rmse_eval.evaluate(pred), 4), round(r2_eval.evaluate(pred), 4), n_test)
         )
-    return spark.createDataFrame(
-        rows, "model string, rmse double, r2 double, n_test long"
-    )
+    return local_rows(spark, rows, "model string, rmse double, r2 double, n_test long")
 
 
 @register(
@@ -436,7 +432,8 @@ def ml_tune_tvs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for g, m in zip(grid, model.validationMetrics)
     ]
     best = float(model.bestModel.getRegParam())
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(rp, round(auc, 4), rp == best) for rp, auc in rows],
         "reg_param double, val_auc double, is_best boolean",
     )

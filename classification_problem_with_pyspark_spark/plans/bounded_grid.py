@@ -43,10 +43,12 @@ GRID_CAPTURE: list[DataFrame] | None = None
 
 # Nodes that bound their whole subtree: one output row per distinct cell.
 _BOUNDING = {"Aggregate", "Deduplicate"}
-# Leaves that are bounded by construction (driver-side literal data).
-# LogicalRDD is what spark.createDataFrame(<python rows>) analyzes to;
-# nothing else in this engine produces RDD-backed plans (collect/RDD use
-# is ratcheted), so it is literal-sized here.
+# Leaves taken as bounded: driver-side literal data (catalog.local_rows
+# builds a LocalRelation) and LogicalRDD, which in this package only
+# localCheckpoint makes. The analyzed plan keeps no trace of what a
+# checkpoint cut off, so a checkpointed aggregate (agg_hodges_lehmann's
+# daily grid) and a checkpointed fact scan look the same here: grid a
+# checkpoint only of a relation that is itself a bounded grid.
 _LITERAL_LEAVES = {"LocalRelation", "OneRowRelation", "LogicalRDD"}
 
 

@@ -20,8 +20,10 @@ import stat
 import tempfile
 import threading
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # Where staged files go: SPARK_GRAFT_TMP, else `.tmp` at the checkout root.
 # Only stage_dir writes here.
@@ -272,6 +274,35 @@ def bounded_collect(df: DataFrame, *, max_rows: int, what: str) -> list:
             "keep it distributed (broadcast/join) instead"
         )
     return rows
+
+
+def local_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small driver-side relation (result rows, lookup tables, metric
+    lists) as a ``LocalRelation``: materializing it runs no Spark job and
+    no Python worker. ``spark.createDataFrame(rows, schema)`` would give
+    an RDD-backed ``LogicalRDD`` instead, whose every read is a job that
+    re-pickles the rows through Python workers.
+
+    `rows` are plain tuples (or lists) in the column order of `schema`,
+    a DDL string. Each row is checked by the verifier ``createDataFrame``
+    applies to Python rows, because the Arrow build alone would silently
+    coerce: ``1`` into a double column becomes ``1.0`` and ``1.7`` into a
+    long column becomes ``1``; here both raise, as does an int out of its
+    32-bit range."""
+    struct = T._parse_datatype_string(schema)
+    verify = T._make_type_verifier(struct)
+    rows = list(rows)
+    for row in rows:
+        if type(row) not in (tuple, list):
+            raise TypeError(f"local_rows takes plain tuples, got {type(row).__name__}")
+        verify(row)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(list(col), type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def assert_catalog_schemas(spark: SparkSession, sf_dir: str) -> None:

@@ -49,7 +49,9 @@ def fingerprints(modules: set[str]) -> dict[str, dict[str, str]]:
 
     load_all_modules()
     spark = get_spark(shuffle_partitions=8)
-    stage = re.compile(re.escape(catalog.TMP_DIR) + r"/stage_[^/\s,\]]+(/[^/\s,\]]+)?")
+    # The whole staged path: a file scan's Location cuts it ("...") at a
+    # fixed width, so any part left unmasked depends on the checkout path.
+    stage = re.compile(re.escape(catalog.TMP_DIR) + r"/stage_[^\s,\]]*")
     out = {}
     for name, q in QUERIES.items():
         module = q.fn.__module__.removeprefix(OPS)

@@ -12,9 +12,11 @@ import shutil
 import tempfile
 
 from pyspark.ml.classification import LogisticRegression, LogisticRegressionModel
+from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 
 from classification_problem_with_pyspark_spark.operators.ml import (
     _embedding_features,
+    multiclass_metrics,
     split_train_test,
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
@@ -53,6 +55,29 @@ def test_evaluator_metrics_in_range(spark):
     }
     for k, v in rows.items():
         assert 0.0 <= v <= 1.0, (k, v)
+
+    # the confusion-aggregate metrics against MLlib's evaluator: on the
+    # fixture's binary predictions, and on 10 classes where label 0 is
+    # never predicted and class 9 is predicted but never labelled
+    feats = _embedding_features(spark, SF_DIR)
+    train, test = split_train_test(feats)
+    binary = LogisticRegression(
+        featuresCol="features", labelCol="label_bin", maxIter=20, regParam=0.01
+    ).fit(train).transform(test)
+    ten = spark.range(997).selectExpr(
+        "CAST(id % 9 AS DOUBLE) AS label",
+        "CAST(1 + (id * 7 + id DIV 3) % 9 AS DOUBLE) AS prediction",
+    )
+    for pred, label in ((binary, "label_bin"), (ten, "label")):
+        got = multiclass_metrics(pred, label)
+        assert list(got) == ["accuracy", "f1", "weightedPrecision"]
+        for metric, v in got.items():
+            want = MulticlassClassificationEvaluator(
+                labelCol=label, predictionCol="prediction", metricName=metric
+            ).evaluate(pred)
+            assert round(v, 6) == round(want, 6), (label, metric, v, want)
+            if label == "label_bin":
+                assert rows[f"multiclass:{metric}"] == round(v, 6)
 
 
 def test_model_persist_load_roundtrip(spark):
