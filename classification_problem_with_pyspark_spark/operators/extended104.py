@@ -1,26 +1,18 @@
-"""Round-3 extension pack #104: the feature-scaling suite and
-peaks-over-threshold mean excess.
+"""Round-3 extension pack #104: peaks-over-threshold mean excess.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
-knowledge — the three standard feature scalings (z-score, min-max,
-robust median/IQR — the sklearn preprocessing trio every tabular
-pipeline chooses between) and the mean-excess function of extreme
-value theory (E[X−u | X>u] at a high threshold u — the
-peaks-over-threshold diagnostic whose slope identifies the tail family
-before a GPD is ever fitted; Davison & Smith 1990) — re-expressed on
-the public PySpark DataFrame API over the driver's testdata.
+file:line citations into it are possible. The pattern is public
+knowledge — the mean-excess function of extreme value theory (E[X−u |
+X>u] at a high threshold u — the peaks-over-threshold diagnostic whose
+slope identifies the tail family before a GPD is ever fitted; Davison &
+Smith 1990) — re-expressed on the public PySpark DataFrame API over the
+driver's testdata.
 
-Hash-parity discipline (round-3 standard): scaling PARAMETERS per
-group are the product (min/max/median/IQR as exact rank-convention
-order statistics on integer cents; mean/sd from exact moments,
-ROUND-6) — parameters, not scaled rows, because that is what a
-preprocessing pipeline persists; thresholds for POT are rank-defined
-p90s, exceedance counts and mean excess fold exact integers.
+Hash-parity discipline (round-3 standard): thresholds are rank-defined
+p90s; exceedance counts and mean excess fold exact integers.
 
-Scale posture (SURVEY.md §7.6): both are per-group aggregates —
-scaling params from one moment pass + one rank window; POT from one
-rank window + one conditional pass.
+Scale posture (SURVEY.md §7.6): a per-group aggregate — one rank window
+plus one conditional pass.
 """
 
 from __future__ import annotations
@@ -31,113 +23,6 @@ from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
-
-
-@register(
-    "ml_feature_scaling_suite",
-    oracle="""
-    WITH v AS (
-        SELECT event_type, event_id,
-               CAST(round(value * 100) AS BIGINT) AS c
-        FROM events
-    ),
-    ranked AS (
-        SELECT event_type, c,
-               row_number() OVER (PARTITION BY event_type
-                                  ORDER BY c, event_id) AS rn,
-               COUNT(*) OVER (PARTITION BY event_type) AS n
-        FROM v
-    ),
-    stats AS (
-        SELECT event_type,
-               CAST(MAX(n) AS BIGINT) AS n,
-               CAST(MIN(c) AS BIGINT) AS min_c,
-               CAST(MAX(c) AS BIGINT) AS max_c,
-               CAST(MAX(CASE WHEN rn = (n + 1) // 2 THEN c END) AS BIGINT)
-                   AS median_c,
-               CAST(MAX(CASE WHEN rn = (n + 3) // 4 THEN c END) AS BIGINT)
-                   AS q1_c,
-               CAST(MAX(CASE WHEN rn = (3 * n + 1) // 4 THEN c END)
-                    AS BIGINT) AS q3_c,
-               CAST(SUM(c) AS BIGINT) AS s,
-               CAST(SUM(c * c) AS BIGINT) AS q
-        FROM ranked GROUP BY event_type
-    )
-    SELECT event_type, n, min_c, max_c, median_c,
-           CAST(q3_c - q1_c AS BIGINT) AS iqr_c,
-           ROUND(CAST(s AS DOUBLE) / n, 6) AS mean_c,
-           ROUND(sqrt((CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * s / n)
-                      / (n - 1)), 6) AS sd_c
-    FROM stats
-    ORDER BY event_type
-    """,
-)
-def ml_feature_scaling_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature-scaling parameters (SURVEY.md §2.11): per event type,
-    the fitted parameters of the three standard scalers — min/max
-    (MinMaxScaler), mean/sd (StandardScaler, sample σ), and
-    median/IQR (RobustScaler, with the registry's pinned rank
-    conventions from `agg_boxplot_fences`) — as ONE relation. The
-    PARAMETERS are the deliverable because that is what a
-    preprocessing pipeline persists and serves (the scaled rows are a
-    broadcast expression away); fitting them per group is the
-    group-aware scaling that per-global fitting silently gets wrong
-    on mixed populations.
-
-    Exactness: integer cents; rank-convention order statistics; the
-    only doubles are the mean/sd closes, ROUND-6.
-
-    Scale: one rank window + one moment pass per group — scaler
-    fitting at 100 TB is exactly this, once, persisted.
-    """
-    v = load(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("c"),
-    )
-    w_rn = Window.partitionBy("event_type").orderBy("c", "event_id")
-    w_n = Window.partitionBy("event_type")
-    ranked = v.select(
-        "event_type",
-        "c",
-        F.row_number().over(w_rn).alias("rn"),
-        F.count("*").over(w_n).alias("n"),
-    )
-    stats = ranked.groupBy("event_type").agg(
-        F.max("n").cast("long").alias("n"),
-        F.min("c").cast("long").alias("min_c"),
-        F.max("c").cast("long").alias("max_c"),
-        F.max(F.expr("CASE WHEN rn = (n + 1) DIV 2 THEN c END"))
-        .cast("long")
-        .alias("median_c"),
-        F.max(F.expr("CASE WHEN rn = (n + 3) DIV 4 THEN c END"))
-        .cast("long")
-        .alias("q1_c"),
-        F.max(F.expr("CASE WHEN rn = (3 * n + 1) DIV 4 THEN c END"))
-        .cast("long")
-        .alias("q3_c"),
-        F.sum("c").cast("long").alias("s"),
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("q"),
-    )
-    return stats.select(
-        "event_type",
-        "n",
-        "min_c",
-        "max_c",
-        "median_c",
-        (F.col("q3_c") - F.col("q1_c")).cast("long").alias("iqr_c"),
-        F.round(F.col("s").cast("double") / F.col("n"), 6).alias("mean_c"),
-        F.round(
-            F.sqrt(
-                (
-                    F.col("q").cast("double")
-                    - F.col("s").cast("double") * F.col("s") / F.col("n")
-                )
-                / (F.col("n") - 1)
-            ),
-            6,
-        ).alias("sd_c"),
-    ).orderBy("event_type")
 
 
 @register(

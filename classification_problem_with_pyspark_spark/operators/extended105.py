@@ -1,29 +1,19 @@
-"""Round-3 extension pack #105: Luhn checksum validation and
-Kendall's τ rank stability.
+"""Round-3 extension pack #105: Luhn checksum validation.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — the Luhn mod-10 check digit (Luhn 1960, the checksum on
 every payment card and IMEI; double every second digit from the right,
-subtract 9 above 9, the total must divide by 10) and Kendall's τ
-(concordant-minus-discordant pair correlation between two rankings —
-the scalar answer to "how stable is this ranking", Kendall 1938) —
-re-expressed on the public PySpark DataFrame API over the driver's
-testdata.
+subtract 9 above 9, the total must divide by 10) — re-expressed on the
+public PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): card-like numbers are
 deterministic digit strings from order keys with the TRUE Luhn check
 digit appended, and every 13th number is corrupted by one digit — the
 validator must pass exactly the uncorrupted ones; validation is pure
-digit algebra via a bounded fold. τ counts concordant/discordant part
-pairs between the two period revenue orders with exact integer sign
-products; ties (none in revenue cents here beyond chance) follow τ-a
-with the tie counts reported.
+digit algebra via a bounded fold.
 
-Scale posture (SURVEY.md §7.6): Luhn is per-row digit folds; τ is a
-part-pair self-join over the DIM-sized per-part relation (documented
-as O(|parts|²) — the merge-sort O(n log n) inversion count is the
-scale path, stated).
+Scale posture (SURVEY.md §7.6): Luhn is per-row digit folds.
 """
 
 from __future__ import annotations
@@ -35,7 +25,6 @@ from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
 LUHN_CORRUPT_MOD = 13
-TAU_SPLIT = "1998-01-01"
 
 
 def _luhn_digit_sql(numcol: str) -> str:
@@ -155,214 +144,4 @@ def scalar_luhn_checksum_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("n_missed_corruptions"),
-    )
-
-
-@register(
-    "ml_kendall_tau_rank_stability",
-    oracle=f"""
-    WITH sales AS (
-        SELECT l_partkey AS part,
-               CASE WHEN l_shipdate < TIMESTAMP '{TAU_SPLIT}' THEN 0
-                    ELSE 1 END AS period,
-               CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-                    AS BIGINT) AS rev
-        FROM lineitem
-        GROUP BY l_partkey, CASE WHEN l_shipdate < TIMESTAMP '{TAU_SPLIT}'
-                                 THEN 0 ELSE 1 END
-    ),
-    both_t AS (
-        SELECT p0.part, p0.rev AS r0, p1.rev AS r1
-        FROM (SELECT * FROM sales WHERE period = 0) p0
-        JOIN (SELECT * FROM sales WHERE period = 1) p1 ON p1.part = p0.part
-    ),
-    pairs AS (
-        SELECT CASE WHEN (a.r0 - b.r0) * (a.r1 - b.r1) > 0 THEN 1 ELSE 0 END
-                   AS conc,
-               CASE WHEN (a.r0 - b.r0) * (a.r1 - b.r1) < 0 THEN 1 ELSE 0 END
-                   AS disc
-        FROM both_t a JOIN both_t b ON b.part > a.part
-    )
-    SELECT
-        CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        CAST(SUM(conc) AS BIGINT) AS concordant,
-        CAST(SUM(disc) AS BIGINT) AS discordant,
-        CAST(COUNT(*) - SUM(conc) - SUM(disc) AS BIGINT) AS tied,
-        CAST((1000000 * (SUM(conc) - SUM(disc))) // COUNT(*) AS BIGINT)
-            AS tau_micro
-    FROM pairs
-    """,
-)
-def ml_kendall_tau_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall's τ rank stability (SURVEY.md §2.11): the concordant-
-    minus-discordant pair correlation between each part's period-1
-    and period-2 revenue orders — the SCALAR summary of the question
-    `window_decile_migration_matrix` answers as a table (τ near 0 =
-    ranks reshuffle, near 1 = sticky; on this fixture the migration
-    matrix showed near-independence and τ quantifies it). τ-a with
-    the tie count reported; sign products decide concordance in exact
-    integers, one floor-micro close.
-
-    Exactness: integer revenue sign products (magnitudes ≲ rev² —
-    inside int64 at sf0.01/0.1; the docstring arithmetic is the
-    standing discipline). The oracle states the definition as the
-    O(n²) pair join; the Spark side computes the IDENTICAL counts by
-    grid decomposition (below), verified hash-equal — exactness is
-    bucketing-independent because any value-disjoint bucketing that
-    co-buckets equal values preserves strict pair order across
-    buckets.
-
-    Scale (round-4 rewrite, measured 40.8 s → see BENCH_COVERAGE):
-    the naive pair join is O(n²) — 200 M pairs at sf0.1 made it the
-    single most expensive key in the sweep. Grid decomposition with
-    G=256 fixed-width value buckets per axis splits the pairs into
-    three exact classes:
-      1. different bucket on BOTH axes — concordance is decided by
-         bucket ids alone (buckets are value-disjoint ranges), so the
-         class reduces to 2-D dominance counting over the G×G cell-
-         count grid: cumulative-sum windows over 65k dense cells,
-         Σ C·A (below-right = concordant) and Σ C·D (below-left =
-         discordant). No row pairs materialize at all.
-      2. same r0-bucket — exact sign products over a bucket-id
-         equi-join: Σ c_i² ≈ n²/G pairs.
-      3. same r1-bucket, different r0-bucket — symmetric equi-join.
-    Total pair work drops n² → n²/G + G² with no approximation; at
-    larger n, raise G ~ √n (cells stay the bounded side) or recurse
-    the same decomposition inside hot buckets.
-    """
-    G = 256
-    li = load(spark, sf_dir, "lineitem")
-    sales = (
-        li.select(
-            F.col("l_partkey").alias("part"),
-            F.when(F.col("l_shipdate") < TAU_SPLIT, 0).otherwise(1).alias("period"),
-            F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)").alias("c"),
-        )
-        .groupBy("part", "period")
-        .agg(F.sum("c").cast("long").alias("rev"))
-    )
-    p0 = sales.where(F.col("period") == 0).select("part", F.col("rev").alias("r0"))
-    p1 = sales.where(F.col("period") == 1).select("part", F.col("rev").alias("r1"))
-    both = p0.join(p1, "part").localCheckpoint(eager=True)
-
-    # Fixed-width value buckets: equal values share a bucket, bucket
-    # ranges are disjoint — the two properties the decomposition needs.
-    # Skew only affects intra-bucket join size, never correctness.
-    bounds = both.agg(
-        F.min("r0").alias("lo0"),
-        F.max("r0").alias("hi0"),
-        F.min("r1").alias("lo1"),
-        F.max("r1").alias("hi1"),
-        F.count("*").alias("n"),
-    )
-
-    def bucket(col: str, lo: str, hi: str):
-        span = F.greatest(F.lit(1).cast("long"), F.col(hi) - F.col(lo) + 1)
-        return F.least(
-            F.lit(G - 1).cast("long"),
-            ((F.col(col) - F.col(lo)) * G / span).cast("long"),
-        )
-
-    b = (
-        both.crossJoin(F.broadcast(bounds))
-        .select(
-            "part",
-            "r0",
-            "r1",
-            bucket("r0", "lo0", "hi0").alias("i"),
-            bucket("r1", "lo1", "hi1").alias("j"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    # --- class 1: different bucket on both axes, via 2-D dominance on
-    # the dense G×G grid (65k cells — bounded regardless of n).
-    from pyspark.sql import Window
-
-    cells = b.groupBy("i", "j").agg(F.count("*").cast("long").alias("c"))
-    grid = (
-        spark.range(G)
-        .select(F.col("id").alias("i"))
-        .crossJoin(spark.range(G).select(F.col("id").alias("j")))
-    )
-    C = grid.join(cells, ["i", "j"], "left").select(
-        "i", "j", F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("c")
-    )
-    w_row = Window.partitionBy("i").orderBy("j").rowsBetween(Window.unboundedPreceding, 0)
-    w_col_le = Window.partitionBy("j").orderBy("i").rowsBetween(Window.unboundedPreceding, 0)
-    w_col_all = Window.partitionBy("j")
-    w_row_all = Window.partitionBy("i")
-    w_row_lag = Window.partitionBy("i").orderBy("j")
-    g1 = C.withColumn("rowcum", F.sum("c").over(w_row))
-    # Σ_{i'>i} rowcum[i'][j]  (strictly-below rows, cols ≤ j)
-    g1 = g1.withColumn(
-        "below_le", F.sum("rowcum").over(w_col_all) - F.sum("rowcum").over(w_col_le)
-    )
-    # Σ_{i'>i} rowtot[i']  = below_le at the last column of this row
-    g1 = g1.withColumn(
-        "tot_below",
-        F.max(F.when(F.col("j") == G - 1, F.col("below_le"))).over(w_row_all),
-    )
-    g1 = g1.withColumn(
-        "disc_d", F.coalesce(F.lag("below_le").over(w_row_lag), F.lit(0))
-    ).withColumn("conc_a", F.col("tot_below") - F.col("below_le"))
-    grid_part = g1.agg(
-        F.sum(F.col("c") * F.col("conc_a")).cast("long").alias("conc"),
-        F.sum(F.col("c") * F.col("disc_d")).cast("long").alias("disc"),
-    )
-
-    # --- classes 2 & 3: exact sign products inside one bucket strip.
-    ra = b.select(
-        F.col("part").alias("pa"),
-        F.col("i").alias("ia"),
-        F.col("j").alias("ja"),
-        F.col("r0").alias("a0"),
-        F.col("r1").alias("a1"),
-    )
-    rb = b.select(
-        F.col("part").alias("pb"),
-        F.col("i").alias("ib"),
-        F.col("j").alias("jb"),
-        F.col("r0").alias("b0"),
-        F.col("r1").alias("b1"),
-    )
-    prod = (F.col("a0") - F.col("b0")) * (F.col("a1") - F.col("b1"))
-    same_i = ra.join(
-        rb, (F.col("ia") == F.col("ib")) & (F.col("pb") > F.col("pa"))
-    ).select(
-        F.when(prod > 0, 1).otherwise(0).alias("conc"),
-        F.when(prod < 0, 1).otherwise(0).alias("disc"),
-    )
-    same_j = ra.join(
-        rb,
-        (F.col("ja") == F.col("jb"))
-        & (F.col("ia") != F.col("ib"))
-        & (F.col("pb") > F.col("pa")),
-    ).select(
-        F.when(prod > 0, 1).otherwise(0).alias("conc"),
-        F.when(prod < 0, 1).otherwise(0).alias("disc"),
-    )
-    strip_part = same_i.unionAll(same_j).agg(
-        F.coalesce(F.sum("conc"), F.lit(0)).cast("long").alias("conc"),
-        F.coalesce(F.sum("disc"), F.lit(0)).cast("long").alias("disc"),
-    )
-
-    totals = grid_part.unionAll(strip_part).agg(
-        F.sum("conc").cast("long").alias("concordant"),
-        F.sum("disc").cast("long").alias("discordant"),
-    )
-    return (
-        totals.crossJoin(F.broadcast(bounds.select("n")))
-        .select(
-            F.expr("CAST(n * (n - 1) DIV 2 AS BIGINT)").alias("n_pairs"),
-            "concordant",
-            "discordant",
-            F.expr(
-                "CAST(n * (n - 1) DIV 2 - concordant - discordant AS BIGINT)"
-            ).alias("tied"),
-            F.expr(
-                "CAST((1000000 * (concordant - discordant)) DIV (n * (n - 1) DIV 2)"
-                " AS BIGINT)"
-            ).alias("tau_micro"),
-        )
     )

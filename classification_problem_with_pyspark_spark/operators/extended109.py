@@ -1,29 +1,20 @@
-"""Round-4 extension pack #109: Lindley queue-backlog replay and PSI
-(population stability index) feature drift.
+"""Round-4 extension pack #109: Lindley queue-backlog replay.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — the Lindley recursion (W_k = max(0, W_{k-1} + X_k), the
 waiting-time/backlog fold of queueing theory, whose prefix-sum solution
 W_k = S_k − min(0, min_{j≤k} S_j) turns a sequential recurrence into two
-window scans — Lindley 1952) and the population stability index
-(PSI = Σ (p_i − q_i)·ln(p_i/q_i) over reference-decile bins, the model-
-monitoring drift score credit-risk teams ship beside χ²) — re-expressed
-on the public PySpark DataFrame API over the driver's testdata.
+window scans — Lindley 1952) — re-expressed on the public PySpark
+DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-4 standard): backlog folds entirely in
 exact integers (work in value-micro units, drain as truncating integer
 division of µs gaps — the negative-safe DIV semantics pinned in the
-rounding-modes suite); PSI bin edges are exact order statistics of the
-reference-period cents histogram, bin counts are exact, and only the
-10 per-bin ln() terms are doubles, each rounded to micro-nats BEFORE the
-integer sum (the entropy-key discipline).
+rounding-modes suite).
 
-Scale posture (SURVEY.md §7.6): Lindley is two growing-frame windows per
-user partition — no shrinking frames, no cross-user state; PSI's edge
-scan is the bucket-stitch cumsum over the reference per-cents histogram
-(r10 — the only single-task window is the 2^16-cents bucket grid; bin
-assignment and counting stay map-side).
+Scale posture (SURVEY.md §7.6): two growing-frame windows per user
+partition — no shrinking frames, no cross-user state.
 """
 
 from __future__ import annotations
@@ -39,9 +30,6 @@ from classification_problem_with_pyspark_spark.sources.catalog import load
 # that event bursts accumulate visible backlog, fast enough that typical
 # inter-event gaps fully drain it (both regimes exercised)
 DRAIN_MICRO_PER_SEC = 2000
-
-PSI_SPLIT = "1997-06-01"
-PSI_BINS = 10
 
 
 @register(
@@ -160,155 +148,4 @@ def events_queue_lindley_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("idle_resets"),
         )
         .orderBy("user_id")
-    )
-
-
-@register(
-    "ml_psi_feature_stability",
-    oracle=f"""
-    WITH folded AS (
-        SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-               CASE WHEN o_orderdate < TIMESTAMP '{PSI_SPLIT}' THEN 0
-                    ELSE 1 END AS period
-        FROM orders
-    ),
-    ref AS (SELECT cents FROM folded WHERE period = 0),
-    hist AS (
-        SELECT cents, count(*) AS c,
-               SUM(count(*)) OVER (ORDER BY cents
-                                   ROWS UNBOUNDED PRECEDING) AS cum
-        FROM ref GROUP BY cents
-    ),
-    na_t AS (SELECT CAST(count(*) AS BIGINT) AS na FROM ref),
-    edges AS (
-        SELECT k,
-               (SELECT min(cents) FROM hist, na_t
-                WHERE cum >= (na * k + {PSI_BINS} - 1) // {PSI_BINS}) AS e
-        FROM (SELECT unnest(range(1, {PSI_BINS})) AS k)
-    ),
-    binned AS (
-        SELECT f.period,
-               (SELECT count(*) FROM edges WHERE f.cents > edges.e) AS bin
-        FROM folded f
-    ),
-    counts AS (
-        SELECT bin,
-               SUM(CASE WHEN period = 0 THEN 1 ELSE 0 END) AS ca,
-               SUM(CASE WHEN period = 1 THEN 1 ELSE 0 END) AS cb
-        FROM binned GROUP BY bin
-    ),
-    tot AS (
-        SELECT CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb
-        FROM counts
-    )
-    SELECT CAST(bin AS BIGINT) AS bin,
-           CAST(ca AS BIGINT) AS n_ref,
-           CAST(cb AS BIGINT) AS n_cur,
-           CAST((1000000 * ca) // na AS BIGINT) AS share_ref_micro,
-           CAST((1000000 * cb) // nb AS BIGINT) AS share_cur_micro,
-           CAST(round(1000000 *
-                (CAST(greatest(ca, 1) AS DOUBLE) / na
-                 - CAST(greatest(cb, 1) AS DOUBLE) / nb)
-                * ln((CAST(greatest(ca, 1) AS DOUBLE) / na)
-                     / (CAST(greatest(cb, 1) AS DOUBLE) / nb)))
-                AS BIGINT) AS psi_term_micro
-    FROM counts, tot
-    ORDER BY bin
-    """,
-)
-def ml_psi_feature_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population stability index by reference decile (SURVEY.md §2.11):
-    decile edges come from the PRE-{PSI_SPLIT} order-value distribution
-    (exact order statistics of the cents histogram); both periods are
-    binned against those fixed edges and each bin contributes
-    (p_ref − p_cur)·ln(p_ref/p_cur) — the PSI drift score model-
-    monitoring systems alarm on (rule of thumb: Σ < 0.1 stable, > 0.25
-    shifted). Per-bin terms are emitted so the drifted segments are
-    visible, not just the scalar; zero-count bins clamp to 1 (the
-    standard ε floor) before the log.
-
-    Exactness: edges and counts are exact integers; shares fold floor-
-    micro; only the 10 ln() terms are doubles, each rounded to
-    micro-nats independently (entropy-key discipline — no float SUM
-    crosses engines).
-
-    Scale: the edge scan is the bucket-stitch cumsum over the reference
-    period's per-cents histogram (r10: distinct cents track the order
-    count, so the only single-task window is the 2^16-cents bucket
-    grid); bin assignment is a 9-edge broadcast comparison, counting is
-    one map-side-combinable groupBy.
-    """
-    o = load(spark, sf_dir, "orders").select(
-        F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("cents"),
-        F.when(F.col("o_orderdate") < PSI_SPLIT, 0).otherwise(1).alias("period"),
-    )
-    ref = o.where(F.col("period") == 0)
-    # r10: the distinct-cents histogram of the reference period is NOT
-    # value-domain bounded (order prices are near-unique: 5.5k→55k rows
-    # through one WindowExec task, caught by the grid cardinality
-    # tripwire) — the edge-scan cumsum is the bucket-stitch form: the
-    # only single-task window is the 2^16-cents bucket grid (price range
-    # ~5e7 cents → ≤763 buckets at any SF).
-    from classification_problem_with_pyspark_spark.plans.global_rank import (
-        bucketed_global_cumsum,
-    )
-
-    hist = bucketed_global_cumsum(
-        ref.groupBy("cents").agg(F.count("*").alias("c")),
-        "cents",
-        [],
-        [("cum", "c")],
-        bucket_bits=16,
-    ).select("cents", "cum")
-    na = ref.agg(F.count("*").alias("na"))
-    edges = hist.crossJoin(F.broadcast(na)).agg(
-        *[
-            F.min(
-                F.when(
-                    F.col("cum")
-                    >= F.expr(f"(na * {k} + {PSI_BINS - 1}) DIV {PSI_BINS}"),
-                    F.col("cents"),
-                )
-            ).alias(f"e{k}")
-            for k in range(1, PSI_BINS)
-        ]
-    )
-    binned = o.crossJoin(F.broadcast(edges)).select(
-        "period",
-        sum(
-            [
-                F.when(F.col("cents") > F.col(f"e{k}"), 1).otherwise(0)
-                for k in range(1, PSI_BINS)
-            ]
-        ).alias("bin"),
-    )
-    counts = binned.groupBy("bin").agg(
-        F.sum(F.when(F.col("period") == 0, 1).otherwise(0)).alias("ca"),
-        F.sum(F.when(F.col("period") == 1, 1).otherwise(0)).alias("cb"),
-    )
-    tot = counts.agg(
-        F.sum("ca").cast("long").alias("na"), F.sum("cb").cast("long").alias("nb")
-    )
-    return (
-        counts.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("bin").cast("long").alias("bin"),
-            F.col("ca").cast("long").alias("n_ref"),
-            F.col("cb").cast("long").alias("n_cur"),
-            F.expr("CAST((1000000 * ca) DIV na AS BIGINT)").alias(
-                "share_ref_micro"
-            ),
-            F.expr("CAST((1000000 * cb) DIV nb AS BIGINT)").alias(
-                "share_cur_micro"
-            ),
-            F.expr(
-                "CAST(round(1000000 * "
-                "(CAST(greatest(ca, 1) AS DOUBLE) / na"
-                " - CAST(greatest(cb, 1) AS DOUBLE) / nb)"
-                " * ln((CAST(greatest(ca, 1) AS DOUBLE) / na)"
-                "      / (CAST(greatest(cb, 1) AS DOUBLE) / nb)))"
-                " AS BIGINT)"
-            ).alias("psi_term_micro"),
-        )
-        .orderBy("bin")
     )

@@ -1,27 +1,17 @@
-"""Round-4 extension pack #114: exact average precision (PR-AUC) and
-DAU/MAU stickiness.
+"""Round-4 extension pack #114: DAU/MAU stickiness.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
-knowledge — average precision as the step-function area under the
-precision-recall curve (AP = Σ (R_k − R_(k-1))·P_k over descending
-score thresholds — THE metric for imbalanced classifiers, where ROC-AUC
-flatters: a 1%-positive problem can show 0.95 ROC-AUC with useless
-precision) and the DAU/MAU stickiness ratio (mean daily actives over
+file:line citations into it are possible. The pattern is public
+knowledge — the DAU/MAU stickiness ratio (mean daily actives over
 monthly actives — the "how many days a month does a user show up"
 engagement ratio product teams track) — re-expressed on the public
 PySpark DataFrame API over the driver's testdata.
 
-Hash-parity discipline (round-4 standard): AP reuses the pack-27 scored
-cohort VERBATIM (single-definition discipline — the ROC/AUC/calibration
-keys and this one cannot drift), folds per-threshold terms as the
-two-step integer division (1e9·Δtp·tp) DIV (tp+fp) and closes with one
-DIV by (1000·pos); stickiness is all integer counts and one DIV.
+Hash-parity discipline (round-4 standard): all integer counts and one
+DIV.
 
-Scale posture (SURVEY.md §7.6): both are groupBy-reduce shapes — AP's
-threshold grid is |distinct scores| rows with one ordered cumulative
-window over that bounded grid; stickiness is two distinct-count
-aggregations per calendar month.
+Scale posture (SURVEY.md §7.6): two distinct-count aggregations per
+calendar month.
 """
 
 from __future__ import annotations
@@ -29,95 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.extended27 import (
-    _SCORED_SQL,
-    _scored,
-)
-from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
-
-
-@register(
-    "ml_pr_auc_exact",
-    oracle=f"""
-    WITH {_SCORED_SQL},
-    tot AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_users,
-               CAST(SUM(label) AS BIGINT) AS pos
-        FROM scored
-    ),
-    grid AS (
-        SELECT score, CAST(SUM(label) AS BIGINT) AS p,
-               CAST(count(*) AS BIGINT) AS c
-        FROM scored GROUP BY score
-    ),
-    cum AS (
-        SELECT score, p,
-               SUM(p) OVER (ORDER BY score DESC
-                            ROWS UNBOUNDED PRECEDING) AS tp,
-               SUM(c) OVER (ORDER BY score DESC
-                            ROWS UNBOUNDED PRECEDING) AS pred
-        FROM grid
-    ),
-    terms AS (
-        SELECT CAST((1000000000 * p * tp) // pred AS BIGINT) AS term_nano
-        FROM cum
-    )
-    SELECT t.n_users, t.pos,
-           CAST((SELECT count(*) FROM grid) AS BIGINT) AS n_thresholds,
-           CAST((SELECT SUM(term_nano) FROM terms) // (1000 * t.pos)
-                AS BIGINT) AS ap_micro,
-           CAST((1000000 * t.pos) // t.n_users AS BIGINT)
-               AS prevalence_micro
-    FROM tot t
-    """,
-)
-def ml_pr_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact average precision / PR-AUC (SURVEY.md §2.11): the step
-    area under the precision-recall curve of the pack-27 early-activity
-    score vs the 24 h conversion label — AP = Σ_k ΔR_k·P_k over
-    descending score thresholds, the imbalance-honest companion to
-    `ml_auc_exact` (ROC can look excellent while precision is useless
-    at 1% prevalence; AP's baseline IS the prevalence, reported
-    alongside). Shares the pack-27 scored-cohort pipeline verbatim so
-    ROC/AUC/calibration/PR can never drift apart.
-
-    Exactness: per-threshold term = (1e9·Δtp·tp) DIV (tp+fp) — the
-    two-step integer fold (headroom ≤ 1e9·pos² — inside int64 through
-    sf1), closed by one DIV against (1000·pos); ties share a threshold
-    row exactly as in the ROC key.
-
-    Scale: one groupBy to the |distinct scores| grid, one ordered
-    cumulative window over that bounded grid, one reduce.
-    """
-    scored = _scored(spark, sf_dir)
-    tot = scored.agg(
-        F.count("*").alias("n_users"),
-        F.sum("label").cast("long").alias("pos"),
-    )
-    grid = scored.groupBy("score").agg(
-        F.sum("label").cast("long").alias("p"),
-        F.count("*").cast("long").alias("c"),
-    )
-    cum = grid_cumsum(
-        grid, [F.desc("score")], [("tp", "p"), ("pred", "c")], keep=["p"]
-    )
-    folded = cum.agg(
-        F.count("*").cast("long").alias("n_thresholds"),
-        F.sum(F.expr("(1000000000 * p * tp) DIV pred"))
-        .cast("long")
-        .alias("sum_nano"),
-    )
-    return tot.crossJoin(F.broadcast(folded)).select(
-        "n_users",
-        "pos",
-        "n_thresholds",
-        F.expr("CAST(sum_nano DIV (1000 * pos) AS BIGINT)").alias("ap_micro"),
-        F.expr("CAST((1000000 * pos) DIV n_users AS BIGINT)").alias(
-            "prevalence_micro"
-        ),
-    )
 
 
 @register(

@@ -1,27 +1,17 @@
-"""Round-4 extension pack #117: cumulative VWAP and split-conformal
-prediction intervals.
+"""Round-4 extension pack #117: cumulative VWAP.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — VWAP (cumulative Σ price·volume / Σ volume through the
 session: the execution benchmark every trading desk measures fills
-against) and split-conformal prediction (hold out a calibration set,
-take the ⌈(n+1)(1−α)⌉-th absolute residual as the radius q, then
-[ŷ−q, ŷ+q] covers ≥ 1−α of fresh points with NO distributional
-assumptions — Vovk et al.; the distribution-free uncertainty wrapper
-modern ML serving stacks bolt onto any point predictor) — re-expressed
-on the public PySpark DataFrame API over the driver's testdata.
+against) — re-expressed on the public PySpark DataFrame API over the
+driver's testdata.
 
 Hash-parity discipline (round-4 standard): VWAP folds exact cents×qty
-integers with a per-row truncating division close; conformal uses an
-md5 calibration/test split, integer cents residuals, an exact
-order-statistic radius, and integer coverage counting — zero floats
-anywhere in the key.
+integers with a per-row truncating division close.
 
-Scale posture (SURVEY.md §7.6): VWAP is two growing-frame windows per
-part partition; conformal is one bounded groupBy for the predictor,
-one rank window for the radius (TakeOrdered shape on the calibration
-slice), and one broadcast comparison over the test slice.
+Scale posture (SURVEY.md §7.6): two growing-frame windows per part
+partition.
 """
 
 from __future__ import annotations
@@ -35,8 +25,6 @@ from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
 VWAP_PARTS_MOD = 200  # hash-sampled parts whose fill sequence we track
-CONF_ALPHA_PCT = 10  # 90% target coverage
-CONF_CAL_MOD = 3  # every 3rd order (by md5) calibrates; rest is test
 
 
 @register(
@@ -116,141 +104,3 @@ def window_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(cum_pv DIV cum_qty AS BIGINT)").alias("vwap_cents"),
         F.expr("pv_cents DIV qty > cum_pv DIV cum_qty").alias("above_vwap"),
     ).orderBy("part", "l_orderkey", "l_linenumber")
-
-
-@register(
-    "ml_conformal_interval_split",
-    oracle=f"""
-    WITH base AS (
-        SELECT o_orderkey,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS y,
-               o_orderpriority AS grp,
-               CAST(('0x' || substr(md5('conf_' || CAST(o_orderkey AS VARCHAR)), 1, 15))
-                    AS BIGINT) % {CONF_CAL_MOD} = 0 AS is_cal
-        FROM orders
-    ),
-    model AS (  -- point predictor: per-priority mean on the CAL slice
-        SELECT grp, CAST(SUM(y) // count(*) AS BIGINT) AS yhat
-        FROM base WHERE is_cal GROUP BY grp
-    ),
-    resid AS (
-        SELECT b.o_orderkey, abs(b.y - m.yhat) AS r, b.is_cal
-        FROM base b JOIN model m ON m.grp = b.grp
-    ),
-    cal AS (
-        SELECT r, row_number() OVER (ORDER BY r, o_orderkey) AS rn,
-               count(*) OVER () AS n_cal
-        FROM resid WHERE is_cal
-    ),
-    q AS (  -- radius = ceil((n+1)(1-alpha))-th calibration residual
-        SELECT CAST(max(n_cal) AS BIGINT) AS n_cal,
-               CAST(max(CASE WHEN rn = least(n_cal,
-                        ((n_cal + 1) * (100 - {CONF_ALPHA_PCT}) + 99) // 100)
-                    THEN r END) AS BIGINT) AS q_cents
-        FROM cal
-    )
-    SELECT q.n_cal,
-           CAST(SUM(CASE WHEN NOT t.is_cal THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_test,
-           q.q_cents,
-           CAST(SUM(CASE WHEN NOT t.is_cal AND t.r <= q.q_cents
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
-           CAST((1000000 * SUM(CASE WHEN NOT t.is_cal AND t.r <= q.q_cents
-                                    THEN 1 ELSE 0 END))
-                // SUM(CASE WHEN NOT t.is_cal THEN 1 ELSE 0 END) AS BIGINT)
-               AS coverage_micro
-    FROM resid t, q
-    GROUP BY q.n_cal, q.q_cents
-    """,
-)
-def ml_conformal_interval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-conformal prediction interval (SURVEY.md §2.11): an md5
-    split carves orders into calibration and test; the point predictor
-    is the per-priority mean order value fit on calibration only; the
-    interval radius q is the ⌈(n_cal+1)·0.9⌉-th smallest calibration
-    |residual|; test coverage of ŷ ± q is reported. The conformal
-    guarantee — coverage ≥ 90% for exchangeable data, NO distribution
-    assumptions — is the modern uncertainty wrapper for any point
-    model, and the whole construction is exact integer arithmetic.
-
-    Exactness: cents residuals, rank-statistic radius with
-    (r, orderkey) total order, integer coverage counts, one DIV.
-
-    Scale: predictor = bounded groupBy; radius = rank window over the
-    calibration slice (TakeOrdered shape); coverage = one broadcast
-    comparison pass — no pairwise work anywhere.
-    """
-    o = load(spark, sf_dir, "orders")
-    chash = md5_long(F.concat(F.lit("conf_"), F.col("o_orderkey").cast("string")))
-    base = o.select(
-        "o_orderkey",
-        F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("y"),
-        F.col("o_orderpriority").alias("grp"),
-        (chash % CONF_CAL_MOD == 0).alias("is_cal"),
-    )
-    model = (
-        base.where("is_cal")
-        .groupBy("grp")
-        .agg(F.expr("CAST(SUM(y) DIV count(*) AS BIGINT)").alias("yhat"))
-    )
-    resid = base.join(F.broadcast(model), "grp").select(
-        "o_orderkey", F.abs(F.col("y") - F.col("yhat")).alias("r"), "is_cal"
-    )
-    # De-globalized rank-k selection (r8; bucket-stitched r10): the
-    # conformal quantile only needs the residual VALUE at rank k under
-    # the (r, o_orderkey) total order, and rows tying on r share that
-    # value — so value-at-rank-k is the least r whose cumulative count
-    # reaches k. The distinct-residual histogram is NOT value-domain
-    # bounded (cents residuals are near-unique: 4.9k→49.8k rows through
-    # one WindowExec task, caught by the grid cardinality tripwire), so
-    # the cumsum is the bucket-stitch form: the only single-task window
-    # is the 2^16-cents bucket grid (residual range ≤ ~5e7 cents → ≤763
-    # buckets at any SF).
-    from classification_problem_with_pyspark_spark.plans.global_rank import (
-        bucketed_global_cumsum,
-    )
-
-    rhist = resid.where("is_cal").groupBy("r").agg(F.count("*").alias("c"))
-    rcum = bucketed_global_cumsum(
-        rhist, "r", [], [("cum", "c")], bucket_bits=16
-    ).select("r", "cum")
-    n_cal = rhist.agg(F.sum("c").cast("long").alias("n_cal"))
-    q = (
-        rcum.crossJoin(F.broadcast(n_cal))
-        .where(
-            F.col("cum")
-            >= F.expr(
-                f"least(n_cal, ((n_cal + 1) * (100 - {CONF_ALPHA_PCT}) + 99)"
-                " DIV 100)"
-            )
-        )
-        .agg(
-            F.max("n_cal").alias("n_cal"),
-            F.min("r").alias("q_cents"),
-        )
-        # An empty calibration subset makes the global agg emit one
-        # all-NULL row where the old rank-equality filter emitted zero
-        # rows; drop it so the downstream crossJoin stays empty (ADVICE r8).
-        .where(F.col("q_cents").isNotNull())
-    )
-    return (
-        resid.crossJoin(F.broadcast(q))
-        .agg(
-            F.max("n_cal").cast("long").alias("n_cal"),
-            F.sum(F.when(~F.col("is_cal"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_test"),
-            F.max("q_cents").cast("long").alias("q_cents"),
-            F.sum(
-                F.when((~F.col("is_cal")) & (F.col("r") <= F.col("q_cents")), 1)
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("n_covered"),
-            F.expr(
-                "CAST((1000000 * SUM(CASE WHEN NOT is_cal AND r <= q_cents"
-                " THEN 1 ELSE 0 END))"
-                " DIV SUM(CASE WHEN NOT is_cal THEN 1 ELSE 0 END) AS BIGINT)"
-            ).alias("coverage_micro"),
-        )
-    )

@@ -1,24 +1,21 @@
-"""Round-3 extension pack #28: sequential-pattern mining (MLlib
-PrefixSpan + an exact SQL frequent-sequence companion) and FIFO
+"""Round-3 extension pack #28: exact frequent 2-sequences (the SQL
+companion of MLlib PrefixSpan, `ml_prefixspan_sequences`) and FIFO
 inventory allocation via double-cumsum interval matching.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. The patterns are public
-knowledge — PrefixSpan (Pei et al. 2001; `pyspark.ml.fpm.PrefixSpan` is
-the public MLlib surface), frequent-subsequence support counting, and
-the FIFO allocation-by-cumulative-intervals idiom (the standard SQL
-solution to first-in-first-out cost basis / queue matching) —
-re-expressed on the public PySpark DataFrame API over the driver's
-testdata.
+knowledge — frequent-subsequence support counting and the FIFO
+allocation-by-cumulative-intervals idiom (the standard SQL solution to
+first-in-first-out cost basis / queue matching) — re-expressed on the
+public PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): sequence support counts are
 exact user counts over epoch-µs orderings (strict < on integer
 microseconds); FIFO quantities fold to BIGINT units and every matched
-quantity is min/max arithmetic on exact cumulative sums. The PrefixSpan
-key is rows-only by nature (MLlib emits patterns in nondeterministic
-order) and is pinned instead by an EXACT cross-check: its length-2
-pattern frequencies must equal the SQL companion's user counts —
-asserted pattern-by-pattern in tests.
+quantity is min/max arithmetic on exact cumulative sums. The
+frequent-2-sequence counts also pin the rows-only PrefixSpan key: its
+length-2 pattern frequencies must equal them, pattern by pattern
+(tests/test_extended28.py).
 
 Scale posture (SURVEY.md §7.6): frequent-2-sequences reduce the fact
 table to per-(user, type) first/last timestamps before any pairing (the
@@ -113,58 +110,6 @@ def events_frequent_2seq(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("support_micro"),
         )
         .orderBy("first_type", "then_type")
-    )
-
-
-@register("ml_prefixspan_sequences", oracle=None)
-def ml_prefixspan_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MLlib PrefixSpan sequential-pattern mining (SURVEY.md §2.11):
-    each user's time-ordered event types form a sequence of singleton
-    itemsets; PrefixSpan emits every subsequence pattern above 30%
-    support up to length 3 — the sequence-mining companion to
-    `ml_fpgrowth_2itemsets` (which ignores order). Rows-only: MLlib
-    emits patterns in partition order. The EXACT pin: every length-2
-    pattern's freq must equal `events_frequent_2seq`'s user count for
-    that ordered pair — asserted pattern-by-pattern in
-    tests/test_extended28.py (the subsequence definitions coincide).
-
-    Scale: PrefixSpan's projected-database recursion distributes over
-    the sequence partitioning; sequences here are per-user event lists
-    (bounded by user activity), built by one sort-within-group
-    aggregation.
-    """
-    from pyspark.ml.fpm import PrefixSpan
-
-    e = load(spark, sf_dir, "events")
-    seqs = (
-        e.select(
-            "user_id",
-            F.struct(
-                F.unix_micros("ts").alias("tu"),
-                F.col("event_id").alias("eid"),
-                F.col("event_type").alias("et"),
-            ).alias("rec"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(rec)), r -> array(r.et))"
-            ).alias("sequence")
-        )
-    )
-    ps = PrefixSpan(
-        minSupport=0.3, maxPatternLength=3, sequenceCol="sequence"
-    )
-    # '>'-joined string, not array<string>: the grading harness
-    # canonicalizes through pandas, which cannot hash list cells, so a
-    # top-level array column would be un-gradable even rows-only
-    # (the scalar_array_setops_suite lesson). Itemsets join with '+',
-    # sequence steps with '>' — lossless for singleton itemsets.
-    return ps.findFrequentSequentialPatterns(seqs).select(
-        F.expr(
-            "array_join(transform(sequence, s -> array_join(s, '+')), '>')"
-        ).alias("pattern"),
-        F.col("freq").cast("long").alias("freq"),
     )
 
 

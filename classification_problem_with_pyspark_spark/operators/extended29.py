@@ -1,55 +1,28 @@
-"""Round-3 extension pack #29: ledger reconciliation audit and exact
-NDCG@10 recommender evaluation.
+"""Round-3 extension pack #29: ledger reconciliation audit.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. The patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — financial order-vs-lines reconciliation (the breaks report
-every billing system runs) and normalized discounted cumulative gain
-(Järvelin & Kekäläinen 2002) for top-K recommendation quality —
-re-expressed on the public PySpark DataFrame API over the driver's
-testdata.
+every billing system runs) — re-expressed on the public PySpark
+DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): money is exact cents; break
-magnitudes are BIGINT; the NDCG log2 discounts are FIXED micro-unit
-literals for positions 1..10 (no log at query time — the
-agg_bootstrap_ci_revenue CDF-literal discipline), so DCG/IDCG are
-integer sums and NDCG folds as one integer division.
+magnitudes are BIGINT.
 
 Scale posture (SURVEY.md §7.6): reconciliation is the order-keyed join
 the billing pipeline pays anyway plus a 3-row rollup and a top-20
-TakeOrdered; the recommender trains by one (segment, part) aggregate
-(bounded output), broadcasts the 50-row model, and evaluates with one
-customer-keyed rollup.
+TakeOrdered.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
 BREAK_TOLERANCE_CENTS = 100  # |order total − Σ lines| beyond this is a break
-
-# round(1e6 / log2(i+1)) for positions i = 1..10 — fixed literals, no
-# log at query time
-NDCG_DISC_MICRO = (
-    1000000, 630930, 500000, 430677, 386853,
-    356207, 333333, 315465, 301030, 289065,
-)
-_DISC_PREFIX = []
-_acc = 0
-for _d in NDCG_DISC_MICRO:
-    _acc += _d
-    _DISC_PREFIX.append(_acc)
-NDCG_PREFIX_MICRO = tuple(_DISC_PREFIX)
-
-_DISC_ARR_SQL = "[" + ", ".join(str(d) for d in NDCG_DISC_MICRO) + "]"
-_PREF_ARR_SQL = "[" + ", ".join(str(p) for p in NDCG_PREFIX_MICRO) + "]"
-_DISC_ARR_SPARK = "array(" + ", ".join(str(d) for d in NDCG_DISC_MICRO) + ")"
-_PREF_ARR_SPARK = "array(" + ", ".join(str(p) for p in NDCG_PREFIX_MICRO) + ")"
 
 
 @register(
@@ -134,155 +107,4 @@ def audit_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("max_abs_break_cents"),
         )
         .orderBy("o_orderstatus")
-    )
-
-
-@register(
-    "ml_ndcg_at_k",
-    oracle=f"""
-    WITH bounds AS (
-        SELECT epoch_us(min(o_orderdate))
-               + (epoch_us(max(o_orderdate)) - epoch_us(min(o_orderdate))) // 2
-                   AS split_us
-        FROM orders
-    ),
-    facts AS (
-        SELECT c.c_mktsegment AS seg, o.o_custkey AS cust,
-               l.l_partkey AS part,
-               CAST(round(l.l_quantity) AS BIGINT) AS qty,
-               epoch_us(o.o_orderdate) AS ous
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-    ),
-    rec AS (
-        SELECT seg, part, pos FROM (
-            SELECT seg, part,
-                   row_number() OVER (PARTITION BY seg
-                                      ORDER BY SUM(qty) DESC, part) AS pos
-            FROM facts, bounds WHERE ous < split_us
-            GROUP BY seg, part
-        ) r WHERE pos <= 10
-    ),
-    truth AS (
-        SELECT DISTINCT seg, cust, part
-        FROM facts, bounds WHERE ous >= split_us
-    ),
-    truth_n AS (
-        SELECT seg, cust, CAST(count(*) AS BIGINT) AS n_truth
-        FROM truth GROUP BY seg, cust
-    ),
-    hits AS (
-        SELECT t.seg, t.cust,
-               CAST(count(*) AS BIGINT) AS n_hits,
-               CAST(SUM(({_DISC_ARR_SQL})[r.pos]) AS BIGINT) AS dcg_micro
-        FROM truth t JOIN rec r ON t.seg = r.seg AND t.part = r.part
-        GROUP BY t.seg, t.cust
-    ),
-    per_user AS (
-        SELECT n.seg, n.cust,
-               COALESCE(h.n_hits, 0) AS n_hits,
-               COALESCE(h.dcg_micro, 0) AS dcg_micro,
-               ({_PREF_ARR_SQL})[least(n.n_truth, 10)] AS idcg_micro
-        FROM truth_n n LEFT JOIN hits h ON n.seg = h.seg AND n.cust = h.cust
-    )
-    SELECT seg,
-           CAST(count(*) AS BIGINT) AS n_users,
-           CAST(SUM(n_hits) AS BIGINT) AS total_hits,
-           CAST((1000000 * count(*) FILTER (n_hits > 0)) // count(*)
-                AS BIGINT) AS hit_rate_micro,
-           CAST(SUM((1000000 * dcg_micro) // idcg_micro) // count(*)
-                AS BIGINT) AS mean_ndcg_micro
-    FROM per_user GROUP BY seg ORDER BY seg
-    """,
-)
-def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact NDCG@10 / hit-rate for a popularity recommender
-    (SURVEY.md §2.11): train on the first half of the order timeline
-    (top-10 parts per market segment by quantity, total-order
-    tie-break), evaluate on each customer's second-half purchases —
-    mean NDCG@10 and hit rate per segment, the ranking-quality metrics
-    RankingEvaluator reports, as a hash-checkable integer contract
-    beside the rows-only `ml_recommend_als`.
-
-    Exactness: the log2 position discounts are fixed micro literals
-    (positions 1..10; the bootstrap-pack CDF-literal discipline), so
-    per-user DCG and ideal-DCG are integer sums and NDCG is one integer
-    division; the temporal split point is integer epoch-µs midpoint
-    arithmetic; the recommendation cut is total-order deterministic.
-
-    Scale: training is one (segment, part) aggregate; the 50-row model
-    broadcasts into the truth join; evaluation rolls up per customer
-    then per segment — the fact table is touched twice, shuffled once
-    each on its natural keys.
-    """
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    bounds = o.agg(
-        F.expr(
-            "unix_micros(min(o_orderdate))"
-            " + (unix_micros(max(o_orderdate)) - unix_micros(min(o_orderdate)))"
-            " DIV 2"
-        ).alias("split_us")
-    )
-    facts = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            F.col("c_mktsegment").alias("seg"),
-            F.col("o_custkey").alias("cust"),
-            F.col("l_partkey").alias("part"),
-            F.expr("CAST(round(l_quantity) AS BIGINT)").alias("qty"),
-            F.expr("unix_micros(o_orderdate)").alias("ous"),
-        )
-        .crossJoin(F.broadcast(bounds))
-    )
-    w_rank = Window.partitionBy("seg").orderBy(F.desc("s"), "part")
-    rec = (
-        facts.where(F.col("ous") < F.col("split_us"))
-        .groupBy("seg", "part")
-        .agg(F.sum("qty").alias("s"))
-        .select("seg", "part", F.row_number().over(w_rank).alias("pos"))
-        .where(F.col("pos") <= 10)
-    )
-    truth = (
-        facts.where(F.col("ous") >= F.col("split_us"))
-        .select("seg", "cust", "part")
-        .distinct()
-    )
-    truth_n = truth.groupBy("seg", "cust").agg(F.count("*").alias("n_truth"))
-    hits = (
-        truth.join(F.broadcast(rec), ["seg", "part"])
-        .groupBy("seg", "cust")
-        .agg(
-            F.count("*").alias("n_hits"),
-            F.sum(F.expr(f"element_at({_DISC_ARR_SPARK}, pos)")).alias(
-                "dcg_micro"
-            ),
-        )
-    )
-    per_user = truth_n.join(hits, ["seg", "cust"], "left").select(
-        "seg",
-        F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-        F.coalesce("dcg_micro", F.lit(0)).alias("dcg_micro"),
-        F.expr(
-            f"element_at({_PREF_ARR_SPARK}, CAST(least(n_truth, 10) AS INT))"
-        ).alias("idcg_micro"),
-    )
-    return (
-        per_user.groupBy("seg")
-        .agg(
-            F.count("*").alias("n_users"),
-            F.sum("n_hits").alias("total_hits"),
-            F.expr(
-                "CAST((1000000 * SUM(CASE WHEN n_hits > 0 THEN 1 ELSE 0 END))"
-                " DIV count(*) AS BIGINT)"
-            ).alias("hit_rate_micro"),
-            F.expr(
-                "CAST(SUM((1000000 * dcg_micro) DIV idcg_micro)"
-                " DIV count(*) AS BIGINT)"
-            ).alias("mean_ndcg_micro"),
-        )
-        .orderBy("seg")
     )

@@ -1,25 +1,20 @@
-"""Round-3 extension pack #31: Cohen's kappa agreement, ANN-bucket label
-purity, and the Wald-Wolfowitz runs test — all exact integer contracts.
+"""Round-3 extension pack #31: ANN-bucket label purity and the
+Wald-Wolfowitz runs test — exact integer contracts.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. The patterns are public
-knowledge — Cohen's kappa (1960) for chance-corrected agreement, cluster
-purity for unsupervised bucket quality, and the Wald-Wolfowitz runs test
-(1940) for sequence randomness — re-expressed on the public PySpark
-DataFrame API over the driver's testdata.
+knowledge — cluster purity for unsupervised bucket quality and the
+Wald-Wolfowitz runs test (1940) for sequence randomness — re-expressed
+on the public PySpark DataFrame API over the driver's testdata.
 
-Hash-parity discipline (round-3 standard): kappa folds as ONE integer
-division of exact confusion moments (κ = (N·tr − Σrᵢcᵢ)/(N² − Σrᵢcᵢ));
-purity is floor-micro of exact bucket counts; the runs z² is the exact
-rational ((R−1)n − 2n₁n₂)²·(n−1) / (2n₁n₂(2n₁n₂−n)) in micro units with
-the sign shipped separately. Integer division truncates toward zero
-IDENTICALLY on both engines (verified: -5 DIV 2 = -2 = -5 // 2), so the
-possibly-negative kappa numerator is safe.
+Hash-parity discipline (round-3 standard): purity is floor-micro of
+exact bucket counts; the runs z² is the exact rational
+((R−1)n − 2n₁n₂)²·(n−1) / (2n₁n₂(2n₁n₂−n)) in micro units with the sign
+shipped separately.
 
-Scale posture (SURVEY.md §7.6): kappa reuses the langid scan (one narrow
-projection) plus a 25-cell confusion groupBy; purity reuses the shared
-SRP pipeline plus two bounded bucket groupBys; the runs test runs on the
-bounded daily aggregate (~2500 rows on this corpus' order-date span).
+Scale posture (SURVEY.md §7.6): purity reuses the shared SRP pipeline
+plus two bounded bucket groupBys; the runs test runs on the bounded
+daily aggregate (~2500 rows on this corpus' order-date span).
 """
 
 from __future__ import annotations
@@ -32,115 +27,9 @@ from classification_problem_with_pyspark_spark.operators.extended24 import (
     SRP_SIG_SQL,
     srp_signatures,
 )
-from classification_problem_with_pyspark_spark.operators.llm import (
-    LANG_PROFILES,
-    _LANGID_CASE_SQL,
-    _langid_score_sql,
-)
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_shift
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
-
-
-@register(
-    "ml_cohen_kappa",
-    oracle=f"""
-    WITH scored AS (
-        SELECT lang AS tagged,
-               {", ".join(f"{_langid_score_sql(p)} AS s_{l}" for l, p in sorted(LANG_PROFILES.items()))}
-        FROM documents
-    ),
-    conf AS (
-        SELECT tagged, {_LANGID_CASE_SQL} AS predicted,
-               CAST(count(*) AS BIGINT) AS cnt
-        FROM scored GROUP BY tagged, predicted
-    ),
-    tot AS (
-        SELECT CAST(SUM(cnt) AS BIGINT) AS n,
-               CAST(SUM(CASE WHEN tagged = predicted THEN cnt ELSE 0 END)
-                    AS BIGINT) AS trace
-        FROM conf
-    ),
-    rc AS (
-        SELECT CAST(SUM(r.row_tot * c.col_tot) AS BIGINT) AS sum_rc
-        FROM (SELECT tagged AS k, CAST(SUM(cnt) AS BIGINT) AS row_tot
-              FROM conf GROUP BY tagged) r
-        JOIN (SELECT predicted AS k, CAST(SUM(cnt) AS BIGINT) AS col_tot
-              FROM conf GROUP BY predicted) c USING (k)
-    )
-    SELECT n AS n_docs, trace AS n_agree,
-           CAST((1000000 * trace) // n AS BIGINT) AS accuracy_micro,
-           sum_rc,
-           CAST((1000000 * (n * trace - sum_rc)) // (n * n - sum_rc)
-                AS BIGINT) AS kappa_micro
-    FROM tot, rc
-    """,
-)
-def ml_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa between the n-gram language-ID heuristic and the
-    corpus' tagged language (SURVEY.md §2.11): chance-corrected
-    agreement κ = (p_o − p_e)/(1 − p_e) folded over exact confusion
-    moments as (N·trace − Σrᵢcᵢ)/(N² − Σrᵢcᵢ) — the honest way to
-    report classifier agreement when classes are imbalanced (accuracy
-    alone flatters the majority-class guesser). Reuses `llm_langid`'s
-    scoring contract, so the two keys are mutually pinning.
-
-    Exactness: confusion cells, margins, trace are exact BIGINTs; κ is
-    one integer division in micro units (truncation toward zero matches
-    across engines even for negative κ — verified).
-
-    Scale: the langid scan is one narrow projection; everything after
-    runs on the ≤25-cell confusion table.
-    """
-    d = load(spark, sf_dir, "documents")
-
-    def score(pats):
-        t = F.col("text")
-        return sum(
-            (F.length(t) - F.length(F.replace(t, F.lit(p), F.lit(""))))
-            for p in pats
-        )
-
-    scored = d.select(
-        F.col("lang").alias("tagged"),
-        *[score(p).alias(f"s_{l}") for l, p in sorted(LANG_PROFILES.items())],
-    )
-    langs = sorted(LANG_PROFILES)
-    expr = None
-    for lang in langs[:-1]:
-        cond = None
-        for other in langs:
-            if other > lang:
-                c = F.col(f"s_{lang}") >= F.col(f"s_{other}")
-                cond = c if cond is None else (cond & c)
-        expr = F.when(cond, lang) if expr is None else expr.when(cond, lang)
-    pred = expr.otherwise(F.lit(langs[-1]))
-    conf = scored.select("tagged", pred.alias("predicted")).groupBy(
-        "tagged", "predicted"
-    ).agg(F.count("*").alias("cnt"))
-    rows = conf.groupBy("tagged").agg(F.sum("cnt").alias("row_tot"))
-    cols = conf.groupBy("predicted").agg(F.sum("cnt").alias("col_tot"))
-    rc = (
-        rows.join(cols, rows.tagged == cols.predicted)
-        .agg(F.sum(F.col("row_tot") * F.col("col_tot")).alias("sum_rc"))
-    )
-    tr = conf.agg(
-        F.sum("cnt").alias("n"),
-        F.sum(F.when(F.col("tagged") == F.col("predicted"), F.col("cnt")).otherwise(0)).alias(
-            "trace"
-        ),
-    )
-    return tr.crossJoin(F.broadcast(rc)).select(
-        F.col("n").cast("long").alias("n_docs"),
-        F.col("trace").cast("long").alias("n_agree"),
-        F.expr("CAST((1000000 * trace) DIV n AS BIGINT)").alias(
-            "accuracy_micro"
-        ),
-        F.col("sum_rc").cast("long").alias("sum_rc"),
-        F.expr(
-            "(1000000 * (n * trace - sum_rc)) DIV (n * n - sum_rc)"
-        ).alias("kappa_micro"),
-    )
 
 
 @register(

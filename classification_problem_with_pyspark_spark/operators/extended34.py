@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.functions.hashing import md5_long
-from classification_problem_with_pyspark_spark.operators.extended27 import (
+from classification_problem_with_pyspark_spark.operators.ml_metrics import (
     _SCORED_SQL,
     _scored,
 )
@@ -183,7 +183,7 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score-stratified average treatment effect (SURVEY.md §2.13): a
     hash-random "treatment" is compared against control WITHIN each
-    early-activity score stratum (the pack-27 propensity cohort), and
+    early-activity score stratum (the `ml_metrics._scored` propensity cohort), and
     the per-stratum conversion-rate differences combine size-weighted
     into the ATE — the stratification estimator of causal inference,
     with the common-support restriction applied honestly (strata

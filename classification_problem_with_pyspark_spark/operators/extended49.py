@@ -1,29 +1,23 @@
-"""Round-3 extension pack #49: cross-source n-gram overlap matrix and
-the feature-hashing collision audit.
+"""Round-3 extension pack #49: cross-source n-gram overlap matrix.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — the corpus-forensics overlap matrix (pairwise shared-shingle
 counts between sources; the diagnostic behind "is source B a scrape of
-source A?", same digest machinery as Lee et al.'s dedup work) and the
-hashing trick's collision accounting (Weinberger et al., "Feature
-hashing for large scale multitask learning", ICML 2009: project a
-unbounded vocabulary into 2^b buckets and measure what collides) —
+source A?", same digest machinery as Lee et al.'s dedup work) —
 re-expressed on the public PySpark DataFrame API over the driver's
 testdata.
 
 Hash-parity discipline (round-3 standard): shingles are word 5-grams
-digested with md5 (the registry's portable-hash idiom), overlap counts
-are DISTINCT-set cardinalities (set algebra, no sampling), and the
-collision audit's bucket assignment is md5 % 2^b — every number is an
-exact integer on both engines.
+digested with md5 (the registry's portable-hash idiom), and overlap
+counts are DISTINCT-set cardinalities (set algebra, no sampling) —
+every number is an exact integer on both engines.
 
 Scale posture (SURVEY.md §7.6): the overlap matrix joins per-source
 DISTINCT digest sets on the digest (hash join, never a substring
-scan); the collision audit is two aggregations (by bucket, then
-global) — both map-side combinable. At 100 TB the digest sets are the
-expensive part and they are exactly the artifact the dedup family
-already materializes once and shares.
+scan). At 100 TB the digest sets are the expensive part and they are
+exactly the artifact the dedup family already materializes once and
+shares.
 """
 
 from __future__ import annotations
@@ -31,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
@@ -94,7 +87,6 @@ def _overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("sa", "sb")
         .agg(F.count("*").alias("cnt"))
     )
-HASH_BITS = 10  # feature-hashing buckets = 2^10 = 1024
 
 
 @register(
@@ -185,84 +177,4 @@ def llm_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .orderBy("source_a", "source_b")
-    )
-
-
-@register(
-    "ml_feature_hash_collision_audit",
-    oracle=f"""
-    WITH toks AS (
-        SELECT DISTINCT unnest(string_split(text, ' ')) AS tok
-        FROM documents
-    ),
-    hashed AS (
-        SELECT tok,
-               CAST(('0x' || substr(md5('fh_' || tok), 1, 15)) AS BIGINT)
-                   % {1 << HASH_BITS} AS bucket
-        FROM toks WHERE tok <> ''
-    ),
-    per_bucket AS (
-        SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_toks
-        FROM hashed GROUP BY bucket
-    )
-    SELECT CAST({1 << HASH_BITS} AS BIGINT) AS n_buckets,
-           CAST(COUNT(*) AS BIGINT) AS n_used,
-           CAST(SUM(n_toks) AS BIGINT) AS vocab_size,
-           CAST(SUM(CASE WHEN n_toks > 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_colliding_buckets,
-           CAST(SUM(CASE WHEN n_toks > 1 THEN n_toks ELSE 0 END) AS BIGINT)
-               AS n_colliding_tokens,
-           CAST(MAX(n_toks) AS BIGINT) AS max_bucket_load,
-           CAST((1000000 * SUM(CASE WHEN n_toks > 1 THEN n_toks ELSE 0 END))
-                // SUM(n_toks) AS BIGINT) AS collision_mass_micro
-    FROM per_bucket
-    """,
-)
-def ml_feature_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature-hashing collision audit (SURVEY.md §2.6): project the
-    corpus vocabulary into 2^HASH_BITS buckets with a portable hash
-    (the Weinberger et al. hashing trick every large-scale linear
-    model and CountVectorizer-free pipeline uses) and report the
-    collision census — buckets used, buckets with >1 token, tokens
-    sharing a bucket, worst bucket load, and the share of vocabulary
-    mass that collides. The sizing query you run BEFORE choosing b:
-    too few bits silently merges features, and nothing downstream
-    will tell you.
-
-    Exactness: distinct whitespace tokens, md5 % 2^b assignment,
-    integer counts, floor-micro mass share.
-
-    Scale: vocabulary extraction is one explode+distinct; the census
-    is two map-side-combinable aggregations (by bucket, then one
-    global row). The bucket table itself never materializes beyond
-    2^b rows — this is the audit that stays cheap no matter how big
-    the corpus, because it runs on the VOCABULARY, not the tokens.
-    """
-    d = load(spark, sf_dir, "documents")
-    toks = (
-        d.select(F.explode(F.split("text", " ")).alias("tok"))
-        .where(F.col("tok") != "")
-        .distinct()
-    )
-    bucket = md5_long(F.concat(F.lit("fh_"), F.col("tok"))) % (1 << HASH_BITS)
-    per_bucket = (
-        toks.select(bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n_toks"))
-    )
-    return per_bucket.agg(
-        F.lit(1 << HASH_BITS).cast("long").alias("n_buckets"),
-        F.count("*").alias("n_used"),
-        F.sum("n_toks").cast("long").alias("vocab_size"),
-        F.sum(F.when(F.col("n_toks") > 1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_colliding_buckets"),
-        F.sum(F.when(F.col("n_toks") > 1, F.col("n_toks")).otherwise(0))
-        .cast("long")
-        .alias("n_colliding_tokens"),
-        F.max("n_toks").cast("long").alias("max_bucket_load"),
-        F.expr(
-            "CAST((1000000 * SUM(CASE WHEN n_toks > 1 THEN n_toks ELSE 0 END)) "
-            "DIV SUM(n_toks) AS BIGINT)"
-        ).alias("collision_mass_micro"),
     )

@@ -1,28 +1,21 @@
-"""Round-3 extension pack #51: largest-remainder allocation join and
-leave-one-out target encoding.
+"""Round-3 extension pack #51: largest-remainder allocation join.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — largest-remainder (Hamilton) apportionment, the standard
 answer to "split this integer amount across n lines proportionally and
-EXACTLY" (invoice allocation, seat apportionment, cost spreading), and
-leave-one-out target encoding (the category→mean-response feature with
-the self-exclusion that prevents target leakage; Micci-Barreca, SIGKDD
-Expl. 2001) — re-expressed on the public PySpark DataFrame API over the
-driver's testdata.
+EXACTLY" (invoice allocation, seat apportionment, cost spreading) —
+re-expressed on the public PySpark DataFrame API over the driver's
+testdata.
 
 Hash-parity discipline (round-3 standard): apportionment is pure
 integer arithmetic (floor shares + remainder ranks under a
 (remainder DESC, linenumber) total order — conservation is exact by
-construction and asserted in tests); the LOO encoding folds floor-micro
-integer division with the n=1 fallback rule pinned identically in both
-engines.
+construction and asserted in tests).
 
-Scale posture (SURVEY.md §7.6): allocation is one window pass inside
-the natural (orderkey) partitioning — no join at all, the "bridge
-table" is the lineitem itself; target encoding is one category
-aggregate broadcast back over the fact (two shuffles, both on keys the
-fact already clusters by). Both are scan-dominated at 100 TB.
+Scale posture (SURVEY.md §7.6): one window pass inside the natural
+(orderkey) partitioning — no join at all, the "bridge table" is the
+lineitem itself.
 """
 
 from __future__ import annotations
@@ -136,88 +129,3 @@ def join_largest_remainder_allocation(spark: SparkSession, sf_dir: str) -> DataF
         .cast("long")
         .alias("alloc_cents"),
     ).orderBy("orderkey", "linenumber")
-
-
-@register(
-    "ml_target_encoding_loo",
-    oracle="""
-    WITH fact AS (
-        SELECT l_orderkey AS k, l_linenumber AS ln, l_partkey AS cat,
-               CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
-        FROM lineitem
-    ),
-    per_cat AS (
-        SELECT cat, CAST(COUNT(*) AS BIGINT) AS n_cat,
-               CAST(SUM(y) AS BIGINT) AS s_cat
-        FROM fact GROUP BY cat
-    ),
-    gtot AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_all,
-               CAST(SUM(y) AS BIGINT) AS s_all
-        FROM fact
-    )
-    SELECT f.k AS orderkey, CAST(f.ln AS BIGINT) AS linenumber,
-           f.cat AS partkey, CAST(f.y AS BIGINT) AS y,
-           CASE WHEN c.n_cat > 1
-                THEN CAST((1000000 * (c.s_cat - f.y)) // (c.n_cat - 1)
-                          AS BIGINT)
-                ELSE CAST((1000000 * (g.s_all - f.y)) // (g.n_all - 1)
-                          AS BIGINT)
-           END AS te_micro
-    FROM fact f
-    JOIN per_cat c ON c.cat = f.cat
-    CROSS JOIN gtot g
-    ORDER BY orderkey, linenumber
-    """,
-)
-def ml_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leave-one-out target encoding (SURVEY.md §2.11): replace the
-    high-cardinality part key with the return rate of the OTHER rows
-    in its category — (Σy − yᵢ)/(n − 1) in floor-micro — the
-    Micci-Barreca categorical feature with the self-exclusion that
-    keeps the row's own label out of its own feature (the leakage
-    every naive category-mean encoding commits; KFold/LOO exclusion
-    is the fix every gradient-boosting pipeline ships). Singleton
-    categories fall back to the LOO GLOBAL prior — the fallback rule
-    is part of the contract, pinned identically in both engines.
-
-    Exactness: y is 0/1, the encoding is one integer floor division;
-    the self-exclusion algebra (subtract before divide) is exact.
-
-    Scale: one category aggregate (map-side combinable) hash-joined
-    back on the category key + one broadcast scalar — the fact is
-    read once; no per-fold re-aggregation is needed because LOO folds
-    algebraically out of the category sums. This is why LOO beats
-    KFold encoding at 100 TB: the "fold" is a subtraction.
-    """
-    fact = load(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("orderkey"),
-        F.col("l_linenumber").cast("long").alias("linenumber"),
-        F.col("l_partkey").alias("partkey"),
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).cast("long").alias("y"),
-    )
-    per_cat = fact.groupBy("partkey").agg(
-        F.count("*").alias("n_cat"), F.sum("y").alias("s_cat")
-    )
-    glob = fact.agg(
-        F.count("*").alias("n_all"), F.sum("y").alias("s_all")
-    )
-    return (
-        fact.join(per_cat, "partkey")
-        .crossJoin(F.broadcast(glob))
-        .select(
-            "orderkey",
-            "linenumber",
-            "partkey",
-            "y",
-            F.when(
-                F.col("n_cat") > 1,
-                F.expr("CAST((1000000 * (s_cat - y)) DIV (n_cat - 1) AS BIGINT)"),
-            )
-            .otherwise(
-                F.expr("CAST((1000000 * (s_all - y)) DIV (n_all - 1) AS BIGINT)")
-            )
-            .alias("te_micro"),
-        )
-        .orderBy("orderkey", "linenumber")
-    )

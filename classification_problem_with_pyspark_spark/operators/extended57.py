@@ -1,28 +1,21 @@
-"""Round-3 extension pack #57: relational division and Youden-J
-operating-point selection.
+"""Round-3 extension pack #57: relational division.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — relational division (Codd's eighth operator: "the X related
 to ALL members of set S", the for-all quantifier SQL famously lacks a
 keyword for, classically rewritten as double-NOT-EXISTS or
-count-matching) and Youden's J statistic (J = TPR − FPR; its argmax is
-the standard informedness-optimal threshold choice on a ROC curve,
-Youden 1950) — re-expressed on the public PySpark DataFrame API over
+count-matching) — re-expressed on the public PySpark DataFrame API over
 the driver's testdata.
 
 Hash-parity discipline (round-3 standard): division uses the
 count-matching rewrite (|distinct priorities of the customer| =
 |priority domain| — pure set cardinalities, no quantifier semantics to
-drift); Youden reuses extended27's driver-verified scored cohort and
-picks the argmax over exact floor-micro J with the (J DESC, threshold
-ASC) total tie order.
+drift).
 
 Scale posture (SURVEY.md §7.6): count-matching division is one
 distinct-aggregate + one broadcast scalar compare — the rewrite that
-scales (double-NOT-EXISTS nests two correlated anti-joins); the Youden
-pick is one window over the distinct-score grid, bounded by the score
-range, not the data.
+scales (double-NOT-EXISTS nests two correlated anti-joins).
 """
 
 from __future__ import annotations
@@ -30,11 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.extended27 import (
-    _SCORED_SQL,
-    _scored,
-)
-from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -100,83 +88,3 @@ def subquery_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("custkey", "n_orders", "cents")
         .orderBy("custkey")
     )
-
-
-@register(
-    "ml_threshold_youden",
-    oracle=f"""
-    WITH {_SCORED_SQL},
-    tot AS (
-        SELECT CAST(SUM(label) AS BIGINT) AS pos,
-               CAST(SUM(1 - label) AS BIGINT) AS neg
-        FROM scored
-    ),
-    grid AS (
-        SELECT score, CAST(SUM(label) AS BIGINT) AS p,
-               CAST(SUM(1 - label) AS BIGINT) AS n
-        FROM scored GROUP BY score
-    ),
-    cum AS (
-        SELECT score,
-               SUM(p) OVER (ORDER BY score DESC
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS tp,
-               SUM(n) OVER (ORDER BY score DESC
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS fp
-        FROM grid
-    ),
-    j AS (
-        SELECT score AS threshold,
-               CAST((1000000 * tp) // pos AS BIGINT) AS tpr_micro,
-               CAST((1000000 * fp) // neg AS BIGINT) AS fpr_micro,
-               CAST((1000000 * tp) // pos - (1000000 * fp) // neg
-                    AS BIGINT) AS youden_j_micro
-        FROM cum, tot
-    )
-    SELECT threshold, tpr_micro, fpr_micro, youden_j_micro
-    FROM j
-    ORDER BY youden_j_micro DESC, threshold
-    LIMIT 1
-    """,
-)
-def ml_threshold_youden(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Youden-J operating point (SURVEY.md §2.11): the single threshold
-    maximizing J = TPR − FPR on the scored cohort — the informedness-
-    optimal cut every deployed binary classifier needs chosen AFTER
-    `ml_roc_curve_threshold` draws the curve. One row out: the chosen
-    threshold and its TPR/FPR/J. Reuses extended27's driver-verified
-    scored cohort and cumulative grid verbatim, so the two keys can
-    never disagree about the curve they share; the argmax tie order
-    is (J DESC, threshold ASC) — at equal J prefer the lower
-    threshold (higher recall), stated as the contract.
-
-    Exactness: J folds two floor-micro divisions; the pick is a total
-    order.
-
-    Scale: the grid is bounded by the score RANGE (distinct integer
-    scores), not the row count — the argmax is a 1-row LIMIT over a
-    tiny relation; everything fact-sized happened in the cohort
-    build, which is two map-side-combinable aggregations.
-    """
-    scored = _scored(spark, sf_dir)
-    tot = scored.agg(
-        F.sum("label").cast("long").alias("pos"),
-        F.sum(1 - F.col("label")).cast("long").alias("neg"),
-    )
-    grid = scored.groupBy("score").agg(
-        F.sum("label").cast("long").alias("p"),
-        F.sum(1 - F.col("label")).cast("long").alias("n"),
-    )
-    cum = grid_cumsum(
-        grid, [F.desc("score")], [("tp", "p"), ("fp", "n")], keep=["score"]
-    )
-    j = cum.crossJoin(F.broadcast(tot)).select(
-        F.col("score").alias("threshold"),
-        F.expr("CAST((1000000 * tp) DIV pos AS BIGINT)").alias("tpr_micro"),
-        F.expr("CAST((1000000 * fp) DIV neg AS BIGINT)").alias("fpr_micro"),
-        F.expr(
-            "CAST((1000000 * tp) DIV pos - (1000000 * fp) DIV neg AS BIGINT)"
-        ).alias("youden_j_micro"),
-    )
-    return j.orderBy(F.desc("youden_j_micro"), "threshold").limit(1)

@@ -1208,78 +1208,6 @@ def emb_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "ml_knn_accuracy_exact",
-    oracle="""
-    WITH pairs AS (
-        SELECT a.vec_id AS qid, a.label AS true_label, b.label AS nbr_label,
-               ROUND(list_cosine_similarity(
-                   list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-                   list_transform(b.embedding, x -> CAST(x AS DOUBLE))), 6) AS sim,
-               b.vec_id AS nid
-        FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-    ), knn AS (
-        SELECT qid, true_label, nbr_label
-        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-                                           ORDER BY sim DESC, nid) AS rk
-              FROM pairs) r
-        WHERE rk <= 5
-    ), votes AS (
-        SELECT qid, true_label, nbr_label AS pred_label, COUNT(*) AS n_votes
-        FROM knn GROUP BY qid, true_label, nbr_label
-    ), decided AS (
-        SELECT qid, true_label, pred_label
-        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-                                           ORDER BY n_votes DESC, pred_label) AS vr
-              FROM votes) v
-        WHERE vr = 1
-    )
-    SELECT true_label, pred_label, COUNT(*) AS n_vectors
-    FROM decided GROUP BY true_label, pred_label
-    """,
-)
-def ml_knn_accuracy_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 5-NN majority-vote classifier confusion matrix over the
-    embedding corpus — the hash-checkable ML evaluation (MLlib fits are
-    rows-only by nature; this eval is pure deterministic arithmetic, so
-    the driver pins it exactly). Votes tie-break to the smaller label;
-    neighbor ranking ties break on vec_id — total orders everywhere.
-
-    Round-5 rewrite: the neighbor lists come from the REGISTERED
-    ``llm_similarity_topk`` kernel (Arrow/numpy blocked matmul — same
-    round-6 sims, same (sim DESC, nid) rank, k=5, self excluded by id),
-    so the eval and the ANN ground-truth baseline cannot drift apart
-    and the 4× slower JVM-HOF cross join this key used to duplicate is
-    gone (that form remains measured under llm_similarity_topk_hof).
-    Label joins + vote/confusion are bounded aggregations; AQE picks
-    the label-join strategy (corpus-sized at 100 TB — no forced
-    broadcast).
-    """
-    from classification_problem_with_pyspark_spark.operators.llm import (
-        llm_similarity_topk,
-    )
-
-    lab = load(spark, sf_dir, "embeddings").select("vec_id", "label")
-    knn = llm_similarity_topk(spark, sf_dir)
-    votes = (
-        knn.join(
-            lab.select(F.col("vec_id").alias("qid"), F.col("label").alias("true_label")),
-            "qid",
-        )
-        .join(
-            lab.select(F.col("vec_id").alias("nid"), F.col("label").alias("nbr_label")),
-            "nid",
-        )
-        .groupBy("qid", "true_label", F.col("nbr_label").alias("pred_label"))
-        .agg(F.count("*").alias("n_votes"))
-    )
-    wv = Window.partitionBy("qid").orderBy(F.desc("n_votes"), F.asc("pred_label"))
-    decided = votes.withColumn("vr", F.row_number().over(wv)).where(F.col("vr") == 1)
-    return decided.groupBy("true_label", "pred_label").agg(
-        F.count("*").alias("n_vectors")
-    )
-
-
-@register(
     "window_rolling_median",
     oracle="""
     WITH daily AS (

@@ -1,26 +1,19 @@
-"""Round-3 extension pack #62: locale-format CSV ingestion and
-cost-sensitive threshold selection.
+"""Round-3 extension pack #62: locale-format CSV ingestion.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — European-locale CSV (semicolon separator, decimal comma,
 thousands dot: the Excel-export dialect half the world's finance teams
-ship, which no schema inference parses as numbers) and cost-sensitive
-threshold choice (pick the operating point minimizing expected cost
-under an asymmetric FP/FN cost matrix — Elkan, "The foundations of
-cost-sensitive learning", IJCAI 2001) — re-expressed on the public
-PySpark DataFrame API over the driver's testdata.
+ship, which no schema inference parses as numbers) — re-expressed on
+the public PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): the staged CSV is a
 deterministic locale render of supplier balances (sign, thousands
 dots, decimal comma); the parse normalizes text→cents with pure
-string ops so money is exact integers the moment it enters the plan;
-the cost scan reuses extended27's driver-verified scored grid, costs
-are integer literals, and the argmin is a total order.
+string ops so money is exact integers the moment it enters the plan.
 
 Scale posture (SURVEY.md §7.6): locale parsing is per-row string
-codegen on a one-pass scan (never a Python UDF); the cost scan is a
-window over the distinct-score grid. Both scan-shaped.
+codegen on a one-pass scan (never a Python UDF).
 """
 
 from __future__ import annotations
@@ -30,16 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.extended27 import (
-    _SCORED_SQL,
-    _scored,
-)
-from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
-
-COST_FP = 1  # cost units per false positive (needless outreach)
-COST_FN = 8  # cost units per false negative (missed conversion)
 
 
 @register(
@@ -108,81 +93,3 @@ def source_csv_locale_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("supp_key")
     )
-
-
-@register(
-    "ml_cost_sensitive_threshold",
-    oracle=f"""
-    WITH {_SCORED_SQL},
-    tot AS (
-        SELECT CAST(SUM(label) AS BIGINT) AS pos,
-               CAST(SUM(1 - label) AS BIGINT) AS neg
-        FROM scored
-    ),
-    grid AS (
-        SELECT score, CAST(SUM(label) AS BIGINT) AS p,
-               CAST(SUM(1 - label) AS BIGINT) AS n
-        FROM scored GROUP BY score
-    ),
-    cum AS (
-        SELECT score,
-               SUM(p) OVER (ORDER BY score DESC
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS tp,
-               SUM(n) OVER (ORDER BY score DESC
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS fp
-        FROM grid
-    ),
-    costs AS (
-        SELECT score AS threshold,
-               CAST(fp AS BIGINT) AS fp,
-               CAST(pos - tp AS BIGINT) AS fn,
-               CAST({COST_FP} * fp + {COST_FN} * (pos - tp) AS BIGINT)
-                   AS expected_cost
-        FROM cum, tot
-    )
-    SELECT threshold, fp, fn, expected_cost
-    FROM costs
-    ORDER BY expected_cost, threshold
-    LIMIT 1
-    """,
-)
-def ml_cost_sensitive_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cost-sensitive threshold (SURVEY.md §2.11): the operating point
-    minimizing total expected cost under an asymmetric cost matrix
-    (COST_FP per needless outreach, COST_FN per missed conversion —
-    Elkan 2001) over extended27's driver-verified scored grid. The
-    third member of the operating-point family: `ml_roc_curve_threshold`
-    draws the curve, `ml_threshold_youden` optimizes statistics, this
-    key optimizes MONEY — and with FN costing 8× FP it provably picks
-    a more permissive threshold than Youden (asserted in tests), which
-    is the entire argument for making costs explicit.
-
-    Exactness: integer error counts × integer literal costs; the
-    argmin tie order is (cost, threshold ASC).
-
-    Scale: identical to the ROC key — the cost scan is a window over
-    the distinct-score grid, bounded by the score range.
-    """
-    scored = _scored(spark, sf_dir)
-    tot = scored.agg(
-        F.sum("label").cast("long").alias("pos"),
-        F.sum(1 - F.col("label")).cast("long").alias("neg"),
-    )
-    grid = scored.groupBy("score").agg(
-        F.sum("label").cast("long").alias("p"),
-        F.sum(1 - F.col("label")).cast("long").alias("n"),
-    )
-    cum = grid_cumsum(
-        grid, [F.desc("score")], [("tp", "p"), ("fp", "n")], keep=["score"]
-    )
-    costs = cum.crossJoin(F.broadcast(tot)).select(
-        F.col("score").alias("threshold"),
-        F.col("fp").cast("long").alias("fp"),
-        (F.col("pos") - F.col("tp")).cast("long").alias("fn"),
-        (COST_FP * F.col("fp") + COST_FN * (F.col("pos") - F.col("tp")))
-        .cast("long")
-        .alias("expected_cost"),
-    )
-    return costs.orderBy("expected_cost", "threshold").limit(1)

@@ -1,28 +1,19 @@
-"""Round-3 extension pack #69: role-playing calendar dimension and the
-Matthews correlation coefficient.
+"""Round-3 extension pack #69: role-playing calendar dimension.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — the role-playing date dimension (Kimball: ONE conformed
 calendar joined under multiple roles — order date, ship date — so both
-roles share attribute definitions by construction) and the Matthews
-correlation coefficient (MCC = (TP·TN − FP·FN)/√((TP+FP)(TP+FN)(TN+FP)
-(TN+FN)), Matthews 1975 — the single-number binary metric that stays
-honest under class imbalance where accuracy and F1 both flatter) —
-re-expressed on the public PySpark DataFrame API over the driver's
-testdata.
+roles share attribute definitions by construction) — re-expressed on
+the public PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): the calendar dim derives
 from the dates PRESENT in the fact (no generated spine state), with
-integer/boolean attributes only; MCC's confusion counts reuse the
-pack-44 deterministic stand-in predictor (binary collapse label < 5),
-and the closing formula is one double expression over four exact
-integers, ROUND(·,6) — the t-test discipline.
+integer/boolean attributes only.
 
 Scale posture (SURVEY.md §7.6): the calendar dim is calendar-bounded
 and broadcast into BOTH role joins (the whole point of role-playing:
-one tiny conformed table, many cheap joins); MCC is four conditional
-counts — one map-side-combinable pass.
+one tiny conformed table, many cheap joins).
 """
 
 from __future__ import annotations
@@ -30,11 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
-
-MCC_FLIP_MOD = 4  # the stand-in predictor flips every 4th row
 
 
 @register(
@@ -125,95 +113,4 @@ def join_role_playing_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").cast("long").alias("cents"),
         )
         .orderBy("order_dow", "shipped_weekend")
-    )
-
-
-@register(
-    "ml_mcc_exact",
-    oracle=f"""
-    WITH scored AS (
-        SELECT CASE WHEN label < 5 THEN 1 ELSE 0 END AS y,
-               CASE WHEN CAST(('0x' || substr(md5('mcc_' || CAST(vec_id AS VARCHAR)), 1, 15))
-                         AS BIGINT) % {MCC_FLIP_MOD} = 0
-                    THEN 1 - CASE WHEN label < 5 THEN 1 ELSE 0 END
-                    ELSE CASE WHEN label < 5 THEN 1 ELSE 0 END END AS yhat
-        FROM embeddings
-    ),
-    cm AS (
-        SELECT CAST(SUM(CASE WHEN y = 1 AND yhat = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-               CAST(SUM(CASE WHEN y = 0 AND yhat = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-               CAST(SUM(CASE WHEN y = 0 AND yhat = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-               CAST(SUM(CASE WHEN y = 1 AND yhat = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fn
-        FROM scored
-    )
-    SELECT tp, tn, fp, fn,
-           CAST((1000000 * (tp + tn)) // (tp + tn + fp + fn) AS BIGINT)
-               AS accuracy_micro,
-           ROUND((CAST(tp AS DOUBLE) * tn - CAST(fp AS DOUBLE) * fn)
-                 / sqrt((CAST(tp AS DOUBLE) + fp) * (CAST(tp AS DOUBLE) + fn)
-                        * (CAST(tn AS DOUBLE) + fp) * (CAST(tn AS DOUBLE) + fn)),
-                 6) AS mcc
-    FROM cm
-    """,
-)
-def ml_mcc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matthews correlation coefficient (SURVEY.md §2.11): the
-    single-number binary metric computed from the full confusion
-    matrix — MCC = (TP·TN − FP·FN)/√((TP+FP)(TP+FN)(TN+FP)(TN+FN)) —
-    which, unlike accuracy and F1, cannot be gamed by predicting the
-    majority class under imbalance (Matthews 1975; Chicco & Jurman's
-    "advantages of MCC" is the modern case). Reported next to
-    accuracy on the SAME confusion counts so the tests can assert the
-    divergence story (MCC strictly below the accuracy impression).
-
-    The predictor is the registry's md5 stand-in (binary collapse
-    label < 5, every {MCC_FLIP_MOD}th row flipped); the four counts
-    are exact integers and the closing formula is one double
-    expression ROUND(·,6) — the t-test discipline.
-
-    Scale: four conditional sums in one map-side-combinable pass;
-    the metric costs nothing, which is the argument for always
-    reporting it.
-    """
-    y = F.when(F.col("label") < 5, 1).otherwise(0)
-    flip = md5_long(F.concat(F.lit("mcc_"), F.col("vec_id").cast("string"))) % MCC_FLIP_MOD == 0
-    yhat = F.when(flip, 1 - y).otherwise(y)
-    scored = load(spark, sf_dir, "embeddings").select(
-        y.alias("y"), yhat.alias("yhat")
-    )
-    cm = scored.agg(
-        F.sum(F.when((F.col("y") == 1) & (F.col("yhat") == 1), 1).otherwise(0))
-        .cast("long")
-        .alias("tp"),
-        F.sum(F.when((F.col("y") == 0) & (F.col("yhat") == 0), 1).otherwise(0))
-        .cast("long")
-        .alias("tn"),
-        F.sum(F.when((F.col("y") == 0) & (F.col("yhat") == 1), 1).otherwise(0))
-        .cast("long")
-        .alias("fp"),
-        F.sum(F.when((F.col("y") == 1) & (F.col("yhat") == 0), 1).otherwise(0))
-        .cast("long")
-        .alias("fn"),
-    )
-    return cm.select(
-        "tp",
-        "tn",
-        "fp",
-        "fn",
-        F.expr(
-            "CAST((1000000 * (tp + tn)) DIV (tp + tn + fp + fn) AS BIGINT)"
-        ).alias("accuracy_micro"),
-        F.round(
-            (
-                F.col("tp").cast("double") * F.col("tn")
-                - F.col("fp").cast("double") * F.col("fn")
-            )
-            / F.sqrt(
-                (F.col("tp").cast("double") + F.col("fp"))
-                * (F.col("tp").cast("double") + F.col("fn"))
-                * (F.col("tn").cast("double") + F.col("fp"))
-                * (F.col("tn").cast("double") + F.col("fn"))
-            ),
-            6,
-        ).alias("mcc"),
     )

@@ -1,25 +1,18 @@
-"""Round-3 extension pack #72: odds/risk ratios and OLS slope
-inference.
+"""Round-3 extension pack #72: odds and risk ratios.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — the 2×2 contingency odds ratio and risk ratio (the
 epidemiology association pair: RR is what people mean, OR is what
-case-control designs can estimate) and classical OLS slope inference
-(SE(β̂) = √(MSE/Sxx), the t statistic and normal-approximation CI —
-the inference layer of every regression printout) — re-expressed on
-the public PySpark DataFrame API over the driver's testdata.
+case-control designs can estimate) — re-expressed on the public
+PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): the 2×2 cells are exact
 integer counts and both ratios fold ONE floor-micro division of
-integer cross-products; OLS inference reuses the same exact DECIMAL
-moment sums as `agg_ols_closed_form` (deliberately the same cohort, so
-the point estimate and its inference always travel together), with
-the closing SE/t/CI expressions as identical ROUND-6 doubles.
+integer cross-products.
 
 Scale posture (SURVEY.md §7.6): the 2×2 table is four conditional
-sums in one pass; OLS inference adds zero passes over the moments the
-point-estimate key already aggregates.
+sums in one pass.
 """
 
 from __future__ import annotations
@@ -31,7 +24,6 @@ from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
 EXPOSURE_GATE = 50  # "exposed": weekend events; "outcome": value > 50
-Z95 = 1.959964  # normal 95% critical value (shared literal)
 
 
 @register(
@@ -110,116 +102,3 @@ def agg_odds_risk_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AS BIGINT)"
         ).alias("risk_diff_micro"),
     )
-
-
-@register(
-    "ml_ols_inference",
-    oracle=f"""
-    WITH m AS (
-        SELECT l_returnflag,
-               COUNT(*) AS n,
-               SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sx,
-               SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS sy,
-               SUM(CAST(l_quantity AS DECIMAL(18,2))
-                   * CAST(l_quantity AS DECIMAL(18,2))) AS sxx,
-               SUM(CAST(l_quantity AS DECIMAL(18,2))
-                   * CAST(l_extendedprice AS DECIMAL(18,2))) AS sxy,
-               SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                   * CAST(l_extendedprice AS DECIMAL(18,2))) AS syy
-        FROM lineitem GROUP BY l_returnflag
-    ),
-    terms AS (
-        SELECT l_returnflag, n,
-               CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                   - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS nsxx,
-               CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS nsxy,
-               CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                   - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS nsyy
-        FROM m
-    )
-    SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-           ROUND(nsxy / nsxx, 6) AS slope,
-           ROUND(sqrt((nsyy - nsxy * nsxy / nsxx) / (n - 2) / nsxx), 6)
-               AS slope_se,
-           ROUND((nsxy / nsxx)
-                 / sqrt((nsyy - nsxy * nsxy / nsxx) / (n - 2) / nsxx), 6)
-               AS t_stat,
-           ROUND(nsxy / nsxx - {Z95}
-                 * sqrt((nsyy - nsxy * nsxy / nsxx) / (n - 2) / nsxx), 6)
-               AS ci_lo,
-           ROUND(nsxy / nsxx + {Z95}
-                 * sqrt((nsyy - nsxy * nsxy / nsxx) / (n - 2) / nsxx), 6)
-               AS ci_hi
-    FROM terms
-    ORDER BY l_returnflag
-    """,
-)
-def ml_ols_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OLS slope inference (SURVEY.md §2.11): the standard error,
-    t statistic, and 95% CI of the quantity→price slope — the
-    inference layer that turns `agg_ols_closed_form`'s point estimate
-    into a decision (same cohort, same exact DECIMAL moments,
-    deliberately: an estimate and its uncertainty must never be
-    computed from different scans). SE(β̂)² = MSE/Sxx folds into the
-    n-scaled moment terms as (nSyy − (nSxy)²/nSxx)/(n−2)/nSxx — the
-    n factors cancel between SSE/n and Sxx/n, so no per-row residual
-    pass is needed (the first draft kept a stray ·n and inflated SE
-    by √n; the replay test caught it).
-
-    Exactness: DECIMAL moment sums engine-side; the closing
-    expressions are identical ROUND-6 doubles; the z critical value
-    is a shared literal (n ≫ 30, the normal approximation is the
-    stated convention).
-
-    Scale: zero additional passes — inference is pure arithmetic on
-    the moments the estimate already aggregated. That is the entire
-    argument for closed-form regression at 100 TB.
-    """
-    _D = "DECIMAL(18,2)"
-    li = load(spark, sf_dir, "lineitem")
-    m = li.groupBy("l_returnflag").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("l_quantity").cast(_D)).alias("sx"),
-        F.sum(F.col("l_extendedprice").cast(_D)).alias("sy"),
-        F.sum(F.col("l_quantity").cast(_D) * F.col("l_quantity").cast(_D)).alias(
-            "sxx"
-        ),
-        F.sum(
-            F.col("l_quantity").cast(_D) * F.col("l_extendedprice").cast(_D)
-        ).alias("sxy"),
-        F.sum(
-            F.col("l_extendedprice").cast(_D) * F.col("l_extendedprice").cast(_D)
-        ).alias("syy"),
-    )
-    terms = m.select(
-        "l_returnflag",
-        "n",
-        (
-            F.col("n").cast("double") * F.col("sxx").cast("double")
-            - F.col("sx").cast("double") * F.col("sx").cast("double")
-        ).alias("nsxx"),
-        (
-            F.col("n").cast("double") * F.col("sxy").cast("double")
-            - F.col("sx").cast("double") * F.col("sy").cast("double")
-        ).alias("nsxy"),
-        (
-            F.col("n").cast("double") * F.col("syy").cast("double")
-            - F.col("sy").cast("double") * F.col("sy").cast("double")
-        ).alias("nsyy"),
-    )
-    se = F.sqrt(
-        (F.col("nsyy") - F.col("nsxy") * F.col("nsxy") / F.col("nsxx"))
-        / (F.col("n") - 2)
-        / F.col("nsxx")
-    )
-    slope = F.col("nsxy") / F.col("nsxx")
-    return terms.select(
-        "l_returnflag",
-        F.col("n").cast("long").alias("n"),
-        F.round(slope, 6).alias("slope"),
-        F.round(se, 6).alias("slope_se"),
-        F.round(slope / se, 6).alias("t_stat"),
-        F.round(slope - Z95 * se, 6).alias("ci_lo"),
-        F.round(slope + Z95 * se, 6).alias("ci_hi"),
-    ).orderBy("l_returnflag")

@@ -1,26 +1,18 @@
-"""Round-3 extension pack #76: receivables aging and exact KS
-scorecard separation.
+"""Round-3 extension pack #76: receivables aging.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — the accounts-receivable aging report (open balances
 bucketed 0-30/31-60/61-90/90+ days at an as-of date; the collections
-worklist every finance close produces) and the Kolmogorov–Smirnov
-separation statistic (max |F₁(s) − F₀(s)| between the score CDFs of
-the two classes — the scorecard-strength number credit risk has used
-since FICO's earliest days) — re-expressed on the public PySpark
-DataFrame API over the driver's testdata.
+worklist every finance close produces) — re-expressed on the public
+PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): aging buckets are integer
 day arithmetic against a data-derived as-of date with boundary
-conventions stated (day 30 is IN 0-30); the KS statistic folds
-entirely in integers — cumulative class counts on the distinct-score
-grid, the gap maximized as |cum₁·n₀ − cum₀·n₁| cross-multiplied, one
-floor-micro division at the very end.
+conventions stated (day 30 is IN 0-30).
 
 Scale posture (SURVEY.md §7.6): aging is a CASE-bucket count (one
-pass); KS runs on extended27's distinct-score grid — bounded by the
-score range — after two map-side-combinable class counts.
+pass).
 """
 
 from __future__ import annotations
@@ -28,11 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.extended27 import (
-    _SCORED_SQL,
-    _scored,
-)
-from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum, grid_rank
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -112,102 +99,4 @@ def agg_receivables_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("age_d").cast("long").alias("max_age_d"),
         )
         .orderBy("bucket")
-    )
-
-
-@register(
-    "ml_ks_separation_exact",
-    oracle=f"""
-    WITH {_SCORED_SQL},
-    tot AS (
-        SELECT CAST(SUM(label) AS BIGINT) AS n1,
-               CAST(SUM(1 - label) AS BIGINT) AS n0
-        FROM scored
-    ),
-    grid AS (
-        SELECT score, CAST(SUM(label) AS BIGINT) AS p,
-               CAST(SUM(1 - label) AS BIGINT) AS q
-        FROM scored GROUP BY score
-    ),
-    cum AS (
-        SELECT score,
-               SUM(p) OVER (ORDER BY score
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS c1,
-               SUM(q) OVER (ORDER BY score
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS c0
-        FROM grid
-    ),
-    gaps AS (
-        SELECT score, c1, c0,
-               abs(c1 * t.n0 - c0 * t.n1) AS cross_gap
-        FROM cum, tot t
-    ),
-    best AS (
-        SELECT score, c1, c0, cross_gap,
-               row_number() OVER (ORDER BY cross_gap DESC, score) AS rk
-        FROM gaps
-    )
-    SELECT b.score AS ks_score,
-           CAST(b.c1 AS BIGINT) AS cum_pos,
-           CAST(b.c0 AS BIGINT) AS cum_neg,
-           CAST((1000000 * b.cross_gap) // (t.n1 * t.n0) AS BIGINT)
-               AS ks_micro
-    FROM best b, tot t WHERE b.rk = 1
-    """,
-)
-def ml_ks_separation_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KS scorecard separation (SURVEY.md §2.11): the maximum gap
-    between the positive-class and negative-class score CDFs —
-    KS = max_s |F₁(s) − F₀(s)| — the scorecard-strength number credit
-    risk has quoted since the first FICO models (0.2 weak, 0.4
-    strong), on extended27's driver-verified scored cohort. The third
-    lens on the same grid: AUC integrates the separation, ROC draws
-    it, KS reports its single worst... best point, with the argmax
-    score (the natural cutoff candidate) alongside.
-
-    ENTIRELY integer until the last division: cumulative class
-    counts on the distinct-score grid, the gap maximized as the
-    cross-multiplied |c₁·n₀ − c₀·n₁| (no per-row division, no float
-    CDFs), argmax under a (gap DESC, score) total order, one
-    floor-micro close. `events_ks_drift` holds the two-sample
-    time-drift variant; this is the class-separation form.
-
-    Scale: two map-side-combinable class counts + a window over the
-    score-range-bounded grid.
-    """
-    scored = _scored(spark, sf_dir)
-    tot = scored.agg(
-        F.sum("label").cast("long").alias("n1"),
-        F.sum(1 - F.col("label")).cast("long").alias("n0"),
-    )
-    grid = scored.groupBy("score").agg(
-        F.sum("label").cast("long").alias("p"),
-        F.sum(1 - F.col("label")).cast("long").alias("q"),
-    )
-    cum = grid_cumsum(
-        grid, ["score"], [("c1", "p"), ("c0", "q")], keep=["score"]
-    )
-    gaps = cum.crossJoin(F.broadcast(tot)).select(
-        "score",
-        "c1",
-        "c0",
-        "n1",
-        "n0",
-        F.abs(F.col("c1") * F.col("n0") - F.col("c0") * F.col("n1")).alias(
-            "cross_gap"
-        ),
-    )
-    return (
-        grid_rank(gaps, [F.desc("cross_gap"), "score"], "rk")
-        .where(F.col("rk") == 1)
-        .select(
-            F.col("score").alias("ks_score"),
-            F.col("c1").cast("long").alias("cum_pos"),
-            F.col("c0").cast("long").alias("cum_neg"),
-            F.expr(
-                "CAST((1000000 * cross_gap) DIV (n1 * n0) AS BIGINT)"
-            ).alias("ks_micro"),
-        )
     )

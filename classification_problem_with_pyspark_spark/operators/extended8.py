@@ -2,8 +2,7 @@
 completions — data-freshness SLA auditing, the Theil–Sen robust trend
 estimator (paired with the Mann–Kendall test from pack #7), a true
 interval-overlap join (distinct from the point-in-range `join_range_*`
-shapes), deterministic weighted sampling by hash priority, isotonic
-regression (the last uncovered pyspark.ml regression surface), and a
+shapes), deterministic weighted sampling by hash priority, and a
 distributed BPE merge-learning loop over the documents corpus.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
@@ -11,9 +10,8 @@ file:line citations into it are possible. All patterns here are public
 knowledge — Theil–Sen (Sen 1968), weighted sampling by uniform-over-weight
 priority (the Efraimidis–Spirakis 2006 A-ES family, here with a
 hash-derived uniform so both engines agree bit-for-bit), byte-pair
-encoding merge learning (Sennrich et al. 2016), and the
-pool-adjacent-violators isotonic fit exposed by pyspark.ml — expressed on
-the public PySpark DataFrame API over the driver's testdata.
+encoding merge learning (Sennrich et al. 2016) — expressed on the public
+PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): every cross-row float
 aggregate folds INTEGER micro-units or exact BIGINT counts; the only
@@ -360,58 +358,6 @@ def llm_sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("sample_rank") <= 20)
         .orderBy("lang", "sample_rank")
-    )
-
-
-@register("ml_isotonic_regression")
-def ml_isotonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Isotonic regression via pyspark.ml (SURVEY.md §2.10) — the last
-    uncovered MLlib regression surface: fit a monotone (pool-adjacent-
-    violators) price curve of avg(l_extendedprice) as a function of
-    l_quantity, then emit the fitted value at each of the 50 observed
-    quantity levels.
-
-    PAV is deterministic given its input sequence, and the input here
-    is an exact per-quantity aggregate (sum folded in integer cents /
-    count), so the FIT is reproducible — but the model boundaries are
-    driver-side floats from MLlib internals, so the key stays rows-only
-    (SURVEY §7.4 discipline: trained models never join the hash-checked
-    set). tests/test_extended8.py gates the semantics instead:
-    predictions must be globally non-decreasing in quantity (the
-    isotonic contract) and bounded by the observed label range.
-
-    Scale: the fit input is the 50-row bounded aggregate, not the fact
-    table — PAV on the driver is O(50); the expensive part (the
-    aggregate) is one map-side-combinable groupBy.
-    """
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import IsotonicRegression
-
-    li = load(spark, sf_dir, "lineitem")
-    per_qty = (
-        li.groupBy(F.col("l_quantity").cast("double").alias("qty"))
-        .agg(
-            (
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-                / (100 * F.count("*"))
-            ).alias("avg_price")
-        )
-        .select("qty", "avg_price")
-    )
-    assembled = VectorAssembler(inputCols=["qty"], outputCol="features").transform(
-        per_qty
-    )
-    model = IsotonicRegression(
-        featuresCol="features", labelCol="avg_price", predictionCol="fit_price"
-    ).fit(assembled)
-    return (
-        model.transform(assembled)
-        .select(
-            F.col("qty").cast("long").alias("quantity"),
-            F.round("avg_price", 2).alias("avg_price"),
-            F.round("fit_price", 2).alias("fit_price"),
-        )
-        .orderBy("quantity")
     )
 
 

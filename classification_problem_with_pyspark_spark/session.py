@@ -9,7 +9,7 @@ SURVEY.md §4 (physical-execution posture) and §7.5 (pitfalls):
   size their pre-fan-out spread from the session's default parallelism
   (``plans/fanout.py``), which ``local[N]`` sets to N.
   ``SPARK_GRAFT_MASTER`` and ``SPARK_GRAFT_DRIVER_MEM`` override the
-  master and the driver heap;
+  master and the driver heap (default: ``driver_memory()``);
 - Python workers need no path to the engine on this session or any
   other: the package pickles its own code by value (``__init__.py``).
 """
@@ -21,6 +21,22 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def driver_memory() -> str:
+    """The driver heap: ``SPARK_GRAFT_DRIVER_MEM``, else 16g or half of
+    this machine's memory, whichever is less.
+
+    16g on the 128 GiB test box: 8g showed multi-second full-GC stalls on
+    random queries during 145-query bench sweeps (one long-lived JVM
+    accumulates codegen classes + block-manager state). Half the machine
+    leaves the Python side and the OS room on a smaller one; on a real
+    cluster size per executor instead."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(16 * 1024, total_kb // 1024 // 2)}m"
 
 
 def get_spark(
@@ -48,10 +64,6 @@ def get_spark(
         # Arrow for any pandas_udf / applyInPandas boundary (SURVEY.md §3 EP3).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # 16g on the 128 GiB test box: 8g showed multi-second full-GC
-        # stalls on random queries during 145-query bench sweeps (one
-        # long-lived JVM accumulates codegen classes + block-manager
-        # state); on a real cluster size per executor instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
     )
     return builder.getOrCreate()

@@ -5,10 +5,8 @@ from __future__ import annotations
 import datetime as dt
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended105 import (
-    LUHN_CORRUPT_MOD,
-    TAU_SPLIT,
-)
+from classification_problem_with_pyspark_spark.operators.extended105 import LUHN_CORRUPT_MOD
+from classification_problem_with_pyspark_spark.operators.ml_stats import TAU_SPLIT
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

@@ -5,11 +5,8 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended109 import (
-    DRAIN_MICRO_PER_SEC,
-    PSI_BINS,
-    PSI_SPLIT,
-)
+from classification_problem_with_pyspark_spark.operators.extended109 import DRAIN_MICRO_PER_SEC
+from classification_problem_with_pyspark_spark.operators.ml_stats import PSI_BINS, PSI_SPLIT
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

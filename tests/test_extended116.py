@@ -5,7 +5,7 @@ from __future__ import annotations
 import hashlib
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended116 import BRIER_FLIP_MOD
+from classification_problem_with_pyspark_spark.operators.ml_metrics import FLIP_MOD
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR
@@ -23,7 +23,7 @@ def test_murphy_decomposition_identity_and_python_fold(spark):
     scored = []
     for r in emb:
         o = 1 if r.label < 5 else 0
-        if _h("brier_", r.vec_id) % BRIER_FLIP_MOD == 0:
+        if _h("brier_", r.vec_id) % FLIP_MOD == 0:
             f = 500_000
         elif r.label < 5:
             f = 700_000 + _h("bf_", r.vec_id) % 300_000

@@ -5,10 +5,10 @@ from __future__ import annotations
 import hashlib
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended117 import (
+from classification_problem_with_pyspark_spark.operators.extended117 import VWAP_PARTS_MOD
+from classification_problem_with_pyspark_spark.operators.ml_stats import (
     CONF_ALPHA_PCT,
     CONF_CAL_MOD,
-    VWAP_PARTS_MOD,
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load

@@ -6,7 +6,7 @@ import collections
 
 import pyspark.sql.functions as F
 
-from classification_problem_with_pyspark_spark.operators.extended29 import (
+from classification_problem_with_pyspark_spark.operators.ml_metrics import (
     NDCG_DISC_MICRO,
     NDCG_PREFIX_MICRO,
 )

@@ -67,7 +67,7 @@ def test_drift_chi2_exact_recompute(spark):
     cal = QUERIES["ml_calibration_by_score"].fn(spark, SF_DIR).collect()
     # rebuild the contingency from the scored cohort definition
     e = load(spark, SF_DIR, "events")
-    from classification_problem_with_pyspark_spark.operators.extended27 import _scored
+    from classification_problem_with_pyspark_spark.operators.ml_metrics import _scored
 
     scored = _scored(spark, SF_DIR).collect()
     cells = collections.Counter()

@@ -6,10 +6,8 @@ import hashlib
 from collections import defaultdict
 from itertools import combinations
 
-from classification_problem_with_pyspark_spark.operators.extended49 import (
-    HASH_BITS,
-    NGRAM_N,
-)
+from classification_problem_with_pyspark_spark.operators.extended49 import NGRAM_N
+from classification_problem_with_pyspark_spark.operators.ml_stats import HASH_BITS
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

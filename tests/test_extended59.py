@@ -6,12 +6,8 @@ import hashlib
 from collections import defaultdict
 from math import comb
 
-from classification_problem_with_pyspark_spark.operators.extended59 import (
-    FAIR_FLIP_MOD,
-    N_GROUPS,
-    N_SAMPLES,
-    PASS_K,
-)
+from classification_problem_with_pyspark_spark.operators.extended59 import N_SAMPLES, PASS_K
+from classification_problem_with_pyspark_spark.operators.ml_metrics import FLIP_MOD, N_GROUPS
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR
@@ -63,7 +59,7 @@ def test_fairness_gaps_match_python_replay(spark):
     for e in emb:
         g = _h(f"grp_{e.vec_id}") % N_GROUPS
         y = 1 if e.label < 5 else 0
-        yhat = (1 - y) if _h(f"fclf_{e.vec_id}") % FAIR_FLIP_MOD == 0 else y
+        yhat = (1 - y) if _h(f"fclf_{e.vec_id}") % FLIP_MOD == 0 else y
         a = per[g]
         a[0] += 1
         a[1] += yhat

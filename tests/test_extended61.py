@@ -9,9 +9,8 @@ from collections import Counter, defaultdict
 from classification_problem_with_pyspark_spark.operators.extended61 import (
     EARLY_MAX_DAY,
     LATE_MIN_DAY,
-    N_CATS,
-    RATER_NOISE_MOD,
 )
+from classification_problem_with_pyspark_spark.operators.ml_metrics import N_CATS, RATER_NOISE_MOD
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

@@ -5,10 +5,10 @@ from __future__ import annotations
 import os
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended27 import _scored
-from classification_problem_with_pyspark_spark.operators.extended62 import (
+from classification_problem_with_pyspark_spark.operators.ml_metrics import (
     COST_FN,
     COST_FP,
+    _scored,
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load

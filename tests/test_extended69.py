@@ -6,9 +6,7 @@ import hashlib
 import math
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended69 import (
-    MCC_FLIP_MOD,
-)
+from classification_problem_with_pyspark_spark.operators.ml_metrics import FLIP_MOD
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR
@@ -48,7 +46,7 @@ def test_mcc_matches_python_formula_and_beats_accuracy_illusion(spark):
         y = 1 if e.label < 5 else 0
         flip = (
             int(hashlib.md5(f"mcc_{e.vec_id}".encode()).hexdigest()[:15], 16)
-            % MCC_FLIP_MOD
+            % FLIP_MOD
             == 0
         )
         yhat = 1 - y if flip else y

@@ -6,10 +6,8 @@ import math
 from collections import defaultdict
 from decimal import Decimal
 
-from classification_problem_with_pyspark_spark.operators.extended72 import (
-    EXPOSURE_GATE,
-    Z95,
-)
+from classification_problem_with_pyspark_spark.operators.extended72 import EXPOSURE_GATE
+from classification_problem_with_pyspark_spark.operators.ml_stats import Z95
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

@@ -4,9 +4,7 @@ from __future__ import annotations
 
 import hashlib
 
-from classification_problem_with_pyspark_spark.operators.extended78 import (
-    BRIER_FLIP_MOD,
-)
+from classification_problem_with_pyspark_spark.operators.ml_metrics import FLIP_MOD
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR
@@ -47,7 +45,7 @@ def test_brier_skill_matches_python_replay(spark):
     for e in emb:
         o = 1 if e.label < 5 else 0
         pos += o
-        if _h(f"brier_{e.vec_id}") % BRIER_FLIP_MOD == 0:
+        if _h(f"brier_{e.vec_id}") % FLIP_MOD == 0:
             f = 500_000
         elif e.label < 5:
             f = 700_000 + _h(f"bf_{e.vec_id}") % 300_000

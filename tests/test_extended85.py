@@ -5,11 +5,8 @@ from __future__ import annotations
 import hashlib
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended85 import (
-    BT_ITERS,
-    BT_MATCH_MOD,
-    SLA_DAYS,
-)
+from classification_problem_with_pyspark_spark.operators.extended85 import SLA_DAYS
+from classification_problem_with_pyspark_spark.operators.ml_stats import BT_ITERS, BT_MATCH_MOD
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

@@ -5,10 +5,7 @@ from __future__ import annotations
 import hashlib
 from collections import Counter, defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended87 import (
-    QWK_FLIP_MOD,
-    QWK_K,
-)
+from classification_problem_with_pyspark_spark.operators.ml_metrics import QWK_FLIP_MOD, QWK_K
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

@@ -6,9 +6,9 @@ import glob
 import hashlib
 import os
 
-from classification_problem_with_pyspark_spark.operators.extended88 import (
-    TOPK_BOOST,
-    TOPK_CLASSES,
+from classification_problem_with_pyspark_spark.operators.ml_metrics import (
+    CLASS_BOOST,
+    N_CLASSES,
     TOPK_K,
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
@@ -45,8 +45,8 @@ def test_topk_accuracy_matches_python_ranks(spark):
     top1 = topk = 0
     for e in emb:
         scores = []
-        for c in range(TOPK_CLASSES):
-            s = _h(f"tk_{e.vec_id}_{c}") % 1000 + (TOPK_BOOST if c == e.label else 0)
+        for c in range(N_CLASSES):
+            s = _h(f"tk_{e.vec_id}_{c}") % 1000 + (CLASS_BOOST if c == e.label else 0)
             scores.append((-s, c))
         order = [c for _, c in sorted(scores)]
         if order[0] == e.label:

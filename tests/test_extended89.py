@@ -5,10 +5,10 @@ from __future__ import annotations
 import hashlib
 from collections import Counter
 
-from classification_problem_with_pyspark_spark.operators.extended89 import (
-    CURVE_FLIP_MOD,
+from classification_problem_with_pyspark_spark.operators.extended89 import SAMPLE_BUDGET
+from classification_problem_with_pyspark_spark.operators.ml_metrics import (
     CURVE_FRACTIONS,
-    SAMPLE_BUDGET,
+    FLIP_MOD,
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -25,7 +25,7 @@ def test_learning_curve_is_nested_and_matches_python(spark):
     rows = {r.pct_cap: r for r in QUERIES["ml_learning_curve_nested"].fn(spark, SF_DIR).collect()}
     emb = load(spark, SF_DIR, "embeddings").select("vec_id").collect()
     pts = [
-        (_h(f"lc_{e.vec_id}") % 100, 0 if _h(f"clf_{e.vec_id}") % CURVE_FLIP_MOD == 0 else 1)
+        (_h(f"lc_{e.vec_id}") % 100, 0 if _h(f"clf_{e.vec_id}") % FLIP_MOD == 0 else 1)
         for e in emb
     ]
     assert set(rows) == set(CURVE_FRACTIONS)

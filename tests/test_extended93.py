@@ -7,9 +7,9 @@ import hashlib
 import math
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended93 import (
-    MARGIN_BOOST,
-    MARGIN_CLASSES,
+from classification_problem_with_pyspark_spark.operators.ml_metrics import (
+    CLASS_BOOST,
+    N_CLASSES,
     SAMPLE_B,
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
@@ -30,8 +30,8 @@ def test_margin_sampling_selects_the_least_certain(spark):
     for e in emb:
         scores = sorted(
             (
-                _h(f"tk_{e.vec_id}_{c}") % 1000 + (MARGIN_BOOST if c == e.label else 0)
-                for c in range(MARGIN_CLASSES)
+                _h(f"tk_{e.vec_id}_{c}") % 1000 + (CLASS_BOOST if c == e.label else 0)
+                for c in range(N_CLASSES)
             ),
             reverse=True,
         )

@@ -7,6 +7,8 @@ FIXTURES.md) — we assert pipeline SHAPE and metric bounds, not skill.
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import shutil
 import tempfile
@@ -14,6 +16,7 @@ import tempfile
 from pyspark.ml.classification import LogisticRegression, LogisticRegressionModel
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 
+from classification_problem_with_pyspark_spark import operators
 from classification_problem_with_pyspark_spark.operators.ml import (
     _embedding_features,
     multiclass_metrics,
@@ -23,6 +26,9 @@ from classification_problem_with_pyspark_spark.registry import QUERIES, load_all
 from tests.conftest import SF_DIR
 
 load_all_modules()
+
+# the modules that register the ml_* family, and nothing else does
+ML_FAMILY = ("ml", "ml_metrics", "ml_stats")
 
 
 def test_feature_pipeline_shape(spark):
@@ -305,3 +311,25 @@ def test_model_persist_load_roundtrip(spark, tmp_path):
     orig = {r.vec_id: r.prediction for r in model.transform(data).select("vec_id", "prediction").collect()}
     back = {r.vec_id: r.prediction for r in reloaded.transform(data).select("vec_id", "prediction").collect()}
     assert orig == back and len(orig) > 0
+
+
+def test_ml_keys_register_from_the_family_modules():
+    stray = {
+        name: q.fn.__module__
+        for name, q in QUERIES.items()
+        if name.startswith("ml_") and q.fn.__module__.rsplit(".", 1)[1] not in ML_FAMILY
+    }
+    assert not stray
+
+
+def test_no_extended_module_defines_an_ml_function():
+    found = []
+    for path in sorted(glob.glob(os.path.join(os.path.dirname(operators.__file__), "extended*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        found += [
+            f"{os.path.basename(path)}:{node.name}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.FunctionDef) and node.name.startswith("ml_")
+        ]
+    assert not found

@@ -133,7 +133,7 @@ REPRESENTATIVE = [
     "agg_bootstrap_ci_revenue",  # replicate weights + CI order stats across volumes
     "agg_jackknife_loo_nation",  # LOO moments + pseudo-values across volumes
     "agg_capture_recapture_ngrams",  # sample overlap + estimator across corpus sizes
-    # extension pack 27: scale-sensitive surfaces
+    # ml_metrics, the scored cohort: scale-sensitive surfaces
     "ml_roc_curve_threshold",   # threshold grid + cumulative counts across cohort sizes
     "ml_auc_exact",             # midrank ties + rank-sum across cohort sizes
     "ml_calibration_by_score",  # score occupancy + lift across cohort sizes
@@ -175,7 +175,7 @@ REPRESENTATIVE = [
     # and sf0.01 already hash-checks the algorithm)
     "llm_readability_flesch",   # milli folds + syllable counts across corpus sizes
     "relational_group_by_all",  # inference + cents sums across volumes
-    # extension pack 40: scale-sensitive surfaces
+    # ml_metrics, McNemar and the AUC bootstrap: scale-sensitive surfaces
     "ml_mcnemar_test",          # paired cells across corpus sizes
     "ml_auc_bootstrap_ci",      # weighted midranks + degenerate-replicate culls across cohort sizes
     # extension pack 41: scale-sensitive surfaces

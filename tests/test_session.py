@@ -49,6 +49,17 @@ def test_default_cpus_is_the_affinity_count(tmp_path):
     assert int(out.stdout) == len(os.sched_getaffinity(0))
 
 
+def test_driver_memory_defaults_to_half_the_box_up_to_16g(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    mem_total_mib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    assert session.driver_memory() == f"{min(16384, mem_total_mib // 2)}m"
+
+
+def test_driver_memory_override_wins(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session.driver_memory() == "3g"
+
+
 def _run_worker_keys(tmp_path, session: str) -> None:
     """Run every WORKER_KEYS key from ``tmp_path`` on the session that the
     expression ``session`` builds; the checkout is on the driver's
