@@ -1,7 +1,7 @@
 """Round-1 extension pack: additional oracle-checked operators widening
 SURVEY.md §2 coverage (statistical aggregates, max_by/min_by, LIMIT/OFFSET
 pagination, INTERSECT ALL, full-outer join, histogram, ratio-to-report
-windows, BPE-ish regex token counting, second string suite).
+windows, second string suite).
 
 Scale posture mirrors the rest of the engine: every key is a declarative
 DataFrame plan (partial aggregation before shuffles, no collect, no Python
@@ -16,13 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.plans.components import min_label_components
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
-
-# BPE-ish tokenizer: letter runs, digit runs, single punctuation marks.
-# Same RE2/Java-regex-compatible pattern string on both engines.
-_TOKEN_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
 
 @register(
@@ -324,38 +319,6 @@ def window_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "cnt",
         F.round(F.col("cnt") / F.sum("cnt").over(w), 6).alias("share_of_type"),
-    )
-
-
-@register(
-    "llm_token_count_bpe",
-    oracle=f"""
-    SELECT lang,
-           COUNT(*) AS docs,
-           CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS ws_tokens,
-           CAST(SUM(len(regexp_extract_all(text, '{_TOKEN_RE}'))) AS BIGINT) AS re_tokens,
-           ROUND(SUM(len(regexp_extract_all(text, '{_TOKEN_RE}')))
-                 / COUNT(*), 6) AS avg_re_tokens_per_doc
-    FROM documents
-    GROUP BY lang
-    """,
-)
-def llm_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting for corpus budgeting (task-mandated LLM op): both
-    whitespace tokens and a BPE-ish lexer (letter runs | digit runs |
-    single punctuation) via regexp_extract_all, aggregated per language.
-    Pure JVM expression work on the scan — no UDF, no explode, no shuffle
-    beyond the 5-group agg — so it runs at full codegen speed over 100 TB
-    of text. Explicit group-0 on both engines (Spark's default idx is 1).
-    """
-    d = load(spark, sf_dir, "documents")
-    re_tokens = F.size(F.regexp_extract_all(F.col("text"), F.lit(_TOKEN_RE), 0))
-    ws_tokens = F.size(F.split(F.col("text"), " "))
-    return d.groupBy("lang").agg(
-        F.count("*").alias("docs"),
-        F.sum(ws_tokens).alias("ws_tokens"),
-        F.sum(re_tokens).alias("re_tokens"),
-        F.round(F.sum(re_tokens) / F.count("*"), 6).alias("avg_re_tokens_per_doc"),
     )
 
 
@@ -700,100 +663,6 @@ def agg_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("approx_percentile(l_extendedprice, 0.5, 100)").alias(
             "price_median_approx"
         ),
-    )
-
-
-@register(
-    "llm_dedup_cluster_cc",
-    oracle="""
-    WITH RECURSIVE toks AS (
-        SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS ts
-        FROM documents
-    ), pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM toks a
-        JOIN toks b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.ts, b.ts)) AS DOUBLE)
-              / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= 0.8
-    ), edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-    ), reach AS (
-        SELECT doc_id AS id, doc_id AS root FROM documents
-        UNION
-        SELECT e.dst AS id, r.root FROM reach r JOIN edges e ON e.src = r.id
-    ), clusters AS (
-        SELECT id AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY id
-    )
-    SELECT c.doc_id, c.cluster_id, s.cluster_size,
-           c.doc_id = c.cluster_id AS is_canonical
-    FROM clusters c
-    JOIN (SELECT cluster_id, COUNT(*) AS cluster_size
-          FROM clusters GROUP BY cluster_id) s USING (cluster_id)
-    """,
-)
-def llm_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERING: connected components over the Jaccard ≥ 0.8
-    pair graph, so transitively-linked duplicates (A~B, B~C but A≁C)
-    collapse into ONE cluster — pairwise dedup alone over-keeps. Each doc
-    gets cluster_id = min doc_id in its component (the canonical keeper),
-    plus the cluster size; singletons are their own cluster.
-
-    Algorithm: min-label propagation (plans/components.py), which needs
-    as many rounds as the widest component's diameter. At 100 TB the
-    round count stays bounded because near-dup components are
-    tiny-diameter by construction; past the cap the key raises.
-
-    Oracle: DuckDB recursive CTE propagating roots over the symmetrized
-    edge set; MIN(root) per node is exactly the component minimum.
-    """
-    pairs = llm_dedup_cluster_pairs(spark, sf_dir)
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    ids = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-    # 25 rounds: far above the diameter of a near-dup component
-    labels = min_label_components(edges, ids, 25, "llm_dedup_cluster_cc")
-
-    clusters = labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
-    sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return clusters.join(sizes, "cluster_id").select(
-        "doc_id",
-        "cluster_id",
-        "cluster_size",
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-    )
-
-
-def llm_dedup_cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edge list for CC clustering: lang-blocked token-set Jaccard ≥ 0.8
-    (same pair semantics as llm_dedup_ngram_jaccard, keys only).
-
-    Scale note: this is the lang-blocked EXACT pair gen — O(Σ block²)
-    candidates, the oracle-checkable twin. At 100 TB candidate pairs
-    come from banded MinHash-LSH instead (llm_dedup_pipeline_exact runs
-    that full shape: bands → verify → CC on the same CC primitive)."""
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("ts")
-    )
-    a = toks.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("ts").alias("ts_a"),
-    )
-    b = toks.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("ts").alias("ts_b"),
-    )
-    inter = F.size(F.array_intersect("ts_a", "ts_b"))
-    union = F.size("ts_a") + F.size("ts_b") - inter
-    return (
-        a.join(
-            b, (F.col("lang_a") == F.col("lang_b")) & (F.col("doc_a") < F.col("doc_b"))
-        )
-        .where(inter.cast("double") / union >= 0.8)
-        .select("doc_a", "doc_b")
     )
 
 

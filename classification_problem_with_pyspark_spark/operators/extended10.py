@@ -1,22 +1,21 @@
 """Round-3 extension pack #10: lakehouse and ingestion-edge completions —
 a merge-on-read table layout (base snapshot + delta log, reconstructed at
-read time), day-of-week seasonality residuals, quoted-multiline CSV
-ingestion, and applying learned BPE merges to tokenize the corpus.
+read time), day-of-week seasonality residuals, and quoted-multiline CSV
+ingestion.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. All patterns here are public
 knowledge — merge-on-read as described for Apache Hudi/Iceberg (base files
 + row-level delete/upsert logs, latest-writer-wins reconstruction),
-day-of-week seasonal baselining, RFC-4180 quoted CSV with embedded
-newlines, and BPE tokenization (Sennrich et al. 2016) — expressed on the
-public PySpark DataFrame API over the driver's testdata.
+day-of-week seasonal baselining, and RFC-4180 quoted CSV with embedded
+newlines — expressed on the public PySpark DataFrame API over the
+driver's testdata.
 
 Hash-parity discipline (round-3 standard): money folds integer cents with
 the 10% uplift as exact integer div((cents*11), 10); seasonality residuals
 are single-expression IEEE doubles floored to BIGINT micro-units; the CSV
 key's gnarly text transform is defined identically on both engines so the
-roundtrip aggregate hash-checks; the BPE applier stays rows-only (its
-input is a learned artifact, not SQL).
+roundtrip aggregate hash-checks.
 
 Scale posture (SURVEY.md §7.6):
 - MOR: the log is read-side merged with ONE window over the primary key
@@ -28,8 +27,6 @@ Scale posture (SURVEY.md §7.6):
   can span chunk boundaries, so Spark disables intra-file splitting
   with multiLine) — the docstring carries the many-small-files
   countermeasure; this is an ingestion-edge format, not a fact layout.
-- The BPE applier joins the DISTINCT-word token table back to the
-  corpus — per-word token counts shuffle, never symbol arrays.
 """
 
 from __future__ import annotations
@@ -40,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.operators.extended8 import bpe_learn
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, stage_dir
 
@@ -266,54 +262,4 @@ def source_csv_multiline_quoted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_multiline"),
         )
         .orderBy("lang")
-    )
-
-
-@register("llm_tokenizer_apply_merges")
-def llm_tokenizer_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply learned BPE merges to tokenize the corpus (SURVEY.md
-    §2.12): run the 6-round merge learner (`llm_bpe_merge_learn`'s
-    loop, shared helper), then tokenize every document with the final
-    per-word symbol table and report per-document character count,
-    BPE token count, and the compression ratio in micro-units — the
-    train-then-apply half of the tokenizer lifecycle, and the actual
-    quantity (tokens per doc) a data pipeline budgets by.
-
-    Rows-only: the input is a learned artifact (an iterative argmax
-    loop), not SQL. tests/test_extended10.py recomputes the tokenization
-    with the pure-python reference BPE at sf0.001 and requires
-    identical per-document token counts.
-
-    Scale: tokenization joins the DISTINCT-word token-count table back
-    to the exploded corpus — per-word INTEGER counts shuffle, never
-    symbol arrays; the sum per doc is map-side-combinable. This is how
-    a 100-TB corpus is tokenized for budget accounting without running
-    the tokenizer over every occurrence.
-    """
-    words, _ = bpe_learn(spark, sf_dir, 6, keep_word=True)
-    token_counts = words.select(
-        "word", F.size("syms").cast("long").alias("n_tokens_word")
-    )
-    d = load(spark, sf_dir, "documents")
-    occurrences = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).where(F.length("word") > 0)
-    return (
-        occurrences.join(token_counts, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum(F.length("word")).cast("long").alias("n_chars_tok"),
-            F.sum("n_tokens_word").cast("long").alias("n_tokens_bpe"),
-        )
-        .select(
-            "doc_id",
-            "n_words",
-            "n_chars_tok",
-            "n_tokens_bpe",
-            F.floor(1000000.0 * F.col("n_chars_tok") / F.col("n_tokens_bpe"))
-            .cast("long")
-            .alias("chars_per_token_micro"),
-        )
-        .orderBy("doc_id")
     )

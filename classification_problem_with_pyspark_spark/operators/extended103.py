@@ -1,174 +1,29 @@
-"""Round-3 extension pack #103: retrieval MRR and two-way ANOVA with
-interaction.
+"""Round-3 extension pack #103: two-way ANOVA with interaction.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
-knowledge — mean reciprocal rank (MRR = mean 1/rank-of-first-relevant;
-the question-answering retrieval metric alongside NDCG and recall) and
-two-way fixed-effects ANOVA (main-effect and INTERACTION sums of
-squares over a factorial design — Fisher's decomposition; the
+file:line citations into it are possible. The pattern is public
+knowledge — two-way fixed-effects ANOVA (main-effect and INTERACTION
+sums of squares over a factorial design — Fisher's decomposition; the
 interaction term is the formal answer to "does the effect differ by
 segment") — re-expressed on the public PySpark DataFrame API over the
 driver's testdata.
 
-Hash-parity discipline (round-3 standard): relevance is
-overlap-defined (the candidate sharing the most 5-gram digests, ties
-by id — exact set algebra), the retriever is the exact-cosine rank,
-and reciprocal ranks fold floor-micro per query with a floor-mean
-close; ANOVA cell statistics are exact integer (n, Σ, in deci units)
-per (weekend × type) cell, and every SS folds from cell means in
-order-pinned double arithmetic with ROUND-6 closes.
+Hash-parity discipline (round-3 standard): ANOVA cell statistics are
+exact integer (n, Σ, in deci units) per (weekend × type) cell, and every
+SS folds from cell means in order-pinned double arithmetic with ROUND-6
+closes.
 
-Scale posture (SURVEY.md §7.6): MRR reuses the hash-sampled query
-discipline (a reranker metric, never a corpus brute force); ANOVA is
-one conditional-moment pass to ≤10 cells + bounded folds.
+Scale posture (SURVEY.md §7.6): ANOVA is one conditional-moment pass to
+≤10 cells + bounded folds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
-from classification_problem_with_pyspark_spark.functions.text import word_ngrams
-from classification_problem_with_pyspark_spark.functions.vector import dot, norm
-from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
-
-MRR_QUERY_MOD = 25
-MRR_NGRAM = 5
-
-
-@register(
-    "llm_retrieval_mrr",
-    oracle=f"""
-    WITH queries AS (
-        SELECT vec_id AS qid FROM embeddings
-        WHERE CAST(('0x' || substr(md5('rrfq_' || CAST(vec_id AS VARCHAR)), 1, 15))
-                   AS BIGINT) % {MRR_QUERY_MOD} = 0
-    ),
-    toks AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-    shingles AS (
-        SELECT DISTINCT doc_id,
-               md5(array_to_string(ws[i:i+{MRR_NGRAM - 1}], ' ')) AS digest
-        FROM toks,
-             LATERAL (SELECT unnest(range(1, len(ws) - {MRR_NGRAM - 1} + 1)) AS i)
-        WHERE len(ws) >= {MRR_NGRAM}
-    ),
-    relevant AS (  -- ground truth: the max-overlap candidate per query
-        SELECT qid, cand FROM (
-            SELECT q.qid, b.doc_id AS cand,
-                   row_number() OVER (PARTITION BY q.qid
-                       ORDER BY COUNT(*) DESC, b.doc_id) AS rk
-            FROM queries q
-            JOIN shingles a ON a.doc_id = q.qid
-            JOIN shingles b ON b.digest = a.digest AND b.doc_id <> q.qid
-            GROUP BY q.qid, b.doc_id
-        ) z WHERE rk = 1
-    ),
-    dense AS (
-        SELECT q.qid, b.vec_id AS cand,
-               row_number() OVER (PARTITION BY q.qid
-                   ORDER BY ROUND(list_cosine_similarity(
-                       list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-                       list_transform(b.embedding, x -> CAST(x AS DOUBLE))), 6)
-                       DESC, b.vec_id) AS rnk
-        FROM queries q
-        JOIN embeddings a ON a.vec_id = q.qid
-        JOIN embeddings b ON b.vec_id <> q.qid
-    )
-    SELECT
-        CAST(COUNT(*) AS BIGINT) AS n_queries,
-        CAST(SUM(CASE WHEN d.rnk = 1 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_rank1,
-        CAST(SUM(CASE WHEN d.rnk <= 10 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_top10,
-        CAST(MAX(d.rnk) AS BIGINT) AS worst_rank,
-        CAST(SUM(1000000 // d.rnk) // COUNT(*) AS BIGINT) AS mrr_micro
-    FROM relevant r
-    JOIN dense d ON d.qid = r.qid AND d.cand = r.cand
-    """,
-)
-def llm_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval MRR (SURVEY.md §2.12): for each hash-sampled query,
-    the ground-truth relevant item is its max-shingle-overlap
-    neighbor (exact set algebra, ties by id) and the system under
-    test is the exact-cosine dense retriever; MRR = floor-mean of
-    floor-micro reciprocal ranks of the relevant item, with hit@1,
-    hit@10, and the worst rank alongside. The QA-retrieval headline
-    metric, measured here as the CROSS-MODAL agreement between the
-    registry's sparse truth and dense ranker — high MRR means the
-    embeddings encode lexical overlap, low means the two modalities
-    genuinely disagree — and on THIS fixture they are independent
-    (MRR ≈ 0.004, zero top-10 hits; hash-pinned), which is precisely
-    the regime where RRF fusion earns its keep; the three keys
-    triangulate.
-
-    Exactness: integer overlap counts, ROUND-6 cosine ranks under
-    total orders, floor-micro reciprocal ranks, floor mean.
-
-    Scale: queries are the hash sample; both legs are the RRF key's
-    relations — the metric costs one extra join over rankings that
-    already exist.
-    """
-    e = load(spark, sf_dir, "embeddings")
-    qhash = md5_long(F.concat(F.lit("rrfq_"), F.col("vec_id").cast("string")))
-    # single-file trap (BASELINE.md): spread the query side before the
-    # broadcast cross-score and documents before the shingle explode
-    queries = (
-        e.where(qhash % MRR_QUERY_MOD == 0)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb"))
-    )
-    queries = spread(queries, "qid")
-    d = load(spark, sf_dir, "documents")
-    shingles = (
-        word_ngrams(spread(d, "doc_id"), MRR_NGRAM, "doc_id")
-        .select("doc_id", F.md5("ngram").alias("digest"))
-        .distinct()
-    )
-    q_sh = queries.select("qid").join(
-        shingles.select(F.col("doc_id").alias("qid"), "digest"), "qid"
-    )
-    w_rel = Window.partitionBy("qid").orderBy(F.desc("overlap"), "cand")
-    relevant = (
-        q_sh.join(shingles.select(F.col("doc_id").alias("cand"), "digest"), "digest")
-        .where(F.col("cand") != F.col("qid"))
-        .groupBy("qid", "cand")
-        .agg(F.count("*").alias("overlap"))
-        .withColumn("rk", F.row_number().over(w_rel))
-        .where(F.col("rk") == 1)
-        .select("qid", "cand")
-    )
-    cands = e.select(
-        F.col("vec_id").alias("cand"), F.col("embedding").alias("c_emb")
-    )
-    sim = F.round(
-        dot(F.col("q_emb"), F.col("c_emb"))
-        / (norm(F.col("q_emb")) * norm(F.col("c_emb"))),
-        6,
-    )
-    w_d = Window.partitionBy("qid").orderBy(F.desc("sim"), "cand")
-    dense = (
-        queries.crossJoin(F.broadcast(cands))
-        .where(F.col("cand") != F.col("qid"))
-        .select("qid", "cand", sim.alias("sim"))
-        .select("qid", "cand", F.row_number().over(w_d).alias("rnk"))
-    )
-    return relevant.join(dense, ["qid", "cand"]).agg(
-        F.count("*").alias("n_queries"),
-        F.sum(F.when(F.col("rnk") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_rank1"),
-        F.sum(F.when(F.col("rnk") <= 10, 1).otherwise(0))
-        .cast("long")
-        .alias("n_top10"),
-        F.max("rnk").cast("long").alias("worst_rank"),
-        F.expr("CAST(SUM(1000000 DIV rnk) DIV COUNT(*) AS BIGINT)").alias(
-            "mrr_micro"
-        ),
-    )
 
 
 @register(

@@ -1,22 +1,17 @@
-"""Round-3 extension pack #11: spatial, weighted-graph, and web-corpus
-completions — a grid-bucketed exact-distance kNN join, bounded-hop
-weighted shortest paths (Bellman–Ford relaxation vs a recursive-CTE
-oracle), and URL canonicalization dedup.
+"""Round-3 extension pack #11: spatial and weighted-graph completions — a
+grid-bucketed exact-distance kNN join and bounded-hop weighted shortest
+paths (Bellman–Ford relaxation vs a recursive-CTE oracle).
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. All patterns here are public
 knowledge — grid-file spatial joins (the cell-bucketed neighbor-join
-family), Bellman–Ford single-source shortest paths, and the URL
-canonicalization rules every web crawler applies (RFC 3986 host
-case-insensitivity + tracking-parameter stripping) — expressed on the
+family) and Bellman–Ford single-source shortest paths — expressed on the
 public PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): coordinates are md5-derived
 INTEGER micro-degrees so squared distances are exact BIGINTs (no sqrt, no
 haversine libm anywhere); path costs are exact integer sums minimized
-lexicographically by (cost, hops); URL canonicalization is pure string
-algebra (regexp + array sort/filter) with identical semantics on both
-engines.
+lexicographically by (cost, hops).
 
 Scale posture (SURVEY.md §7.6):
 - The kNN join explodes each point into its 3×3 neighbor cells and
@@ -28,7 +23,6 @@ Scale posture (SURVEY.md §7.6):
   iterative-graph shape of pagerank/k-core, NOT path enumeration
   (which the recursive oracle does; enumeration is exponential and
   stays oracle-side only).
-- URL dedup shuffles canonical-URL digests, not page text.
 """
 
 from __future__ import annotations
@@ -301,102 +295,3 @@ def graph_shortest_path_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cost").alias("best_cost"),
         F.col("hops").alias("best_hops"),
     ).orderBy("nationkey")
-
-
-@register(
-    "llm_dedup_url_canonical",
-    oracle="""
-    WITH pages AS (
-        SELECT doc_id, source,
-               'https://WWW.' || source || '.Example.COM/p/' ||
-               CAST(doc_id % 40 AS VARCHAR) ||
-               CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END ||
-               '?utm_source=feed&ref=' || CAST(doc_id % 4 AS VARCHAR) ||
-               '&utm_campaign=x&id=' || CAST(doc_id % 5 AS VARCHAR) AS url
-        FROM documents
-    ), canon AS (
-        SELECT doc_id, source,
-               regexp_replace(lower(regexp_extract(url, '^https?://([^/?]+)', 1)),
-                              '^www\\.', '')
-               || regexp_replace(regexp_extract(url, '^https?://[^/?]+([^?]*)', 1),
-                                 '/$', '')
-               || '?' ||
-               array_to_string(
-                   list_sort(list_filter(string_split(regexp_extract(url, '\\?(.*)$', 1), '&'),
-                                         p -> NOT starts_with(p, 'utm_'))),
-                   '&') AS canonical_url
-        FROM pages
-    )
-    SELECT canonical_url,
-           CAST(count(*) AS BIGINT) AS n_dupes,
-           CAST(min(doc_id) AS BIGINT) AS survivor_doc_id,
-           CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-    FROM canon GROUP BY canonical_url
-    HAVING count(*) > 1
-    ORDER BY canonical_url
-    """,
-)
-def llm_dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization dedup (SURVEY.md §2.12), the first pass of
-    every web-corpus pipeline: synthesize a deterministic raw URL per
-    document (mixed-case host, www prefix, optional trailing slash,
-    interleaved utm_* tracking parameters), then canonicalize —
-    lowercase host, strip `www.`, strip the trailing slash, DROP utm_*
-    parameters, and SORT the surviving query parameters — and group
-    pages whose canonical form collides. Emits each duplicate group
-    with its size, min-doc_id survivor, and source spread.
-
-    The canonicalization is pure string algebra (regexp_extract/replace
-    + array filter/sort/join) with identical semantics in Spark and
-    DuckDB, so the full canonical string hash-checks. The synthetic URL
-    layer exists because the corpus carries no real URLs; the
-    canonicalizer itself is the real operator (same regex rules crawler
-    dedup uses).
-
-    Scale: one groupBy on the canonical URL — at 100 TB hash the
-    canonical form to 128 bits first so only digests shuffle (the
-    llm_dedup_exact_hash discipline).
-    """
-    d = load(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://WWW."),
-        F.col("source"),
-        F.lit(".Example.COM/p/"),
-        (F.col("doc_id") % 40).cast("string"),
-        F.when(F.col("doc_id") % 2 == 0, F.lit("/")).otherwise(F.lit("")),
-        F.lit("?utm_source=feed&ref="),
-        (F.col("doc_id") % 4).cast("string"),
-        F.lit("&utm_campaign=x&id="),
-        (F.col("doc_id") % 5).cast("string"),
-    )
-    pages = d.select("doc_id", "source", url.alias("url"))
-    host = F.regexp_replace(
-        F.lower(F.regexp_extract("url", r"^https?://([^/?]+)", 1)), r"^www\.", ""
-    )
-    path = F.regexp_replace(
-        F.regexp_extract("url", r"^https?://[^/?]+([^?]*)", 1), r"/$", ""
-    )
-    params = F.array_join(
-        F.array_sort(
-            F.filter(
-                F.split(F.regexp_extract("url", r"\?(.*)$", 1), "&"),
-                lambda p: ~p.startswith("utm_"),
-            )
-        ),
-        "&",
-    )
-    canon = pages.select(
-        "doc_id",
-        "source",
-        F.concat(host, path, F.lit("?"), params).alias("canonical_url"),
-    )
-    return (
-        canon.groupBy("canonical_url")
-        .agg(
-            F.count("*").alias("n_dupes"),
-            F.min("doc_id").alias("survivor_doc_id"),
-            F.countDistinct("source").alias("n_sources"),
-        )
-        .where(F.col("n_dupes") > 1)
-        .orderBy("canonical_url")
-    )

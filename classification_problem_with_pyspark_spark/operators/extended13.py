@@ -1,29 +1,22 @@
-"""Round-3 extension pack #13: ingestion-edge completions — the Kafka
+"""Round-3 extension pack #13: an ingestion-edge completion — the Kafka
 wire-format parse path surfaced as a graded key (driven by a mocked wire
-batch, since no broker exists in the container), and term-blocklist
-content filtering, the policy-filter stage of a corpus pipeline.
+batch, since no broker exists in the container).
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. All patterns here are public
 knowledge — Kafka's fixed source schema (key/value binary + topic/
-partition/offset/timestamp) as documented for spark-sql-kafka, and
-wordlist-based content filtering as described for every public corpus
-pipeline (C4's badwords filter et al.) — expressed on the public PySpark
-DataFrame API over the driver's testdata.
+partition/offset/timestamp) as documented for spark-sql-kafka —
+expressed on the public PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): the Kafka key proves the parse
 by aggregate identity — whatever survives encode→wire→decode must
 aggregate exactly like the original table (counts, integer cents, exact
-offsets from integer rank); the blocklist key counts exact word matches
-over split arrays (no substring false positives, no regex divergence).
+offsets from integer rank).
 
 Scale posture (SURVEY.md §7.6):
 - The wire parse is from_json over value bytes — per-partition,
   shuffle-free; Kafka topic-partitions map 1:1 to input partitions and
   the offset bookkeeping columns ride along for exactly-once sinks.
-- Blocklist filtering is an array-intersect per document (JVM
-  higher-order functions, no explode of the full corpus for the
-  flag decision; the per-term histogram explodes MATCHES only).
 """
 
 from __future__ import annotations
@@ -35,8 +28,6 @@ from pyspark.sql.window import Window
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from classification_problem_with_pyspark_spark.sources.kafka import parse_kafka_events
-
-BLOCKLIST = ("slow", "big", "small", "merge", "scan")
 
 
 @register(
@@ -109,55 +100,4 @@ def source_kafka_wire_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ts").alias("last_ts"),
         )
         .orderBy("event_type")
-    )
-
-
-@register(
-    "llm_blocklist_filter",
-    oracle="""
-    SELECT d.lang, w.term,
-           CAST(count(*) AS BIGINT) AS n_occurrences,
-           CAST(count(DISTINCT d.doc_id) AS BIGINT) AS n_docs_hit
-    FROM documents d,
-         UNNEST(list_filter(string_split(d.text, ' '),
-                t -> list_contains(['slow','big','small','merge','scan'], t)))
-             AS w(term)
-    GROUP BY 1, 2 ORDER BY 1, 2
-    """,
-)
-def llm_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Term-blocklist content filter (SURVEY.md §2.12), the policy-
-    filter stage every public corpus pipeline runs (C4's badwords list
-    is the canonical example — here the list is a 5-term fixture over
-    the synthetic vocabulary): per (lang, term), how many times each
-    blocklisted term occurs and how many documents it taints.
-
-    EXACT-WORD semantics: terms match against the split word array, not
-    substrings — "scan" never matches "scanner" — which is both the
-    correct policy behavior and what keeps the two engines trivially
-    identical (no regex dialect in play). The flag decision per doc is
-    an array intersect (JVM higher-order filter, no corpus explode);
-    only the MATCHES explode for the per-term histogram.
-
-    Scale: the blocklist is a literal in the plan (broadcast by
-    construction); real lists (thousands of terms) move to a broadcast
-    join against the exploded match stream or a JVM-side set in a
-    higher-order lambda — same shape. One shuffle: the final group.
-    """
-    d = load(spark, sf_dir, "documents")
-    terms = F.array(*[F.lit(t) for t in BLOCKLIST])
-    matches = d.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.filter(F.split("text", " "), lambda w: F.array_contains(terms, w))
-        ).alias("term"),
-    )
-    return (
-        matches.groupBy("lang", "term")
-        .agg(
-            F.count("*").alias("n_occurrences"),
-            F.countDistinct("doc_id").alias("n_docs_hit"),
-        )
-        .orderBy("lang", "term")
     )

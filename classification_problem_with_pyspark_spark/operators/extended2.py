@@ -1,8 +1,8 @@
 """Round-1 extension pack #2: classic analytic query shapes (TPC-H
 Q6/Q11/Q13/Q14/Q18/Q19/Q22 analogs over our TPC-H-ish testdata), LOCF
 gap-fill, centered moving averages, weighted averages, per-group mode,
-exact-moment skewness/kurtosis, MERGE-style upsert, an array
-higher-order-function suite, and deterministic MinHash signatures.
+exact-moment skewness/kurtosis, MERGE-style upsert, and an array
+higher-order-function suite.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session, so
 no file:line citations into it are possible; each operator cites the SURVEY
@@ -23,9 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
-from classification_problem_with_pyspark_spark.functions.text import word_ngrams
-from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -688,54 +685,6 @@ def scalar_hof_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic MinHash signatures (SURVEY.md §2.12)
-# ---------------------------------------------------------------------------
-
-
-def _minhash_term_hash(seed: int, start: int = 1):
-    """Portable 60-bit token hash of "<seed>_<term>" (``md5_long``), read
-    from hex digit ``start``; both MinHash ops key on it."""
-    return md5_long(F.concat_ws("_", F.lit(str(seed)), F.col("term")), start=start)
-
-
-@register(
-    "llm_minhash_signatures",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id,
-               unnest(list_distinct(string_split(text, ' '))) AS term
-        FROM documents
-    )
-    SELECT doc_id,
-           MIN(CAST(('0x' || substr(md5('0_' || term), 1, 15)) AS BIGINT)) AS sig0,
-           MIN(CAST(('0x' || substr(md5('1_' || term), 1, 15)) AS BIGINT)) AS sig1,
-           MIN(CAST(('0x' || substr(md5('2_' || term), 1, 15)) AS BIGINT)) AS sig2,
-           MIN(CAST(('0x' || substr(md5('3_' || term), 1, 15)) AS BIGINT)) AS sig3
-    FROM tok GROUP BY doc_id
-    """,
-)
-def llm_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 4-permutation MinHash signature per document: min of
-    an md5-derived 60-bit hash of each distinct token, one column per
-    seed. Unlike MLlib's MinHashLSH (engine-private random coefficients,
-    rows-only check), this signature is portable and ORACLE-CHECKED —
-    sig equality estimates Jaccard similarity exactly as in the
-    Broder sketch.
-
-    Explode distinct tokens once, aggregate 4 mins in one map-side-partial
-    groupBy: the shuffle carries 4 longs per doc at any corpus size, and
-    banding for LSH is a groupBy over (sig_band) downstream.
-    """
-    docs = load(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("term")
-    )
-    return tok.groupBy("doc_id").agg(
-        *[F.min(_minhash_term_hash(s)).alias(f"sig{s}") for s in range(4)]
-    )
-
-
-# ---------------------------------------------------------------------------
 # Second batch: Q7/Q2 shapes, EWMA filter, banded MinHash LSH
 # ---------------------------------------------------------------------------
 
@@ -894,227 +843,9 @@ def window_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return daily.select("event_type", "day", "cnt", (num / den).alias("ewma5"))
 
 
-@register(
-    "llm_dedup_minhash_banded",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, t.term, t.pos FROM documents,
-          LATERAL (SELECT unnest(string_split(text, ' ')) AS term,
-                          generate_subscripts(string_split(text, ' '), 1) AS pos) t
-    ), sh AS (
-        SELECT a.doc_id, a.term || ' ' || b.term || ' ' || c.term AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-    ), sig AS (
-        SELECT doc_id,
-           MIN(CAST(('0x' || substr(md5('0_' || shingle), 1, 15)) AS BIGINT)) AS s0,
-           MIN(CAST(('0x' || substr(md5('0_' || shingle), 16, 15)) AS BIGINT)) AS s1,
-           MIN(CAST(('0x' || substr(md5('1_' || shingle), 1, 15)) AS BIGINT)) AS s2,
-           MIN(CAST(('0x' || substr(md5('1_' || shingle), 16, 15)) AS BIGINT)) AS s3
-        FROM sh GROUP BY doc_id
-    )
-    SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sig a JOIN sig b ON a.s0 = b.s0 AND a.s1 = b.s1 AND a.doc_id < b.doc_id
-        UNION
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sig a JOIN sig b ON a.s2 = b.s2 AND a.s3 = b.s3 AND a.doc_id < b.doc_id
-    ) pairs
-    """,
-)
-def llm_dedup_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded MinHash LSH candidate pairs, fully deterministic and
-    ORACLE-CHECKED: 3-token shingles -> 4 portable md5 min-hashes per doc
-    -> 2 bands of 2 rows -> docs sharing a band bucket become candidate
-    pairs. This is the real LSH shape (candidates from bucket
-    EQUI-JOINS, never an all-pairs product) with none of MLlib's private
-    randomness.
-
-    Scale: the signature agg is map-side partial (4 longs/doc); the band
-    join is ONE equi-join on (band, h1, h2) over band-exploded signature
-    rows (both sides share the partitioning, so Spark reuses the
-    exchange), and cost follows bucket sizes — on adversarial data you'd
-    cap/salt hot buckets, here 3-shingles over the corpus vocabulary keep
-    buckets tiny (measured: 27 pairs at sf0.01, 469 at sf0.1 — vs
-    80k/7.7M with unigram shingles, which saturate the sketch). Each md5
-    yields TWO independent 60-bit hashes (hex chars 1-15 and 16-30), so
-    the dominant md5 cost is half of a hash-per-row scheme; the explicit
-    repartition spreads the shingle+md5 map work across all cores even
-    when the input is one small file (a 100-TB input is already
-    many-partition, so the repartition is a no-op there by count).
-    A document of fewer than 3 tokens has no shingle and no signature,
-    as in the oracle's token self-join.
-    """
-    docs = spread(load(spark, sf_dir, "documents"), "doc_id")
-    sh = word_ngrams(docs, 3, "doc_id").withColumnRenamed("ngram", "term")
-
-    sig = sh.groupBy("doc_id").agg(
-        F.min(_minhash_term_hash(0)).alias("s0"),
-        F.min(_minhash_term_hash(0, 16)).alias("s1"),
-        F.min(_minhash_term_hash(1)).alias("s2"),
-        F.min(_minhash_term_hash(1, 16)).alias("s3"),
-    )
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("band"),
-                    F.col("s0").alias("h1"),
-                    F.col("s1").alias("h2"),
-                ),
-                F.struct(
-                    F.lit(1).alias("band"),
-                    F.col("s2").alias("h1"),
-                    F.col("s3").alias("h2"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.h1", "bk.h2")
-    # shuffle_hash (not broadcast): both sides are the same fact-sized
-    # signature pipeline; a broadcast would serialize the whole pipeline
-    # into the build side AND compute it twice (measured 3.5 s vs 0.97 s
-    # at sf0.1), while the shuffle join lets AQE reuse one exchange —
-    # and at 100 TB the signature side could never broadcast anyway.
-    a, b = banded.alias("a"), banded.alias("b").hint("shuffle_hash")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h1") == F.col("b.h1"))
-            & (F.col("a.h2") == F.col("b.h2"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
 # ---------------------------------------------------------------------------
 # Third batch: training-data pipeline ops (packing, chunking) + OHLC bars
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "llm_doc_packing",
-    oracle="""
-    WITH t AS (
-        SELECT doc_id, lang,
-               len(string_split(text, ' ')) AS n_tokens
-        FROM documents
-    ), c AS (
-        SELECT doc_id, lang, n_tokens,
-               SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND CURRENT ROW) AS cum_tokens
-        FROM t
-    )
-    SELECT doc_id, lang, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens,
-           CAST(FLOOR((cum_tokens - n_tokens) / 512) AS BIGINT) AS pack_id,
-           CAST(cum_tokens - n_tokens
-                - CAST(FLOOR((cum_tokens - n_tokens) / 512) AS BIGINT) * 512
-                AS BIGINT) AS pack_offset
-    FROM c
-    """,
-)
-def llm_doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy sequence packing for training-data prep (SURVEY.md §2.12):
-    assign each document to a fixed-budget (512-token) pack by its
-    cumulative token offset within its language stream — the standard
-    'concat then split every N tokens' pretraining layout, where a doc
-    belongs to the pack its FIRST token lands in.
-
-    All-integer arithmetic over a per-lang running sum -> exactly
-    hashable. Scale: the window partitions by lang and orders by doc_id;
-    at 100 TB you'd sub-partition the stream (e.g. lang × shard of 1M
-    docs) so no single partition serializes — same expression, finer key.
-    """
-    docs = load(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tokens")
-    )
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    c = t.withColumn("cum_tokens", F.sum("n_tokens").over(w))
-    start = F.col("cum_tokens") - F.col("n_tokens")
-    pack = F.floor(start / 512).cast("long")
-    return c.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        "cum_tokens",
-        pack.alias("pack_id"),
-        (start - pack * 512).cast("long").alias("pack_offset"),
-    )
-
-
-@register(
-    "llm_chunking",
-    oracle="""
-    WITH t AS (
-        SELECT doc_id, string_split(text, ' ') AS toks,
-               len(string_split(text, ' ')) AS n
-        FROM documents
-    ), s AS (
-        SELECT doc_id, toks, n,
-               list_sort(list_distinct(list_append(
-                   generate_series(0, greatest(n - 32, 0), 24),
-                   greatest(n - 32, 0)))) AS starts
-        FROM t
-    ), e AS (
-        SELECT doc_id, toks, n,
-               unnest(starts) AS chunk_start,
-               generate_subscripts(starts, 1) - 1 AS chunk_idx
-        FROM s
-    )
-    SELECT doc_id, chunk_idx, chunk_start,
-           len(toks[chunk_start + 1 : chunk_start + 32]) AS n_chunk_tokens,
-           array_to_string(toks[chunk_start + 1 : chunk_start + 32], ' ')
-               AS chunk_text
-    FROM e
-    """,
-)
-def llm_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping context-window chunking (SURVEY.md §2.12): split each
-    document into 32-token windows with stride 24 (8-token overlap), plus
-    a tail-aligned final window so no token is dropped — the standard
-    prep for embedding/RAG indexing.
-
-    Pure narrow projection: sequence/transform/posexplode inside codegen,
-    no shuffle, no Python — scales embarrassingly. Chunk grids are
-    deterministic on both engines (verified list semantics: Spark
-    slice(a, s+1, 32) ≡ DuckDB a[s+1 : s+32]).
-    """
-    docs = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    n = F.size(toks)
-    last_start = F.greatest(n - 32, F.lit(0))
-    starts = F.array_sort(
-        F.array_distinct(
-            F.concat(
-                F.sequence(F.lit(0), last_start, F.lit(24)),
-                F.array(last_start),
-            )
-        )
-    )
-    t = docs.select("doc_id", toks.alias("toks"), starts.alias("starts"))
-    e = t.select(
-        "doc_id",
-        "toks",
-        F.posexplode("starts").alias("chunk_idx", "chunk_start"),
-    )
-    chunk = F.slice("toks", F.col("chunk_start") + 1, 32)
-    return e.select(
-        "doc_id",
-        "chunk_idx",
-        "chunk_start",
-        F.size(chunk).alias("n_chunk_tokens"),
-        F.array_join(chunk, " ").alias("chunk_text"),
-    )
 
 
 @register(

@@ -1,27 +1,19 @@
-"""Round-3 extension pack #23: exact repeated-span dedup views and
-Kaplan-Meier survival curves.
+"""Round-3 extension pack #23: Kaplan-Meier survival curves.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. The patterns are public
-knowledge — exact-substring training-data deduplication (Lee et al. 2022,
-"Deduplicating Training Data Makes Language Models Better": repeated long
-token spans across documents are the dedup unit, not whole documents) and
-the Kaplan-Meier product-limit estimator (Kaplan & Meier 1958) — both
-re-expressed on the public PySpark DataFrame API over the driver's
-testdata.
+file:line citations into it are possible. The pattern is public
+knowledge — the Kaplan-Meier product-limit estimator (Kaplan & Meier
+1958) — re-expressed on the public PySpark DataFrame API over the
+driver's testdata.
 
-Hash-parity discipline (round-3 standard): shingles are byte-identical
-strings on both engines (split on ' ' / array_join vs string_split /
-array_to_string); every ratio folds as floor(1e6·a/b) over exact BIGINTs;
-the survival curve ships as the Nelson-Aalen cumulative hazard — a pure
-integer prefix sum — after the multi-SF slice caught a 1-ulp libm
-divergence in a first-cut micro-nat ln formulation (see the key's
-docstring).
+Hash-parity discipline (round-3 standard): the survival curve ships as
+the Nelson-Aalen cumulative hazard — a pure integer prefix sum — after
+the multi-SF slice caught a 1-ulp libm divergence in a first-cut
+micro-nat ln formulation (see the key's docstring).
 
-Scale posture (SURVEY.md §7.6): the span pipeline's only fact-sized
-shuffle is the shingle groupBy (map-side combinable); the KM curve does
-one user-keyed aggregate over the fact table and everything after runs on
-the bounded per-duration grid (≤ observation-window hours rows).
+Scale posture (SURVEY.md §7.6): the KM curve does one user-keyed
+aggregate over the fact table and everything after runs on the bounded
+per-duration grid (≤ observation-window hours rows).
 """
 
 from __future__ import annotations
@@ -29,129 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
-K_SPAN = 8  # tokens per span shingle (Lee et al. use 50 BPE tokens at
 # web-corpus doc lengths; 8 matches this corpus' 10..99-token docs)
-
-
-def _span_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All K_SPAN-token shingles, one row per occurrence (docs shorter
-    than K_SPAN tokens carry no spans and drop out, same WHERE on both
-    engines)."""
-    d = load(spark, sf_dir, "documents")
-    return word_ngrams(d, K_SPAN, "doc_id").withColumnRenamed("ngram", "shingle")
-
-
-_SPAN_SH_SQL = f"""
-    base AS (
-        SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-        WHERE len(string_split(text, ' ')) >= {K_SPAN}
-    ),
-    sh AS (
-        SELECT doc_id,
-               array_to_string(list_slice(toks, i, i + {K_SPAN - 1}), ' ') AS shingle
-        FROM (
-            SELECT doc_id, toks,
-                   unnest(range(1, len(toks) - {K_SPAN - 2})) AS i
-            FROM base
-        ) x
-    )
-"""
-
-
-@register(
-    "llm_span_dedup_coverage",
-    oracle=f"""
-    WITH {_SPAN_SH_SQL},
-    docsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    nd AS (
-        SELECT shingle, CAST(count(*) AS BIGINT) AS n_docs
-        FROM docsh GROUP BY shingle
-    )
-    SELECT d.doc_id,
-           CAST(count(*) AS BIGINT) AS n_spans,
-           CAST(SUM(CASE WHEN n.n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_shared_spans,
-           CAST(floor(1000000.0 * SUM(CASE WHEN n.n_docs >= 2 THEN 1 ELSE 0 END)
-                      / count(*)) AS BIGINT) AS shared_micro,
-           5 * SUM(CASE WHEN n.n_docs >= 2 THEN 1 ELSE 0 END) >= count(*)
-               AS is_span_dup
-    FROM docsh d JOIN nd n USING (shingle)
-    GROUP BY d.doc_id
-    """,
-)
-def llm_span_dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact repeated-span coverage per document (SURVEY.md §2.12): the
-    fraction of a doc's distinct 8-token spans that also occur verbatim
-    in at least one OTHER document — the per-doc view of exact-substring
-    dedup (Lee et al. 2022), where the span, not the document, is the
-    duplication unit. Docs crossing 20% shared-span coverage are flagged
-    with the exact integer form 5·shared >= total (no float threshold).
-
-    Spark shape: spans built JVM-side by `word_ngrams` (no Python
-    boundary); ONE map-side-combinable groupBy over
-    distinct (doc, span) pairs computes span document-frequency; the
-    join back is span-keyed. At 100 TB the join/groupBy key would be
-    xxhash64(span) instead of the span string (same plan, ~10× less
-    shuffle) — string form keeps the oracle byte-identical here.
-    """
-    docsh = _span_shingles(spark, sf_dir).distinct()
-    nd = docsh.groupBy("shingle").agg(F.count("*").alias("n_docs"))
-    shared = (F.col("n_docs") >= 2).cast("long")
-    return (
-        docsh.join(nd, "shingle")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_spans"),
-            F.sum(shared).alias("n_shared_spans"),
-            F.floor(1000000.0 * F.sum(shared) / F.count("*"))
-            .cast("long")
-            .alias("shared_micro"),
-            (5 * F.sum(shared) >= F.count("*")).alias("is_span_dup"),
-        )
-    )
-
-
-@register(
-    "llm_span_hot_spans",
-    oracle=f"""
-    WITH {_SPAN_SH_SQL}
-    SELECT shingle,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           CAST(count(*) AS BIGINT) AS n_occurrences
-    FROM sh GROUP BY shingle
-    HAVING count(DISTINCT doc_id) >= 2
-    ORDER BY n_docs DESC, n_occurrences DESC, shingle
-    LIMIT 100
-    """,
-)
-def llm_span_hot_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global hot-span report (SURVEY.md §2.12): the top repeated
-    8-token spans ranked by how many documents carry them — the
-    candidate list an exact-substring dedup pass would cut (boilerplate
-    headers, license blocks, template sentences). Orders by
-    (n_docs, n_occurrences, shingle) so the limit is total-order
-    deterministic (shingle is the unique key).
-
-    Spark shape: one groupBy(span) with count + count(DISTINCT doc) —
-    map-side partial on both; the top-100 is a TakeOrdered, never a
-    global sort materialization.
-    """
-    sh = _span_shingles(spark, sf_dir)
-    return (
-        sh.groupBy("shingle")
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count("*").alias("n_occurrences"),
-        )
-        .where(F.col("n_docs") >= 2)
-        .orderBy(F.desc("n_docs"), F.desc("n_occurrences"), "shingle")
-        .limit(100)
-    )
 
 
 STUDY_HOURS = 100  # administrative censoring horizon after first enrollment

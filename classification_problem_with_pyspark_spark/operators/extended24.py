@@ -1,27 +1,24 @@
 """Round-3 extension pack #24: one-way ANOVA from exact moments, Fano
-dispersion index, sign-random-projection LSH signatures, and DSIR-style
-domain-affinity importance resampling.
+dispersion index, and sign-random-projection LSH signatures.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. The patterns are public
 knowledge — Fisher's one-way ANOVA, the Fano factor / index of dispersion,
-sign-random-projection LSH (Charikar 2002, the SimHash family applied to
-dense vectors), and data-selection-by-importance-resampling (DSIR, Xie et
-al. 2023: upweight corpus documents by affinity to a target-domain n-gram
-profile) — re-expressed on the public PySpark DataFrame API over the
-driver's testdata.
+and sign-random-projection LSH (Charikar 2002, the SimHash family applied
+to dense vectors) — re-expressed on the public PySpark DataFrame API over
+the driver's testdata.
 
 Hash-parity discipline (round-3 standard, hard-won in this round's
 multi-SF work): every statistic below is an exact BIGINT contract —
 100-dollar-unit folds keep squared sums under 2^53 (the HHI lesson), the
-Fano factor and ANOVA F fold as single integer-division expressions, SRP
-signatures come from micro-quantized integer dot products (sign of an
-exact integer, no float sum ordering), and resampling acceptance is an
-md5-threshold comparison. Zero transcendentals, zero bare doubles.
+Fano factor and ANOVA F fold as single integer-division expressions, and
+SRP signatures come from micro-quantized integer dot products (sign of an
+exact integer, no float sum ordering). Zero transcendentals, zero bare
+doubles.
 
 Scale posture (SURVEY.md §7.6): every key's only fact-sized shuffle is
 one map-side-combinable groupBy; the SRP plane fan-out is a broadcast of
-16 rows; profiles/models are bounded broadcast tables.
+16 rows.
 """
 
 from __future__ import annotations
@@ -36,8 +33,6 @@ from classification_problem_with_pyspark_spark.functions.embedding_kernels impor
     sign_planes,
     sign_projections,
 )
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
-from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -323,106 +318,3 @@ def emb_srp_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("bucket_size"),
     )
 
-
-# ---------------------------------------------------------------------------
-# DSIR-style domain-affinity importance resampling
-# ---------------------------------------------------------------------------
-
-PROFILE_SIZE = 200
-
-
-@register(
-    "llm_domain_affinity_resample",
-    oracle=f"""
-    WITH base AS (
-        SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents
-        WHERE len(string_split(text, ' ')) >= 3
-    ),
-    feats AS (
-        SELECT DISTINCT doc_id, lang,
-               array_to_string(list_slice(toks, i, i + 2), ' ') AS feat
-        FROM (
-            SELECT doc_id, lang, toks,
-                   unnest(range(1, len(toks) - 1)) AS i
-            FROM base
-        ) x
-    ),
-    profile AS (
-        SELECT feat FROM (
-            SELECT feat, count(DISTINCT doc_id) AS df
-            FROM feats WHERE lang = 'en' GROUP BY feat
-        ) d
-        ORDER BY df DESC, feat LIMIT {PROFILE_SIZE}
-    ),
-    scored AS (
-        SELECT t.doc_id, t.lang,
-               CAST(count(*) AS BIGINT) AS n_feats_distinct,
-               CAST(SUM(CASE WHEN p.feat IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_domain_hits,
-               CAST((1000000 * SUM(CASE WHEN p.feat IS NOT NULL
-                                        THEN 1 ELSE 0 END)) // count(*)
-                    AS BIGINT) AS affinity_micro
-        FROM feats t LEFT JOIN profile p USING (feat)
-        GROUP BY t.doc_id, t.lang
-    )
-    SELECT doc_id, lang, n_feats_distinct, n_domain_hits, affinity_micro
-    FROM scored
-    WHERE CAST(('0x' || substr(md5('resample_' || CAST(doc_id AS VARCHAR)),
-                               1, 15)) AS BIGINT) % 1000000 < affinity_micro
-    """,
-)
-def llm_domain_affinity_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style importance resampling toward a target domain
-    (SURVEY.md §2.12): score every document by lexical affinity to the
-    English-subcorpus profile (its top-200 THREE-TOKEN shingles by
-    document frequency), then accept each doc with probability equal to
-    its affinity via a deterministic md5-threshold draw — the
-    data-selection-by-importance-resampling recipe (Xie et al. 2023)
-    with n-gram features and a portable acceptance function, beside
-    `llm_mixture_resample`'s fixed per-source rates. Features are
-    3-shingles, NOT unigrams: this corpus draws from a 31-word pool, so
-    every unigram is in any top-200 profile and unigram affinity
-    degenerates to 1.0 for all docs (measured) — the shingle space
-    (~20k) actually separates domains (affinity spans 0–0.30 at
-    sf0.01, accepting 23/500 docs).
-
-    Exactness: affinity folds as floor-micro of two exact counts; the
-    profile cut is total-order deterministic (df DESC, shingle ASC);
-    acceptance compares an md5-derived residue against affinity_micro —
-    no RNG, no float probability anywhere.
-
-    Scale: the profile is a bounded broadcast (200 rows); the only
-    fact-sized shuffles are the distinct (doc, shingle) explode and the
-    doc-keyed rollup, both map-side combinable. At 100 TB the features
-    would be hashed buckets (fixed-width profile) exactly as DSIR does.
-    """
-    d = load(spark, sf_dir, "documents")
-    feats = (
-        word_ngrams(d, 3, "doc_id", "lang")
-        .withColumnRenamed("ngram", "feat")
-        .distinct()
-    )
-    profile = (
-        feats.where(F.col("lang") == "en")
-        .groupBy("feat")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .orderBy(F.desc("df"), "feat")
-        .limit(PROFILE_SIZE)
-        .select("feat", F.lit(1).alias("hit"))
-    )
-    scored = (
-        feats.join(F.broadcast(profile), "feat", "left")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count("*").alias("n_feats_distinct"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_domain_hits"),
-            F.expr(
-                "CAST((1000000 * SUM(CASE WHEN hit IS NOT NULL THEN 1 ELSE 0 END))"
-                " DIV count(*) AS BIGINT)"
-            ).alias("affinity_micro"),
-        )
-    )
-    draw = md5_long(F.concat(F.lit("resample_"), F.col("doc_id").cast("string"))) % 1000000
-    return scored.where(draw < F.col("affinity_micro")).select(
-        "doc_id", "lang", "n_feats_distinct", "n_domain_hits", "affinity_micro"
-    )

@@ -1,9 +1,8 @@
 """Round-1 extension pack #3: the remaining classic TPC-H query shapes
 (Q4/Q8/Q9/Q10/Q12/Q15/Q16/Q17/Q20/Q21 analogs), adapted to the driver's
 TPC-H-ish testdata (no partsupp table, no commit/receipt dates, no
-shipmode — see FIXTURES.md), plus training-pipeline and event-analytics
-additions: deterministic hash-based dataset splits, per-lang curriculum
-staging, event-type Markov transitions, and inter-arrival statistics.
+shipmode — see FIXTURES.md), plus event-analytics additions: event-type
+Markov transitions and inter-arrival statistics.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session, so
 no file:line citations into it are possible; each operator cites the SURVEY
@@ -27,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -581,114 +579,6 @@ def subquery_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(s), late.l_suppkey == s.s_suppkey)
         .groupBy("s_name")
         .agg(F.count("*").alias("numwait"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-pipeline: deterministic hash split (train/val/test)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "llm_split_hash",
-    oracle="""
-    WITH assigned AS (
-        SELECT lang,
-               CASE WHEN bucket < 8 THEN 'train'
-                    WHEN bucket = 8 THEN 'val'
-                    ELSE 'test' END AS split,
-               len(string_split(text, ' ')) AS n_tokens
-        FROM (
-            SELECT lang, text,
-                   CAST(('0x' || substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 15))
-                        AS BIGINT) % 10 AS bucket
-            FROM documents
-        ) b
-    )
-    SELECT split, lang,
-           COUNT(*) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-    FROM assigned
-    GROUP BY split, lang
-    """,
-)
-def llm_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split by portable content hash
-    (md5(doc_id) mod 10 -> 80/10/10), reported per (split, lang).
-
-    The canonical training-data split at scale: assignment is a pure
-    function of the row key — no shuffle, no seed state, stable across
-    re-runs and engines, and any worker can re-derive it. md5 (not
-    engine-private hash) keeps Spark and DuckDB bit-identical; all
-    outputs are integer counts.
-    """
-    d = load(spark, sf_dir, "documents")
-    bucket = md5_long(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))) % 10
-    split = (
-        F.when(bucket < 8, "train").when(bucket == 8, "val").otherwise("test")
-    )
-    return (
-        d.select(
-            split.alias("split"),
-            "lang",
-            F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
-        )
-        .groupBy("split", "lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-pipeline: per-lang curriculum staging
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "llm_curriculum_stages",
-    oracle="""
-    WITH staged AS (
-        SELECT lang,
-               NTILE(4) OVER (PARTITION BY lang
-                              ORDER BY length(text), doc_id) AS stage,
-               length(text) AS n_len
-        FROM documents
-    )
-    SELECT lang, stage,
-           COUNT(*) AS n_docs,
-           CAST(SUM(n_len) AS BIGINT) AS total_chars,
-           MIN(n_len) AS min_chars,
-           MAX(n_len) AS max_chars
-    FROM staged
-    GROUP BY lang, stage
-    """,
-)
-def llm_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curriculum-learning staging: shortest-to-longest quartiles per
-    language (NTILE over a per-lang window), with per-stage size stats.
-
-    The window partitions by lang — never a global single-task sort; at
-    100 TB each language sorts independently and NTILE's rank arithmetic
-    is distributed by Spark's window exec. doc_id breaks length ties so
-    stage assignment is deterministic. All-integer outputs.
-    """
-    d = load(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(F.length("text"), "doc_id")
-    return (
-        d.select(
-            "lang",
-            F.ntile(4).over(w).alias("stage"),
-            F.length("text").alias("n_len"),
-        )
-        .groupBy("lang", "stage")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_len").alias("total_chars"),
-            F.min("n_len").alias("min_chars"),
-            F.max("n_len").alias("max_chars"),
-        )
     )
 
 

@@ -1,36 +1,26 @@
-"""Round-3 extension pack #30: exact Spearman rank correlation and
-chi-square keyness (distinctive-term extraction).
+"""Round-3 extension pack #30: exact Spearman rank correlation.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. The patterns are public
-knowledge — Spearman's rank correlation with average-rank tie handling,
-and chi-square keyness for corpus-distinctive terms (the log-likelihood/
-chi² keyword-extraction family of corpus linguistics, Dunning 1993
-lineage) — re-expressed on the public PySpark DataFrame API over the
-driver's testdata.
+file:line citations into it are possible. The pattern is public
+knowledge — Spearman's rank correlation with average-rank tie handling —
+re-expressed on the public PySpark DataFrame API over the driver's
+testdata.
 
 Hash-parity discipline (round-3 standard): Spearman runs entirely in
 DOUBLED average ranks (Σ rank2 = n(n+1) exactly, so the mean is the
 integer n+1; covariance and variances are exact BIGINTs; ρ² folds as a
 two-step integer division that never leaves int64 range — cov2² alone
-would overflow at sf0.1). Keyness χ² is ONE double expression mirrored
-text-for-text on both engines over exact BIGINT contingency counts
-(int→double conversions exact below 2^53; identical IEEE op order ⇒
-identical bits — the agg_two_proportion_ztest precedent).
+would overflow at sf0.1).
 
 Scale posture (SURVEY.md §7.6): Spearman needs one per-user aggregate +
-two bounded rank windows over the distinct-value grids; keyness is two
-map-side-combinable groupBys (pair and margins) + a broadcast of the
-bounded margin tables.
+two bounded rank windows over the distinct-value grids.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -177,130 +167,4 @@ def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("((1000000 * cov2) DIV varx2) * cov2 DIV vary2").alias(
             "rho_sq_micro"
         ),
-    )
-
-
-@register(
-    "llm_keyness_chi2",
-    oracle="""
-    WITH grams AS (
-        SELECT source,
-               array_to_string(list_slice(toks, i, i + 1), ' ') AS g
-        FROM (
-            SELECT source, string_split(text, ' ') AS toks,
-                   unnest(range(1, len(string_split(text, ' ')))) AS i
-            FROM documents WHERE len(string_split(text, ' ')) >= 2
-        ) x
-    ),
-    pair AS (
-        SELECT source, g, CAST(count(*) AS BIGINT) AS a
-        FROM grams GROUP BY source, g
-    ),
-    gm AS (SELECT g, CAST(count(*) AS BIGINT) AS g_tot FROM grams GROUP BY g),
-    sm AS (
-        SELECT source, CAST(count(*) AS BIGINT) AS s_tot
-        FROM grams GROUP BY source
-    ),
-    nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM grams),
-    cont AS (
-        SELECT p.source, p.g, p.a,
-               gm.g_tot - p.a AS b,
-               sm.s_tot - p.a AS c,
-               nn.n - gm.g_tot - sm.s_tot + p.a AS d,
-               nn.n AS n
-        FROM pair p JOIN gm USING (g) JOIN sm USING (source), nn
-    ),
-    scored AS (
-        SELECT source, g, a,
-               CAST(n AS DOUBLE)
-               * (CAST(a AS DOUBLE) * CAST(d AS DOUBLE)
-                  - CAST(b AS DOUBLE) * CAST(c AS DOUBLE))
-               * (CAST(a AS DOUBLE) * CAST(d AS DOUBLE)
-                  - CAST(b AS DOUBLE) * CAST(c AS DOUBLE))
-               / (CAST(a + b AS DOUBLE) * CAST(c + d AS DOUBLE)
-                  * CAST(a + c AS DOUBLE) * CAST(b + d AS DOUBLE)) AS chi2
-        FROM cont
-    ),
-    top AS (
-        SELECT source, g AS bigram, a AS n_occurrences, chi2,
-               row_number() OVER (PARTITION BY source
-                                  ORDER BY chi2 DESC, g) AS pos
-        FROM scored
-    )
-    SELECT source, CAST(pos AS BIGINT) AS pos, bigram, n_occurrences, chi2
-    FROM top WHERE pos <= 3 ORDER BY source, pos
-    """,
-)
-def llm_keyness_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square keyness: the 3 most source-distinctive word bigrams
-    per document source (SURVEY.md §2.12) — the corpus-linguistics
-    keyword-extraction recipe: a 2×2 contingency (this bigram vs rest ×
-    this source vs rest) scored by χ², ranked per source. The
-    distinctive-vocabulary report run when auditing what makes one data
-    source different from the mixture (beside `llm_tfidf`'s per-doc
-    weighting and `llm_ngram_profile`'s global counts).
-
-    Exactness: contingency counts are exact BIGINTs; χ² is ONE double
-    expression mirrored text-for-text (exact int→double conversions,
-    identical IEEE op order ⇒ bit-identical doubles — the ztest
-    precedent); the cut is total-order deterministic (χ² DESC, bigram).
-
-    Scale: two map-side-combinable groupBys (pair + margins); margins
-    broadcast; ranking windows run per source over the bounded
-    per-source vocabulary.
-    """
-    d = load(spark, sf_dir, "documents")
-    grams = word_ngrams(d, 2, "source").withColumnRenamed("ngram", "g")
-    pair = grams.groupBy("source", "g").agg(F.count("*").alias("a"))
-    gm = grams.groupBy("g").agg(F.count("*").alias("g_tot"))
-    sm = grams.groupBy("source").agg(F.count("*").alias("s_tot"))
-    nn = grams.agg(F.count("*").alias("n"))
-    cont = (
-        pair.join(F.broadcast(gm), "g")
-        .join(F.broadcast(sm), "source")
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "source",
-            "g",
-            "a",
-            (F.col("g_tot") - F.col("a")).alias("b"),
-            (F.col("s_tot") - F.col("a")).alias("c"),
-            (F.col("n") - F.col("g_tot") - F.col("s_tot") + F.col("a")).alias(
-                "d"
-            ),
-            "n",
-        )
-    )
-    chi2 = F.expr(
-        "CAST(n AS DOUBLE)"
-        " * (CAST(a AS DOUBLE) * CAST(d AS DOUBLE)"
-        "    - CAST(b AS DOUBLE) * CAST(c AS DOUBLE))"
-        " * (CAST(a AS DOUBLE) * CAST(d AS DOUBLE)"
-        "    - CAST(b AS DOUBLE) * CAST(c AS DOUBLE))"
-        " / (CAST(a + b AS DOUBLE) * CAST(c + d AS DOUBLE)"
-        "    * CAST(a + c AS DOUBLE) * CAST(b + d AS DOUBLE))"
-    )
-    w = Window.partitionBy("source").orderBy(F.desc("chi2"), "g")
-    top = cont.select(
-        "source",
-        "g",
-        "a",
-        chi2.alias("chi2"),
-    ).select(
-        "source",
-        F.col("g").alias("bigram"),
-        F.col("a").alias("n_occurrences"),
-        "chi2",
-        F.row_number().over(w).alias("pos"),
-    )
-    return (
-        top.where(F.col("pos") <= 3)
-        .select(
-            "source",
-            F.col("pos").cast("long").alias("pos"),
-            "bigram",
-            "n_occurrences",
-            "chi2",
-        )
-        .orderBy("source", "pos")
     )

@@ -1,27 +1,21 @@
-"""Round-3 extension pack #32: exact Shapley-value channel attribution
-and green-list watermark detection.
+"""Round-3 extension pack #32: exact Shapley-value channel attribution.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. The patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — Shapley-value data-driven attribution (the coalition-game
-formulation marketing analytics uses; Shapley 1953) and green-list LLM
-watermark detection (Kirchenbauer et al. 2023: a hash of the previous
-token partitions the vocabulary; watermarked text over-selects the
-"green" half, detected by a proportion z-test) — re-expressed on the
+formulation marketing analytics uses; Shapley 1953) — re-expressed on the
 public PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): with k=4 channels the Shapley
 position weights |S|!(k−1−|S|)!/k! are the rationals {1/4, 1/12, 1/12,
 1/4} — multiplied by 12 they are the INTEGERS {3, 1, 1, 3}, so every
 φ·12 is an exact BIGINT and efficiency (Σφ12 = 12·(v(full) − v(∅))) is
-an exact integer identity asserted in tests. Watermark greenness is an
-md5-parity bit; the detection z² folds as (2g−n)²/n in micro units —
-no sqrt, no floats anywhere in the pack.
+an exact integer identity asserted in tests — no sqrt, no floats
+anywhere in the pack.
 
 Scale posture (SURVEY.md §7.6): attribution reduces the fact table to
 one per-user (touch-bitmask, converted) row, then plays the whole
-coalition game on 16-row broadcast tables; watermark detection is one
-narrow shingle explode + a doc-keyed rollup, embarrassingly parallel.
+coalition game on 16-row broadcast tables.
 """
 
 from __future__ import annotations
@@ -29,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -152,96 +145,4 @@ def events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .orderBy("channel")
-    )
-
-
-WM_Z2_FLAG = 16  # flag docs with z^2 > 16 (|z| > 4)
-
-
-@register(
-    "llm_watermark_greenlist",
-    oracle=f"""
-    WITH pairs AS (
-        SELECT doc_id,
-               toks[i] AS prev, toks[i + 1] AS cur
-        FROM (
-            SELECT doc_id, string_split(text, ' ') AS toks,
-                   unnest(range(1, len(string_split(text, ' ')))) AS i
-            FROM documents WHERE len(string_split(text, ' ')) >= 2
-        ) x
-    ),
-    flagged AS (
-        SELECT doc_id,
-               CASE WHEN CAST(('0x' || substr(md5('wm_' || prev || '_' || cur),
-                                              1, 15)) AS BIGINT) % 2 = 0
-                    THEN 1 ELSE 0 END AS green
-        FROM pairs
-    ),
-    per_doc AS (
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-               CAST(SUM(green) AS BIGINT) AS n_green
-        FROM flagged GROUP BY doc_id
-    )
-    SELECT doc_id, n_pairs, n_green,
-           CAST((1000000 * (2 * n_green - n_pairs) * (2 * n_green - n_pairs))
-                // n_pairs AS BIGINT) AS z_sq_micro,
-           (2 * n_green - n_pairs) * (2 * n_green - n_pairs)
-               > {WM_Z2_FLAG} * n_pairs AS is_flagged
-    FROM per_doc
-    """,
-)
-def llm_watermark_greenlist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Green-list watermark detection (SURVEY.md §2.12): for every
-    adjacent token pair, the successor is "green" when the md5 parity
-    of (prev, cur) selects it — natural text lands near 50% green, a
-    Kirchenbauer-style watermarked generator over-selects green, and
-    the per-doc proportion z² = (2g−n)²/n separates them. On this
-    (unwatermarked) corpus no doc should cross |z| > 4 — the honest
-    negative result; the detection mechanics are proven in tests by
-    constructing a greedily-green synthetic text and checking it flags.
-
-    Exactness: greenness is an md5 parity bit; z² folds as one integer
-    division in micro units; the flag is the pure integer comparison
-    (2g−n)² > 16n.
-
-    Scale: one narrow pair explode + doc-keyed rollup — no shuffle
-    beyond the per-doc combine; runs at scan speed over 100 TB of text.
-    """
-    d = load(spark, sf_dir, "documents")
-    pairs = (
-        d.select("doc_id", F.split("text", " ").alias("toks"))
-        .where(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1), "
-                    "i -> struct(element_at(toks, i) AS prev,"
-                    " element_at(toks, i + 1) AS cur))"
-                )
-            ).alias("pr"),
-        )
-        .select("doc_id", F.col("pr.prev").alias("prev"), F.col("pr.cur").alias("cur"))
-    )
-    green = (
-        md5_long(F.concat(F.lit("wm_"), F.col("prev"), F.lit("_"), F.col("cur")))
-        % 2
-        == 0
-    ).cast("long")
-    per_doc = pairs.select("doc_id", green.alias("green")).groupBy("doc_id").agg(
-        F.count("*").alias("n_pairs"),
-        F.sum("green").alias("n_green"),
-    )
-    return per_doc.select(
-        "doc_id",
-        "n_pairs",
-        "n_green",
-        F.expr(
-            "CAST((1000000 * (2 * n_green - n_pairs) * (2 * n_green - n_pairs))"
-            " DIV n_pairs AS BIGINT)"
-        ).alias("z_sq_micro"),
-        F.expr(
-            f"(2 * n_green - n_pairs) * (2 * n_green - n_pairs)"
-            f" > {WM_Z2_FLAG} * n_pairs"
-        ).alias("is_flagged"),
     )

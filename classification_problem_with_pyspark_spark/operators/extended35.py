@@ -1,28 +1,19 @@
-"""Round-3 extension pack #35: media payload fingerprint blocking and a
-preference-data length-bias audit.
+"""Round-3 extension pack #35: media payload fingerprint blocking.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. The patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — cheap content-fingerprint blocking for media near-dup
 candidate generation (the perceptual-hash family reduced to exact
-integer statistics) and the length-bias audit run on RLHF/DPO preference
-corpora (reward models notoriously learn "longer is better"; measuring
-the chosen-vs-rejected length skew is the standard pre-training check) —
-re-expressed on the public PySpark DataFrame API over the driver's
-testdata.
+integer statistics) — re-expressed on the public PySpark DataFrame API
+over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): payload fingerprints are
 exact integer (byte-length, byte-sum) statistics quantized by integer
-division; the bias report is counts and floor-micro shares plus a
-trunc-safe signed mean gap. The length-bias oracle EMBEDS the registered
-llm_preference_pairs oracle verbatim (one definition, two keys), exactly
-as the Spark side calls its registered fn.
+division.
 
 Scale posture (SURVEY.md §7.6): fingerprints need one per-position
 explode collapsed by a media-keyed combine (scan-speed, like the CDC
-boundary scan); blocking output is bucket-bounded. The bias audit joins
-the bounded pair table (2 rows per (lang, source) group) back to doc
-lengths.
+boundary scan); blocking output is bucket-bounded.
 """
 
 from __future__ import annotations
@@ -30,16 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.extended9 import (
-    llm_preference_pairs,
-)
-from classification_problem_with_pyspark_spark.registry import QUERIES, register
+from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
 LEN_BUCKET = 4  # fingerprint quantization: byte-length bucket width
 SUM_BUCKET = 512  # fingerprint quantization: byte-sum bucket width
-
-_PREF_PAIRS_ORACLE = QUERIES["llm_preference_pairs"].oracle
 
 
 @register(
@@ -125,80 +111,4 @@ def multimodal_payload_fingerprint_buckets(
         fp.join(sized, "bucket_id")
         .select("media_id", "byte_len", "byte_sum", "bucket_id", "bucket_size")
         .orderBy("bucket_id", "media_id")
-    )
-
-
-@register(
-    "llm_preference_length_bias",
-    oracle=f"""
-    WITH pairs AS ({_PREF_PAIRS_ORACLE}),
-    lens AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n FROM documents),
-    j AS (
-        SELECT p.lang, c.n AS chosen_len, r.n AS rejected_len
-        FROM pairs p
-        JOIN lens c ON p.chosen_doc_id = c.doc_id
-        JOIN lens r ON p.rejected_doc_id = r.doc_id
-    )
-    SELECT lang,
-           CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(CASE WHEN chosen_len > rejected_len THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_chosen_longer,
-           CAST((1000000 * SUM(CASE WHEN chosen_len > rejected_len
-                                    THEN 1 ELSE 0 END)) // count(*)
-                AS BIGINT) AS longer_share_micro,
-           CAST((1000000 * SUM(chosen_len - rejected_len)) // count(*)
-                AS BIGINT) AS mean_gap_micro
-    FROM j GROUP BY lang ORDER BY lang
-    """,
-)
-def llm_preference_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length-bias audit over the DPO preference pairs (SURVEY.md
-    §2.12): per language, how often the CHOSEN document is simply the
-    longer one, and the mean signed length gap — the check run before
-    training a reward model, because preference data where chosen ≫
-    rejected in length teaches "longer is better" instead of quality
-    (the classic RLHF length-hacking failure). Reuses the registered
-    `llm_preference_pairs` construction on BOTH sides (the Spark fn is
-    called directly; the oracle embeds its oracle verbatim), so the
-    audit can never drift from the pairs it audits.
-
-    Exactness: lengths are exact; shares fold floor-micro; the signed
-    mean gap uses the verified trunc-toward-zero division semantics.
-
-    Scale: the pair table is bounded (≤ 2 rows per (lang, source)
-    group); the audit is two broadcast-sized joins and a 5-row rollup.
-    """
-    pairs = llm_preference_pairs(spark, sf_dir)
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", F.length("text").cast("long").alias("n")
-    )
-    j = (
-        pairs.join(
-            d.select(F.col("doc_id").alias("c_id"), F.col("n").alias("chosen_len")),
-            F.col("chosen_doc_id") == F.col("c_id"),
-        )
-        .join(
-            d.select(
-                F.col("doc_id").alias("r_id"), F.col("n").alias("rejected_len")
-            ),
-            F.col("rejected_doc_id") == F.col("r_id"),
-        )
-        .select("lang", "chosen_len", "rejected_len")
-    )
-    longer = (F.col("chosen_len") > F.col("rejected_len")).cast("long")
-    return (
-        j.groupBy("lang")
-        .agg(
-            F.count("*").alias("n_pairs"),
-            F.sum(longer).alias("n_chosen_longer"),
-            F.expr(
-                "CAST((1000000 * SUM(CASE WHEN chosen_len > rejected_len"
-                " THEN 1 ELSE 0 END)) DIV count(*) AS BIGINT)"
-            ).alias("longer_share_micro"),
-            F.expr(
-                "CAST((1000000 * SUM(chosen_len - rejected_len)) DIV count(*)"
-                " AS BIGINT)"
-            ).alias("mean_gap_micro"),
-        )
-        .orderBy("lang")
     )

@@ -1,25 +1,22 @@
-"""Round-3 extension pack #39: readability scoring, graph link
-prediction, and the GROUP BY ALL SQL surface.
+"""Round-3 extension pack #39: graph link prediction and the GROUP BY ALL
+SQL surface.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. The patterns are public
-knowledge — Flesch reading ease (1948; the vowel-run syllable heuristic
-is the standard cheap approximation), common-neighbor/Jaccard link
-prediction (Liben-Nowell & Kleinberg 2003), and the GROUP BY ALL syntax
+knowledge — common-neighbor/Jaccard link prediction (Liben-Nowell &
+Kleinberg 2003) and the GROUP BY ALL syntax
 (DuckDB-pioneered, adopted by Spark 4) — re-expressed on the public
 PySpark DataFrame API over the driver's testdata.
 
-Hash-parity discipline (round-3 standard): Flesch's float constants have
-three decimals, so the score folds EXACTLY in milli units
-(206835 − 1015·W DIV S − 84600·Y DIV W); link-prediction Jaccard is
+Hash-parity discipline (round-3 standard): link-prediction Jaccard is
 floor-micro over exact common-neighbor counts with a total-order top-50;
 GROUP BY ALL is pinned by running the SAME text through both engines'
 parsers.
 
-Scale posture (SURVEY.md §7.6): readability is a narrow scan-speed
-projection; link prediction bounds the wedge join by the co-purchase
-graph's degree-capped adjacency (the triangle-count discipline); GROUP
-BY ALL compiles to the identical aggregate plan as the explicit list.
+Scale posture (SURVEY.md §7.6): link prediction bounds the wedge join by
+the co-purchase graph's degree-capped adjacency (the triangle-count
+discipline); GROUP BY ALL compiles to the identical aggregate plan as
+the explicit list.
 """
 
 from __future__ import annotations
@@ -32,69 +29,6 @@ from classification_problem_with_pyspark_spark.sources.catalog import load
 
 LINK_TOP_K = 50
 HUB_CAP = 64  # wedge centers above this degree are skipped (standard LP preprocessing)
-
-
-@register(
-    "llm_readability_flesch",
-    oracle="""
-    WITH m AS (
-        SELECT doc_id, lang,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS words,
-               CAST(1 + length(text) - length(replace(text, '.', ''))
-                    AS BIGINT) AS sents,
-               CAST(len(regexp_extract_all(text, '[aeiouAEIOU]+'))
-                    AS BIGINT) AS syllables
-        FROM documents
-    )
-    SELECT doc_id, lang, words, sents, syllables,
-           CAST(206835 - (1015 * words) // sents
-                       - (84600 * syllables) // words AS BIGINT)
-               AS flesch_milli
-    FROM m
-    """,
-)
-def llm_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch reading-ease per document (SURVEY.md §2.12 text
-    analysis): 206.835 − 1.015·(words/sentence) − 84.6·(syllables/word)
-    with the standard vowel-run syllable heuristic — the readability
-    feature quality filters add next to `llm_quality_score`'s
-    length/TTR signals (very low Flesch marks run-on or
-    consonant-garbage text). Sentences count period-delimited spans
-    (this corpus has none → every doc is one sentence, truthfully
-    reported; the formula still ranks by syllable density).
-
-    Exactness: Flesch's constants carry exactly three decimals, so the
-    WHOLE formula folds in milli units with two integer divisions —
-    no float constants at query time.
-
-    Scale: one narrow projection (split/replace/regexp counts) at scan
-    speed; no shuffle at all.
-    """
-    d = load(spark, sf_dir, "documents")
-    m = d.select(
-        "doc_id",
-        "lang",
-        F.size(F.split("text", " ")).cast("long").alias("words"),
-        (
-            1 + F.length("text") - F.length(F.replace(F.col("text"), F.lit(".")))
-        )
-        .cast("long")
-        .alias("sents"),
-        F.size(F.regexp_extract_all(F.col("text"), F.lit("[aeiouAEIOU]+"), 0))
-        .cast("long")
-        .alias("syllables"),
-    )
-    return m.select(
-        "doc_id",
-        "lang",
-        "words",
-        "sents",
-        "syllables",
-        F.expr(
-            "CAST(206835 - (1015 * words) DIV sents"
-            " - (84600 * syllables) DIV words AS BIGINT)"
-        ).alias("flesch_milli"),
-    )
 
 
 @register(

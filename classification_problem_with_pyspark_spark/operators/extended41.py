@@ -1,24 +1,19 @@
 """Round-3 extension pack #41: Bayesian-average rating (additive
-smoothing) and the vocabulary growth curve.
+smoothing).
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. The patterns are public
 knowledge — additive-smoothing / Bayesian-average ranking (the
 IMDB-weighted-rating recipe: shrink small-sample rates toward a prior so
-a 1-for-1 item cannot outrank a 95-for-100 one) and Heaps-law
-vocabulary-growth curves (new-type counts per ingestion batch, the
-corpus-planning tool that says when more data stops buying new n-grams)
-— re-expressed on the public PySpark DataFrame API over the driver's
-testdata.
+a 1-for-1 item cannot outrank a 95-for-100 one) — re-expressed on the
+public PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): the prior is a LITERAL
 pseudo-count pair (alpha=5 returns per 100 lines), so the shrunk rate is
-one integer division; growth counts come from min-batch first-seen
-aggregation and an exact cumulative window. Zero floats.
+one integer division. Zero floats.
 
-Scale posture (SURVEY.md §7.6): both keys are one fact-sized
-map-side-combinable groupBy plus bounded windows; first-seen is the
-min-aggregation idiom (never a sort of occurrences).
+Scale posture (SURVEY.md §7.6): the key is one fact-sized
+map-side-combinable groupBy plus bounded windows.
 """
 
 from __future__ import annotations
@@ -26,14 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.functions.text import word_ngrams
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
 PRIOR_ALPHA = 5  # prior pseudo-returns
 PRIOR_N = 100  # prior pseudo-lines (beta = PRIOR_N - PRIOR_ALPHA)
 TOP_K_RATED = 25
-VOCAB_BATCH = 50  # docs per ingestion batch in the growth curve
 
 
 @register(
@@ -97,70 +90,4 @@ def agg_bayesian_average_rating(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("shrunk_rate_micro"), "part")
         .limit(TOP_K_RATED)
-    )
-
-
-@register(
-    "llm_vocab_growth_curve",
-    oracle=f"""
-    WITH sh AS (
-        SELECT doc_id // {VOCAB_BATCH} AS batch,
-               array_to_string(list_slice(toks, i, i + 2), ' ') AS s
-        FROM (
-            SELECT doc_id, string_split(text, ' ') AS toks,
-                   unnest(range(1, len(string_split(text, ' ')) - 1)) AS i
-            FROM documents WHERE len(string_split(text, ' ')) >= 3
-        ) x
-    ),
-    first_seen AS (
-        SELECT s, CAST(min(batch) AS BIGINT) AS first_batch FROM sh GROUP BY s
-    ),
-    per_batch AS (
-        SELECT first_batch AS batch, CAST(count(*) AS BIGINT) AS n_new
-        FROM first_seen GROUP BY first_batch
-    )
-    SELECT batch, n_new,
-           CAST(SUM(n_new) OVER (ORDER BY batch
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND CURRENT ROW) AS BIGINT)
-               AS cum_vocab
-    FROM per_batch ORDER BY batch
-    """,
-)
-def llm_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary (3-shingle) growth curve per ingestion batch
-    (SURVEY.md §2.12): how many NEVER-BEFORE-SEEN shingles each batch
-    of {VOCAB_BATCH} documents contributes, plus the cumulative
-    vocabulary — the Heaps-law curve corpus planners read to decide
-    whether more of the same data still buys new n-grams (a flattening
-    curve says dedup/diversify instead of ingest more); the per-batch
-    view of `llm_ngram_novelty`'s per-doc scores.
-
-    Exactness: first-seen is a min-batch aggregation per shingle (the
-    idiom that never sorts occurrences); counts and the cumulative
-    window are exact integers.
-
-    Scale: one shingle-keyed map-side-combinable min + a per-batch
-    rollup. The batch axis GROWS with the corpus (~corpus/batch rows —
-    10→98 per SF decade, caught by the r11 trend gate), so the
-    cumulative window is the bucket-stitch form with RANGE-NORMALIZED
-    buckets: fixed 1024 buckets over the broadcast min/max batch id
-    keep the only single-task window ≤1k rows at any corpus size.
-    """
-    d = load(spark, sf_dir, "documents")
-    sh = word_ngrams(d.withColumn("batch", F.expr(f"doc_id DIV {VOCAB_BATCH}")), 3, "batch")
-    first_seen = sh.groupBy("ngram").agg(F.min("batch").alias("first_batch"))
-    per_batch = first_seen.groupBy(
-        F.col("first_batch").alias("batch")
-    ).agg(F.count("*").alias("n_new"))
-    from classification_problem_with_pyspark_spark.plans.global_rank import (
-        bucketed_global_cumsum,
-    )
-
-    return (
-        bucketed_global_cumsum(
-            per_batch, "batch", [], [("cum_raw", "n_new")], value_range_k=1024
-        )
-        .select("batch", "n_new", F.col("cum_raw").cast("long").alias("cum_vocab"))
-        .orderBy("batch")
     )

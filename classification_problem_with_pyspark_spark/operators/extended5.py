@@ -1,15 +1,14 @@
 """Round-1 extension pack #5: graph analytics over derived edge tables
 (degree distribution, triangle counting, fixed-iteration PageRank) and
-training-pipeline extras (repetition-ratio quality signal, deterministic
-mixture resampling, sharded corpus shuffle, join-key skew audit,
-running-distinct window, binary-encoding scalar suite).
+extras (join-key skew audit, running-distinct window, binary-encoding
+scalar suite).
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. All patterns here are public
 knowledge — the GraphX/Pregel PageRank formulation, the node-iterator
-triangle-counting join shape (Schank & Wagner 2005), MAD/heavy-hitter skew
-profiling, and the hash-shard shuffle used by public data-pipeline stacks —
-expressed on the public PySpark DataFrame API over the driver's testdata.
+triangle-counting join shape (Schank & Wagner 2005) and MAD/heavy-hitter
+skew profiling — expressed on the public PySpark DataFrame API over the
+driver's testdata.
 
 Scale posture (SURVEY.md §7.6):
 - Graphs are DERIVED from facts by aggregation; the heavy work (the
@@ -23,8 +22,8 @@ Scale posture (SURVEY.md §7.6):
   intersection (edge-iterator): each triangle closes once at its
   lowest-order vertex and out-degrees are bounded by O(√E), so no wedge
   set is ever materialized or shuffled.
-- The shuffle/resample/skew ops are pure key functions (portable md5) or
-  single-pass aggregations — no global sorts, no driver state.
+- The skew ops are single-pass aggregations — no global sorts, no
+  driver state.
 """
 
 from __future__ import annotations
@@ -33,9 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
-from classification_problem_with_pyspark_spark.functions.text import word_ngrams
-from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum, grid_rank
+from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -478,263 +475,6 @@ def scalar_encoding_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Training-pipeline: repetition-ratio quality signal
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "llm_repetition_ratio",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, lang, tok, COUNT(*) AS c
-        FROM (
-            SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
-            FROM documents
-        ) t
-        GROUP BY doc_id, lang, tok
-    ),
-    per_doc AS (
-        SELECT doc_id, lang,
-               CAST(SUM(c) AS BIGINT) AS n_tokens,
-               COUNT(*) AS n_distinct,
-               MAX(c) AS top_token_cnt
-        FROM tok GROUP BY doc_id, lang
-    )
-    SELECT doc_id, lang, n_tokens, n_distinct,
-           ROUND(CAST(top_token_cnt AS DOUBLE) / n_tokens, 6) AS top_token_share,
-           ROUND(CAST(n_distinct AS DOUBLE) / n_tokens, 6) AS type_token_ratio,
-           CASE WHEN CAST(top_token_cnt AS DOUBLE) / n_tokens > 0.1 THEN 'repetitive'
-                WHEN CAST(n_distinct AS DOUBLE) / n_tokens < 0.2 THEN 'low_diversity'
-                ELSE 'ok' END AS quality_flag
-    FROM per_doc
-    """,
-)
-def llm_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document repetition metrics — top-token share and type-token
-    ratio — the cheap quality filter that catches boilerplate/looping
-    text before expensive dedup stages in a pretraining pipeline.
-
-    explode → (doc, token) count → per-doc aggregate: both groupBys key
-    on doc_id so the second reuses the first's partitioning (one real
-    shuffle); all ratios derive from exact integer counts, rounded (,6)
-    on both engines.
-    """
-    d = spread(load(spark, sf_dir, "documents"), "doc_id")
-    tok = (
-        d.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("tok"))
-        .groupBy("doc_id", "lang", "tok")
-        .agg(F.count("*").alias("c"))
-    )
-    per_doc = tok.groupBy("doc_id", "lang").agg(
-        F.sum("c").alias("n_tokens"),
-        F.count("*").alias("n_distinct"),
-        F.max("c").alias("top_token_cnt"),
-    )
-    top_share = F.col("top_token_cnt").cast("double") / F.col("n_tokens")
-    ttr = F.col("n_distinct").cast("double") / F.col("n_tokens")
-    return per_doc.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        "n_distinct",
-        F.round(top_share, 6).alias("top_token_share"),
-        F.round(ttr, 6).alias("type_token_ratio"),
-        F.when(top_share > 0.1, "repetitive")
-        .when(ttr < 0.2, "low_diversity")
-        .otherwise("ok")
-        .alias("quality_flag"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-pipeline: deterministic per-language mixture resampling
-# ---------------------------------------------------------------------------
-
-_MIX_RATES = {"en": 1.0, "zh": 0.5, "es": 0.25, "fr": 0.75, "de": 0.5}
-
-
-def _mix_rate_sql() -> str:
-    whens = " ".join(
-        f"WHEN '{lang}' THEN {int(rate * 1000)}" for lang, rate in _MIX_RATES.items()
-    )
-    return f"CASE lang {whens} ELSE 100 END"
-
-
-@register(
-    "llm_mixture_resample",
-    oracle=f"""
-    WITH hashed AS (
-        SELECT lang,
-               len(string_split(text, ' ')) AS n_tokens,
-               CAST(('0x' || substr(md5('mix_' || CAST(doc_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) % 1000 AS h,
-               {_mix_rate_sql()} AS keep_below
-        FROM documents
-    )
-    SELECT lang,
-           COUNT(*) AS n_candidates,
-           CAST(SUM(CASE WHEN h < keep_below THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
-           CAST(SUM(CASE WHEN h < keep_below THEN n_tokens ELSE 0 END) AS BIGINT) AS sampled_tokens
-    FROM hashed
-    GROUP BY lang
-    """,
-)
-def llm_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic data-mixture resampling: each language is kept at a
-    target rate (en 100%, fr 75%, zh/de 50%, es 25%) by thresholding a
-    portable content hash — md5('mix_'||doc_id) mod 1000 < rate·1000.
-
-    The mixture-weighting step of corpus assembly as a pure key function:
-    no RNG state, no shuffle, identical membership on every engine and
-    re-run (unlike sampleBy, whose selection is seed+partitioning
-    dependent — kept as `llm_sample_stratified` for the Bernoulli form).
-    """
-    d = load(spark, sf_dir, "documents")
-    h = md5_long(F.concat(F.lit("mix_"), F.col("doc_id").cast("string"))) % 1000
-    keep_below = F.lit(100)
-    for lang, rate in _MIX_RATES.items():
-        keep_below = F.when(F.col("lang") == lang, int(rate * 1000)).otherwise(keep_below)
-    kept = h < keep_below
-    return (
-        d.select(
-            "lang",
-            F.size(F.split("text", " ")).alias("n_tokens"),
-            kept.alias("kept"),
-        )
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_candidates"),
-            F.sum(F.when(F.col("kept"), 1).otherwise(0)).alias("n_sampled"),
-            F.sum(F.when(F.col("kept"), F.col("n_tokens")).otherwise(0)).alias(
-                "sampled_tokens"
-            ),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-pipeline: sharded deterministic corpus shuffle
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "llm_shuffle_shards",
-    oracle="""
-    WITH hashed AS (
-        SELECT doc_id, lang,
-               CAST(('0x' || substr(md5('shuf_' || CAST(doc_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) AS h
-        FROM documents
-    )
-    SELECT doc_id, lang,
-           h % 8 AS shard,
-           ROW_NUMBER() OVER (PARTITION BY h % 8 ORDER BY h, doc_id) AS pos_in_shard
-    FROM hashed
-    """,
-)
-def llm_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic global corpus shuffle, sharded: md5 hash assigns each
-    doc to one of 8 shards, and position within a shard is the rank of
-    the hash (doc_id tie-break). Reading shards in (shard, pos) order IS
-    a uniform random permutation of the corpus — the training-order
-    shuffle — without any global sort: each shard sorts independently
-    (partitioned window), so the pattern scales to any corpus size by
-    raising the shard count.
-
-    Contrast with a single ROW_NUMBER over md5(doc_id): same statistical
-    shuffle, but one task sorts the world.
-    """
-    d = load(spark, sf_dir, "documents")
-    h = md5_long(F.concat(F.lit("shuf_"), F.col("doc_id").cast("string")))
-    w = Window.partitionBy("shard").orderBy("h", "doc_id")
-    return (
-        d.select("doc_id", "lang", h.alias("h"))
-        .withColumn("shard", F.col("h") % 8)
-        .select(
-            "doc_id",
-            "lang",
-            "shard",
-            F.row_number().over(w).alias("pos_in_shard"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-pipeline: benchmark decontamination (train/test shingle overlap)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "llm_decontaminate",
-    oracle="""
-    WITH base AS (
-        SELECT doc_id, lang, string_split(text, ' ') AS toks,
-               CAST(('0x' || substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) % 10 AS b
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id, lang, b,
-               array_to_string(list_slice(toks, i, i + 4), ' ') AS shingle
-        FROM (
-            SELECT doc_id, lang, b, toks,
-                   unnest(range(1, greatest(len(toks) - 3, 1))) AS i
-            FROM base
-        ) x
-    ),
-    train_sh AS (SELECT DISTINCT shingle FROM sh WHERE b < 8),
-    test_sh AS (SELECT doc_id, lang, shingle FROM sh WHERE b = 9)
-    SELECT t.doc_id, t.lang,
-           COUNT(*) AS n_shingles,
-           CAST(SUM(CASE WHEN tr.shingle IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
-           ROUND(CAST(SUM(CASE WHEN tr.shingle IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                 / COUNT(*), 6) AS contamination_ratio,
-           SUM(CASE WHEN tr.shingle IS NOT NULL THEN 1 ELSE 0 END) * 10 >= COUNT(*)
-               AS is_contaminated
-    FROM test_sh t LEFT JOIN train_sh tr USING (shingle)
-    GROUP BY t.doc_id, t.lang
-    """,
-)
-def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: for every TEST-split document, the share
-    of its 5-token shingles that also appear anywhere in the TRAIN split
-    (the n-gram-overlap decontamination check run before any benchmark
-    eval on a trained model). Splits come from the same portable
-    md5(doc_id) mod 10 assignment as `llm_split_hash` — the check is a
-    pure function of the corpus, reproducible on any engine.
-
-    Spark shape: shingles are built JVM-side by `word_ngrams` (no Python
-    boundary, no self-join); a document of fewer than 5 tokens has none
-    and drops out, as in the oracle. The only fact-sized shuffle is the
-    shingle equi-join, with the train side pre-deduplicated. The
-    contamination flag uses the exact integer form
-    (10·hits >= total, i.e. ratio >= 0.1) — no float threshold. At 100 TB
-    the join key would be a 64-bit hash of the shingle rather than the
-    string (same plan, ~10× less shuffle traffic); the string form keeps
-    the oracle byte-identical here.
-    """
-    d = spread(load(spark, sf_dir, "documents"), "doc_id")
-    b = md5_long(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))) % 10
-    sh = word_ngrams(d.withColumn("b", b), 5, "doc_id", "lang", "b")
-    train_sh = sh.where(F.col("b") < 8).select("ngram").distinct()
-    test_sh = sh.where(F.col("b") == 9)
-    hit = F.col("tr_shingle").isNotNull()
-    joined = test_sh.join(
-        train_sh.select(F.col("ngram").alias("tr_shingle")),
-        test_sh.ngram == F.col("tr_shingle"),
-        "left",
-    )
-    return joined.groupBy("doc_id", "lang").agg(
-        F.count("*").alias("n_shingles"),
-        F.sum(hit.cast("long")).alias("n_contaminated"),
-        F.round(
-            F.sum(hit.cast("long")).cast("double") / F.count("*"), 6
-        ).alias("contamination_ratio"),
-        (F.sum(hit.cast("long")) * 10 >= F.count("*")).alias("is_contaminated"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Graph: k-core decomposition (iterative peeling)
 # ---------------------------------------------------------------------------
 
@@ -930,126 +670,6 @@ def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority", "o_orderstatus"
     )
     return left.exceptAll(right)
-
-
-# ---------------------------------------------------------------------------
-# Training-pipeline: compression-ratio quality signal (Arrow UDF + zlib)
-# ---------------------------------------------------------------------------
-
-
-@register("llm_compression_quality", oracle=None)
-def llm_compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document zlib compression ratio — the classic cheap proxy for
-    repetitive/boilerplate text (highly compressible ⇒ low information
-    density; used alongside `llm_repetition_ratio` as a pretraining
-    quality gate).
-
-    Arrow-path showcase done right: mapInPandas with a fixed zlib level —
-    one Python worker round-trip per PARTITION of Arrow batches, never
-    per row; the stage is embarrassingly parallel and shuffle-free (the
-    final per-lang ordering is the only exchange). Rows-only: zlib is not
-    SQL-expressible; determinism (fixed level ⇒ identical bytes) and a
-    direct-zlib spot check live in tests/test_scale_helpers.py.
-    """
-    import pandas as pd
-
-    d = spread(load(spark, sf_dir, "documents"), "doc_id")
-
-    def score(batches):
-        import zlib
-
-        for pdf in batches:
-            raw = pdf["text"].str.encode("utf-8")
-            comp_len = raw.map(lambda b: len(zlib.compress(b, 6)))
-            raw_len = raw.map(len)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "lang": pdf["lang"],
-                    "raw_bytes": raw_len,
-                    "compressed_bytes": comp_len,
-                    "compression_ratio": (comp_len / raw_len).round(6),
-                }
-            )
-
-    out = d.select("doc_id", "lang", "text").mapInPandas(
-        score,
-        schema=(
-            "doc_id long, lang string, raw_bytes long, "
-            "compressed_bytes long, compression_ratio double"
-        ),
-    )
-    return out.withColumn(
-        "quality_flag",
-        F.when(F.col("compression_ratio") < 0.3, "highly_compressible")
-        .when(F.col("compression_ratio") > 0.8, "incompressible")
-        .otherwise("normal"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-pipeline: vocabulary coverage curve
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "llm_vocab_coverage",
-    oracle="""
-    WITH tok AS (
-        SELECT unnest(string_split(text, ' ')) AS token FROM documents
-    ),
-    vocab AS (
-        SELECT token, COUNT(*) AS cnt FROM tok GROUP BY token
-    ),
-    ranked AS (
-        SELECT token, cnt,
-               ROW_NUMBER() OVER (ORDER BY cnt DESC, token) AS rank,
-               SUM(cnt) OVER (ORDER BY cnt DESC, token
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS cum_cnt,
-               SUM(cnt) OVER () AS total_cnt
-        FROM vocab
-    )
-    SELECT rank, token, cnt,
-           ROUND(CAST(cum_cnt AS DOUBLE) / total_cnt, 6) AS cumulative_coverage
-    FROM ranked
-    WHERE rank <= 20
-    """,
-)
-def llm_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary coverage curve: top-20 corpus tokens by frequency with
-    the cumulative share of all token occurrences they cover — the
-    statistic behind tokenizer vocab sizing (how big must the vocab be to
-    cover X% of the corpus).
-
-    The fact-sized work is the (token → count) aggregation — map-side
-    partial, one shuffle on token. The ranking windows run over the
-    AGGREGATED vocabulary (bounded by vocab size, never raw tokens);
-    (cnt DESC, token) is a total order so ranks and cumulative integer
-    sums are deterministic on both engines.
-    """
-    d = spread(load(spark, sf_dir, "documents"), "doc_id")
-    vocab = (
-        d.select(F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("cnt"))
-    )
-    order = [F.desc("cnt"), F.asc("token")]
-    tot = vocab.agg(F.sum("cnt").alias("total_cnt"))
-    ranked = grid_cumsum(
-        grid_rank(vocab.crossJoin(F.broadcast(tot)), order, "rank"),
-        order,
-        [("cum_cnt", "cnt")],
-        keep=["token", "cnt", "rank", "total_cnt"],
-    )
-    return ranked.where(F.col("rank") <= 20).select(
-        "rank",
-        "token",
-        "cnt",
-        F.round(F.col("cum_cnt").cast("double") / F.col("total_cnt"), 6).alias(
-            "cumulative_coverage"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1955,51 +1575,6 @@ def agg_benford_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Text analysis: adjacent word-bigram frequencies (BPE-merge statistics)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "llm_word_bigrams",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    bigrams AS (
-        SELECT t[i] || ' ' || t[i + 1] AS bigram
-        FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks) x
-    ),
-    counted AS (
-        SELECT bigram, COUNT(*) AS cnt FROM bigrams GROUP BY bigram
-    )
-    SELECT bigram, cnt,
-           ROW_NUMBER() OVER (ORDER BY cnt DESC, bigram) AS rank
-    FROM counted
-    QUALIFY rank <= 15
-    """,
-)
-def llm_word_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-15 adjacent word bigrams across the corpus — the pair-count
-    statistic that drives one BPE merge step (most frequent adjacent pair
-    becomes the next merge) and collocation mining.
-
-    Bigrams are built JVM-side by `word_ngrams` (no position self-join);
-    the only fact-sized shuffle is the (bigram → count) aggregation, and
-    ranking runs over
-    the aggregated pair vocabulary with a total (cnt DESC, bigram) order.
-    """
-    d = spread(load(spark, sf_dir, "documents"), "doc_id")
-    counted = (
-        word_ngrams(d, 2).groupBy(F.col("ngram").alias("bigram")).agg(F.count("*").alias("cnt"))
-    )
-    return (
-        grid_rank(counted, [F.desc("cnt"), F.asc("bigram")], "rank")
-        .where(F.col("rank") <= 15)
-        .select("bigram", "cnt", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Range join at scale: bucket-and-refine (equi-join, no nested loop)
 # ---------------------------------------------------------------------------
 
@@ -2366,61 +1941,6 @@ def scalar_try_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .try_cast("int")
         .alias("key_prefix"),
         F.coalesce(safe_div, F.lit(-1.0)).alias("div_defaulted"),
-    )
-
-
-@register(
-    "llm_mixture_temperature",
-    oracle="""
-    WITH counts AS (
-        SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang
-    ), tot AS (
-        SELECT SUM(n_docs) AS total FROM counts
-    ), w AS (
-        SELECT lang, n_docs,
-               CAST(n_docs AS DOUBLE) / total AS p,
-               pow(CAST(n_docs AS DOUBLE) / total, 0.5) AS wa
-        FROM counts CROSS JOIN tot
-    ), z AS (
-        SELECT SUM(wa) AS zsum FROM w
-    )
-    SELECT lang, n_docs,
-           ROUND(p, 6) AS corpus_share,
-           ROUND(wa / zsum, 6) AS sample_weight,
-           ROUND((wa / zsum) / p, 6) AS upweight_factor
-    FROM w CROSS JOIN z
-    """,
-)
-def llm_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled mixture weights (T=2, i.e. w ∝ p^(1/T) = √p) —
-    the multilingual-pretraining standard for flattening a skewed corpus:
-    high-resource languages are downweighted, low-resource upweighted,
-    with the upweight factor per language reported (the number that says
-    "zh is seen 1.8× more often than its corpus share"). Unlike
-    llm_mixture_resample's FIXED rates, the weights here derive from the
-    corpus itself — recompute after every corpus change.
-
-    Shape: one count per lang (map-side partial), then two 1-row
-    broadcast totals (corpus size, normalizer) — the per-language weight
-    table this feeds is itself a broadcast input to the actual sampler
-    (llm_sample_hash_stratified's rate-table pattern).
-    """
-    d = load(spark, sf_dir, "documents")
-    counts = d.groupBy("lang").agg(F.count("*").alias("n_docs"))
-    tot = counts.agg(F.sum("n_docs").alias("total"))
-    w = counts.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        "n_docs",
-        (F.col("n_docs").cast("double") / F.col("total")).alias("p"),
-        F.pow(F.col("n_docs").cast("double") / F.col("total"), 0.5).alias("wa"),
-    )
-    z = w.agg(F.sum("wa").alias("zsum"))
-    return w.crossJoin(F.broadcast(z)).select(
-        "lang",
-        "n_docs",
-        F.round("p", 6).alias("corpus_share"),
-        F.round(F.col("wa") / F.col("zsum"), 6).alias("sample_weight"),
-        F.round((F.col("wa") / F.col("zsum")) / F.col("p"), 6).alias("upweight_factor"),
     )
 
 

@@ -1,13 +1,11 @@
 """Round-3 extension pack #6: embedding-column profiling for training-data
 pipelines (per-label norm stats, distributed centroids, per-dimension
-variance ranking, int8 quantization audit) and the multi-stage quality
-filter funnel.
+variance ranking, int8 quantization audit).
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. All patterns here are public
 knowledge — L2-norm/centroid profiling and symmetric int8 quantization as
-used by public vector-search stacks (FAISS-style scale=amax/127), and the
-retention-funnel report every public corpus-cleaning pipeline emits —
+used by public vector-search stacks (FAISS-style scale=amax/127) —
 expressed on the public PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (the round-3 lesson): every cross-row float
@@ -26,7 +24,6 @@ Scale posture (SURVEY.md §7.6):
   shuffle key has bounded cardinality (labels × 64 dims), partial
   aggregation absorbs the fan-out map-side, and no vector is ever
   collected to the driver — the standard wide-vector reduction at 100 TB.
-- The funnel is one pass of conditional aggregation over the scan.
 """
 
 from __future__ import annotations
@@ -283,67 +280,6 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("amax") / 127.0 * 1000000000).cast("long").alias("scale_e9"),
         F.expr("aggregate(q, 0L, (acc, v) -> acc + abs(v))").alias("sum_abs_q"),
         recon.alias("sq_err_e12"),
-    )
-
-
-@register(
-    "llm_filter_funnel",
-    oracle="""
-    WITH gated AS (
-        SELECT source,
-               (n_chars BETWEEN 100 AND 20000) AS g_len,
-               len(string_split(text, ' ')) >= 20 AS g_words,
-               CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-                   / len(string_split(text, ' ')) >= 0.3 AS g_unique
-        FROM documents
-    )
-    SELECT source,
-           COUNT(*) AS n_total,
-           CAST(SUM(CASE WHEN g_len THEN 1 ELSE 0 END) AS BIGINT) AS n_pass_len,
-           CAST(SUM(CASE WHEN g_len AND g_words THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_pass_words,
-           CAST(SUM(CASE WHEN g_len AND g_words AND g_unique THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_pass_all,
-           ROUND(CAST(SUM(CASE WHEN g_len AND g_words AND g_unique
-                               THEN 1 ELSE 0 END) AS DOUBLE)
-                 / COUNT(*), 6) AS retention
-    FROM gated
-    GROUP BY source
-    """,
-)
-def llm_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-stage quality filter funnel — the per-source retention
-    report every corpus-cleaning pipeline emits (which stage kills which
-    source's documents): length gate → minimum word count → unique-word
-    ratio, with sequential pass counts and final retention.
-
-    One pass of conditional aggregation over the scan (all three gates
-    evaluate per row in codegen; no per-stage jobs, no Python). At 100 TB
-    this is the cheapest possible shape: scan + map-side partial agg on
-    the low-cardinality source key.
-    """
-    d = spread(load(spark, sf_dir, "documents"), "doc_id")
-    words = F.split("text", " ")
-    g_len = F.col("n_chars").between(100, 20000)
-    g_words = F.size(words) >= 20
-    g_unique = (
-        F.size(F.array_distinct(words)).cast("double") / F.size(words) >= 0.3
-    )
-    gated = d.select(
-        "source",
-        g_len.alias("g_len"),
-        g_words.alias("g_words"),
-        g_unique.alias("g_unique"),
-    )
-    pass_all = F.col("g_len") & F.col("g_words") & F.col("g_unique")
-    return gated.groupBy("source").agg(
-        F.count("*").alias("n_total"),
-        F.sum(F.col("g_len").cast("long")).alias("n_pass_len"),
-        F.sum((F.col("g_len") & F.col("g_words")).cast("long")).alias("n_pass_words"),
-        F.sum(pass_all.cast("long")).alias("n_pass_all"),
-        F.round(F.sum(pass_all.cast("long")).cast("double") / F.count("*"), 6).alias(
-            "retention"
-        ),
     )
 
 
@@ -966,54 +902,6 @@ def sink_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "llm_shard_checksum_manifest",
-    oracle="""
-    WITH hashed AS (
-        SELECT doc_id,
-               CAST(('0x' || substr(md5('shuf_' || CAST(doc_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) % 8 AS shard,
-               md5(text) AS content_hash,
-               length(text) AS n_chars
-        FROM documents
-    )
-    SELECT shard,
-           COUNT(*) AS n_docs,
-           CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-           md5(string_agg(content_hash, '' ORDER BY content_hash))
-               AS shard_checksum
-    FROM hashed
-    GROUP BY shard
-    """,
-)
-def llm_shard_checksum_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shard manifest with content checksums — the reproducibility record
-    a training run stores next to its data: per shard (same md5 shard
-    assignment as `llm_shuffle_shards`), doc count, char volume, and an
-    ORDER-INSENSITIVE shard checksum (md5 over the sorted per-doc content
-    hashes) that any later run can recompute to prove the shard is
-    byte-identical. Sorting happens inside each shard's aggregation
-    (collect_list → array_sort — bounded by shard size, 8-way parallel),
-    never globally.
-    """
-    d = load(spark, sf_dir, "documents")
-    shard = md5_long(F.concat(F.lit("shuf_"), F.col("doc_id").cast("string"))) % 8
-    hashed = d.select(
-        shard.alias("shard"),
-        F.md5("text").alias("content_hash"),
-        F.length("text").alias("n_chars"),
-    )
-    return hashed.groupBy("shard").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-        F.md5(
-            F.array_join(F.array_sort(F.collect_list("content_hash")), "").cast(
-                "binary"
-            )
-        ).alias("shard_checksum"),
-    )
-
-
-@register(
     "events_trending_topk",
     oracle="""
     WITH weekly AS (
@@ -1349,164 +1237,6 @@ def layout_zonemap_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "llm_cross_dedup_incremental",
-    oracle="""
-    WITH tagged AS (
-        SELECT doc_id, md5(text) AS h,
-               CAST(('0x' || substr(md5('incr_' || CAST(doc_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) % 10 < 8 AS in_corpus
-        FROM documents
-    ), corpus AS (
-        SELECT DISTINCT h FROM tagged WHERE in_corpus
-    )
-    SELECT CAST(SUM(CASE WHEN NOT t.in_corpus THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_incoming,
-           CAST(SUM(CASE WHEN NOT t.in_corpus AND c.h IS NOT NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_of_corpus,
-           CAST(SUM(CASE WHEN NOT t.in_corpus AND c.h IS NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_new_unique,
-           ROUND(CAST(SUM(CASE WHEN NOT t.in_corpus AND c.h IS NULL
-                               THEN 1 ELSE 0 END) AS DOUBLE)
-                 / SUM(CASE WHEN NOT t.in_corpus THEN 1 ELSE 0 END), 6)
-               AS novelty_rate
-    FROM tagged t LEFT JOIN corpus c ON t.h = c.h
-    """,
-)
-def llm_cross_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental-ingestion dedup: an incoming batch (hash-split 20% of
-    documents) checked against the existing corpus (the other 80%) by
-    content hash — the every-ingest operation of a living corpus: how
-    many incoming docs are already present, how many are new.
-
-    The membership check is a digest-keyed LEFT JOIN (never shuffles
-    text, same discipline as llm_dedup_exact_hash); at 100 TB the corpus
-    side is the hash index, not the documents. One pass, exact integer
-    counts.
-    """
-    d = load(spark, sf_dir, "documents")
-    in_corpus = md5_long(F.concat(F.lit("incr_"), F.col("doc_id").cast("string"))) % 10 < 8
-    tagged = d.select(F.md5("text").alias("h"), in_corpus.alias("in_corpus"))
-    corpus = tagged.where("in_corpus").select("h").distinct()
-    c = corpus.withColumn("known", F.lit(True))
-    joined = tagged.join(c, "h", "left")
-    incoming = (~F.col("in_corpus")).cast("long")
-    dup = ((~F.col("in_corpus")) & F.col("known").isNotNull()).cast("long")
-    new = ((~F.col("in_corpus")) & F.col("known").isNull()).cast("long")
-    return joined.agg(
-        F.sum(incoming).alias("n_incoming"),
-        F.sum(dup).alias("n_dup_of_corpus"),
-        F.sum(new).alias("n_new_unique"),
-        F.round(F.sum(new).cast("double") / F.sum(incoming), 6).alias("novelty_rate"),
-    )
-
-
-@register(
-    "llm_quality_bucket_token_budget",
-    oracle="""
-    WITH scored AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
-               length(text) AS n_chars
-        FROM documents
-    ), deciled AS (
-        SELECT doc_id, n_tokens,
-               NTILE(10) OVER (ORDER BY n_chars DESC, doc_id) AS decile
-        FROM scored
-    ), per_decile AS (
-        SELECT decile,
-               COUNT(*) AS n_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS decile_tokens
-        FROM deciled GROUP BY decile
-    ), cum AS (
-        SELECT decile, n_docs, decile_tokens,
-               CAST(SUM(decile_tokens) OVER (ORDER BY decile
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS cum_tokens
-        FROM per_decile
-    )
-    SELECT decile, n_docs, decile_tokens, cum_tokens,
-           (cum_tokens <= 30000) AS fully_within_budget
-    FROM cum
-    """,
-)
-def llm_quality_bucket_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data selection under a token budget: rank documents into quality
-    deciles (length as the stand-in score, deterministic (score, doc_id)
-    order), then greedily admit whole deciles while the cumulative token
-    count fits the 30k budget — the curation policy behind
-    quality-first corpus downselection ("spend the budget on the best
-    data first").
-
-    The per-doc work is one scan pass; the decile assignment is the
-    CLOSED-FORM ntile (r7/r8 de-globalization recipe, same as
-    ml_lift_gain_deciles): the bucket-stitch global rank gives each
-    document's rank under (n_chars DESC, doc_id), and SQL ntile(k) is
-    a pure function of (rank, n) — the first n%k buckets hold
-    n DIV k + 1 rows, the rest n DIV k. No document row ever passes
-    through a single-task sort; the only single-partition window is
-    the ≤1k-row range-normalized length-bucket grid (r11: distinct
-    lengths track the corpus, so the old |distinct lengths| histogram
-    grew with SF). All outputs are exact integers + a boolean.
-    """
-    d = load(spark, sf_dir, "documents")
-    scored = d.select(
-        "doc_id",
-        F.size(F.split("text", " ")).alias("n_tokens"),
-        F.length("text").alias("n_chars"),
-    )
-    # r11 (trend gate): distinct document lengths track the corpus
-    # (313→523 per SF decade — lengths are near-unique, not a fixed
-    # domain), so the rank is the bucket-stitch global rank with
-    # RANGE-NORMALIZED buckets (fixed 1024 buckets over the broadcast
-    # min/max length — ≤1k-row grid at any corpus size) instead of the
-    # hand-rolled distinct-length histogram.
-    from classification_problem_with_pyspark_spark.plans.global_rank import (
-        bucketed_global_rank,
-    )
-
-    tot_n = scored.agg(F.count("*").cast("long").alias("n"))
-    deciled = (
-        bucketed_global_rank(
-            scored,
-            "n_chars",
-            [F.asc("doc_id")],
-            descending=True,
-            value_range_k=1024,
-            out="rn",
-        )
-        .crossJoin(F.broadcast(tot_n))
-        .withColumn(
-            "decile",
-            F.expr(
-                "CAST(CASE WHEN rn <= (n % 10) * (n DIV 10 + 1) "
-                "THEN (rn - 1) DIV (n DIV 10 + 1) + 1 "
-                "ELSE n % 10 "
-                "+ (rn - (n % 10) * (n DIV 10 + 1) - 1) "
-                "DIV greatest(1, n DIV 10) + 1 END AS INT)"
-            ),
-        )
-    )
-    per_decile = deciled.groupBy("decile").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("decile_tokens"),
-    )
-    return (
-        grid_cumsum(
-            per_decile,
-            ["decile"],
-            [("cum_raw", "decile_tokens")],
-            keep=["decile", "n_docs", "decile_tokens"],
-        )
-        .select(
-            "decile",
-            "n_docs",
-            "decile_tokens",
-            F.col("cum_raw").cast("long").alias("cum_tokens"),
-        )
-        .withColumn("fully_within_budget", F.col("cum_tokens") <= 30000)
-    )
-
-
-@register(
     "graph_bfs_3hop",
     oracle="""
     WITH edges AS (
@@ -1644,116 +1374,6 @@ def scalar_map_hof_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.element_at(m2, "v"), 4).alias("v_times10"),
         F.array_join(F.array_sort(F.map_keys(m3)), ",").alias("upper_keys"),
         F.round(F.element_at(zipped, "v"), 4).alias("zipped_v"),
-    )
-
-
-@register(
-    "llm_template_boilerplate_groups",
-    oracle="""
-    WITH normalized AS (
-        SELECT doc_id,
-               md5(regexp_replace(regexp_replace(lower(text), '[0-9]+', '#', 'g'),
-                                  ' +', ' ', 'g')) AS shape_hash
-        FROM documents
-    ), groups AS (
-        SELECT shape_hash,
-               COUNT(*) AS n_docs,
-               MIN(doc_id) AS exemplar_doc_id
-        FROM normalized GROUP BY shape_hash
-    )
-    SELECT shape_hash, n_docs, exemplar_doc_id
-    FROM groups WHERE n_docs >= 2
-    """,
-)
-def llm_template_boilerplate_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Template/boilerplate detection — the dedup class EXACT hashing
-    misses: normalize the text's SHAPE (lowercase, digit runs → '#',
-    whitespace collapsed) and group by the shape hash; groups of ≥2 are
-    generated-from-a-template families (error pages, listings, form
-    letters) that corpus cleaning caps or drops.
-
-    Same scale posture as exact dedup: only the 16-byte shape digest
-    shuffles, never text; normalization is two JVM regexes in codegen.
-    """
-    d = load(spark, sf_dir, "documents")
-    shape = F.md5(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("text")), "[0-9]+", "#"), " +", " "
-        )
-    )
-    return (
-        d.select("doc_id", shape.alias("shape_hash"))
-        .groupBy("shape_hash")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("doc_id").alias("exemplar_doc_id"),
-        )
-        .where(F.col("n_docs") >= 2)
-    )
-
-
-@register(
-    "llm_dedup_prefix_containment",
-    oracle="""
-    WITH keyed AS (
-        SELECT doc_id, text, length(text) AS n,
-               substr(text, 1, 64) AS block
-        FROM documents WHERE length(text) >= 64
-    )
-    SELECT a.doc_id AS shorter_doc, b.doc_id AS longer_doc,
-           a.n AS shorter_len, b.n AS longer_len
-    FROM keyed a JOIN keyed b
-      ON a.block = b.block AND a.doc_id <> b.doc_id
-    WHERE a.n <= b.n
-      AND NOT (a.n = b.n AND a.doc_id > b.doc_id)
-      AND substr(b.text, 1, a.n) = a.text
-    """,
-)
-def llm_dedup_prefix_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncation dedup: documents that are an exact PREFIX of a longer
-    document (the duplicate class created by crawl truncation and
-    re-scrapes, invisible to whole-text hashing). Candidate pairs are
-    blocked on the first-64-char prefix (equal prefixes → same block, an
-    equi-join on a digest-sized key), then verified by one substring
-    compare — never an all-pairs scan. Equal-length ties pair once
-    (smaller doc_id as 'shorter').
-
-    At 100 TB the block key join is the same shape as exact dedup; block
-    skew (a hugely common prefix) is the documented salting case.
-    """
-    d = load(spark, sf_dir, "documents").where(F.length("text") >= 64)
-    keyed = d.select(
-        "doc_id",
-        "text",
-        F.length("text").alias("n"),
-        F.substring("text", 1, 64).alias("block"),
-    )
-    a = keyed.select(
-        F.col("doc_id").alias("shorter_doc"),
-        F.col("text").alias("text_a"),
-        F.col("n").alias("shorter_len"),
-        F.col("block").alias("block_a"),
-    )
-    b = keyed.select(
-        F.col("doc_id").alias("longer_doc"),
-        F.col("text").alias("text_b"),
-        F.col("n").alias("longer_len"),
-        F.col("block").alias("block_b"),
-    )
-    return (
-        a.join(b, F.col("block_a") == F.col("block_b"))
-        .where(F.col("shorter_doc") != F.col("longer_doc"))
-        .where(F.col("shorter_len") <= F.col("longer_len"))
-        .where(
-            ~(
-                (F.col("shorter_len") == F.col("longer_len"))
-                & (F.col("shorter_doc") > F.col("longer_doc"))
-            )
-        )
-        .where(
-            F.expr("substring(text_b, 1, shorter_len)") == F.col("text_a")
-        )
-        .select("shorter_doc", "longer_doc", "shorter_len", "longer_len")
     )
 
 

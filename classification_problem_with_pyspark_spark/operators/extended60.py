@@ -1,29 +1,19 @@
-"""Round-3 extension pack #60: KV prefix-cache savings analysis and
-DISTINCT ON emulation.
+"""Round-3 extension pack #60: DISTINCT ON emulation.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
-knowledge — prefix-sharing analysis for KV-cache reuse (vLLM's
-automatic prefix caching / SGLang's RadixAttention serve repeated
-prompt prefixes from cache; capacity planning for a serving fleet
-starts by measuring how much prefix mass repeats) and PostgreSQL/DuckDB
-`DISTINCT ON` (pick ONE row per key under an ORDER BY — the idiom
-Spark lacks and every migration rewrites as a row_number window) —
-re-expressed on the public PySpark DataFrame API over the driver's
-testdata.
+file:line citations into it are possible. The pattern is public
+knowledge — PostgreSQL/DuckDB `DISTINCT ON` (pick ONE row per key under
+an ORDER BY — the idiom Spark lacks and every migration rewrites as a
+row_number window) — re-expressed on the public PySpark DataFrame API
+over the driver's testdata.
 
-Hash-parity discipline (round-3 standard): prefixes are the first
-PREFIX_TOKENS whitespace tokens digested with md5; savings are exact
-token counts (each group's prefix decodes once, so (size−1)·prefix_len
-tokens come from cache); DISTINCT ON's pick order is a total key on
-both engines — and the ORACLE uses DuckDB's NATIVE `DISTINCT ON`
-against Spark's window emulation, so the key pins that the rewrite is
-semantics-identical, not merely similar.
+Hash-parity discipline (round-3 standard): DISTINCT ON's pick order is a
+total key on both engines — and the ORACLE uses DuckDB's NATIVE
+`DISTINCT ON` against Spark's window emulation, so the key pins that the
+rewrite is semantics-identical, not merely similar.
 
-Scale posture (SURVEY.md §7.6): prefix grouping is one narrow
-projection + groupBy on the digest (the radix tree's first level as a
-hash aggregation); DISTINCT ON is one rank window inside the key
-partitioning — both scan-shaped.
+Scale posture (SURVEY.md §7.6): DISTINCT ON is one rank window inside
+the key partitioning — scan-shaped.
 """
 
 from __future__ import annotations
@@ -34,102 +24,6 @@ from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
-
-PREFIX_TOKENS = 16  # shared-prefix window (the radix tree's first level)
-
-
-@register(
-    "llm_prefix_cache_savings",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, source, string_split(text, ' ') AS ws
-        FROM documents
-    ),
-    pfx AS (
-        SELECT source,
-               md5(array_to_string(ws[1:least(len(ws), {PREFIX_TOKENS})], ' '))
-                   AS prefix_digest,
-               CAST(least(len(ws), {PREFIX_TOKENS}) AS BIGINT) AS pfx_len,
-               CAST(len(ws) AS BIGINT) AS n_toks
-        FROM toks
-    ),
-    groups AS (
-        SELECT source, prefix_digest, pfx_len,
-               CAST(COUNT(*) AS BIGINT) AS grp_size,
-               CAST(SUM(n_toks) AS BIGINT) AS grp_toks
-        FROM pfx GROUP BY source, prefix_digest, pfx_len
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_prefix_groups,
-           CAST(SUM(grp_size) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN grp_size > 1 THEN grp_size ELSE 0 END)
-                AS BIGINT) AS docs_in_shared_groups,
-           CAST(SUM(grp_toks) AS BIGINT) AS total_tokens,
-           CAST(SUM((grp_size - 1) * pfx_len) AS BIGINT) AS cached_tokens,
-           CAST((1000000 * SUM((grp_size - 1) * pfx_len)) // SUM(grp_toks)
-                AS BIGINT) AS cache_hit_mass_micro
-    FROM groups
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def llm_prefix_cache_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KV prefix-cache savings (SURVEY.md §2.12): group documents by
-    their first PREFIX_TOKENS tokens (md5 digest — the first level of
-    a RadixAttention prefix tree) and report, per source, how many
-    prompt tokens a prefix-caching server would serve from cache —
-    each group's prefix prefills once, every further member reuses
-    it, so savings = Σ (group_size − 1) · prefix_len. The capacity-
-    planning query run before provisioning a serving fleet: templated
-    corpora (system prompts, boilerplate headers) show high cached
-    mass, diverse corpora show none, and the per-source split says
-    which.
-
-    Exactness: whitespace token counts, md5 digests, exact integer
-    token savings, floor-micro hit-mass share.
-
-    Scale: one narrow projection (first tokens only — the full text
-    never aggregates) + one groupBy on the digest + one source
-    rollup, all map-side combinable. The real radix tree nests
-    deeper levels; the first level is where the mass is and where
-    the capacity answer lives.
-    """
-    d = load(spark, sf_dir, "documents")
-    toks = d.select("source", F.split("text", " ").alias("ws"))
-    pfx = toks.select(
-        "source",
-        F.md5(
-            F.array_join(
-                F.slice("ws", 1, F.least(F.size("ws"), F.lit(PREFIX_TOKENS))),
-                " ",
-            )
-        ).alias("prefix_digest"),
-        F.least(F.size("ws"), F.lit(PREFIX_TOKENS)).cast("long").alias("pfx_len"),
-        F.size("ws").cast("long").alias("n_toks"),
-    )
-    groups = pfx.groupBy("source", "prefix_digest", "pfx_len").agg(
-        F.count("*").alias("grp_size"),
-        F.sum("n_toks").cast("long").alias("grp_toks"),
-    )
-    return (
-        groups.groupBy("source")
-        .agg(
-            F.count("*").alias("n_prefix_groups"),
-            F.sum("grp_size").cast("long").alias("n_docs"),
-            F.sum(F.when(F.col("grp_size") > 1, F.col("grp_size")).otherwise(0))
-            .cast("long")
-            .alias("docs_in_shared_groups"),
-            F.sum("grp_toks").cast("long").alias("total_tokens"),
-            F.sum((F.col("grp_size") - 1) * F.col("pfx_len"))
-            .cast("long")
-            .alias("cached_tokens"),
-            F.expr(
-                "CAST((1000000 * SUM((grp_size - 1) * pfx_len)) "
-                "DIV SUM(grp_toks) AS BIGINT)"
-            ).alias("cache_hit_mass_micro"),
-        )
-        .orderBy("source")
-    )
 
 
 @register(

@@ -1,29 +1,22 @@
-"""Round-3 extension pack #64: tokenizer fertility by language and
-missing-heartbeat grid detection.
+"""Round-3 extension pack #64: missing-heartbeat grid detection.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
-knowledge — tokenizer fertility (tokens emitted per word / bytes per
-token, by language: the multilingual-equity metric from the mBERT/XLM
-literature — high-fertility languages pay more compute and fit less
-context for the same text) and absence detection over an expected
-heartbeat grid (the "which sensor went quiet" query: the signal is the
-MISSING (entity, period) cell, found by anti-joining observations
-against the expected dense grid) — re-expressed on the public PySpark
-DataFrame API over the driver's testdata.
+file:line citations into it are possible. The pattern is public
+knowledge — absence detection over an expected heartbeat grid (the
+"which sensor went quiet" query: the signal is the MISSING (entity,
+period) cell, found by anti-joining observations against the expected
+dense grid) — re-expressed on the public PySpark DataFrame API over the
+driver's testdata.
 
-Hash-parity discipline (round-3 standard): the tokenizer stand-in is
-the registry's whitespace+length rule (a token per word plus an extra
-per 8 chars of word length — deterministic, no vocab state); fertility
-ratios fold floor-micro divisions over exact counts. The heartbeat
-grid is (active users × days present in the data); absences are an
-anti-join, and the report pins both the per-user gap count and the
-global absence rate.
+Hash-parity discipline (round-3 standard): the heartbeat grid is
+(active users × days present in the data); absences are an anti-join,
+and the report pins both the per-user gap count and the global absence
+rate.
 
-Scale posture (SURVEY.md §7.6): fertility is a scan + two-level
-aggregation; the heartbeat grid is |users| × |days| (entity×calendar —
-bounded), built by cross join of two small distinct sets, with the
-observation side reduced to distinct (user, day) BEFORE the anti-join.
+Scale posture (SURVEY.md §7.6): the heartbeat grid is |users| × |days|
+(entity×calendar — bounded), built by cross join of two small distinct
+sets, with the observation side reduced to distinct (user, day) BEFORE
+the anti-join.
 """
 
 from __future__ import annotations
@@ -33,82 +26,6 @@ from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
-
-CHARS_PER_EXTRA_TOKEN = 8  # stand-in BPE: 1 token/word + len DIV 8 extras
-
-
-@register(
-    "llm_tokenizer_fertility_by_lang",
-    oracle=f"""
-    WITH words AS (
-        SELECT lang, doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents
-    ),
-    per_doc AS (
-        SELECT lang, doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_words,
-               CAST(SUM(1 + length(w) // {CHARS_PER_EXTRA_TOKEN}) AS BIGINT)
-                   AS n_tokens,
-               CAST(SUM(length(w)) AS BIGINT) AS n_chars
-        FROM words WHERE w <> '' GROUP BY lang, doc_id
-    )
-    SELECT lang,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_words) AS BIGINT) AS n_words,
-           CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-           CAST((1000000 * SUM(n_tokens)) // SUM(n_words) AS BIGINT)
-               AS fertility_micro,
-           CAST((1000000 * SUM(n_chars)) // SUM(n_tokens) AS BIGINT)
-               AS chars_per_token_micro
-    FROM per_doc
-    GROUP BY lang
-    ORDER BY lang
-    """,
-)
-def llm_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility by language (SURVEY.md §2.12): tokens per
-    word and characters per token, per language — the multilingual-
-    equity metric: a language with 2× fertility pays 2× serving
-    compute and fits half the context for the same text, which is why
-    tokenizer reports always break fertility out by language before a
-    vocab is frozen. The tokenizer is the registry's deterministic
-    stand-in (one token per word plus one extra per
-    {CHARS_PER_EXTRA_TOKEN} chars — the length-driven fertility shape
-    real BPE exhibits, with no vocab state to drift); the measurement
-    pipeline is the product, and a real tokenizer's (doc, n_tokens)
-    table drops into the same rollup.
-
-    Exactness: integer word/char/token counts, floor-micro ratios.
-
-    Scale: explode to words, two map-side-combinable aggregations
-    (per doc, per lang) — the corpus-wide fertility audit is a
-    counting job, which is why it runs on every tokenizer candidate.
-    """
-    words = load(spark, sf_dir, "documents").select(
-        "lang", "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).where(F.col("w") != "")
-    per_doc = words.groupBy("lang", "doc_id").agg(
-        F.count("*").alias("n_words"),
-        F.sum(1 + F.floor(F.length("w") / CHARS_PER_EXTRA_TOKEN))
-        .cast("long")
-        .alias("n_tokens"),
-        F.sum(F.length("w")).cast("long").alias("n_chars"),
-    )
-    return (
-        per_doc.groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_words").cast("long").alias("n_words"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.expr(
-                "CAST((1000000 * SUM(n_tokens)) DIV SUM(n_words) AS BIGINT)"
-            ).alias("fertility_micro"),
-            F.expr(
-                "CAST((1000000 * SUM(n_chars)) DIV SUM(n_tokens) AS BIGINT)"
-            ).alias("chars_per_token_micro"),
-        )
-        .orderBy("lang")
-    )
 
 
 @register(

@@ -1,16 +1,13 @@
 """Round-3 extension pack #7: corpus-hygiene and time-series completions —
-C4-style duplicate-window (line) removal with document rebuild, a
-deterministic SemDeDup (cell-bucketed semantic dedup) variant, linear
+a deterministic SemDeDup (cell-bucketed semantic dedup) variant, linear
 gap interpolation over resampled series, a forward as-of join, and the
 Mann-Kendall trend test.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. All patterns here are public
-knowledge — duplicate-line removal as described for C4 (Raffel et al. 2020)
-and RefinedWeb (Penedo et al. 2023), SemDeDup (Abbas et al. 2023), the
-Mann-Kendall nonparametric trend test, and standard time-series linear
-interpolation — expressed on the public PySpark DataFrame API over the
-driver's testdata.
+knowledge — SemDeDup (Abbas et al. 2023), the Mann-Kendall nonparametric
+trend test, and standard time-series linear interpolation — expressed on
+the public PySpark DataFrame API over the driver's testdata.
 
 Hash-parity discipline (the round-3 lesson, extended6 precedent): every
 cross-row float aggregate folds INTEGER micro-units (per-element round →
@@ -19,8 +16,6 @@ evaluated identically on both engines; DuckDB SUM(BIGINT)→HUGEINT
 promotions never reach an output column (tests/parity.py bans them).
 
 Scale posture (SURVEY.md §7.6):
-- Line dedup shuffles CHUNKS (10-word windows), never whole documents,
-  and rebuilds per-doc with one groupBy — two keyed shuffles total.
 - SemDeDup bounds the quadratic stage inside hyperplane-sign cells —
   the cell count grows with the corpus (more planes), keeping per-cell
   candidate sets worker-sized; this is the same bucket-then-verify shape
@@ -36,107 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.functions.vector import cosine_similarity
-from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank
 from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
 TS_FMT_US = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_FMT_S = "yyyy-MM-dd HH:mm:ss"
-
-
-@register(
-    "llm_line_dedup",
-    oracle="""
-    WITH base AS (
-        SELECT doc_id, string_split(text, ' ') AS w,
-               CAST(ceil(len(string_split(text, ' ')) / 10.0) AS BIGINT) AS nc
-        FROM documents
-    ), chunked AS (
-        SELECT doc_id, nc, i AS chunk_idx,
-               array_to_string(w[(i*10+1):(i*10+10)], ' ') AS chunk
-        FROM base, UNNEST(generate_series(0, nc - 1)) AS t(i)
-    ), freq AS (
-        SELECT chunk, COUNT(*) AS cnt FROM chunked GROUP BY chunk
-    ), kept AS (
-        SELECT c.doc_id, c.chunk_idx, c.chunk
-        FROM chunked c JOIN freq f USING (chunk)
-        WHERE f.cnt = 1
-    ), rebuilt AS (
-        SELECT doc_id, COUNT(*) AS n_chunks_kept,
-               string_agg(chunk, ' ' ORDER BY chunk_idx) AS clean_text
-        FROM kept GROUP BY doc_id
-    )
-    SELECT b.doc_id, b.nc AS n_chunks_total,
-           COALESCE(r.n_chunks_kept, 0) AS n_chunks_kept,
-           COALESCE(r.clean_text, '') AS clean_text
-    FROM base b LEFT JOIN rebuilt r USING (doc_id)
-    """,
-)
-def llm_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style duplicate-window removal (SURVEY.md §2.12): split every
-    document into consecutive 10-word windows ("lines" for this corpus —
-    the testdata has no newlines), drop every window whose exact text
-    occurs more than once ANYWHERE in the corpus, and rebuild each
-    document from its surviving windows in order.
-
-    This is the line-level dedup of C4/RefinedWeb: boilerplate and
-    near-dup passages vanish without dropping whole documents (278 of
-    2 949 windows are corpus-duplicates at sf0.01). Scale shape: only
-    10-word chunks shuffle (groupBy chunk for the global frequency, then
-    one chunk-keyed join back and one doc-keyed rebuild groupBy) — full
-    texts never leave their partition; at 100 TB hash each chunk to 64
-    bits for the frequency pass (same plan, ~6× less shuffle traffic).
-    Deterministic end-to-end (exact string equality, integer positions),
-    so the full rebuilt text hash-checks against the oracle.
-    """
-    d = spread(load(spark, sf_dir, "documents"), "doc_id")
-    words = F.split(F.col("text"), " ")
-    base = d.select(
-        "doc_id",
-        words.alias("w"),
-        F.ceil(F.size(words) / F.lit(10.0)).cast("long").alias("nc"),
-    )
-    chunked = base.select(
-        "doc_id",
-        "nc",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0).cast("long"), F.col("nc") - 1),
-                lambda i: F.array_join(F.slice("w", i * 10 + 1, 10), " "),
-            )
-        ).alias("chunk_idx", "chunk"),
-    )
-    freq = chunked.groupBy("chunk").agg(F.count("*").alias("cnt"))
-    kept = (
-        chunked.join(freq, "chunk")
-        .where(F.col("cnt") == 1)
-        .select("doc_id", "chunk_idx", "chunk")
-    )
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.count("*").alias("n_chunks_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("chunk_idx", "chunk"))),
-                lambda s: s["chunk"],
-            ),
-            " ",
-        ).alias("clean_text"),
-    )
-    return (
-        base.select("doc_id", F.col("nc").alias("n_chunks_total"))
-        .join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_chunks_total",
-            F.coalesce(F.col("n_chunks_kept"), F.lit(0).cast("long")).alias(
-                "n_chunks_kept"
-            ),
-            F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
-        )
-    )
 
 
 @register(
@@ -492,129 +393,6 @@ def events_trend_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise("no_trend")
             .alias("trend"),
         )
-    )
-
-
-@register(
-    "llm_decontaminate_semantic",
-    oracle="""
-    WITH b AS (
-        SELECT vec_id, embedding,
-               CAST(('0x' || substr(md5('split_' || CAST(vec_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) % 10 AS bucket
-        FROM embeddings
-    ), test AS (
-        SELECT vec_id, embedding FROM b WHERE bucket = 9
-    ), train AS (
-        SELECT vec_id, embedding FROM b WHERE bucket < 8
-    )
-    SELECT t.vec_id AS test_id,
-           COUNT(*) AS n_train_neighbors,
-           MAX(ROUND(list_cosine_similarity(
-                   list_transform(t.embedding, x -> CAST(x AS DOUBLE)),
-                   list_transform(tr.embedding, x -> CAST(x AS DOUBLE))), 6))
-               AS max_cosine
-    FROM test t JOIN train tr
-      ON list_cosine_similarity(
-             list_transform(t.embedding, x -> CAST(x AS DOUBLE)),
-             list_transform(tr.embedding, x -> CAST(x AS DOUBLE))) >= 0.35
-    GROUP BY t.vec_id
-    """,
-)
-def llm_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space benchmark decontamination (SURVEY.md §2.12): flag
-    TEST-split documents whose embedding has a TRAIN-split neighbor at
-    cosine ≥ 0.35 — the semantic complement of `llm_decontaminate`
-    (which catches exact n-gram overlap; paraphrased contamination slips
-    past shingles but not past embeddings).
-
-    The split is the SAME portable md5 assignment as `llm_split_hash`
-    (bucket 9 = test, <8 = train), so this audits exactly the split that
-    key ships. Exact test×train cosine is the oracle-checkable baseline;
-    its cost is |test|·|train| — at 100 TB the train side collapses to
-    ANN candidates (`llm_similarity_ivf`/`_sharded` cells) feeding this
-    same threshold+groupBy, and only the ~10% test slice scans fully.
-    49 cross-split pairs ≈ 15 contaminated test docs at sf0.01.
-    """
-    e = load(spark, sf_dir, "embeddings")
-    bucket = md5_long(F.concat(F.lit("split_"), F.col("vec_id").cast("string"))) % 10
-    b = e.select("vec_id", "embedding", bucket.alias("bucket"))
-    test = b.where(F.col("bucket") == 9).select(
-        F.col("vec_id").alias("test_id"), F.col("embedding").alias("emb_t")
-    )
-    train = b.where(F.col("bucket") < 8).select(
-        F.col("vec_id").alias("train_id"), F.col("embedding").alias("emb_r")
-    )
-    cos = cosine_similarity(F.col("emb_t"), F.col("emb_r"))
-    return (
-        spread(test)
-        .crossJoin(F.broadcast(train))
-        .where(cos >= 0.35)
-        .groupBy("test_id")
-        .agg(
-            F.count("*").alias("n_train_neighbors"),
-            F.max(F.round(cos, 6)).alias("max_cosine"),
-        )
-    )
-
-
-@register(
-    "llm_bpe_pair_stats",
-    oracle="""
-    WITH vocab AS (
-        SELECT w AS word, COUNT(*) AS wfreq
-        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) t
-        WHERE len(w) >= 2
-        GROUP BY w
-    ), pairs AS (
-        SELECT substr(word, i, 2) AS pair, CAST(SUM(wfreq) AS BIGINT) AS pair_freq
-        FROM vocab, UNNEST(generate_series(1, len(word) - 1)) AS g(i)
-        GROUP BY substr(word, i, 2)
-    ), ranked AS (
-        SELECT pair, pair_freq,
-               ROW_NUMBER() OVER (ORDER BY pair_freq DESC, pair) AS rnk
-        FROM pairs
-    )
-    SELECT rnk, pair, pair_freq FROM ranked WHERE rnk <= 20
-    """,
-)
-def llm_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge-candidate statistics (SURVEY.md §2.12): the hot inner
-    pass of byte-pair-encoding tokenizer TRAINING — corpus frequency of
-    every adjacent character pair, weighted by word frequency, top-20
-    ranked. (`llm_token_count_bpe` applies a tokenizer; this is the pass
-    that builds one.)
-
-    The scale trick is the two-level aggregation: the fact-sized pass
-    collapses the corpus to its VOCABULARY (word → count) first, and
-    pair explosion runs over distinct words only — pair counts then
-    weight by word frequency instead of re-scanning text. Vocabulary and
-    pair tables are bounded (≈ vocab × word-length), so the final global
-    rank window sorts a tiny table; all counts are exact integers.
-    """
-    d = load(spark, sf_dir, "documents")
-    vocab = (
-        d.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
-        .where(F.length("word") >= 2)
-        .groupBy("word")
-        .agg(F.count("*").alias("wfreq"))
-    )
-    pairs = (
-        vocab.select(
-            "wfreq",
-            F.explode(F.sequence(F.lit(1), F.length("word") - 1)).alias("i"),
-            "word",
-        )
-        .select(
-            F.col("word").substr(F.col("i"), F.lit(2)).alias("pair"), F.col("wfreq")
-        )
-        .groupBy("pair")
-        .agg(F.sum("wfreq").cast("long").alias("pair_freq"))
-    )
-    return (
-        grid_rank(pairs, [F.desc("pair_freq"), F.asc("pair")], "rnk")
-        .where(F.col("rnk") <= 20)
-        .select("rnk", "pair", "pair_freq")
     )
 
 

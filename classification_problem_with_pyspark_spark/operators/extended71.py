@@ -1,26 +1,21 @@
-"""Round-3 extension pack #71: index of coincidence and exact p-chart
-control limits.
+"""Round-3 extension pack #71: exact p-chart control limits.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
-knowledge — the index of coincidence (Friedman 1922: the probability
-two sampled letters match, Σc(c−1)/(N(N−1)) — the classical
-language/cipher fingerprint, still a cheap languageness feature) and
-the Shewhart p-chart (daily proportion with 3σ binomial control
-limits, the SPC workhorse for defect-rate monitoring) — re-expressed
-on the public PySpark DataFrame API over the driver's testdata.
+file:line citations into it are possible. The pattern is public
+knowledge — the Shewhart p-chart (daily proportion with 3σ binomial
+control limits, the SPC workhorse for defect-rate monitoring) —
+re-expressed on the public PySpark DataFrame API over the driver's
+testdata.
 
-Hash-parity discipline (round-3 standard): IC is a pure integer
-rational (letter counts; micro-folded with one floor division); the
-p-chart's out-of-control test is decided ENTIRELY in integers by
-cross-multiplying the 3σ inequality — (x_d·N − n_d·X)²·N >
+Hash-parity discipline (round-3 standard): the p-chart's out-of-control
+test is decided ENTIRELY in integers by cross-multiplying the 3σ
+inequality — (x_d·N − n_d·X)²·N >
 9·X·(N−X)·n_d·N... reduced to (x_d·N − n_d·X)² > 9·X·(N−X)·n_d — so
 the chart's verdicts carry no float at all (the plotted limits ride
 along as ROUND-6 doubles for the humans).
 
-Scale posture (SURVEY.md §7.6): IC is explode→count per (lang,
-letter), then a per-lang fold; the p-chart is a daily conditional
-count + a broadcast of the global center line. Both counting jobs.
+Scale posture (SURVEY.md §7.6): the p-chart is a daily conditional
+count + a broadcast of the global center line — a counting job.
 """
 
 from __future__ import annotations
@@ -32,69 +27,6 @@ from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
 DEFECT_GATE = 400  # a "defect" event: value > 400 (rare-ish)
-
-
-@register(
-    "llm_index_of_coincidence",
-    oracle="""
-    WITH letters AS (
-        SELECT lang, unnest(string_split_regex(lower(text), '')) AS ch
-        FROM documents
-    ),
-    counted AS (
-        SELECT lang, ch, CAST(COUNT(*) AS BIGINT) AS c
-        FROM letters WHERE ch BETWEEN 'a' AND 'z'
-        GROUP BY lang, ch
-    ),
-    folded AS (
-        SELECT lang,
-               CAST(SUM(c) AS BIGINT) AS n,
-               CAST(SUM(c * (c - 1)) AS BIGINT) AS coincidences,
-               CAST(COUNT(*) AS BIGINT) AS n_distinct_letters
-        FROM counted GROUP BY lang
-    )
-    SELECT lang, n, n_distinct_letters,
-           CAST((1000000 * coincidences) // (n * (n - 1)) AS BIGINT)
-               AS ic_micro
-    FROM folded
-    ORDER BY lang
-    """,
-)
-def llm_index_of_coincidence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index of coincidence (SURVEY.md §2.12): the probability that two
-    letters drawn without replacement from a language's corpus match —
-    Σc(c−1)/(N(N−1)) over the a-z letter counts (Friedman 1922).
-    English-like text sits near 0.065, uniform-random letters at
-    1/26 ≈ 0.038 — which is why IC is both the classical cipher
-    fingerprint and a zero-model "languageness" feature that
-    complements the registry's n-gram language-ID: it needs no
-    training corpus at all, only counting.
-
-    Exactness: letter counts are integers; IC folds one floor-micro
-    division of exact products — IC over a corpus is a pure rational.
-
-    Scale: explode to letters, count per (lang, letter) — map-side
-    combinable into at most 26 cells per language — then a per-lang
-    fold. The cheapest text statistic there is.
-    """
-    letters = load(spark, sf_dir, "documents").select(
-        "lang",
-        F.explode(F.split(F.lower("text"), "")).alias("ch"),
-    ).where(F.col("ch").between("a", "z"))
-    counted = letters.groupBy("lang", "ch").agg(F.count("*").alias("c"))
-    folded = counted.groupBy("lang").agg(
-        F.sum("c").cast("long").alias("n"),
-        F.sum(F.col("c") * (F.col("c") - 1)).cast("long").alias("coincidences"),
-        F.count("*").alias("n_distinct_letters"),
-    )
-    return folded.select(
-        "lang",
-        "n",
-        "n_distinct_letters",
-        F.expr(
-            "CAST((1000000 * coincidences) DIV (n * (n - 1)) AS BIGINT)"
-        ).alias("ic_micro"),
-    ).orderBy("lang")
 
 
 @register(

@@ -1,17 +1,13 @@
-"""Round-3 extension pack #8: operational-analytics and sampling
-completions — data-freshness SLA auditing, the Theil–Sen robust trend
-estimator (paired with the Mann–Kendall test from pack #7), a true
+"""Round-3 extension pack #8: operational-analytics completions —
+data-freshness SLA auditing, the Theil–Sen robust trend estimator
+(paired with the Mann–Kendall test from pack #7), and a true
 interval-overlap join (distinct from the point-in-range `join_range_*`
-shapes), deterministic weighted sampling by hash priority, and a
-distributed BPE merge-learning loop over the documents corpus.
+shapes).
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. All patterns here are public
-knowledge — Theil–Sen (Sen 1968), weighted sampling by uniform-over-weight
-priority (the Efraimidis–Spirakis 2006 A-ES family, here with a
-hash-derived uniform so both engines agree bit-for-bit), byte-pair
-encoding merge learning (Sennrich et al. 2016) — expressed on the public
-PySpark DataFrame API over the driver's testdata.
+knowledge — Theil–Sen (Sen 1968) — expressed on the public PySpark
+DataFrame API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): every cross-row float
 aggregate folds INTEGER micro-units or exact BIGINT counts; the only
@@ -30,12 +26,6 @@ Scale posture (SURVEY.md §7.6):
 - The interval-overlap join is banded by day (equi-key) with the
   overlap predicate applied inside each day band — never a cartesian;
   at 100 TB widen the band key to (day, hour) to cap band width.
-- Weighted sampling is one shuffle on lang for the rank window; at
-  100 TB pre-filter with an approximate per-lang priority threshold
-  (the classic top-k two-pass trick) so the window sees ~k·P rows.
-- BPE learning shuffles (pair → count) per round with the corpus
-  re-used from a cached token table; rounds are few (5) and each is a
-  standard partial-agg groupBy.
 """
 
 from __future__ import annotations
@@ -44,10 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
-from classification_problem_with_pyspark_spark.plans.fanout import spread
 from classification_problem_with_pyspark_spark.registry import register
-from classification_problem_with_pyspark_spark.sources.catalog import load, local_rows
+from classification_problem_with_pyspark_spark.sources.catalog import load
 
 
 @register(
@@ -300,161 +288,3 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("user_id", "day")
     )
-
-
-@register(
-    "llm_sample_weighted_priority",
-    oracle="""
-    WITH keyed AS (
-        SELECT doc_id, lang, n_chars,
-               CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                    AS UBIGINT) AS h
-        FROM documents
-        WHERE n_chars > 0
-    ), ranked AS (
-        SELECT lang, doc_id, n_chars,
-               row_number() OVER (
-                   PARTITION BY lang
-                   ORDER BY CAST(h AS DOUBLE) / n_chars, doc_id) AS rank
-        FROM keyed
-    )
-    SELECT lang, CAST(rank AS BIGINT) AS sample_rank, doc_id, n_chars
-    FROM ranked WHERE rank <= 20
-    ORDER BY lang, sample_rank
-    """,
-)
-def llm_sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic weighted sampling by hash priority (SURVEY.md
-    §2.12): top-20 documents per lang under priority u/w, where u is a
-    32-bit uniform derived from md5(doc_id) and w = n_chars. Ordering
-    by uniform-over-weight selects each document with probability
-    increasing in its weight — the deterministic, reproducible cousin
-    of Efraimidis–Spirakis A-ES weighted reservoir sampling (A-ES uses
-    u^(1/w); u/w has the same monotone-in-weight selection property
-    without pow(), whose libm rounding differs across engines).
-
-    Training-data use: length-weighted corpus subsampling that any two
-    runs — or two ENGINES, as the oracle proves — reproduce exactly,
-    because the "randomness" is a hash, not an RNG. The single double
-    division u/w is one IEEE op (bit-identical both sides); ties broken
-    by doc_id for a total order.
-
-    Scale: one shuffle on lang for the rank window; at 100 TB pre-cut
-    with a per-lang approximate priority threshold (classic two-pass
-    top-k) so the exact window sees only ~k·P candidates per lang.
-    """
-    d = load(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
-    h = md5_long(F.col("doc_id").cast("string"), 8)
-    keyed = d.select(
-        "doc_id", "lang", "n_chars", (h.cast("double") / F.col("n_chars")).alias("pr")
-    )
-    w = Window.partitionBy("lang").orderBy("pr", "doc_id")
-    return (
-        keyed.select(
-            "lang",
-            F.row_number().over(w).alias("sample_rank"),
-            "doc_id",
-            "n_chars",
-        )
-        .where(F.col("sample_rank") <= 20)
-        .orderBy("lang", "sample_rank")
-    )
-
-
-def bpe_learn(
-    spark: SparkSession, sf_dir: str, n_rounds: int, keep_word: bool = False
-):
-    """Shared BPE merge-learning loop (see llm_bpe_merge_learn for the
-    algorithm and scale notes). Returns (words_df, merges): the final
-    per-word symbol table — with the original word string retained when
-    keep_word, so appliers can join token counts back to documents —
-    and the learned merge list [(step, left, right, count)].
-    """
-    d = load(spark, sf_dir, "documents")
-    lead = ["word"] if keep_word else []
-    words = spread(
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count("*").alias("wcnt"))
-        .select(
-            *lead,
-            F.col("wcnt"),
-            F.split(F.col("word"), "(?!^)").alias("syms"),
-        )
-    ).localCheckpoint()
-    merges: list[tuple[int, str, str, int]] = []
-    for step in range(1, n_rounds + 1):
-        pairs = (
-            words.where(F.size("syms") >= 2)
-            .select(
-                "wcnt",
-                F.explode(
-                    F.zip_with(
-                        F.slice("syms", 1, F.size("syms") - 1),
-                        F.slice("syms", 2, F.size("syms") - 1),
-                        lambda l, r: F.struct(l.alias("l"), r.alias("r")),
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("wcnt").alias("cnt"))
-        )
-        top = pairs.orderBy(F.desc("cnt"), "l", "r").limit(1).collect()
-        if not top:
-            break
-        l, r, cnt = top[0]["l"], top[0]["r"], int(top[0]["cnt"])
-        merges.append((step, l, r, cnt))
-        merged = l + r
-        words = words.select(
-            *lead,
-            F.col("wcnt"),
-            F.filter(
-                F.aggregate(
-                    "syms",
-                    F.array().cast("array<string>"),
-                    lambda acc, s: F.when(
-                        # try_element_at: NULL (not ANSI error) on the empty
-                        # initial accumulator; NULL == l is false-y as needed
-                        (F.try_element_at(acc, F.lit(-1)) == F.lit(l))
-                        & (s == F.lit(r)),
-                        F.concat(
-                            F.slice(acc, 1, F.size(acc) - 1),
-                            F.array(F.lit(merged)),
-                        ),
-                    ).otherwise(F.concat(acc, F.array(s))),
-                ),
-                lambda s: F.length(s) > 0,
-            ).alias("syms"),
-        ).localCheckpoint()
-    return words, merges
-
-
-@register("llm_bpe_merge_learn")
-def llm_bpe_merge_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE merge learning (SURVEY.md §2.12), 6 rounds: start
-    from the character sequence of each word (the Sennrich et al. 2016
-    setup), and per round (a) count all adjacent symbol pairs across
-    the corpus, (b) pick the most frequent pair — ties broken
-    lexicographically so the run is deterministic — and (c) apply the
-    merge corpus-wide. Emits the learned merge table (step, left,
-    right, pair_count): the actual artifact a tokenizer trainer ships.
-
-    Complements `llm_bpe_pair_stats` (one static pair count) with the
-    real iterative algorithm. Rows-only by necessity: a 6-round
-    argmax-and-rewrite loop is not one SQL statement; the quality gate
-    in tests/test_extended8.py recomputes the merges with a pure-Python
-    reference BPE on the same corpus at sf0.001 and requires the merge
-    tables to be IDENTICAL.
-
-    Scale shape: each round is (explode word → adjacent pairs) →
-    map-side-combinable groupBy(pair) → a 1-row argmax broadcast back
-    into a JVM-side transform() that rewrites each word's symbol array
-    in place — the corpus table stays partition-resident; only pair
-    counts shuffle. Rounds are few and fixed (BPE vocab learning is
-    embarrassingly iterative; production trainers batch merges per
-    round the same way). The word table is localCheckpoint'd per round
-    to keep lineage flat (the llm_dedup_cluster_cc precedent).
-    """
-    _, merges = bpe_learn(spark, sf_dir, 6)
-    return local_rows(spark, merges, "step long, left string, right string, pair_count long")

@@ -1,27 +1,20 @@
-"""Round-3 extension pack #84: cursor-chain reassembly and
-self-consistency majority voting.
+"""Round-3 extension pack #84: cursor-chain reassembly.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — paginated-API export reassembly (cursor-linked pages whose
 chain must be validated — every page's next_cursor resolves, no
 orphans, no duplicate page ids, one head, one tail — before the export
-is trusted; the ELT edge every SaaS connector implements) and
-self-consistency decoding (Wang et al., ICLR 2023: sample N answers,
-take the MAJORITY — complementing pass@k's any-of-k with vote-of-N,
-which helps exactly when single-sample accuracy is above chance) —
+is trusted; the ELT edge every SaaS connector implements) —
 re-expressed on the public PySpark DataFrame API over the driver's
 testdata.
 
 Hash-parity discipline (round-3 standard): pages are a deterministic
 render of nation shards with md5-derived opaque cursors; chain
-verdicts are join/count algebra. Votes are md5 sample outcomes (the
-pass@k machinery, reused deliberately so the two estimators share
-their synthetic model); majority verdicts are integer comparisons.
+verdicts are join/count algebra.
 
 Scale posture (SURVEY.md §7.6): chain validation is two self-joins of
-the (tiny) page-manifest relation, never the payloads; voting is one
-(task, sample) count and a task-level rollup, map-side combinable.
+the (tiny) page-manifest relation, never the payloads.
 """
 
 from __future__ import annotations
@@ -32,14 +25,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_hex, md5_long
+from classification_problem_with_pyspark_spark.functions.hashing import md5_hex
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank, grid_shift
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import bounded_collect, load, stage_dir
 
 PAGE_SIZE = 4  # nations per export page
-VOTE_N = 9  # samples per task (odd — no tie rule needed)
-VOTE_MAJ = 5
 
 
 @register(
@@ -164,104 +155,4 @@ def source_cursor_chain_reassembly(spark: SparkSession, sf_dir: str) -> DataFram
             ).alias("chain_ok"),
         )
         .orderBy("page_no")
-    )
-
-
-@register(
-    "llm_self_consistency_vote",
-    oracle=f"""
-    WITH samples AS (
-        SELECT d.doc_id, d.source, i.i,
-               CASE WHEN CAST(('0x' || substr(md5('pass_' || CAST(d.doc_id AS VARCHAR)
-                                 || '_' || CAST(i.i AS VARCHAR)), 1, 15)) AS BIGINT)
-                         % 100
-                       < 20 + CAST(('0x' || substr(md5('diff_'
-                                 || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 60
-                    THEN 1 ELSE 0 END AS ok
-        FROM documents d,
-             (SELECT unnest(range({VOTE_N})) AS i) i
-    ),
-    per_task AS (
-        SELECT doc_id, source,
-               CAST(SUM(ok) AS BIGINT) AS c,
-               CAST(MAX(CASE WHEN i = 0 THEN ok END) AS BIGINT) AS first_ok
-        FROM samples GROUP BY doc_id, source
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_tasks,
-           CAST(SUM(first_ok) AS BIGINT) AS single_sample_correct,
-           CAST(SUM(CASE WHEN c >= {VOTE_MAJ} THEN 1 ELSE 0 END) AS BIGINT)
-               AS majority_correct,
-           CAST((1000000 * SUM(first_ok)) // COUNT(*) AS BIGINT)
-               AS single_acc_micro,
-           CAST((1000000 * SUM(CASE WHEN c >= {VOTE_MAJ} THEN 1 ELSE 0 END))
-                // COUNT(*) AS BIGINT) AS vote_acc_micro
-    FROM per_task
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def llm_self_consistency_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-consistency voting (SURVEY.md §2.12): per task, draw
-    {VOTE_N} samples (the pack-59 synthetic outcome model, reused
-    DELIBERATELY so this key and `llm_eval_pass_at_k` describe the
-    same corpus) and score the MAJORITY vote against the
-    single-sample baseline (sample 0) — Wang et al.'s
-    self-consistency, which lifts accuracy exactly on tasks whose
-    per-sample accuracy is above one half and hurts below it; the
-    per-source table shows both numbers so the lift (or damage) is a
-    subtraction. Complements pass@k: any-of-k measures a VERIFIER
-    pipeline, vote-of-N measures a VERIFIER-FREE one — the two
-    deployment regimes.
-
-    Exactness: integer sample outcomes, counts, floor-micro
-    accuracies; {VOTE_N} is odd so no tie rule is needed (stated).
-
-    Scale: one (task, sample) expression scan + two rollups —
-    map-side combinable counting, same as every eval harness.
-    """
-    d = load(spark, sf_dir, "documents").select("doc_id", "source")
-    idx = spark.range(VOTE_N).select(F.col("id").cast("long").alias("i"))
-
-    difficulty = 20 + md5_long(F.concat(F.lit("diff_"), F.col("doc_id").cast("string"))) % 60
-    ok = (
-        md5_long(
-            F.concat(
-                F.lit("pass_"),
-                F.col("doc_id").cast("string"),
-                F.lit("_"),
-                F.col("i").cast("string"),
-            )
-        )
-        % 100
-        < difficulty
-    ).cast("long")
-    per_task = (
-        d.crossJoin(F.broadcast(idx))
-        .select("doc_id", "source", "i", ok.alias("ok"))
-        .groupBy("doc_id", "source")
-        .agg(
-            F.sum("ok").cast("long").alias("c"),
-            F.max(F.when(F.col("i") == 0, F.col("ok"))).cast("long").alias(
-                "first_ok"
-            ),
-        )
-    )
-    return (
-        per_task.groupBy("source")
-        .agg(
-            F.count("*").alias("n_tasks"),
-            F.sum("first_ok").cast("long").alias("single_sample_correct"),
-            F.sum(F.when(F.col("c") >= VOTE_MAJ, 1).otherwise(0))
-            .cast("long")
-            .alias("majority_correct"),
-            F.expr(
-                "CAST((1000000 * SUM(first_ok)) DIV COUNT(*) AS BIGINT)"
-            ).alias("single_acc_micro"),
-            F.expr(
-                f"CAST((1000000 * SUM(CASE WHEN c >= {VOTE_MAJ} THEN 1 ELSE 0 "
-                "END)) DIV COUNT(*) AS BIGINT)"
-            ).alias("vote_acc_micro"),
-        )
-        .orderBy("source")
     )

@@ -1,26 +1,22 @@
-"""Round-3 extension pack #9: preference-data construction, marketing
-attribution, nonparametric hypothesis testing, and a non-file streaming
-source — four shapes a production training-data + analytics platform
-still needed after packs 1–8.
+"""Round-3 extension pack #9: marketing attribution, nonparametric
+hypothesis testing, and a non-file streaming source — shapes a
+production analytics platform still needed after packs 1–8.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
 file:line citations into it are possible. All patterns here are public
-knowledge — DPO preference-pair construction (Rafailov et al. 2023 data
-setup), multi-touch attribution (first/last/linear position credit), the
-Mann–Whitney U rank-sum test (Mann & Whitney 1947), and Spark's
-rate-micro-batch streaming source — expressed on the public PySpark
-DataFrame / Structured Streaming API over the driver's testdata.
+knowledge — multi-touch attribution (first/last/linear position
+credit), the Mann–Whitney U rank-sum test (Mann & Whitney 1947), and
+Spark's rate-micro-batch streaming source — expressed on the public
+PySpark DataFrame / Structured Streaming API over the driver's testdata.
 
 Hash-parity discipline (round-3 standard): rank statistics use the
 average-rank×2 identity (2·avg = min_rank + max_rank under ties) so tied
 ranks stay INTEGRAL; fractional position credit folds floor(1e6/n)
-micro-units; scores are integer type-token-ratio micro-units; the one
-streaming key reads a source whose output is fully determined by its
-options (no wall clock — startTimestamp pinned to epoch 0).
+micro-units; the one streaming key reads a source whose output is fully
+determined by its options (no wall clock — startTimestamp pinned to
+epoch 0).
 
 Scale posture (SURVEY.md §7.6):
-- Preference pairs: two rank windows over (lang, source) groups — one
-  shuffle, group-local; the pair join is on the tiny per-group winners.
 - Attribution: purchases×touches is a USER-keyed equi-join with a
   7-day residual range — band width is one user's week of events; the
   position window is keyed by purchase id. No global ordering anywhere.
@@ -208,105 +204,6 @@ def events_attribution_multitouch(spark: SparkSession, sf_dir: str) -> DataFrame
             F.count("*").alias("touches"),
         )
         .orderBy("event_type")
-    )
-
-
-@register(
-    "llm_preference_pairs",
-    oracle="""
-    WITH scored AS (
-        SELECT doc_id, lang, source,
-               CAST(floor(1000000.0 * len(list_distinct(string_split(text, ' ')))
-                          / len(string_split(text, ' '))) AS BIGINT) AS ttr_micro
-        FROM documents
-    ), ranked AS (
-        SELECT *,
-               row_number() OVER (PARTITION BY lang, source
-                                  ORDER BY ttr_micro DESC, doc_id) AS rn_top,
-               row_number() OVER (PARTITION BY lang, source
-                                  ORDER BY ttr_micro ASC, doc_id) AS rn_bot,
-               CAST(count(*) OVER (PARTITION BY lang, source) AS BIGINT)
-                   AS n_group
-        FROM scored
-    )
-    SELECT t.lang, t.source,
-           t.doc_id AS chosen_doc_id, b.doc_id AS rejected_doc_id,
-           t.ttr_micro AS chosen_score_micro, b.ttr_micro AS rejected_score_micro,
-           t.ttr_micro - b.ttr_micro AS margin_micro, t.n_group
-    FROM ranked t JOIN ranked b USING (lang, source)
-    WHERE t.rn_top = 1 AND b.rn_bot = 1 AND t.n_group >= 2
-    ORDER BY t.lang, t.source
-    """,
-)
-def llm_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Preference-pair construction for DPO/RLHF-style training data
-    (SURVEY.md §2.12): within every (lang, source) group, pair the
-    highest-scoring document (chosen) with the lowest (rejected) and
-    emit the pair with its score margin — the standard reduction of a
-    scored corpus to preference data when no human labels exist.
-
-    Score = type-token ratio in integer micro-units (distinct words /
-    total words × 1e6, floored): one division + floor, bit-identical on
-    both engines; ties broken by doc_id so chosen/rejected are unique.
-    Singleton groups are excluded (a pair needs two documents). At
-    sf0.01: 97 groups of which 96 yield pairs.
-
-    Scale: two rank windows over the same (lang, source) partitioning —
-    one shuffle; the final self-join touches only per-group winners
-    (2 rows/group). For top-k pair mining per group, widen rn_top/rn_bot
-    to k and cross the k×k block — still group-local.
-    """
-    d = load(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
-    scored = d.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.floor(1000000.0 * F.size(F.array_distinct(words)) / F.size(words))
-        .cast("long")
-        .alias("ttr_micro"),
-    )
-    wtop = Window.partitionBy("lang", "source").orderBy(
-        F.desc("ttr_micro"), F.asc("doc_id")
-    )
-    wbot = Window.partitionBy("lang", "source").orderBy(
-        F.asc("ttr_micro"), F.asc("doc_id")
-    )
-    wall = Window.partitionBy("lang", "source")
-    ranked = scored.select(
-        "*",
-        F.row_number().over(wtop).alias("rn_top"),
-        F.row_number().over(wbot).alias("rn_bot"),
-        F.count("*").over(wall).cast("long").alias("n_group"),
-    )
-    top = ranked.where((F.col("rn_top") == 1) & (F.col("n_group") >= 2)).select(
-        "lang",
-        "source",
-        F.col("doc_id").alias("chosen_doc_id"),
-        F.col("ttr_micro").alias("chosen_score_micro"),
-        "n_group",
-    )
-    bot = ranked.where(F.col("rn_bot") == 1).select(
-        "lang",
-        "source",
-        F.col("doc_id").alias("rejected_doc_id"),
-        F.col("ttr_micro").alias("rejected_score_micro"),
-    )
-    return (
-        top.join(bot, ["lang", "source"])
-        .select(
-            "lang",
-            "source",
-            "chosen_doc_id",
-            "rejected_doc_id",
-            "chosen_score_micro",
-            "rejected_score_micro",
-            (F.col("chosen_score_micro") - F.col("rejected_score_micro")).alias(
-                "margin_micro"
-            ),
-            "n_group",
-        )
-        .orderBy("lang", "source")
     )
 
 

@@ -1,28 +1,21 @@
-"""Round-3 extension pack #94: judge position-bias audit and INT96
-legacy-timestamp parquet compatibility.
+"""Round-3 extension pack #94: INT96 legacy-timestamp parquet
+compatibility.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
-knowledge — position-bias auditing of pairwise judges (LLM-as-judge
-verdicts flip when answer order swaps; Zheng et al.'s MT-Bench paper
-measures exactly this, and arenas counterbalance because of it) and
-INT96 timestamp compatibility (the legacy Hive/Impala parquet
-timestamp encoding Spark still writes behind
-`spark.sql.parquet.outputTimestampType=INT96`; readers must agree on
-its instant semantics or timestamps shift) — re-expressed on the
-public PySpark DataFrame API over the driver's testdata.
+file:line citations into it are possible. The pattern is public
+knowledge — INT96 timestamp compatibility (the legacy Hive/Impala
+parquet timestamp encoding Spark still writes behind
+`spark.sql.parquet.outputTimestampType=INT96`; readers must agree on its
+instant semantics or timestamps shift) — re-expressed on the public
+PySpark DataFrame API over the driver's testdata.
 
-Hash-parity discipline (round-3 standard): the judge is deterministic
-(longer text wins) with an INJECTED first-position bias that flips
-verdicts whose length gap is below a threshold; every pair is judged
-in BOTH orders and the flip census is exact counts. The INT96 file is
-written by Spark itself under the legacy option; the readback
-aggregates to day counts restated by the oracle from the base table —
-an instant shift of any row breaks the hash.
+Hash-parity discipline (round-3 standard): the INT96 file is written by
+Spark itself under the legacy option; the readback aggregates to day
+counts restated by the oracle from the base table — an instant shift of
+any row breaks the hash.
 
-Scale posture (SURVEY.md §7.6): the audit is the pack-85 match table
-judged twice (pure expressions — no second scan); the INT96 leg is
-one write + one read of a bounded projection.
+Scale posture (SURVEY.md §7.6): one write + one read of a bounded
+projection.
 """
 
 from __future__ import annotations
@@ -31,104 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.functions.hashing import md5_long
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, stage_dir
-
-BIAS_GAP = 40  # first position wins any contest with |len gap| below this
-PAIR_STRIDE = 7
-PAIR_MOD = 3
-
-
-@register(
-    "llm_judge_position_bias",
-    oracle=f"""
-    WITH d1 AS (
-        SELECT doc_id, source, length(text) AS len FROM documents
-    ),
-    pairs AS (
-        SELECT a.doc_id AS ida, b.doc_id AS idb,
-               a.len AS la, b.len AS lb
-        FROM d1 a JOIN d1 b ON b.doc_id = a.doc_id + {PAIR_STRIDE}
-        WHERE CAST(('0x' || substr(md5('bt_' || CAST(a.doc_id AS VARCHAR)), 1, 15))
-                   AS BIGINT) % {PAIR_MOD} = 0
-          AND a.len <> b.len
-    ),
-    judged AS (  -- judge(first, second): first wins close contests
-        SELECT ida, idb, la, lb,
-               CASE WHEN la - lb > -{BIAS_GAP} THEN 1 ELSE 0 END
-                   AS a_wins_shown_first,
-               CASE WHEN lb - la > -{BIAS_GAP} THEN 0 ELSE 1 END
-                   AS a_wins_shown_second
-        FROM pairs
-    )
-    SELECT
-        CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        CAST(SUM(CASE WHEN a_wins_shown_first = a_wins_shown_second
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_consistent,
-        CAST(SUM(CASE WHEN a_wins_shown_first <> a_wins_shown_second
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_flipped,
-        CAST(SUM(CASE WHEN abs(la - lb) < {BIAS_GAP} THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_close_contests,
-        CAST((1000000 * SUM(CASE WHEN a_wins_shown_first <> a_wins_shown_second
-                                 THEN 1 ELSE 0 END)) // COUNT(*) AS BIGINT)
-            AS flip_rate_micro
-    FROM judged
-    """,
-)
-def llm_judge_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Judge position-bias audit (SURVEY.md §2.12): every pack-85
-    tournament pair is judged TWICE — (A, B) and (B, A) — by a
-    deterministic judge with an injected first-position advantage
-    (the first answer wins any contest whose length gap is inside
-    {BIAS_GAP}); the census counts consistent verdicts vs flips. By
-    construction the flips are EXACTLY the close contests (asserted),
-    which is the real phenomenon's shape too: position bias lives
-    where the true quality gap is small (Zheng et al., MT-Bench).
-    Arena pipelines counterbalance order because of this number; the
-    audit is how you know you must.
-
-    Exactness: integer lengths, verdicts, counts, floor-micro rate.
-
-    Scale: both orders are pure expressions over the one pair table —
-    auditing costs nothing beyond the tournament itself.
-    """
-    d1 = load(spark, sf_dir, "documents").select(
-        "doc_id", F.length("text").alias("len")
-    )
-    a = d1.select(F.col("doc_id").alias("ida"), F.col("len").alias("la"))
-    b = d1.select(F.col("doc_id").alias("idb"), F.col("len").alias("lb"))
-    phash = md5_long(F.concat(F.lit("bt_"), F.col("ida").cast("string")))
-    pairs = (
-        a.join(b, F.col("idb") == F.col("ida") + PAIR_STRIDE)
-        .where((phash % PAIR_MOD == 0) & (F.col("la") != F.col("lb")))
-    )
-    first = F.when(F.col("la") - F.col("lb") > -BIAS_GAP, 1).otherwise(0)
-    second = F.when(F.col("lb") - F.col("la") > -BIAS_GAP, 0).otherwise(1)
-    judged = pairs.select(
-        "la",
-        "lb",
-        first.alias("w1"),
-        second.alias("w2"),
-    )
-    return judged.agg(
-        F.count("*").alias("n_pairs"),
-        F.sum(F.when(F.col("w1") == F.col("w2"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_consistent"),
-        F.sum(F.when(F.col("w1") != F.col("w2"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_flipped"),
-        F.sum(
-            F.when(F.abs(F.col("la") - F.col("lb")) < BIAS_GAP, 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_close_contests"),
-        F.expr(
-            "CAST((1000000 * SUM(CASE WHEN w1 <> w2 THEN 1 ELSE 0 END)) "
-            "DIV COUNT(*) AS BIGINT)"
-        ).alias("flip_rate_micro"),
-    )
 
 
 @register(

@@ -1,169 +1,32 @@
-"""Round-3 extension pack #96: budgeted greedy selection and
-comb-filter periodicity detection.
+"""Round-3 extension pack #96: comb-filter periodicity detection.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
-knowledge — greedy knapsack selection by value density (pick items by
-value/weight until the budget closes — the ½-approximation every
-budget-constrained data-curation pipeline actually runs, because the
-optimum is NP and the greedy is one sort) and comb-filter periodicity
-detection (score each candidate period by how much the series' mass
-separates across its residue classes — the FFT-free way to find "is
-there a weekly cycle", which is all a calendar series usually asks) —
-re-expressed on the public PySpark DataFrame API over the driver's
-testdata.
+file:line citations into it are possible. The pattern is public
+knowledge — comb-filter periodicity detection (score each candidate
+period by how much the series' mass separates across its residue
+classes — the FFT-free way to find "is there a weekly cycle", which is
+all a calendar series usually asks) — re-expressed on the public
+PySpark DataFrame API over the driver's testdata.
 
-Hash-parity discipline (round-3 standard): document value is the
-registry's deterministic quality rule (md5-free: stopword/length
-arithmetic is already hash-pinned elsewhere, so here value = exact
-integer distinct-word count) and density ranks under a
-(density DESC, doc) total order with cumulative-token cutoffs — the
-0/1 greedy (items that no longer fit are SKIPPED, not fractionally
-taken; stated). Periodicity scores fold per-class floor divisions of
-exact integer sums — deterministic identically on both engines — and
-the argmax period is a total order.
+Hash-parity discipline (round-3 standard): periodicity scores fold
+per-class floor divisions of exact integer sums — deterministic
+identically on both engines — and the argmax period is a total order.
 
-Scale posture (SURVEY.md §7.6): selection is one density sort + a
-cumulative window (the approx-threshold prefilter note applies as
-ever); the comb scan is |periods| × |days| arithmetic over the
-calendar-bounded daily series.
+Scale posture (SURVEY.md §7.6): the comb scan is |periods| × |days|
+arithmetic over the calendar-bounded daily series.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_rank
 from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load
 
-SELECT_BUDGET_TOKENS = 12_000
 COMB_MIN_P = 2
 COMB_MAX_P = 14
-
-
-@register(
-    "llm_budgeted_selection_greedy",
-    oracle=f"""
-    WITH scored AS (
-        SELECT doc_id, source,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-               CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-                   AS value_distinct
-        FROM documents
-    ),
-    ranked AS (
-        SELECT *,
-               (1000000 * value_distinct) // n_tokens AS density_micro,
-               row_number() OVER (
-                   ORDER BY (1000000 * value_distinct) // n_tokens DESC,
-                            doc_id) AS rk
-        FROM scored WHERE n_tokens > 0
-    ),
-    running AS (  -- 0/1 greedy: take while the PRIOR total still fits
-        SELECT *,
-               CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY rk
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    AS BIGINT) AS tokens_before
-        FROM ranked
-    ),
-    selected AS (
-        SELECT * FROM running
-        WHERE tokens_before + n_tokens <= {SELECT_BUDGET_TOKENS}
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_selected,
-           CAST(SUM(n_tokens) AS BIGINT) AS tokens_used,
-           CAST(SUM(value_distinct) AS BIGINT) AS value_total,
-           CAST(MIN(density_micro) AS BIGINT) AS worst_density_micro
-    FROM selected
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def llm_budgeted_selection_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Budgeted greedy selection (SURVEY.md §2.12): pick documents by
-    VALUE DENSITY (distinct words per token — an exact-integer
-    quality proxy) until the {SELECT_BUDGET_TOKENS}-token budget
-    closes — the greedy knapsack every budget-constrained curation
-    pipeline runs (the optimum is NP; the density greedy is one sort
-    and a ½-approximation). This is 0/1 greedy: an item that no
-    longer fits is SKIPPED and the scan continues — smaller
-    lower-ranked documents can still enter (the behavior that
-    distinguishes knapsack-greedy from the prefix cut
-    `llm_quality_bucket_token_budget` takes; both live in the
-    registry deliberately).
-
-    Exactness: integer tokens and distinct counts; floor-micro
-    density; the take/skip rule compares exact cumulative sums.
-
-    Scale: no global sort at all — density_micro is BOUNDED in
-    [0, 1e6] by construction (floor of a ratio ≤ 1 in micro units),
-    but 1e6 distinct values is still a 1M-row single-task ceiling, so
-    the per-density cumsum is the bucket-stitch form (r11: 2^12-micro
-    buckets cap the only single-task window at ≤245 rows); the
-    within-density prefix sum is PARTITIONED by density_micro.
-    The (density DESC, doc_id) prefix total each row needs is
-    base + its own partition's prior sum — exact, and every shuffle
-    key is bounded.
-    """
-    scored = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(F.split("text", " ")))
-        .cast("long")
-        .alias("value_distinct"),
-    ).where(F.col("n_tokens") > 0)
-    ranked = scored.select(
-        "*",
-        F.expr("(1000000 * value_distinct) DIV n_tokens").alias("density_micro"),
-    )
-    # r11 (trend gate): the per-density histogram is domain-bounded at
-    # 1e6 distinct micro values — but that is a 1M-row single-task
-    # ceiling at real scale (the ml_lift_gain_deciles class, r10).
-    # Bucket-stitch the descending cumsum: 2^12-micro buckets cap the
-    # only single-task window at <=245 rows at any SF.
-    from classification_problem_with_pyspark_spark.plans.global_rank import (
-        bucketed_global_cumsum,
-    )
-
-    base = bucketed_global_cumsum(
-        ranked.groupBy("density_micro").agg(F.sum("n_tokens").alias("tsum")),
-        "density_micro",
-        [],
-        [("base_tokens", "tsum")],
-        descending=True,
-        bucket_bits=12,
-        frame_end=-1,
-    ).select("density_micro", "base_tokens")
-    w_val = (
-        Window.partitionBy("density_micro")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    running = ranked.join(F.broadcast(base), "density_micro").withColumn(
-        "tokens_before",
-        (
-            F.col("base_tokens")
-            + F.coalesce(F.sum("n_tokens").over(w_val), F.lit(0))
-        ).cast("long"),
-    )
-    selected = running.where(
-        F.col("tokens_before") + F.col("n_tokens") <= SELECT_BUDGET_TOKENS
-    )
-    return (
-        selected.groupBy("source")
-        .agg(
-            F.count("*").alias("n_selected"),
-            F.sum("n_tokens").cast("long").alias("tokens_used"),
-            F.sum("value_distinct").cast("long").alias("value_total"),
-            F.min("density_micro").cast("long").alias("worst_density_micro"),
-        )
-        .orderBy("source")
-    )
 
 
 @register(

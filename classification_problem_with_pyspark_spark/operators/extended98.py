@@ -1,28 +1,22 @@
-"""Round-3 extension pack #98: semantic-version ordering and the
-token-offset conservation audit.
+"""Round-3 extension pack #98: semantic-version ordering.
 
 Provenance note (SURVEY.md §0): /root/reference was EMPTY this session; no
-file:line citations into it are possible. Both patterns are public
+file:line citations into it are possible. The pattern is public
 knowledge — semantic-version comparison (semver.org: numeric
 component-wise ordering, where the lexical string sort famously breaks
 at "1.10.0" < "1.9.0" — the dependency-resolution bug every package
-registry fixed decades ago and every ad-hoc version column reinvents)
-and tokenization offset conservation (a tokenizer's spans must tile
-the source string — Σ token lengths + separators = text length; HF
-fast-tokenizers expose offsets precisely so pipelines can audit this)
-— re-expressed on the public PySpark DataFrame API over the driver's
+registry fixed decades ago and every ad-hoc version column reinvents) —
+re-expressed on the public PySpark DataFrame API over the driver's
 testdata.
 
 Hash-parity discipline (round-3 standard): versions are a
 deterministic synthesis from supplier keys; numeric ordering folds
 the components into one comparable integer (major·1e6 + minor·1e3 +
 patch) and the lexical rank rides alongside so the DIVERGENCE is a
-hash-pinned column. Offset conservation is pure integer length
-algebra over whitespace tokenization, with the reconstruction deficit
-(collapsed separator runs) quantified per document class.
+hash-pinned column.
 
-Scale posture (SURVEY.md §7.6): both are per-row projections plus a
-rank/census — semantics keys, priced accordingly.
+Scale posture (SURVEY.md §7.6): a per-row projection plus a rank — a
+semantics key, priced accordingly.
 """
 
 from __future__ import annotations
@@ -133,87 +127,4 @@ def scalar_semver_ordering_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank_diverges", F.col("semver_rank") != F.col("lexical_rank")
         )
         .orderBy("supp_key")
-    )
-
-
-@register(
-    "llm_token_offsets_audit",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, source,
-               CAST(length(text) AS BIGINT) AS text_len,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-               CAST(len(string_split(text, ' ')) - 1 AS BIGINT) AS n_seps,
-               CAST((SELECT COALESCE(SUM(length(t)), 0)
-                     FROM unnest(string_split(text, ' ')) AS u(t))
-                    AS BIGINT) AS token_chars
-        FROM documents
-    ),
-    audited AS (
-        SELECT source,
-               text_len - token_chars - n_seps AS deficit,
-               CASE WHEN text_len = token_chars + n_seps
-                    THEN 1 ELSE 0 END AS tiles_exactly
-        FROM toks
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(tiles_exactly) AS BIGINT) AS n_exact_tilings,
-           CAST(SUM(1 - tiles_exactly) AS BIGINT) AS n_lossy,
-           CAST(SUM(deficit) AS BIGINT) AS total_deficit_chars,
-           CAST(MAX(deficit) AS BIGINT) AS max_deficit_chars
-    FROM audited
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def llm_token_offsets_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-offset conservation (SURVEY.md §2.12): single-character
-    split tokenization must TILE the source exactly — Σ token chars +
-    (n−1) separators = text length — an IDENTITY for a faithful
-    splitter (consecutive separators yield empty tokens that preserve
-    it). What the hash therefore pins is the cross-engine SPLIT
-    SEMANTICS: an engine that dropped empty tokens, trimmed
-    boundaries, or collapsed separator runs would break the identity
-    on exactly the documents exhibiting those edges — the silent
-    divergences that corrupt span-aligned label data (the reason HF
-    fast tokenizers expose offsets at all). Conservation-law keys of
-    this kind (see `agg_moments_merge_audit`) make an algebraic
-    guarantee falsifiable rather than assumed.
-
-    Exactness: pure integer length algebra.
-
-    Scale: per-row arithmetic + one census; offset audits run at
-    ingest rate or not at all.
-    """
-    toks = load(spark, sf_dir, "documents").select(
-        "source",
-        F.length("text").cast("long").alias("text_len"),
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-        F.aggregate(
-            F.split("text", " "),
-            F.lit(0).cast("long"),
-            lambda acc, t: acc + F.length(t).cast("long"),
-        ).alias("token_chars"),
-    )
-    audited = toks.select(
-        "source",
-        (
-            F.col("text_len")
-            - F.col("token_chars")
-            - (F.col("n_tokens") - 1)
-        ).alias("deficit"),
-    ).withColumn(
-        "tiles_exactly", F.when(F.col("deficit") == 0, 1).otherwise(0)
-    )
-    return (
-        audited.groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("tiles_exactly").cast("long").alias("n_exact_tilings"),
-            F.sum(1 - F.col("tiles_exactly")).cast("long").alias("n_lossy"),
-            F.sum("deficit").cast("long").alias("total_deficit_chars"),
-            F.max("deficit").cast("long").alias("max_deficit_chars"),
-        )
-        .orderBy("source")
     )

@@ -16,7 +16,7 @@ Scale posture (the whole point of these operators at 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -34,6 +34,93 @@ from classification_problem_with_pyspark_spark.registry import register
 from classification_problem_with_pyspark_spark.sources.catalog import load, local_rows, path_for
 
 STOPWORDS = ("data", "row", "query", "the", "of")
+JACCARD_DUP = 0.8  # token-set Jaccard at which two documents are near-duplicates
+
+
+def content_digest() -> Column:
+    """md5 of the trimmed, lower-cased ``text``: the exact-duplicate key."""
+    return F.md5(F.lower(F.trim("text")))
+
+
+def split_bucket(id_col: str) -> Column:
+    """md5(``'split_' || id``) mod 10: buckets 0-7 are train, 8 val, 9 test."""
+    return md5_long(F.concat(F.lit("split_"), F.col(id_col).cast("string"))) % 10
+
+
+def split_name(id_col: str) -> Column:
+    """'train', 'val' or 'test': the name of ``split_bucket(id_col)``."""
+    bucket = split_bucket(id_col)
+    return F.when(bucket < 8, "train").when(bucket == 8, "val").otherwise("test")
+
+
+def _len_score() -> Column:
+    return F.least(F.length("text") / F.lit(500.0), F.lit(1.0))
+
+
+def type_token_ratio() -> Column:
+    """Distinct over total space-separated tokens of ``text``."""
+    toks = F.split("text", " ")
+    return F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
+
+
+def _stopword_ratio() -> Column:
+    toks = F.split("text", " ")
+    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
+    return F.size(F.array_intersect(toks, stop_arr)).cast("double") / F.size(toks)
+
+
+def quality_score() -> Column:
+    """``llm_quality_score``'s composite of ``text``: 0.4·length score
+    (saturating at 500 chars) + 0.4·type-token ratio + 0.2·(1 − stopword
+    ratio), rounded to 6 decimals."""
+    return F.round(
+        0.4 * _len_score() + 0.4 * type_token_ratio() + 0.2 * (1.0 - _stopword_ratio()), 6
+    )
+
+
+def token_jaccard() -> Column:
+    """|A∩B| / |A∪B| of the token sets ``ts_a`` and ``ts_b``: integer sizes,
+    so the ratio is bit-identical on both engines."""
+    inter = F.size(F.array_intersect("ts_a", "ts_b"))
+    return inter.cast("double") / (F.size("ts_a") + F.size("ts_b") - inter)
+
+
+def token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, lang, ts): each document's distinct space-separated tokens."""
+    d = load(spark, sf_dir, "documents")
+    return d.select("doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("ts"))
+
+
+def jaccard_pairs_sql(name: str) -> str:
+    """The oracle twin of ``jaccard_pairs``: a ``toks`` CTE and a ``name``
+    CTE of its (doc_a, doc_b) pairs."""
+    return f"""toks AS (
+        SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS ts
+        FROM documents
+    ), {name} AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM toks a
+        JOIN toks b ON a.lang = b.lang AND a.doc_id < b.doc_id
+        WHERE CAST(len(list_intersect(a.ts, b.ts)) AS DOUBLE)
+              / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= {JACCARD_DUP}
+    )"""
+
+
+def jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document pairs (doc_a < doc_b, same lang) whose token-set Jaccard is
+    at least ``JACCARD_DUP``, with columns doc_a, lang_a, ts_a, doc_b,
+    lang_b, ts_b. Blocking by lang is what makes the pairwise comparison
+    legal: pairs are generated per block, never across the corpus."""
+    toks = token_sets(spark, sf_dir)
+    a = toks.select(
+        F.col("doc_id").alias("doc_a"), F.col("lang").alias("lang_a"), F.col("ts").alias("ts_a")
+    )
+    b = toks.select(
+        F.col("doc_id").alias("doc_b"), F.col("lang").alias("lang_b"), F.col("ts").alias("ts_b")
+    )
+    return a.join(
+        b, (F.col("lang_a") == F.col("lang_b")) & (F.col("doc_a") < F.col("doc_b"))
+    ).where(token_jaccard() >= JACCARD_DUP)
 
 
 @register(
@@ -56,7 +143,7 @@ def llm_dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load(spark, sf_dir, "documents")
     return (
-        d.groupBy(F.md5(F.lower(F.trim("text"))).alias("text_hash"))
+        d.groupBy(content_digest().alias("text_hash"))
         .agg(F.count("*").alias("dup_cnt"), F.min("doc_id").alias("keeper_doc_id"))
         .where(F.col("dup_cnt") > 1)
     )
@@ -87,23 +174,8 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     per block, never across the whole corpus. |A∩B| and |A∪B| are integer
     sizes, so the ratio is bit-identical on both engines.
     """
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("ts")
-    )
-    a = toks.select(
-        F.col("doc_id").alias("doc_a"), F.col("lang").alias("lang_a"), F.col("ts").alias("ts_a")
-    )
-    b = toks.select(
-        F.col("doc_id").alias("doc_b"), F.col("lang").alias("lang_b"), F.col("ts").alias("ts_b")
-    )
-    inter = F.size(F.array_intersect("ts_a", "ts_b"))
-    union = F.size("ts_a") + F.size("ts_b") - inter
-    jac = inter.cast("double") / union
-    return (
-        a.join(b, (F.col("lang_a") == F.col("lang_b")) & (F.col("doc_a") < F.col("doc_b")))
-        .where(jac >= 0.8)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    return jaccard_pairs(spark, sf_dir).select(
+        "doc_a", "doc_b", F.round(token_jaccard(), 6).alias("jaccard")
     )
 
 
@@ -384,6 +456,14 @@ def llm_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _STOP_SQL = "(" + ", ".join(f"'{s}'" for s in STOPWORDS) + ")"
+# the oracle twin of quality_score()
+_QUALITY_SQL = f"""ROUND(0.4 * least(length(text) / 500.0, 1.0)
+                   + 0.4 * (CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
+                            / len(string_split(text, ' ')))
+                   + 0.2 * (1.0 - CAST(len(list_filter(
+                         list_distinct(string_split(text, ' ')),
+                         x -> x IN {_STOP_SQL})) AS DOUBLE)
+                            / len(string_split(text, ' '))), 6)"""
 
 
 @register(
@@ -409,7 +489,6 @@ def llm_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB quality-scoring hot path has no Python in it."""
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     return d.select(
         "doc_id",
         "lang",
@@ -417,9 +496,7 @@ def llm_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(toks).alias("ws_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(r"[a-z]+|[0-9]"), 0)).alias("bpe_ish_tokens"),
         F.round(F.length("text").cast("double") / F.size(toks), 6).alias("avg_token_span"),
-        F.round(
-            F.size(F.array_intersect(toks, stop_arr)).cast("double") / F.size(toks), 6
-        ).alias("stopword_ratio"),
+        F.round(_stopword_ratio(), 6).alias("stopword_ratio"),
     )
 
 
@@ -480,6 +557,29 @@ _LANGID_CASE_SQL = "CASE " + " ".join(
 ) + " END"
 
 
+def langid_columns() -> tuple[list[Column], Column]:
+    """The n-gram language-ID scorer over ``text``: one ``s_<lang>`` score
+    column per profile (matched-bigram mass), and the cascade over those
+    columns that picks the highest score, ties to the earlier language."""
+    t = F.col("text")
+    scores = [
+        sum((F.length(t) - F.length(F.replace(t, F.lit(p), F.lit("")))) for p in pats).alias(
+            f"s_{lang}"
+        )
+        for lang, pats in sorted(LANG_PROFILES.items())
+    ]
+    langs = sorted(LANG_PROFILES)
+    expr = None
+    for lang in langs[:-1]:
+        cond = None
+        for other in langs:
+            if other > lang:
+                c = F.col(f"s_{lang}") >= F.col(f"s_{other}")
+                cond = c if cond is None else (cond & c)
+        expr = F.when(cond, lang) if expr is None else expr.when(cond, lang)
+    return scores, expr.otherwise(F.lit(langs[-1]))
+
+
 @register(
     "llm_langid",
     oracle=f"""
@@ -507,30 +607,8 @@ def llm_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly at 100 TB. Real deployments swap the profile table for
     trained ones (e.g. fastText buckets) behind the same shape.
     """
-    d = load(spark, sf_dir, "documents")
-
-    def score(pats: tuple[str, str]):
-        t = F.col("text")
-        return sum(
-            (F.length(t) - F.length(F.replace(t, F.lit(p), F.lit("")))) for p in pats
-        )
-
-    scored = d.select(
-        "doc_id",
-        "lang",
-        *[score(p).alias(f"s_{l}") for l, p in sorted(LANG_PROFILES.items())],
-    )
-    langs = sorted(LANG_PROFILES)
-    pred = F.lit(langs[-1])
-    expr = None
-    for lang in langs[:-1]:
-        cond = None
-        for other in langs:
-            if other > lang:
-                c = F.col(f"s_{lang}") >= F.col(f"s_{other}")
-                cond = c if cond is None else (cond & c)
-        expr = F.when(cond, lang) if expr is None else expr.when(cond, lang)
-    pred = expr.otherwise(pred)
+    scores, pred = langid_columns()
+    scored = load(spark, sf_dir, "documents").select("doc_id", "lang", *scores)
     return scored.select(
         "doc_id",
         F.col("lang").alias("tagged_lang"),
@@ -577,17 +655,12 @@ def llm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     all until the downstream filter writes.
     """
     d = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    len_score = F.least(F.length("text") / F.lit(500.0), F.lit(1.0))
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    stop_ratio = F.size(F.array_intersect(toks, stop_arr)).cast("double") / F.size(toks)
-    quality = F.round(0.4 * len_score + 0.4 * ttr + 0.2 * (1.0 - stop_ratio), 6)
+    quality = quality_score()
     return d.select(
         "doc_id",
         "lang",
-        F.round(len_score, 6).alias("len_score"),
-        F.round(ttr, 6).alias("type_token_ratio"),
+        F.round(_len_score(), 6).alias("len_score"),
+        F.round(type_token_ratio(), 6).alias("type_token_ratio"),
         quality.alias("quality"),
         F.when(quality >= 0.75, "high")
         .when(quality >= 0.55, "medium")
@@ -1037,17 +1110,7 @@ def llm_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivorship, one broadcast join — the whole corpus is touched once.
     """
     d = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    quality = F.round(
-        0.4 * F.least(F.length("text") / F.lit(500.0), F.lit(1.0))
-        + 0.4 * (F.size(F.array_distinct(toks)).cast("double") / F.size(toks))
-        + 0.2 * (1.0 - F.size(F.array_intersect(toks, stop_arr)).cast("double") / F.size(toks)),
-        6,
-    )
-    scored = d.select(
-        "doc_id", "lang", quality.alias("q"), F.md5(F.lower(F.trim("text"))).alias("h")
-    )
+    scored = d.select("doc_id", "lang", quality_score().alias("q"), content_digest().alias("h"))
     keepers = scored.groupBy("h").agg(F.min("doc_id").alias("keeper"))
     kept = (
         scored.join(keepers, (scored.h == keepers.h) & (scored.doc_id == keepers.keeper))
@@ -1316,10 +1379,8 @@ def llm_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "llm_dedup_pipeline_exact",
-    oracle="""
-    WITH RECURSIVE tok AS (
+# the oracle twin of llm_dedup_minhash_banded, as the CTEs tok, sh, sig, cand
+_MINHASH_CAND_SQL = """tok AS (
         SELECT doc_id, t.term, t.pos FROM documents,
           LATERAL (SELECT unnest(string_split(text, ' ')) AS term,
                           generate_subscripts(string_split(text, ' '), 1) AS pos) t
@@ -1343,7 +1404,13 @@ def llm_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
             FROM sig a JOIN sig b ON a.s2 = b.s2 AND a.s3 = b.s3 AND a.doc_id < b.doc_id
         ) p
-    ), tsets AS (
+    )"""
+
+
+@register(
+    "llm_dedup_pipeline_exact",
+    oracle=f"""
+    WITH RECURSIVE {_MINHASH_CAND_SQL}, tsets AS (
         SELECT doc_id, list_distinct(string_split(text, ' ')) AS ts FROM documents
     ), verified AS (
         SELECT c.doc_a, c.doc_b
@@ -1392,25 +1459,22 @@ def llm_dedup_pipeline_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     appears — exactly why this pipeline replaces blocked all-pairs
     Jaccard at scale.
     """
-    from classification_problem_with_pyspark_spark.operators.extended2 import (
+    from classification_problem_with_pyspark_spark.operators.llm_dedup import (
         llm_dedup_minhash_banded,
     )
 
     cand = llm_dedup_minhash_banded(spark, sf_dir)
-    d = load(spark, sf_dir, "documents")
-    tsets = d.select("doc_id", F.array_distinct(F.split("text", " ")).alias("ts"))
+    tsets = token_sets(spark, sf_dir)
     a = tsets.select(F.col("doc_id").alias("doc_a"), F.col("ts").alias("ts_a"))
     b = tsets.select(F.col("doc_id").alias("doc_b"), F.col("ts").alias("ts_b"))
-    inter = F.size(F.array_intersect("ts_a", "ts_b"))
-    union = F.size("ts_a") + F.size("ts_b") - inter
     verified = (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
-        .where(inter.cast("double") / union >= 0.5)
+        .where(token_jaccard() >= 0.5)
         .select("doc_a", "doc_b")
     )
     edges = verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    ids = d.select(F.col("doc_id").alias("id"))
+    ids = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
     # 15 rounds: the component diameter bound; near-dup clusters are tiny
     labels = min_label_components(edges, ids, 15, "llm_dedup_pipeline_exact")
     sizes = labels.groupBy(F.col("label").alias("cluster_id")).agg(
@@ -1431,16 +1495,7 @@ def llm_dedup_pipeline_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_dedup_survivor_quality",
     oracle=f"""
-    WITH RECURSIVE toks AS (
-        SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS ts
-        FROM documents
-    ), pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM toks a
-        JOIN toks b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.ts, b.ts)) AS DOUBLE)
-              / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= 0.8
-    ), edges AS (
+    WITH RECURSIVE {jaccard_pairs_sql("pairs")}, edges AS (
         SELECT doc_a AS src, doc_b AS dst FROM pairs
         UNION ALL SELECT doc_b, doc_a FROM pairs
     ), reach AS (
@@ -1457,13 +1512,7 @@ def llm_dedup_pipeline_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE s.cluster_size >= 2
     ), q AS (
         SELECT doc_id,
-               ROUND(0.4 * least(length(text) / 500.0, 1.0)
-                   + 0.4 * (CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-                            / len(string_split(text, ' ')))
-                   + 0.2 * (1.0 - CAST(len(list_filter(
-                         list_distinct(string_split(text, ' ')),
-                         x -> x IN {_STOP_SQL})) AS DOUBLE)
-                            / len(string_split(text, ' '))), 6) AS quality
+               {_QUALITY_SQL} AS quality
         FROM documents
     ), ranked AS (
         SELECT sized.*, q.quality,
@@ -1493,7 +1542,7 @@ def llm_dedup_survivor_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank. Everything rides the cluster-sized tables; the corpus-sized
     work (pair gen, quality scan) is unchanged from its parents.
     """
-    from classification_problem_with_pyspark_spark.operators.extended import (
+    from classification_problem_with_pyspark_spark.operators.llm_dedup import (
         llm_dedup_cluster_cc,
     )
 
@@ -1602,13 +1651,7 @@ def llm_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH q AS (
         SELECT doc_id, lang, source, n_chars,
                md5(lower(trim(text))) AS h,
-               ROUND(0.4 * least(length(text) / 500.0, 1.0)
-                   + 0.4 * (CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-                            / len(string_split(text, ' ')))
-                   + 0.2 * (1.0 - CAST(len(list_filter(
-                         list_distinct(string_split(text, ' ')),
-                         x -> x IN {_STOP_SQL})) AS DOUBLE)
-                            / len(string_split(text, ' '))), 6) AS quality
+               {_QUALITY_SQL} AS quality
         FROM documents
     ), dup AS (
         SELECT h, COUNT(*) AS cnt FROM q GROUP BY h
@@ -1639,19 +1682,13 @@ def llm_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums make the division operands bit-identical on both sides.
     """
     d = spread(load(spark, sf_dir, "documents"), "doc_id")
-    toks = F.split("text", " ")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    len_score = F.least(F.length("text") / F.lit(500.0), F.lit(1.0))
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    stop_ratio = F.size(F.array_intersect(toks, stop_arr)).cast("double") / F.size(toks)
-    quality = F.round(0.4 * len_score + 0.4 * ttr + 0.2 * (1.0 - stop_ratio), 6)
     q = d.select(
         "doc_id",
         "lang",
         "source",
         "n_chars",
-        F.md5(F.lower(F.trim("text"))).alias("h"),
-        quality.alias("quality"),
+        content_digest().alias("h"),
+        quality_score().alias("quality"),
     )
     dup = q.groupBy("h").agg(F.count("*").alias("cnt"))
     return (
@@ -1894,12 +1931,8 @@ def llm_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions ever pair — the join output is duplicate-sized, not
     corpus-sized; split assignment is a pure key function, no extra scan.
     """
-    d = load(spark, sf_dir, "documents")
-    bucket = md5_long(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))) % 10
-    assigned = d.select(
-        "doc_id",
-        F.md5(F.lower(F.trim("text"))).alias("h"),
-        F.when(bucket < 8, "train").when(bucket == 8, "val").otherwise("test").alias("split"),
+    assigned = load(spark, sf_dir, "documents").select(
+        "doc_id", content_digest().alias("h"), split_name("doc_id").alias("split")
     )
     a = assigned.select(
         F.col("doc_id").alias("id_a"), F.col("h").alias("h_a"), F.col("split").alias("split_a")
@@ -1918,41 +1951,8 @@ def llm_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_lsh_recall_report",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS ts
-        FROM documents
-    ), truth AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM toks a
-        JOIN toks b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.ts, b.ts)) AS DOUBLE)
-              / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= 0.8
-    ), tok AS (
-        SELECT doc_id, t.term, t.pos FROM documents,
-          LATERAL (SELECT unnest(string_split(text, ' ')) AS term,
-                          generate_subscripts(string_split(text, ' '), 1) AS pos) t
-    ), sh AS (
-        SELECT a.doc_id, a.term || ' ' || b.term || ' ' || c.term AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-    ), sig AS (
-        SELECT doc_id,
-           MIN(CAST(('0x' || substr(md5('0_' || shingle), 1, 15)) AS BIGINT)) AS s0,
-           MIN(CAST(('0x' || substr(md5('0_' || shingle), 16, 15)) AS BIGINT)) AS s1,
-           MIN(CAST(('0x' || substr(md5('1_' || shingle), 1, 15)) AS BIGINT)) AS s2,
-           MIN(CAST(('0x' || substr(md5('1_' || shingle), 16, 15)) AS BIGINT)) AS s3
-        FROM sh GROUP BY doc_id
-    ), cand AS (
-        SELECT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM sig a JOIN sig b ON a.s0 = b.s0 AND a.s1 = b.s1 AND a.doc_id < b.doc_id
-            UNION
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM sig a JOIN sig b ON a.s2 = b.s2 AND a.s3 = b.s3 AND a.doc_id < b.doc_id
-        ) p
-    )
+    oracle=f"""
+    WITH {jaccard_pairs_sql("truth")}, {_MINHASH_CAND_SQL}
     SELECT (SELECT COUNT(*) FROM truth) AS n_true_pairs,
            (SELECT COUNT(*) FROM cand) AS n_candidates,
            (SELECT COUNT(*) FROM truth JOIN cand USING (doc_a, doc_b))
@@ -1978,7 +1978,7 @@ def llm_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks, the llm_sample_hash_stratified machinery), never the full
     corpus; the candidate side is the production-priced sketch join.
     """
-    from classification_problem_with_pyspark_spark.operators.extended2 import (
+    from classification_problem_with_pyspark_spark.operators.llm_dedup import (
         llm_dedup_minhash_banded,
     )
 

@@ -54,6 +54,7 @@ from classification_problem_with_pyspark_spark.operators.llm import (
     LANG_PROFILES,
     _LANGID_CASE_SQL,
     _langid_score_sql,
+    langid_columns,
     llm_similarity_topk,
 )
 from classification_problem_with_pyspark_spark.plans.bounded_grid import grid_cumsum, grid_rank
@@ -701,29 +702,9 @@ _W_CASE = (
 def _langid_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → (tagged, predicted): the tagged language beside the one
     ``llm_langid``'s n-gram counts pick (ties to the earlier language)."""
-    d = load(spark, sf_dir, "documents")
-
-    def score(pats):
-        t = F.col("text")
-        return sum(
-            (F.length(t) - F.length(F.replace(t, F.lit(p), F.lit(""))))
-            for p in pats
-        )
-
-    scored = d.select(
-        F.col("lang").alias("tagged"),
-        *[score(p).alias(f"s_{l}") for l, p in sorted(LANG_PROFILES.items())],
-    )
-    langs = sorted(LANG_PROFILES)
-    expr = None
-    for lang in langs[:-1]:
-        cond = None
-        for other in langs:
-            if other > lang:
-                c = F.col(f"s_{lang}") >= F.col(f"s_{other}")
-                cond = c if cond is None else (cond & c)
-        expr = F.when(cond, lang) if expr is None else expr.when(cond, lang)
-    return scored.select("tagged", expr.otherwise(F.lit(langs[-1])).alias("predicted"))
+    scores, pred = langid_columns()
+    scored = load(spark, sf_dir, "documents").select(F.col("lang").alias("tagged"), *scores)
+    return scored.select("tagged", pred.alias("predicted"))
 
 
 @register(

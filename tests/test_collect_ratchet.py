@@ -25,7 +25,7 @@ PKG = Path(__file__).resolve().parent.parent / "classification_problem_with_pysp
 COLLECT_ALLOWLIST = {
     "streaming/wrappers.py": (1, "test convenience: memory-sink table of a smoke-SF stream"),
     "operators/sinks.py": (2, "limit(500) malformed-CSV stage; 40-doc binaryFile fixture"),
-    "operators/extended8.py": (1, "limit(1) argmax bigram"),
+    "operators/llm_text.py": (1, "limit(1) argmax bigram"),
     "operators/extended54.py": (2, "two 1-row aggregate folds"),
     "operators/extended56.py": (2, "K sequential 1-row farthest-first seed collects"),
     # r12 (VERDICT r11 #8): the 12 former per-file nation/supplier dim

@@ -6,10 +6,7 @@ import hashlib
 import math
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended103 import (
-    MRR_NGRAM,
-    MRR_QUERY_MOD,
-)
+from classification_problem_with_pyspark_spark.operators.llm_dedup import QUERY_MOD, SHINGLE_N
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR
@@ -23,12 +20,12 @@ def test_mrr_matches_python_cross_modal_replay(spark):
     docs = {r.doc_id: r.text for r in load(spark, SF_DIR, "documents").collect()}
     queries = sorted(
         v for v in emb
-        if int(hashlib.md5(f"rrfq_{v}".encode()).hexdigest()[:15], 16) % MRR_QUERY_MOD == 0
+        if int(hashlib.md5(f"rrfq_{v}".encode()).hexdigest()[:15], 16) % QUERY_MOD == 0
     )
     sh = {
         i: {
-            " ".join(t.split(" ")[j : j + MRR_NGRAM])
-            for j in range(len(t.split(" ")) - MRR_NGRAM + 1)
+            " ".join(t.split(" ")[j : j + SHINGLE_N])
+            for j in range(len(t.split(" ")) - SHINGLE_N + 1)
         }
         for i, t in docs.items()
     }

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended113 import (
+from classification_problem_with_pyspark_spark.operators.llm_dedup import (
     MMR_K,
     MMR_LAMBDA10,
     MMR_POOL,

@@ -6,7 +6,7 @@ import calendar
 import datetime as dt
 import math
 
-from classification_problem_with_pyspark_spark.operators.extended115 import HILL_K
+from classification_problem_with_pyspark_spark.operators.llm_text import HILL_K
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from classification_problem_with_pyspark_spark.operators.extended13 import BLOCKLIST
+from classification_problem_with_pyspark_spark.operators.llm_text import BLOCKLIST
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from classification_problem_with_pyspark_spark.operators.extended23 import K_SPAN, STUDY_HOURS
+from classification_problem_with_pyspark_spark.operators.extended23 import STUDY_HOURS
+from classification_problem_with_pyspark_spark.operators.llm_dedup import K_SPAN
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

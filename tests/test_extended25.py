@@ -4,11 +4,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from classification_problem_with_pyspark_spark.operators.extended25 import (
-    CDC_MASK,
-    CDC_W,
-    K_THRESHOLD,
-)
+from classification_problem_with_pyspark_spark.operators.extended25 import K_THRESHOLD
+from classification_problem_with_pyspark_spark.operators.llm_dedup import CDC_W
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

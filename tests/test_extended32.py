@@ -8,11 +8,8 @@ import math
 
 import pyspark.sql.functions as F
 
-from classification_problem_with_pyspark_spark.operators.extended32 import (
-    CHANNELS,
-    W12,
-    WM_Z2_FLAG,
-)
+from classification_problem_with_pyspark_spark.operators.extended32 import CHANNELS, W12
+from classification_problem_with_pyspark_spark.operators.llm_text import WM_Z2_FLAG
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

@@ -7,10 +7,8 @@ import hashlib
 
 import pyspark.sql.functions as F
 
-from classification_problem_with_pyspark_spark.operators.extended33 import (
-    N_SHARDS,
-    STYLE_TOP_K,
-)
+from classification_problem_with_pyspark_spark.operators.llm_dedup import N_SHARDS
+from classification_problem_with_pyspark_spark.operators.llm_text import STYLE_TOP_K
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR
@@ -33,7 +31,7 @@ def test_shard_loss_matches_bruteforce_pairs(spark):
     assert len(rows) == 1
     r = rows[0]
     assert r.n_shards == N_SHARDS
-    from classification_problem_with_pyspark_spark.operators.extended25 import cdc_chunks
+    from classification_problem_with_pyspark_spark.operators.llm_dedup import cdc_chunks
 
     chunks = cdc_chunks(spark, SF_DIR).select("doc_id", "chunk_hash").collect()
 

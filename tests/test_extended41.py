@@ -2,15 +2,12 @@
 
 from __future__ import annotations
 
-import collections
-
 import pyspark.sql.functions as F
 
 from classification_problem_with_pyspark_spark.operators.extended41 import (
     PRIOR_ALPHA,
     PRIOR_N,
     TOP_K_RATED,
-    VOCAB_BATCH,
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load

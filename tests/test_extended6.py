@@ -93,8 +93,6 @@ def test_fuzzy_pairs_are_ordered_and_thresholded(spark):
 def test_bucketed_join_has_no_exchange(spark):
     """The point of sink_bucketed_join_roundtrip: after the bucketed write,
     the orderkey join itself needs NO shuffle on either side."""
-    from pyspark.sql import functions as F
-
     from classification_problem_with_pyspark_spark.plans.explain import (
         assert_in_plan,
         assert_not_in_plan,

@@ -4,9 +4,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended60 import (
-    PREFIX_TOKENS,
-)
+from classification_problem_with_pyspark_spark.operators.llm_text import PREFIX_TOKENS
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

@@ -5,9 +5,9 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended63 import (
-    CURVE_NGRAM,
-    TAIL_DIV,
+from classification_problem_with_pyspark_spark.operators.extended63 import TAIL_DIV
+from classification_problem_with_pyspark_spark.operators.llm_dedup import (
+    SHINGLE_N,
     THRESHOLDS_MICRO,
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
@@ -24,8 +24,8 @@ def test_dedup_threshold_curve_matches_python_sets(spark):
     for d in docs:
         ws = d.text.split(" ")
         sets[d.doc_id] = {
-            " ".join(ws[i : i + CURVE_NGRAM])
-            for i in range(len(ws) - CURVE_NGRAM + 1)
+            " ".join(ws[i : i + SHINGLE_N])
+            for i in range(len(ws) - SHINGLE_N + 1)
         }
     ids = sorted(sets)
     sims = []

@@ -6,12 +6,12 @@ import hashlib
 import math
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended83 import (
+from classification_problem_with_pyspark_spark.operators.extended83 import SLO_PPM
+from classification_problem_with_pyspark_spark.operators.llm_dedup import (
+    QUERY_MOD,
     RRF_K,
-    RRF_NGRAM,
-    RRF_QUERY_MOD,
     RRF_TOP,
-    SLO_PPM,
+    SHINGLE_N,
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
@@ -26,13 +26,13 @@ def test_rrf_fuses_both_modalities_and_matches_python(spark):
     docs = {r.doc_id: r.text for r in load(spark, SF_DIR, "documents").collect()}
     queries = sorted(
         v for v in emb
-        if int(hashlib.md5(f"rrfq_{v}".encode()).hexdigest()[:15], 16) % RRF_QUERY_MOD == 0
+        if int(hashlib.md5(f"rrfq_{v}".encode()).hexdigest()[:15], 16) % QUERY_MOD == 0
     )
     assert queries
     shingle_sets = {
         i: {
-            " ".join(t.split(" ")[j : j + RRF_NGRAM])
-            for j in range(len(t.split(" ")) - RRF_NGRAM + 1)
+            " ".join(t.split(" ")[j : j + SHINGLE_N])
+            for j in range(len(t.split(" ")) - SHINGLE_N + 1)
         }
         for i, t in docs.items()
     }

@@ -8,11 +8,8 @@ import json
 import os
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended84 import (
-    PAGE_SIZE,
-    VOTE_MAJ,
-    VOTE_N,
-)
+from classification_problem_with_pyspark_spark.operators.extended84 import PAGE_SIZE
+from classification_problem_with_pyspark_spark.operators.llm_data import VOTE_MAJ, VOTE_N
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR, staged_dir

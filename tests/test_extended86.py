@@ -3,12 +3,9 @@
 from __future__ import annotations
 
 import os
-from collections import Counter, defaultdict
+from collections import Counter
 
-from classification_problem_with_pyspark_spark.operators.extended86 import (
-    LIFT_MIN_SUPPORT,
-    LIFT_TOP,
-)
+from classification_problem_with_pyspark_spark.operators.llm_text import LIFT_MIN_SUPPORT, LIFT_TOP
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR, staged_dir

@@ -5,7 +5,7 @@ from __future__ import annotations
 import hashlib
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended94 import (
+from classification_problem_with_pyspark_spark.operators.llm_data import (
     BIAS_GAP,
     PAIR_MOD,
     PAIR_STRIDE,

@@ -4,11 +4,8 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from classification_problem_with_pyspark_spark.operators.extended96 import (
-    COMB_MAX_P,
-    COMB_MIN_P,
-    SELECT_BUDGET_TOKENS,
-)
+from classification_problem_with_pyspark_spark.operators.extended96 import COMB_MAX_P, COMB_MIN_P
+from classification_problem_with_pyspark_spark.operators.llm_data import SELECT_BUDGET_TOKENS
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
 from classification_problem_with_pyspark_spark.sources.catalog import load
 from tests.conftest import SF_DIR

@@ -53,9 +53,7 @@ def test_fanout_operator_spreads_scan_before_explode(spark, key, part):
         # r13: the key's own explain stops at the bounded counts
         # checkpoint (LogicalRDD boundary), so assert the repartition on
         # the pre-checkpoint helper the key calls.
-        from classification_problem_with_pyspark_spark.operators.extended49 import (
-            _overlap_counts,
-        )
+        from classification_problem_with_pyspark_spark.operators.llm_dedup import _overlap_counts
 
         plan = formatted_plan(_overlap_counts(spark, SF_DIR))
     else:

@@ -10,8 +10,6 @@ from __future__ import annotations
 import ast
 import glob
 import os
-import shutil
-import tempfile
 
 from pyspark.ml.classification import LogisticRegression, LogisticRegressionModel
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
@@ -86,22 +84,18 @@ def test_evaluator_metrics_in_range(spark):
                 assert rows[f"multiclass:{metric}"] == round(v, 6)
 
 
-def test_model_persist_load_roundtrip(spark):
+def test_logreg_model_persist_load_roundtrip(spark, tmp_path):
     feats = _embedding_features(spark, SF_DIR)
     train, test = split_train_test(feats)
     model = LogisticRegression(
         featuresCol="features", labelCol="label_bin", maxIter=5, regParam=0.01
     ).fit(train)
-    os.makedirs("/root/repo/.tmp", exist_ok=True)
-    path = tempfile.mkdtemp(dir="/root/repo/.tmp")
-    try:
-        model.write().overwrite().save(path)
-        loaded = LogisticRegressionModel.load(path)
-        orig = model.transform(test).select("vec_id", "prediction").collect()
-        redo = loaded.transform(test).select("vec_id", "prediction").collect()
-        assert sorted(map(tuple, orig)) == sorted(map(tuple, redo))
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "logreg_model")
+    model.write().overwrite().save(path)
+    loaded = LogisticRegressionModel.load(path)
+    orig = model.transform(test).select("vec_id", "prediction").collect()
+    redo = loaded.transform(test).select("vec_id", "prediction").collect()
+    assert sorted(map(tuple, orig)) == sorted(map(tuple, redo))
 
 
 def test_feature_extras_dims_and_determinism(spark):
@@ -190,8 +184,6 @@ def test_stat_correlation_matches_exact_moments(spark):
     moment formula (the agg_corr_covar derivation) within float noise."""
     import math
 
-    from pyspark.sql import functions as F
-
     from classification_problem_with_pyspark_spark.registry import QUERIES
     from classification_problem_with_pyspark_spark.sources.catalog import load
 
@@ -231,9 +223,6 @@ def test_stat_chi2_matches_hand_contingency(spark):
     for r in rows:
         assert r.dof == 9  # (2 buckets - 1) x (10 classes - 1)
         assert 0.0 <= r.p_value <= 1.0
-
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-    from pyspark.sql import functions as F
 
     e = load(spark, SF_DIR, "embeddings")
     arr = vector_to_array(array_to_vector("embedding"))

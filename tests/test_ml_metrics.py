@@ -16,6 +16,7 @@ from classification_problem_with_pyspark_spark.operators.ml_metrics import (
     LIFT_BOOST,
     LIFT_K,
     N_CLASSES,
+    N_GROUPS,
     _scored,
 )
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules
@@ -215,3 +216,39 @@ def test_lift_deciles_partition_and_monotone_gain(spark):
     assert gains[-1] == 1_000_000
     # the boosted score concentrates positives up front: decile-1 lift > 1
     assert rows[0].lift_micro > 1_000_000
+
+
+def test_fairness_gaps_match_python_replay(spark):
+    rows = {r.grp: r for r in QUERIES["ml_fairness_group_gaps"].fn(spark, SF_DIR).collect()}
+    emb = load(spark, SF_DIR, "embeddings").select("vec_id", "label").collect()
+    per = collections.defaultdict(lambda: [0, 0, 0, 0, 0])  # n, sel, tp, pos, fp
+    for e in emb:
+        g = _h("grp_", e.vec_id) % N_GROUPS
+        y = 1 if e.label < 5 else 0
+        yhat = (1 - y) if _h("fclf_", e.vec_id) % FLIP_MOD == 0 else y
+        a = per[g]
+        a[0] += 1
+        a[1] += yhat
+        a[2] += 1 if (y == 1 and yhat == 1) else 0
+        a[3] += y
+        a[4] += 1 if (y == 0 and yhat == 1) else 0
+    assert set(rows) == set(per)
+    sels, tprs, fprs = [], [], []
+    for g, (n, sel, tp, pos, fp) in per.items():
+        r = rows[g]
+        assert r.n == n
+        sel_m = 1_000_000 * sel // n
+        tpr_m = 1_000_000 * tp // max(1, pos)
+        fpr_m = 1_000_000 * fp // max(1, n - pos)
+        assert (r.sel_micro, r.tpr_micro, r.fpr_micro) == (sel_m, tpr_m, fpr_m)
+        sels.append(sel_m)
+        tprs.append(tpr_m)
+        fprs.append(fpr_m)
+    dp = max(sels) - min(sels)
+    eo = max(max(tprs) - min(tprs), max(fprs) - min(fprs))
+    for r in rows.values():
+        assert r.demographic_parity_gap_micro == dp
+        assert r.equalized_odds_gap_micro == eo
+    # the hash classifier treats hash-assigned groups nearly alike —
+    # gaps exist (finite samples) but are bounded
+    assert 0 < dp < 200_000

@@ -18,7 +18,6 @@ from hypothesis import strategies as st
 from classification_problem_with_pyspark_spark.operators.multimodal_codec import (
     BMP_FILE_LEN,
     BMP_H,
-    BMP_W,
     _bmp_pixels,
     _wav_params,
     _wav_samples,

@@ -8,8 +8,6 @@ the SURVEY.md §5 rows-only table.
 
 from __future__ import annotations
 
-from collections import defaultdict
-
 from pyspark.sql import functions as F
 
 from classification_problem_with_pyspark_spark.registry import QUERIES, load_all_modules

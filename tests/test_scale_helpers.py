@@ -203,8 +203,6 @@ def test_kcore_matches_python_peeling(spark):
     Python peeling of the same co-purchase graph at sf0.001."""
     from collections import defaultdict
 
-    from pyspark.sql import functions as F
-
     from classification_problem_with_pyspark_spark.operators.extended5 import (
         _copurchase_edges,
     )

@@ -116,17 +116,17 @@ def test_short_documents_match_the_oracle(spark, short_docs, key):
 
 # (module, top-level function) → why its windows differ from word_ngrams'
 HAND_WRITTEN_ALLOWED = {
-    ("operators/extended15.py", "llm_fingerprint_winnowing"): (
+    ("operators/llm_dedup.py", "llm_fingerprint_winnowing"): (
         "winnowing keeps each shingle's position, and a document shorter "
         "than a shingle is one shingle"
     ),
-    ("operators/extended32.py", "llm_watermark_greenlist"): (
+    ("operators/llm_text.py", "llm_watermark_greenlist"): (
         "adjacent token pairs are kept as (prev, cur) structs"
     ),
-    ("operators/extended86.py", "llm_collocation_lift"): (
+    ("operators/llm_text.py", "llm_collocation_lift"): (
         "adjacent token pairs are kept as (w1, w2) structs"
     ),
-    ("operators/extended7.py", "llm_line_dedup"): "non-overlapping 10-token chunks",
+    ("operators/llm_dedup.py", "llm_line_dedup"): "non-overlapping 10-token chunks",
 }
 
 _WINDOW_CALLS = {"slice", "array_join", "get", "element_at", "getItem"}
